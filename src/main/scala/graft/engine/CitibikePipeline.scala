@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.builders._
@@ -9,9 +9,12 @@ import graft.engine.builders._
   * skip already-loaded periods via the manifest, normalize + repair each
   * archive, and upsert the five derived tables in the warehouse.
   *
-  * One lazy DAG per archive: `zip -> csv -> Normalize -> Quality`,
-  * cached once and fanned out to the five builders (the reference's
-  * staging `ImportedTable`, `db_importing.py:32-35`).
+  * Per archive, `zip -> csv -> Normalize -> Quality` streams once into
+  * the ImportedTrips fact table. The four trip tables are then derived
+  * from the (year, month) partitions that write produced, read back
+  * from the table (the reference's updates read the staging
+  * `ImportedTable`, `db_importing.py:93-96`): each builder's scan reads
+  * only its own columns of those periods, and nothing is cached.
   */
 object CitibikePipeline {
 
@@ -59,23 +62,23 @@ object CitibikePipeline {
     newOnes.foreach { a =>
       val raw = if (distributedIngest) Ingest.readArchiveDistributed(spark, a)
                 else Ingest.readArchive(spark, a)
-      val imported = Quality.importTrips(raw, a.year).cache()
-      try {
-        // the canonical fact table, partitioned for per-period pruning
-        // (replaces the reference's (year, month) ART index, S12);
-        // dynamic overwrite => re-processing a period is idempotent
-        TableStore.overwritePartitions(imported, warehouse, "ImportedTrips",
-          partitionBy = Seq("year", "month"))
-        updateLineGraph(spark, warehouse, imported)
-        updateHeatMap(spark, warehouse, imported)
-        updateTripsMap(spark, warehouse, imported, provider)
-        updateDockMap(spark, warehouse, imported)
-        TableStore.write(
-          StatusData.markLoaded(manifest, a.year.toInt, a.month.map(_.toInt)),
-          warehouse, "StatusDataTable")
-        // re-read: the old lineage points at the replaced files
-        manifest = TableStore.read(spark, warehouse, "StatusDataTable")
-      } finally imported.unpersist()
+      val imported = Quality.importTrips(raw, a.year)
+      // the periods this archive writes, observed on the fact write
+      // itself (no extra pass); exact even for rows outside the
+      // archive's nominal month
+      val written = Observation()
+      // the canonical fact table, partitioned for per-period pruning
+      // (replaces the reference's (year, month) ART index, S12)
+      TableStore.overwritePartitions(
+        imported.observe(written, collect_set(struct(col("year"), col("month"))).as("periods")),
+        warehouse, "ImportedTrips", partitionBy = Seq("year", "month"))
+      deriveTables(spark, warehouse, written.get("periods").asInstanceOf[Seq[Row]],
+        imported.schema, provider)
+      TableStore.write(
+        StatusData.markLoaded(manifest, a.year.toInt, a.month.map(_.toInt)),
+        warehouse, "StatusDataTable")
+      // re-read: the old lineage points at the replaced files
+      manifest = TableStore.read(spark, warehouse, "StatusDataTable")
     }
     newOnes.size
   }
@@ -86,14 +89,14 @@ object CitibikePipeline {
   /** Recovery from a mid-archive crash (the failure model above): the
     * derived tables are reset and every loaded (year, month) partition
     * of the ImportedTrips fact table — itself crash-safe via dynamic
-    * partition overwrite — is REPLAYED through the exact incremental
-    * merge path, in chronological order. Replay (not a one-shot
-    * rebuild) because DockTable's year totals are path-dependent by
-    * reference semantics (`update_dockmap.py:224-236` replaces a
-    * colliding year's totals with the latest delta's); a from-scratch
-    * aggregate would "fix" numbers a clean incremental run reports
-    * differently. The manifest is rebuilt in the reference's row shape
-    * (last loaded month per year).
+    * partition overwrite — is REPLAYED through the derive step `run`
+    * uses, one period at a time, in chronological order. Replay (not a
+    * one-shot rebuild) because DockTable's year totals are
+    * path-dependent by reference semantics (`update_dockmap.py:224-236`
+    * replaces a colliding year's totals with the latest delta's); a
+    * from-scratch aggregate would "fix" numbers a clean incremental run
+    * reports differently. The manifest is rebuilt in the reference's
+    * row shape (last loaded month per year).
     *
     * Exact for monthly archive flows (the reference's normal
     * operation). A YEARLY archive originally merged all 12 months as
@@ -105,85 +108,43 @@ object CitibikePipeline {
               provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes): Unit = {
     require(TableStore.exists(spark, warehouse, "ImportedTrips"),
       "cannot recover: no ImportedTrips fact table in this warehouse")
-    val imported = TableStore.read(spark, warehouse, "ImportedTrips").cache()
-    try {
-      def reset(name: String, schema: StructType): Unit =
-        TableStore.write(spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema),
-          warehouse, name)
-      reset("LineGraphTable", lineGraphSchema)
-      reset("HeatMapTable", heatMapSchema)
-      reset("TripTable", tripTableSchema)
-      reset("DockTable", dockTableSchema)
-      // the period list is tiny (one row per loaded month) — driver loop
-      val periods = imported.select(col("year"), col("month")).distinct()
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)))
-        .sortBy { case (y, m) => (y.toInt, monthNames.indexOf(m)) }
-      periods.foreach { case (y, m) =>
-        val delta = imported
-          .filter(col("year") === y && col("month") === m).cache()
-        try {
-          updateLineGraph(spark, warehouse, delta)
-          updateHeatMap(spark, warehouse, delta)
-          updateTripsMap(spark, warehouse, delta, provider)
-          updateDockMap(spark, warehouse, delta)
-        } finally delta.unpersist()
-      }
-      val monthNum = array_position(typedlit(monthNames), col("month"))
-      val manifest = imported
-        .select(col("year").cast("int").as("year"), monthNum.cast("int").as("m"))
-        .groupBy("year").agg(max(col("m")).cast("int").as("month"))
-        .select(col("year"), col("month"), lit(false).as("complete"))
-      // re-impose the canonical manifest schema (nullability included)
-      // so a recovered StatusDataTable is indistinguishable from one
-      // written by markLoaded
-      TableStore.write(
-        spark.createDataFrame(manifest.rdd, StatusData.schema),
-        warehouse, "StatusDataTable")
-    } finally imported.unpersist()
+    val fact = TableStore.read(spark, warehouse, "ImportedTrips")
+    Seq("LineGraphTable" -> lineGraphSchema, "HeatMapTable" -> heatMapSchema,
+      "TripTable" -> tripTableSchema, "DockTable" -> dockTableSchema).foreach {
+      case (name, schema) => TableStore.write(TableStore.empty(spark, schema), warehouse, name)
+    }
+    // the period list is tiny (one row per loaded month) — driver loop
+    val periods = fact.select(col("year"), col("month")).distinct().collect()
+      .sortBy(p => (p.getString(0).toInt, monthNames.indexOf(p.getString(1))))
+    periods.foreach(p => deriveTables(spark, warehouse, Seq(p), fact.schema, provider))
+    // one row per year: its last loaded month, never complete
+    val manifest = periods.groupBy(_.getString(0)).toSeq.map { case (y, ps) =>
+      Row(y.toInt, ps.map(p => monthNames.indexOf(p.getString(1)) + 1).max, false)
+    }
+    TableStore.write(spark.createDataFrame(
+      java.util.Arrays.asList(manifest: _*), StatusData.schema), warehouse, "StatusDataTable")
   }
 
-  private def updateLineGraph(spark: SparkSession, wh: String, imported: DataFrame): Unit =
-    updateLineGraph(spark, wh, imported,
-      TableStore.readOrEmpty(spark, wh, "LineGraphTable", lineGraphSchema))
-
-  private def updateLineGraph(spark: SparkSession, wh: String, imported: DataFrame,
-                              existing: DataFrame): Unit = {
-    val merged = LineGraph.merge(existing, LineGraph.build(imported))
-    TableStore.write(merged, wh, "LineGraphTable")
-  }
-
-  private def updateHeatMap(spark: SparkSession, wh: String, imported: DataFrame): Unit =
-    updateHeatMap(spark, wh, imported,
-      TableStore.readOrEmpty(spark, wh, "HeatMapTable", heatMapSchema))
-
-  private def updateHeatMap(spark: SparkSession, wh: String, imported: DataFrame,
-                            existing: DataFrame): Unit = {
-    val merged = HeatMap.merge(existing, HeatMap.build(imported))
-    TableStore.write(merged, wh, "HeatMapTable")
-  }
-
-  private def updateTripsMap(spark: SparkSession, wh: String, imported: DataFrame,
-                             provider: Waypoints.RouteProvider): Unit =
-    updateTripsMap(spark, wh, imported, provider,
-      TableStore.readOrEmpty(spark, wh, "TripTable", tripTableSchema))
-
-  private def updateTripsMap(spark: SparkSession, wh: String, imported: DataFrame,
-                             provider: Waypoints.RouteProvider,
-                             existing: DataFrame): Unit = {
-    val merged = TripsMap.merge(existing, TripsMap.build(imported, provider))
-    TableStore.write(merged, wh, "TripTable")
-  }
-
-  private def updateDockMap(spark: SparkSession, wh: String, imported: DataFrame): Unit =
-    updateDockMap(spark, wh, imported,
-      TableStore.readOrEmpty(spark, wh, "DockTable", dockTableSchema))
-
-  private def updateDockMap(spark: SparkSession, wh: String, imported: DataFrame,
-                            existing: DataFrame): Unit = {
-    val merged = DockMap.merge(DockMap.fromStorage(existing), DockMap.build(imported))
-    val out = DockMap.toStorage(merged)
-    TableStore.write(out, wh, "DockTable")
+  /** Merge the rows of the given ImportedTrips partitions into the four
+    * trip tables. The delta is read as one input partition, one task
+    * per archive as in ingest: Spark's default split of a year's 12
+    * monthly files runs several partial-aggregate tasks at once, each
+    * holding its own aggregation memory. */
+  private def deriveTables(spark: SparkSession, wh: String, periods: Seq[Row],
+                           factSchema: StructType,
+                           provider: Waypoints.RouteProvider): Unit = {
+    val delta = TableStore.readPartitions(spark, wh, "ImportedTrips", periods, factSchema)
+      .coalesce(1)
+    def existing(name: String, schema: StructType) =
+      TableStore.readOrEmpty(spark, wh, name, schema)
+    TableStore.write(LineGraph.merge(existing("LineGraphTable", lineGraphSchema),
+      LineGraph.build(delta)), wh, "LineGraphTable")
+    TableStore.write(HeatMap.merge(existing("HeatMapTable", heatMapSchema),
+      HeatMap.build(delta)), wh, "HeatMapTable")
+    TableStore.write(TripsMap.merge(existing("TripTable", tripTableSchema),
+      TripsMap.build(delta, provider)), wh, "TripTable")
+    TableStore.write(DockMap.toStorage(DockMap.merge(
+      DockMap.fromStorage(existing("DockTable", dockTableSchema)), DockMap.build(delta))),
+      wh, "DockTable")
   }
 }

@@ -1,7 +1,8 @@
 package graft.engine
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed warehouse tables with write-temp-then-swap updates.
@@ -34,23 +35,39 @@ object TableStore {
 
   /** Dynamic-partition overwrite into a partitioned table — the
     * canonical-trips fact table grows per archive; partitioning by
-    * (year, month) gives partition pruning on every per-period query,
-    * and dynamic overwrite makes re-loading a period replace exactly its
-    * directories — re-processing an archive after a crash is idempotent
-    * instead of double-appending. */
+    * (year, month) gives partition pruning on every per-period query.
+    * Dynamic overwrite replaces exactly the partitions `df` has rows
+    * for and leaves every other one in place, so re-loading an archive
+    * after a crash replaces its rows instead of double-appending. The
+    * partition set comes from the rows, not the archive's name: an
+    * archive holding rows of another month replaces that month's
+    * partition too. The mode is a write option, so the caller's
+    * session keeps its own `partitionOverwriteMode`. */
   def overwritePartitions(df: DataFrame, warehouse: String, name: String,
-                          partitionBy: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+                          partitionBy: Seq[String]): Unit =
     df.write.partitionBy(partitionBy: _*).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .parquet(tablePath(warehouse, name))
-  }
+
+  /** The rows of the given partitions of a partitioned table. Each
+    * partition is a row of partition-column values (field names are
+    * column names); partition pruning skips every other directory. No
+    * partitions: an empty frame with `schema`, without touching the
+    * table (which may not exist). */
+  def readPartitions(spark: SparkSession, warehouse: String, name: String,
+                     partitions: Seq[Row], schema: StructType): DataFrame =
+    if (partitions.isEmpty) empty(spark, schema)
+    else read(spark, warehouse, name).where(partitions.map { p =>
+      p.schema.fieldNames.map(c => col(c) === p.getAs[Any](c)).reduce(_ && _)
+    }.reduce(_ || _))
 
   def readOrEmpty(spark: SparkSession, warehouse: String, name: String,
                   schema: StructType): DataFrame =
     if (exists(spark, warehouse, name)) read(spark, warehouse, name)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else empty(spark, schema)
+
+  def empty(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** S8: a JDBC warehouse target (reference: the pipeline's embedded
     * DuckDB file, `main.py:45-55`). Driver-agnostic — `url` names the

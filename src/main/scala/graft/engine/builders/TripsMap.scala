@@ -14,8 +14,8 @@ import graft.engine.Waypoints
   * The reference collects the ranked rows to the driver for the Mapbox
   * calls; here the enrichment is a UDF over the (<= 30 x years)-row
   * DataFrame, so nothing leaves the executors. Ties in trip_count are
-  * broken deterministically (from/to station) where the reference relied
-  * on engine row order.
+  * broken deterministically (from/to station, then rideable_type with
+  * nulls first) where the reference relied on engine row order.
   */
 object TripsMap {
 
@@ -35,7 +35,8 @@ object TripsMap {
       .agg(count(lit(1)).cast("int").as("trip_count"),
         min(col("start_time")).as("trip_time"))
     val w = Window.partitionBy("year")
-      .orderBy(col("trip_count").desc, col("from_station"), col("to_station"))
+      .orderBy(col("trip_count").desc, col("from_station"), col("to_station"),
+        col("rideable_type").asc_nulls_first)
     val top = agg.withColumn("rn", row_number().over(w)).filter(col("rn") <= 30)
     top.withColumn("waypoints",
         to_json(Waypoints.waypointsUdf(provider)(

@@ -84,6 +84,24 @@ class BuildersSpec extends SparkSpec {
     assert(lm.count() == 1 && lm.select("trip_count").as[Int].head() == 2)
   }
 
+  test("TripsMap: a top-30 tie across rideable types keeps the same row in any input order") {
+    // 29 routes of two trips take ranks 1-29; route X->Y under three
+    // rideable types ties on (trip_count, from, to) for rank 30
+    val top = (0 until 29).flatMap(i => Seq.fill(2)(
+      ("2021-01-05 08:00:00", f"S$i%02d", "T", "subscriber", "classic_bike")))
+    val tied = Seq("electric_bike", null, "classic_bike")
+      .map(r => ("2021-01-05 09:00:00", "X", "Y", "subscriber", r))
+    def rows(df: DataFrame) =
+      df.orderBy(df.columns.map(col).toIndexedSeq: _*).collect().toSeq
+    val fwd = TripsMap.build(trips(top ++ tied: _*).coalesce(1))
+    val rev = TripsMap.build(trips((top ++ tied).reverse: _*).coalesce(1))
+    assert(rows(fwd) == rows(rev))
+    assert(fwd.count() == 30)
+    // rideable_type breaks the tie, nulls first
+    assert(fwd.filter($"from_station" === "X").select("rideable_type")
+      .as[String].collect().toSeq == Seq(null))
+  }
+
   test("DockMap: full-outer starts/ends, nested maps, deep year merge") {
     val d1 = DockMap.build(jan)
     val a = d1.filter($"station_name" === "A").collect()(0)

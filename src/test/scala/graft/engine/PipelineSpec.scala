@@ -125,4 +125,81 @@ class PipelineSpec extends SparkSpec {
     val status2 = TableStore.read(spark, wh, "StatusDataTable").collect()
     assert(status2.length == 1 && status2(0).getAs[Int]("month") == 2)
   }
+
+  private def rows(wh: String, table: String): Seq[String] = {
+    val df = TableStore.read(spark, wh, table)
+    df.orderBy(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toString).toSeq
+  }
+
+  private val tripTables =
+    Seq("LineGraphTable", "HeatMapTable", "TripTable", "DockTable")
+
+  test("an archive Quality drops whole: empty delta, no fact read, tables unchanged") {
+    val in = tmpDir("dropped-in")
+    // every trip starts in 2020, so the 2021 archives' year filter drops it
+    val stale = modernCsv(
+      "R8,classic_bike,2020-12-31 23:50:00,2021-01-01 00:05:00,A,1,B,2,40.7,-73.95,40.8,-73.96,member")
+    // on a fresh warehouse there is no ImportedTrips to read
+    val fresh = tmpDir("dropped-wh-fresh")
+    new FileOutputStream(s"$in/202101-citibike-tripdata.zip")
+      .write(zipBytes("202101-citibike-tripdata.csv" -> stale))
+    assert(CitibikePipeline.run(spark, in, fresh) == 1)
+    tripTables.foreach(t => assert(rows(fresh, t).isEmpty, t))
+    assert(builders.StatusData.alreadyLoaded(
+      TableStore.read(spark, fresh, "StatusDataTable"), 2021, Some(1)))
+
+    // after a real month, the builders must not read the fact table
+    // either: its only file is garbage while the dropped archive loads
+    val wh = tmpDir("dropped-wh")
+    new FileOutputStream(s"$in/202101-citibike-tripdata.zip")
+      .write(zipBytes("202101-citibike-tripdata.csv" -> janCsv))
+    assert(CitibikePipeline.run(spark, in, wh) == 1)
+    val before = tripTables.map(t => rows(wh, t))
+    val factFiles = new java.io.File(s"$wh/ImportedTrips/year=2021/month=Jan")
+      .listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(factFiles.length == 1)
+    val fact = factFiles(0).toPath
+    val saved = java.nio.file.Files.readAllBytes(fact)
+    java.nio.file.Files.write(fact, s("not parquet"))
+    new FileOutputStream(s"$in/202102-citibike-tripdata.zip")
+      .write(zipBytes("202102-citibike-tripdata.csv" -> stale))
+    try assert(CitibikePipeline.run(spark, in, wh) == 1)
+    finally java.nio.file.Files.write(fact, saved)
+    assert(tripTables.map(t => rows(wh, t)) == before)
+    val status = TableStore.read(spark, wh, "StatusDataTable").collect()
+    assert(status.length == 1 && status(0).getAs[Int]("month") == 2)
+  }
+
+  test("a stray trip from an earlier month: the delta is exactly the rows the archive wrote") {
+    val in = tmpDir("stray-in")
+    val wh = tmpDir("stray-wh")
+    new FileOutputStream(s"$in/202101-citibike-tripdata.zip")
+      .write(zipBytes("202101-citibike-tripdata.csv" -> janCsv))
+    assert(CitibikePipeline.run(spark, in, wh) == 1)
+    // February's archive also carries one January trip
+    new FileOutputStream(s"$in/202102-citibike-tripdata.zip")
+      .write(zipBytes("202102-citibike-tripdata.csv" -> modernCsv(
+        "R4,classic_bike,2021-02-01 08:30:00,2021-02-01 08:40:00,A,1,B,2,40.7,-73.95,40.8,-73.96,casual",
+        "R5,electric_bike,2021-01-31 23:00:00,2021-01-31 23:20:00,B,2,A,1,40.8,-73.96,40.7,-73.95,member")))
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+    spark.catalog.clearCache()
+    assert(CitibikePipeline.run(spark, in, wh) == 1)
+    // the write option leaves the session's mode alone; nothing stays cached
+    assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static")
+    assert(spark.sharedState.cacheManager.isEmpty)
+
+    // both of the archive's periods reach the tables: 3 + 2 trips
+    assert(TableStore.read(spark, wh, "HeatMapTable").agg(sum("total_count"))
+      .as[Long].head() == 5)
+    val lg = TableStore.read(spark, wh, "LineGraphTable")
+      .select($"month", $"subscriber_count", $"customer_count").as[(String, Int, Int)]
+      .collect().sorted.toSeq
+    assert(lg == Seq(("Feb", 0, 1), ("Jan", 1, 0), ("Jan", 2, 1)))
+    val tt = TableStore.read(spark, wh, "TripTable")
+      .filter($"from_station" === "B" && $"to_station" === "A")
+    assert(tt.select("trip_count").as[Int].head() == 2)
+    // the fact write replaced January's partition with the stray trip
+    // (the documented overwritePartitions behaviour)
+    assert(TableStore.read(spark, wh, "ImportedTrips").count() == 2)
+  }
 }
