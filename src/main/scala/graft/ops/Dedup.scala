@@ -148,7 +148,8 @@ object Dedup {
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    val out = verifyPairsExact(sh, cand, minJ)
+    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val out = verifyPairsExact(sh, sizes, cand, minJ)
       .transform(graft.engine.Checkpoints.materialize)
     sh.unpersist(blocking = false)
     out
@@ -161,11 +162,11 @@ object Dedup {
     * branches are re-projected with FRESH column names — `cand`
     * typically derives from `sh`, making this a triple self-join where
     * qualified refs can collapse into tautologies (see scaladoc in
-    * the MinHash path). Returns the standard 6-column shape; callers
-    * own cache/pin lifecycle. */
-  private def verifyPairsExact(sh: DataFrame, cand: DataFrame,
-                               minJ: Double): DataFrame = {
-    val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    * the MinHash path). The caller supplies `sizes` (doc_id, n), each
+    * doc's row count in `sh`. Returns the standard 6-column shape;
+    * callers own cache/pin lifecycle. */
+  private def verifyPairsExact(sh: DataFrame, sizes: DataFrame,
+                               cand: DataFrame, minJ: Double): DataFrame = {
     val shA = sh.select(col("doc_id").as("va_doc"), col("s").as("va_s"))
     val shB = sh.select(col("doc_id").as("vb_doc"), col("s").as("vb_s"))
     val common = cand
@@ -176,8 +177,8 @@ object Dedup {
     // pairs with an empty intersection drop out of the inner join —
     // correct for minJ > 0 (their Jaccard is 0 < minJ)
     common
-      .join(cnt.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(cnt.as("y"), col("doc_b") === col("y.doc_id"))
+      .join(sizes.as("x"), col("doc_a") === col("x.doc_id"))
+      .join(sizes.as("y"), col("doc_b") === col("y.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("common"),
         col("x.n").as("n_a"), col("y.n").as("n_b"))
       .withColumn("jacc", col("common").cast("double") /
@@ -286,19 +287,21 @@ object Dedup {
   }
 
   /** MinHash signatures: 16 universal hashes over shingle h31 values.
-    * One row per doc with columns mh_0..mh_15; single shuffle. */
+    * One row per doc with columns doc_id, n, mh_0..mh_15, where n is
+    * the doc's distinct-shingle count; single shuffle. */
   def minhashSignatures(docs: DataFrame): DataFrame =
     minhashSignaturesFromIndex(shingleIndex(docs))
 
   /** [[minhashSignatures]] over an already-built (doc_id, s) shingle
     * index — the shape [[minhashDupPairs]] needs so the signature and
-    * verification branches share ONE tokenization pass. */
+    * verification branches share ONE tokenization pass; n counts the
+    * doc's index rows (distinct shingles), the verification sizes. */
   def minhashSignaturesFromIndex(index: DataFrame): DataFrame = {
     val sh = index.withColumn("h", h31(col("s")))
     val aggs = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
       min(universalHash(col("h"), a, b)).as(s"mh_$i")
     }
-    sh.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
+    sh.groupBy("doc_id").agg(count(lit(1)).as("n"), aggs: _*)
   }
 
   /** LSH banding: b=8 bands of r=2 rows. Returns exploded
@@ -359,40 +362,10 @@ object Dedup {
     // than the old array_intersect formulation did
     require(minJ > 0.0 && minJ <= 1.0, s"minJ must be in (0, 1], got $minJ")
     val sh = shingleIndex(docs).cache()
-    // signatures are one small row per doc — cached too, because the
-    // band self-join scans them twice
+    // signatures (one small row per doc) cached: the band stream scans
+    // them twice and verification reads both endpoints' n from them
     val sigs = minhashSignaturesFromIndex(sh).cache()
-    val allBands = lshBands(sigs)
-    // bucket-size cap as an AGGREGATE + anti-join against the
-    // OVERSIZED buckets, not a count-over-window: the cap exists
-    // precisely for corpora with mega-buckets, and a window would put
-    // every row of such a bucket into ONE unsplittable partition. The
-    // aggregate gets map-side partial combine (a mega-bucket collapses
-    // to one row per map task before the shuffle). The oversized set is
-    // TYPICALLY tiny — empty on organic corpora, a handful of
-    // boilerplate buckets otherwise — but it is O(#buckets) in the
-    // worst case (a small cap against a dense corpus), so the hint is
-    // left to AQE: at runtime it broadcasts the anti-join when the set
-    // is small (the q47 stop-shingle pattern) and falls back to a
-    // shuffle join instead of blowing the driver when it is not. The
-    // filtered band stream is cached because the candidate self-join
-    // scans it twice (uncached, the cap pipeline ran once per join
-    // branch: measured 10.5 s vs 3.7 s uncapped at the x10 corpus).
-    val bands = bucketCap.fold(allBands) { cap =>
-      val oversized = allBands.groupBy("band_idx", "band_val")
-        .agg(count(lit(1)).as("bsz"))
-        .filter(col("bsz") > cap)
-        .select("band_idx", "band_val")
-      allBands.join(oversized,
-          Seq("band_idx", "band_val"), "left_anti")
-        .cache()
-    }
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val (cand, capped) = bandCandidates(sigs, bucketCap)
     // exact verification WITHOUT materializing per-doc shingle arrays:
     // the earlier collect_list/array_intersect formulation rebuilt a
     // shingle array for every doc in the corpus and replicated both
@@ -408,12 +381,48 @@ object Dedup {
     // index) through the caches, then release them so repeated library
     // calls do not leak block-store entries (same discipline as
     // nearDupPairsLsh / componentLabels).
-    val out = verifyPairsExact(sh, cand, minJ)
+    val out = verifyPairsExact(sh, sigs.select("doc_id", "n"), cand, minJ)
       .transform(graft.engine.Checkpoints.materialize)
-    if (bucketCap.isDefined) bands.unpersist(blocking = false)
+    capped.foreach(_.unpersist(blocking = false))
     sigs.unpersist(blocking = false)
     sh.unpersist(blocking = false)
     out
+  }
+
+  /** Distinct band-collision pairs (doc_a, doc_b), doc_a < doc_b, over
+    * `sigs`, buckets of more than `bucketCap` docs dropped first. Lazy;
+    * when capped, also returns the cached filtered band stream for the
+    * caller to unpersist after its action. The cap is an AGGREGATE +
+    * anti-join against the OVERSIZED buckets, not a count-over-window:
+    * the cap exists precisely for corpora with mega-buckets, and a
+    * window would put every row of such a bucket into ONE unsplittable
+    * partition; the aggregate gets map-side partial combine. The
+    * oversized set is TYPICALLY tiny (empty on organic corpora) but
+    * O(#buckets) in the worst case, so the hint is left to AQE: it
+    * broadcasts the anti-join when the set is small (the q47
+    * stop-shingle pattern) and falls back to a shuffle join when it is
+    * not. The filtered band stream is cached because the candidate
+    * self-join scans it twice (uncached, the cap pipeline ran once per
+    * join branch: measured 10.5 s vs 3.7 s uncapped at the x10 corpus). */
+  private def bandCandidates(sigs: DataFrame, bucketCap: Option[Int])
+      : (DataFrame, Option[DataFrame]) = {
+    val allBands = lshBands(sigs)
+    val capped = bucketCap.map { cap =>
+      val oversized = allBands.groupBy("band_idx", "band_val")
+        .agg(count(lit(1)).as("bsz"))
+        .filter(col("bsz") > cap)
+        .select("band_idx", "band_val")
+      allBands.join(oversized, Seq("band_idx", "band_val"), "left_anti")
+        .cache()
+    }
+    val bands = capped.getOrElse(allBands)
+    val cand = bands.as("a").join(bands.as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.band_val") === col("b.band_val") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+    (cand, capped)
   }
 
   /** Band-collision CANDIDATE pairs only — [[minhashDupPairsCapped]]
@@ -424,24 +433,11 @@ object Dedup {
     * verified form; output (doc_a, doc_b), doc_a < doc_b, distinct. */
   def minhashCandidatesCapped(docs: DataFrame, maxBucket: Int): DataFrame = {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    // signatures cached: the band self-join scans them twice
+    // signatures cached: the band stream scans them twice
     val sigs = minhashSignatures(docs).cache()
-    val allBands = lshBands(sigs)
-    val oversized = allBands.groupBy("band_idx", "band_val")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > maxBucket)
-      .select("band_idx", "band_val")
-    val bands = allBands
-      .join(oversized, Seq("band_idx", "band_val"), "left_anti")
-      .cache()
-    val out = bands.as("a").join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-      .transform(graft.engine.Checkpoints.materialize)
-    bands.unpersist(blocking = false)
+    val (cand, capped) = bandCandidates(sigs, Some(maxBucket))
+    val out = cand.transform(graft.engine.Checkpoints.materialize)
+    capped.foreach(_.unpersist(blocking = false))
     sigs.unpersist(blocking = false)
     out
   }

@@ -127,9 +127,10 @@ object VocabJoin {
     * the caller supplies a cheap UPPER BOUND on the vocab rows (one
     * HLL pass over the token stream — no join, no aggregate
     * exchanges) and the dispatch broadcasts only when the BOUND fits.
-    * Sound by monotonicity: bound ≥ actual, so a broadcast decision
-    * is always safe; an over-budget bound serves the identical rows
-    * through shuffle_hash (VocabJoinSpec pins branch row-identity).
+    * The bound is probabilistic (HLL plus [[Retrieval]]'s vocabBound
+    * guard): a residual under-estimate could only broadcast a vocab a
+    * few percent past the row budget, never change a result — both
+    * branches serve identical rows (VocabJoinSpec pins row-identity).
     * The vocab lineage then runs exactly ONCE per execution. */
   def joinBounded(stream: DataFrame, vocab: DataFrame, keys: Seq[String],
                   boundRows: Long, joinType: String = "inner"): DataFrame =

@@ -2049,24 +2049,24 @@ object Pipeline {
         val src = s"$root/src"
         val ckpt = s"$root/ckpt"
         val wh = s"$root/wh"
-        val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-        val aug = docs
-          .unionByName(docs.filter(col("doc_id") % 10 === 0)
-            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-          .unionByName(docs.filter(col("doc_id") % 10 === 5)
-            .select((col("doc_id") + 3000000L).as("doc_id"), col("text")))
+        // the planted corpus in ONE scan: offset 0 always, +1e6 where
+        // doc_id % 10 = 0, +3e6 where doc_id % 10 = 5; uncached, so
+        // each wave write below scans documents itself
+        val aug = t(s, dir, "documents")
+          .select(col("doc_id"), col("text"),
+            explode(array(lit(0L), lit(1000000L), lit(3000000L))).as("off"))
+          .filter(col("off") === 0L ||
+            (col("off") === 1000000L && col("doc_id") % 10 === 0) ||
+            (col("off") === 3000000L && col("doc_id") % 10 === 5))
+          .select((col("doc_id") + col("off")).as("doc_id"), col("text"))
         // three mtime-ordered wave files, ONE drain sliced into three
         // batches (maxFilesPerTrigger=1) — same cross-batch history
         // semantics, one streaming-query startup instead of three.
         // Per-batch exchanges sized to the drain's bounded key space
         // (as the sessionize harnesses), restored after.
-        // one materialization of the planted corpus feeds all three
-        // wave writes (each write otherwise re-scans documents + the
-        // two clone unions)
-        val augP = graft.engine.Checkpoints.materialize(aug)
-        try (0 until 3).foreach { b =>
-          writeWave(augP.filter(col("doc_id") % 3 === b), src, b)
-        } finally graft.engine.Checkpoints.release(augP)
+        (0 until 3).foreach { b =>
+          writeWave(aug.filter(col("doc_id") % 3 === b), src, b)
+        }
         val prevSp = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", "4")
         try graft.streaming.StreamingDedup.run(

@@ -67,14 +67,16 @@ class TextOpsPropertySpec extends SparkSpec {
     }.toSet
   }
 
+  /** In-memory distinct 3-gram shingle set of one text. */
+  private def shingles(t: String): Set[String] = {
+    val w = t.trim.toLowerCase.split("\\s+").toSeq
+    if (w.size < 3) Set.empty
+    else (0 to w.size - 3).map(i => w.slice(i, i + 3).mkString(" ")).toSet
+  }
+
   /** Reference exact Jaccard: all pairs, in-memory shingle sets. */
   private def refJaccard(docs: Seq[(Long, String)], minJ: Double)
       : Set[(Long, Long, Long)] = {
-    def shingles(t: String): Set[String] = {
-      val w = t.trim.toLowerCase.split("\\s+").toSeq
-      if (w.size < 3) Set.empty
-      else (0 to w.size - 3).map(i => w.slice(i, i + 3).mkString(" ")).toSet
-    }
     val sets = docs.map { case (id, t) => id -> shingles(t) }
     (for {
       (a, sa) <- sets; (b, sb) <- sets if a < b && sa.nonEmpty && sb.nonEmpty
@@ -83,16 +85,17 @@ class TextOpsPropertySpec extends SparkSpec {
     } yield (a, b, c.toLong)).toSet
   }
 
+  // longer docs so 3-gram shingles exist; duplicated docs guarantee
+  // high-Jaccard pairs, the tiny vocabulary guarantees mid ones
+  private val longDoc: Gen[String] =
+    Gen.chooseNum(3, 14).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
+  private val dupCorpus: Gen[Seq[(Long, String)]] = for {
+    base <- Gen.chooseNum(2, 6).flatMap(n => Gen.listOfN(n, longDoc))
+    dup <- Gen.someOf(base)
+  } yield (base ++ dup).zipWithIndex.map { case (t, i) => (i.toLong, t) }
+
   test("prefix-filtered exact Jaccard agrees with brute force across " +
     "thresholds on random corpora") {
-    // longer docs so 3-gram shingles exist; duplicated docs guarantee
-    // high-Jaccard pairs, the tiny vocabulary guarantees mid ones
-    val longDoc: Gen[String] =
-      Gen.chooseNum(3, 14).flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
-    val dupCorpus: Gen[Seq[(Long, String)]] = for {
-      base <- Gen.chooseNum(2, 6).flatMap(n => Gen.listOfN(n, longDoc))
-      dup <- Gen.someOf(base)
-    } yield (base ++ dup).zipWithIndex.map { case (t, i) => (i.toLong, t) }
     for (t <- Seq(0.3, 0.5, 0.8)) {
       samples(dupCorpus, 8).foreach { docs =>
         val got = Dedup.ngramJaccardPairs(docs.toDF("doc_id", "text"), t)
@@ -100,6 +103,33 @@ class TextOpsPropertySpec extends SparkSpec {
           .as[(Long, Long, Long)].collect().toSet
         val want = refJaccard(docs, t)
         assert(got == want, s"t=$t corpus=$docs\ngot=$got\nwant=$want")
+      }
+    }
+  }
+
+  test("MinHash pairs, capped and uncapped, carry brute-force (common, " +
+    "n_a, n_b) and never miss a pair of identical shingle sets") {
+    for (t <- Seq(0.3, 0.8)) {
+      samples(dupCorpus, 8).foreach { docs =>
+        val sets = docs.map { case (id, txt) => id -> shingles(txt) }.toMap
+        val df = docs.toDF("doc_id", "text")
+        Seq("uncapped" -> Dedup.minhashDupPairs(df, t),
+          "capped" -> Dedup.minhashDupPairsCapped(df, t, 16)).foreach {
+          case (name, pairs) =>
+            val got = pairs.select("doc_a", "doc_b", "common", "n_a", "n_b")
+              .as[(Long, Long, Long, Long, Long)].collect()
+            got.foreach { case (a, b, c, na, nb) =>
+              val want = ((sets(a) & sets(b)).size.toLong,
+                sets(a).size.toLong, sets(b).size.toLong)
+              assert((c, na, nb) == want,
+                s"$name t=$t pair ($a, $b) corpus=$docs")
+            }
+            val found = got.map(r => (r._1, r._2)).toSet
+            for ((a, sa) <- sets; (b, sb) <- sets
+                 if a < b && sa.nonEmpty && sa == sb)
+              assert(found((a, b)),
+                s"$name t=$t missed identical pair ($a, $b) corpus=$docs")
+        }
       }
     }
   }

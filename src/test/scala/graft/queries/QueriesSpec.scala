@@ -32,6 +32,14 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("q103 leaves the CacheManager empty: the planted corpus is " +
+    "scanned per wave, never cached") {
+    spark.catalog.clearCache()
+    SparkEntry.queries("q103_streaming_dedup_drain")(spark, sf).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "q103 left a cached plan behind")
+  }
+
   test("queries and oracleSql keys line up") {
     val qk = SparkEntry.queries.keySet
     assert(SparkEntry.oracleSql.keySet.subsetOf(qk))
