@@ -56,20 +56,16 @@ object Verify {
       .map { case (k, v) =>
         // a `private val` oracle declared AFTER the registration list
         // is null at object init (Scala initialization order) — fail
-        // with the query name instead of an opaque NPE in flatMap
+        // with the query name instead of an opaque NPE downstream
         require(v != null, s"oracle SQL for $k is null — declare the " +
           "oracle as a def (or before the registration list)")
         s"${q(k)}: ${q(v)}"
       }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // the FULL registered-query name list (unfiltered — the checker
-    // applies its own ONLY narrowing): the completeness gate must
-    // expect a result dir for EVERY registered query, including the
-    // rows-only ones with no oracle entry — building the expectation
-    // from oracle keys alone let a no-oracle query that threw vanish
-    // silently, the exact failure mode the missing-result guard exists
-    // for. Also lets the checker flag a stale oracle key whose query
-    // was renamed out from under it.
+    // applies its own ONLY narrowing): the completeness gate expects a
+    // result dir for EVERY registered query, and the checker flags a
+    // stale oracle key whose query was renamed out from under it.
     val namesJson = SparkEntry.queries.keys.toSeq.sorted
       .map(q).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/names.json"), namesJson)

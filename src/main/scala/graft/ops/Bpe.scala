@@ -122,8 +122,8 @@ object Bpe {
     *
     * Step-count honesty: each merge is one distributed aggregate over
     * the cached vocabulary — ~1.5 s of fixed job overhead per step at
-    * local[32] (ProbeText). Fine for the tens-to-hundreds of merges
-    * the oracle-checked q92 exercises; a production 30k-merge
+    * local[32] (PLANS.md round 11). Fine for the tens-to-hundreds of
+    * merges the oracle-checked q92 exercises; a production 30k-merge
     * vocabulary trains through [[trainMergesBatched]], which amortizes
     * the scheduler round-trips ~batch-fold. This strict form is the
     * batch=1 special case, kept as the exact-Sennrich regression

@@ -48,7 +48,8 @@ object Dedup {
     *
     * Evaluated by the [[graft.functions.NormalizeTextExpr]] codegen
     * kernel (one byte pass; the three-pass regex chain measured
-    * 22.9 s of the op's 24.1 s at the x100 ladder point — ProbeLm).
+    * 22.9 s of the op's 24.1 s at the x100 ladder point — PLANS.md
+    * round 13).
     * [[canonicalKeyRegex]] is the chain the kernel replaced and the
     * oracle replays; their exact equivalence (everything but the two
     * Java-case-folding exotics the kernel scaladoc names) is
@@ -77,17 +78,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_copies"),
         countDistinct(md5(col("text"))).as("n_variants"),
         min(col("doc_id")).as("keep_id"))
-
-  /** Per-doc distinct shingle arrays (doc_id, sh) — words materialized
-    * first so tokenization runs once per doc (see shinglesFromWords).
-    * Null-text docs get an EMPTY array, not null: this keeps the
-    * pre-kernel contract (the shingle kernel propagates null; the
-    * coalesce restores `[]` at this non-exploding boundary). */
-  def shingleSets(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), tokens(col("text")).as("w"))
-      .select(col("doc_id"),
-        coalesce(shinglesFromWords(col("w")),
-          array().cast("array<string>")).as("sh"))
 
   /** Per-doc distinct 3-gram shingles, exploded (doc_id, shingle).
     * This is the inverted index: at scale it shuffles once on shingle.

@@ -62,9 +62,6 @@ object Hashing {
   /** Lowercased whitespace tokens (non-distinct, order-preserving). */
   def tokens(text: Column): Column = split(trim(lower(text)), "\\s+")
 
-  /** Distinct lowercase word set. */
-  def wordSet(text: Column): Column = array_distinct(tokens(text))
-
   /** Distinct word 3-gram shingles from a words column. Backed by the
     * [[graft.functions.WordShinglesExpr]] codegen kernel (the
     * `transform`-based formulation was CodegenFallback on the
@@ -78,9 +75,9 @@ object Hashing {
     * `when(size(w) >= 3, ...).otherwise(array())` form produced.
     * Exploding callers are unaffected (explode drops both); a caller
     * that KEEPS the array and needs the old `[]`-for-null behavior
-    * must coalesce at its own boundary ([[graft.ops.Dedup.shingleSets]]
-    * does). `tokens(text)` is itself null for null text, so the
-    * contract surfaces exactly on null-text documents. */
+    * must coalesce at its own boundary. `tokens(text)` is itself null
+    * for null text, so the contract surfaces exactly on null-text
+    * documents. */
   def shinglesFromWords(w: Column): Column =
     graft.functions.TextFunctions.wordShingles(w, 3, distinct = true)
 

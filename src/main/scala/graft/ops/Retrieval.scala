@@ -300,8 +300,9 @@ object Retrieval {
     * outgrows it — results identical, VocabJoinSpec), and the
     * per-doc top-m compiles to WindowGroupLimit (bounded per-group
     * heaps, no full sort). Round 17 MEASURED the df-cache alternative
-    * ([[VocabJoin.joinCached]]) here and it is a WASH (ProbeVocabCache
-    * interleaved A/B at sf0.1: cached min 2.03 s vs uncached 1.95 s):
+    * ([[VocabJoin.joinCached]]) here and it is a WASH (PLANS.md round
+    * 17, interleaved A/B at sf0.1: cached min 2.03 s vs uncached
+    * 1.95 s):
     * unlike q91/q115, the df build side shares the tf partial-agg
     * EXCHANGE with the join's stream side inside the serving action,
     * so ReuseExchange already dedupes it — the cache can only shave
@@ -309,15 +310,7 @@ object Retrieval {
     * cache. Kept on the plain counted dispatch (no block-store
     * pressure for zero pass savings).
     * Output: (doc_id, rank, token, tf, score_x1M). */
-  def tfidfKeywords(docs: DataFrame, m: Int): DataFrame =
-    tfidfKeywordsDispatch(docs, m, cachedDispatch = false)
-
-  /** [[tfidfKeywords]] with the round-17 df cache switchable —
-    * `cachedDispatch = true` is the measured-and-rejected cached
-    * form, kept ONLY as ProbeVocabCache's A/B twin so the measured
-    * comparison can never drift from the production kernel. */
-  private[graft] def tfidfKeywordsDispatch(docs: DataFrame, m: Int,
-      cachedDispatch: Boolean): DataFrame = {
+  def tfidfKeywords(docs: DataFrame, m: Int): DataFrame = {
     require(m >= 1, s"m=$m must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val tf = docs
@@ -331,8 +324,7 @@ object Retrieval {
       lit(2L) * col("df") + lit(1L))
     val w = Window.partitionBy("doc_id")
       .orderBy(col("score_x1M").desc, col("token"))
-    (if (cachedDispatch) VocabJoin.joinCached(tf, df, Seq("token"))
-     else VocabJoin.joinBounded(tf, df, Seq("token"), vocabBound(docs)))
+    VocabJoin.joinBounded(tf, df, Seq("token"), vocabBound(docs))
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("token"), col("tf"),
         (col("tf") * idf).as("score_x1M"))
@@ -362,22 +354,15 @@ object Retrieval {
     * df via [[VocabJoin]]'s counted dispatch, per-cluster top-m
     * through WindowGroupLimit. Same smoothed integer idf rational as
     * the whole lexical family. Round 17 MEASURED the df-cache
-    * alternative here and it is a WASH like q131's (ProbeVocabCache
-    * at sf0.1: cached min 6.33 s vs uncached 5.43 s, inside the rep
-    * noise): the df build side reuses the (cluster, token) partial-agg
+    * alternative here and it is a WASH like q131's (PLANS.md round
+    * 17, at sf0.1: cached min 6.33 s vs uncached 5.43 s, inside the
+    * rep noise): the df build side reuses the (cluster, token) partial-agg
     * exchange inside the serving action, so only the dispatch count's
     * pass is in play and the cache pays that pass to fill itself.
     * Kept on the plain counted dispatch. Output:
     * (cluster_root, rank, token, tf, score_x1M). */
   def clusterKeywords(docs: DataFrame, clusters: DataFrame,
-                      m: Int): DataFrame =
-    clusterKeywordsDispatch(docs, clusters, m, cachedDispatch = false)
-
-  /** [[clusterKeywords]] with the round-17 df cache switchable —
-    * `cachedDispatch = true` is the measured-and-rejected cached
-    * form, kept ONLY as ProbeVocabCache's A/B twin. */
-  private[graft] def clusterKeywordsDispatch(docs: DataFrame,
-      clusters: DataFrame, m: Int, cachedDispatch: Boolean): DataFrame = {
+                      m: Int): DataFrame = {
     require(m >= 1, s"m=$m must be >= 1")
     import org.apache.spark.sql.expressions.Window
     val tagged = docs
@@ -396,8 +381,7 @@ object Retrieval {
     // the bound comes from the UNCLUSTERED docs (distinct tokens over
     // clustered docs ⊆ distinct tokens over all docs): the bound pass
     // skips the cluster join AND both aggregates the exact count paid
-    (if (cachedDispatch) VocabJoin.joinCached(tf, df, Seq("token"))
-     else VocabJoin.joinBounded(tf, df, Seq("token"), vocabBound(docs)))
+    VocabJoin.joinBounded(tf, df, Seq("token"), vocabBound(docs))
       .crossJoin(broadcast(nGroups))
       .select(col("cluster_root"), col("token"), col("tf"),
         (col("tf") * idf).as("score_x1M"))

@@ -86,9 +86,7 @@ object TextAnalysis {
   }
 
   /** The pre-round-18 Column-chain [[quality]] — kept ONLY as the
-    * kernel's equivalence twin (QualityKernelSpec) and the A/B probe
-    * body (ProbeQualityKernel), so the measured comparison can never
-    * drift from what production replaced. */
+    * kernel's equivalence twin (QualityKernelSpec). */
   private[graft] def qualityColumns(docs: DataFrame): DataFrame = {
     val t = col("text")
     val nWords = size(tokens(t)).cast("long")
@@ -136,7 +134,7 @@ object TextAnalysis {
     graft.functions.QualityFunctions.qualityKeep(t, QualityStopwords)
 
   /** The pre-round-18 Column-chain [[qualityKeep]] — the kernel's
-    * equivalence twin (QualityKernelSpec / ProbeQualityKernel only). */
+    * equivalence twin (QualityKernelSpec only). */
   private[graft] def qualityKeepColumns(t: Column): Column = {
     val nWords = size(tokens(t)).cast("long")
     val padded = concat(lit(" "), lower(t), lit(" "))
@@ -162,8 +160,7 @@ object TextAnalysis {
       .getField("scrubbed")
 
   /** The pre-round-18 chained-`regexp_replace` [[scrubText]] — the
-    * kernel's equivalence twin (QualityKernelSpec /
-    * ProbeQualityKernel only). */
+    * kernel's equivalence twin (QualityKernelSpec only). */
   private[graft] def scrubTextColumns(t: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(t,
       EmailRe, "<EMAIL>"), PhoneRe, "<PHONE>"), IpRe, "<IP>")
@@ -633,22 +630,12 @@ object TextAnalysis {
     * [[VocabJoin.joinCached]] — its lineage is DISJOINT from the
     * corpus shingle stream, so no exchange reuse covered it and the
     * ref-slice aggregation ran once for the dispatch count and again
-    * for the join's build side (ProbeVocabCache interleaved A/B at
-    * sf0.1: 1.22 s → 0.85 s, rows checksum-identical).
+    * for the join's build side (PLANS.md round 17, interleaved A/B
+    * at sf0.1: 1.22 s → 0.85 s, rows checksum-identical).
     *
     * Output: (doc_id, n_tri, ref_hits, score_x1000, bucket). */
   def referenceOverlapScore(docs: DataFrame, refSource: String = "src0",
-                            minDf: Int = 2): DataFrame =
-    referenceOverlapDispatch(docs, refSource, minDf, cachedDispatch = true)
-
-  /** [[referenceOverlapScore]] with the round-17 single-pass
-    * ref-vocab cache switchable — `cachedDispatch = false` is the
-    * pre-r17 form (the dispatch count action and the join's build
-    * side each re-ran the reference slice's shingle aggregation),
-    * kept as ProbeVocabCache's A/B twin and VocabJoinCachedSpec's
-    * parity anchor. */
-  private[graft] def referenceOverlapDispatch(docs: DataFrame,
-      refSource: String, minDf: Int, cachedDispatch: Boolean): DataFrame = {
+                            minDf: Int = 2): DataFrame = {
     require(minDf >= 1, s"minDf must be >= 1, got $minDf")
     // every doc emits its trigrams PLUS one null sentinel row: count(s)
     // then equals the trigram count, a null s matches nothing in the
@@ -668,9 +655,7 @@ object TextAnalysis {
       .groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
       .select(col("s"), lit(1).as("hit"))
-    val agg = (if (cachedDispatch)
-        VocabJoin.joinCached(sh, refVocab, Seq("s"), "left")
-      else VocabJoin.join(sh, refVocab, Seq("s"), "left"))
+    val agg = VocabJoin.joinCached(sh, refVocab, Seq("s"), "left")
       .groupBy("doc_id")
       .agg(count(col("s")).as("n_tri"), count(col("hit")).as("ref_hits"))
     val score = when(col("n_tri") > 0,
@@ -798,7 +783,7 @@ object TextAnalysis {
   }
 
   /** The pre-round-18 Column-chain [[piiScrub]] — the kernel's
-    * equivalence twin (QualityKernelSpec / ProbeQualityKernel only). */
+    * equivalence twin (QualityKernelSpec only). */
   private[graft] def piiScrubColumns(docs: DataFrame): DataFrame = {
     val (email, phone, ip) = (EmailRe, PhoneRe, IpRe)
     val t0 = col("text")
@@ -882,7 +867,7 @@ object TextAnalysis {
     // CACHED across the dispatch action and the serving join: the
     // driver aggregate below is a second ACTION, and actions share no
     // exchange reuse — uncached, the corpus tokenize+groupBy ran once
-    // per action (measured +0.34 s at sf0.1, ProbeLmDispatch; the
+    // per action (measured +0.34 s at sf0.1, PLANS.md round 16; the
     // round-13 single-action form was exchange-reused). The cache is
     // vocabulary-sized (Heaps-bounded — the same budget argument as
     // the broadcast branch), recomputable on eviction, materialized
@@ -1338,7 +1323,7 @@ object TextAnalysis {
     * [[NbPivotMaxClassesKey]] (default 128): past the budget the
     * docs×classes kernel of rounds ≤16 runs instead — wide-pivot
     * plans stop paying past hundreds of columns, and the class list
-    * must be driver-collectable. Measured (ProbeNbSinglePass x100,
+    * must be driver-collectable. Measured (PLANS.md round 17, x100,
     * interleaved ×3, kept sets identical): capstone stages 5–6
     * 19.52 → 12.18 s min; the ×5-class blowup of the scoring join and
     * aggregate map side was the cost. No corpus-sized join-back;
@@ -1360,9 +1345,9 @@ object TextAnalysis {
     * CALLER — the production shape where the trusted labeled corpus
     * is EXTERNAL and constant-size while the corpus being scored
     * grows (the mod-slice convention above is the testdata's stand-in
-    * for it; ProbeCapstone's pinned-trust ladder point measures the
-    * external shape). Every train-side frame the kernel builds (the
-    * per-class token stats, T_c, V, priors) is trusted-corpus-sized,
+    * for it; PLANS.md round 17's pinned-trust ladder point measures
+    * the external shape). Every train-side frame the kernel builds
+    * (the per-class token stats, T_c, V, priors) is trusted-corpus-sized,
     * independent of |testDocs| — with the train side pinned, the only
     * corpus-scaled term is the scoring pass. The mod-sliced entry
     * delegates here, so q140's three-sf oracle pins this kernel
@@ -1396,9 +1381,6 @@ object TextAnalysis {
         // argmin as an AGGREGATE (min over struct(bits_total, c_lang)
         // is lexicographic = the (bits asc, class asc) tie-break); a
         // partial+final SortAggregate pair, no added exchange.
-        // ProbeNbSinglePass hosts the window tail as the A/B twin
-        // over the SAME classicScored, so the comparison cannot
-        // drift from this kernel's law.
         classicScored(m, testDocs)
           .groupBy(col("doc_id"), col("lang"))
           .agg(min(struct(col("bits_total"), col("c_lang"))).as("m"))
@@ -1473,13 +1455,12 @@ object TextAnalysis {
     * it derives; `cdef` the ≤|classes|-row per-class constants
     * (unseen-token default + prior); `bits` the (class, token)
     * smoothed surprisal table. */
-  private[graft] final case class NbModel(cnt: DataFrame,
-                                          cdef: DataFrame, bits: DataFrame)
+  private final case class NbModel(cnt: DataFrame,
+                                   cdef: DataFrame, bits: DataFrame)
 
   /** One train-slice pass builds the whole model (shared by the
-    * pivot kernel, the fallback docs×classes kernel and the probe
-    * twins — one definition, so no A/B can drift from the law). */
-  private[graft] def nbModel(trainDocs: DataFrame): NbModel = {
+    * pivot kernel and the fallback docs×classes kernel). */
+  private def nbModel(trainDocs: DataFrame): NbModel = {
     // NULL-lang train docs are dropped BEFORE the class set is built:
     // a NULL class would ride into the argmin tie-break, where Spark's
     // ascending sort puts NULLs first and DuckDB's ORDER BY puts them
@@ -1513,10 +1494,9 @@ object TextAnalysis {
   }
 
   /** The docs×classes per-(doc, class) scoring over an [[NbModel]] —
-    * the pre-r17 kernel body, now the past-budget fallback and the
-    * probe twins' shared base. */
-  private[graft] def classicScored(m: NbModel,
-                                   testDocs: DataFrame): DataFrame = {
+    * the pre-r17 kernel body, now the past-budget fallback. */
+  private def classicScored(m: NbModel,
+                            testDocs: DataFrame): DataFrame = {
     val testTok = testDocs
       .select(col("doc_id"), col("lang"), explode(tokens(col("text"))).as("t"))
     VocabJoin.join(
@@ -1526,15 +1506,5 @@ object TextAnalysis {
       .agg(sum(coalesce(col("b"), col("bdef"))).as("sb"))
       .select(col("doc_id"), col("lang"), col("c_lang"),
         (col("bprior") + col("sb")).as("bits_total"))
-  }
-
-  /** The docs×classes scored frame + its cache handle — kept for
-    * ProbeNbSinglePass's window-argmin twin: returns (scored, cnt)
-    * where `cnt` must be unpersisted by the caller AFTER
-    * materializing what it derives from `scored`. */
-  private[graft] def nbScoredFrame(trainDocs: DataFrame,
-                                   testDocs: DataFrame): (DataFrame, DataFrame) = {
-    val m = nbModel(trainDocs)
-    (classicScored(m, testDocs), m.cnt)
   }
 }

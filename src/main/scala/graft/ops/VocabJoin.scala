@@ -83,7 +83,7 @@ object VocabJoin {
     * exactly once per execution instead of once per
     * action-plus-build-side.
     *
-    * WHEN it pays (measured, ProbeVocabCache interleaved A/B at
+    * WHEN it pays (measured, PLANS.md round 17, interleaved A/B at
     * sf0.1): only when the vocab's lineage does NOT share an exchange
     * with the join's stream side. referenceOverlapScore's ref-slice
     * aggregate is such a case (disjoint from the corpus shingle

@@ -6,11 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.engine.Checkpoints
 import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
 
-/** The curation capstone v2 (q147) as SHARED stage builders — one
-  * definition used by both the Registry entry and ProbeCapstone, so
-  * the ladder can never drift from the gated composition (a probe
-  * that re-transcribes the pipeline measures whatever it transcribed,
-  * not what the gate runs).
+/** The curation capstone v2 (q147) as stage builders, chained by
+  * [[Capstone.run]].
   *
   * Ten chained stages, the DCLM/FineWeb-shaped end-to-end:
   *   1–3. heuristic quality gates → corpus length gate → PII scrub
@@ -81,31 +78,17 @@ object Capstone {
     * EXACT all-pairs law — candidate recall at τ is pinned by
     * CellContamSpec (drop-set equality vs the exact kernel, incl. a
     * planted-contamination corpus) and re-proven by the gate at
-    * every sf. */
+    * every sf. Round 17: routes through the τ-DISPATCHED
+    * [[Similarity.contaminationKeep]] — at the gated τ=0.9 that is
+    * the cell path, a caller at low τ gets the exact kernel instead
+    * of silent recall loss, and `graft.decontam.exact` /
+    * `graft.decontam.nProbe` are live remediation levers. */
   def decontam(clean: DataFrame, emb: DataFrame,
-               tauX1e6: Long = 900000L): DataFrame =
-    decontamWith(clean, emb, emb.filter(col("vec_id") % 10 === 3),
-      tauX1e6)
-
-  /** [[decontam]] with the bench frame supplied by the caller — the
-    * gated entry derives bench as the emb %10=3 slice (the testdata's
-    * eval-set convention, which grows with the corpus); a production
-    * eval set is CONSTANT-size and external, and ProbeCapstone's
-    * pinned-bench ladder point measures exactly that shape. The
-    * corpus-side law is unchanged either way (eval-reserved %10=3
-    * docs always leave the corpus). Round 17: routes through the
-    * τ-DISPATCHED [[Similarity.contaminationKeep]] — at the gated
-    * τ=0.9 that is the cell path as before, but a caller at low τ
-    * now gets the exact kernel instead of silent recall loss, and
-    * `graft.decontam.exact` / `graft.decontam.nProbe` are live
-    * remediation levers (no code change to re-route a production
-    * recall miss). */
-  def decontamWith(clean: DataFrame, emb: DataFrame, bench: DataFrame,
-                   tauX1e6: Long): DataFrame = {
+               tauX1e6: Long = 900000L): DataFrame = {
     val contam = Similarity.contaminationKeep(
       emb.join(clean.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi").filter(col("vec_id") % 10 =!= 3),
-      bench, tauX1e6)
+      emb.filter(col("vec_id") % 10 === 3), tauX1e6)
     Checkpoints.pin(clean.filter(col("doc_id") % 10 =!= 3)
       .join(contam.select(col("vec_id").as("doc_id"),
         col("keep").as("dc_keep")), Seq("doc_id"), "left")
@@ -119,8 +102,8 @@ object Capstone {
     * 5–6 sharing a pinned (doc_id, t, cnt) frame, every Σ_tokens
     * term count-weighted — the q115 single-pass discipline applied
     * ACROSS stages) and measured it INDISTINGUISHABLE at x100
-    * (`tools/ProbeNbSinglePass`, interleaved same-JVM A/B with the
-    * block cache cleared per rep, kept sets asserted identical:
+    * (interleaved same-JVM A/B with the block cache cleared per
+    * rep, kept sets asserted identical:
     * ~19 s both forms): what the shared pass saves (two
     * whole-stage-codegen tokenize scans over the already-pinned
     * stage-4 text) it pays back in the corpus-sized (doc, token)
@@ -137,23 +120,6 @@ object Capstone {
       .filter(col("correct")).select("doc_id")
     Checkpoints.pin(dec.filter(pmod(col("doc_id"), lit(10L)) === 7)
       .unionByName(dec.join(nbKeep, Seq("doc_id"), "left_semi")))
-  }
-
-  /** Stage 5 with an EXTERNAL trusted train corpus — the production
-    * shape (a trusted/labeled corpus is curated separately and does
-    * NOT grow with the data being gated; the gated law's %10=7
-    * convention is the testdata's stand-in for it). Every train-side
-    * stats frame [[TextAnalysis.nbScore]] builds from `trustDocs` is
-    * trusted-corpus-sized, so with the trust pinned the stage's only
-    * corpus-scaled term is the scoring pass over `dec` — ALL of which
-    * is held out (the trusted docs are external, not a kept slice).
-    * ProbeCapstone's `PROBE_TRUST_DIR` ladder point measures this
-    * shape; the GATED entry keeps the mod-slice law so the oracle
-    * replays it. */
-  def nbGateTrust(dec: DataFrame, trustDocs: DataFrame): DataFrame = {
-    val nbKeep = TextAnalysis.nbScore(trustDocs, dec)
-      .filter(col("correct")).select("doc_id")
-    Checkpoints.pin(dec.join(nbKeep, Seq("doc_id"), "left_semi"))
   }
 
   /** Stage 6; the PINNED post-CE-selection frame. The score frame is

@@ -39,11 +39,11 @@ object Parity {
 
     // ── A1 + P7 + F1/F3: grouped conditional counts (linegraph) ──────
     Q("q01_linegraph", "A1 P7 F1 F3",
-      Some(s"""WITH p AS ($periodsSql)
+      s"""WITH p AS ($periodsSql)
         |SELECT year, month,
         |  CAST(count(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS subscriber_count,
         |  CAST(count(CASE WHEN event_type = 'signup' THEN 1 END) AS BIGINT) AS customer_count
-        |FROM p GROUP BY year, month ORDER BY year, month""".stripMargin),
+        |FROM p GROUP BY year, month ORDER BY year, month""".stripMargin,
       (s, dir) => periods(s, dir)
         .groupBy("year", "month")
         .agg(
@@ -53,9 +53,9 @@ object Parity {
 
     // ── A2 + P8: grouped count over (year, month, hour) (heatmap) ────
     Q("q02_heatmap", "A2 P8 F1",
-      Some(s"""WITH p AS ($periodsSql)
+      s"""WITH p AS ($periodsSql)
         |SELECT year, month, hour, CAST(count(*) AS BIGINT) AS total_count
-        |FROM p GROUP BY year, month, hour ORDER BY year, month, hour""".stripMargin),
+        |FROM p GROUP BY year, month, hour ORDER BY year, month, hour""".stripMargin,
       (s, dir) => periods(s, dir)
         .groupBy("year", "month", "hour")
         .agg(count(lit(1)).as("total_count"))
@@ -63,7 +63,7 @@ object Parity {
 
     // ── A3 + W1 + O2/O6 + P11: 8-col agg, top-30 per year (tripsmap) ─
     Q("q03_topk_trips", "A3 W1 O2 O6 P11",
-      Some("""WITH agg AS (
+      """WITH agg AS (
         |  SELECT strftime(l_shipdate, '%Y') AS year,
         |    l_suppkey AS from_station, l_partkey AS to_station,
         |    CAST(count(*) AS BIGINT) AS trip_count,
@@ -75,7 +75,7 @@ object Parity {
         |    CAST(row_number() OVER (PARTITION BY year
         |      ORDER BY trip_count DESC, from_station, to_station) AS INT) AS rn
         |  FROM agg)
-        |SELECT * FROM r WHERE rn <= 30 ORDER BY year, rn""".stripMargin),
+        |SELECT * FROM r WHERE rn <= 30 ORDER BY year, rn""".stripMargin,
       (s, dir) => {
         val agg = t(s, dir, "lineitem")
           .filter(col("l_suppkey") =!= col("l_partkey"))
@@ -92,7 +92,7 @@ object Parity {
 
     // ── J1 + A4/A5 + F4: full-outer starts⟗ends with COALESCE (dock) ─
     Q("q04_dock_fullouter", "J1 A4 A5 F4",
-      Some(s"""WITH p AS ($periodsSql),
+      s"""WITH p AS ($periodsSql),
         |s AS (SELECT user_id AS station, year, month, count(*) AS n FROM p
         |      WHERE event_type IN ('click', 'view') GROUP BY 1, 2, 3),
         |e AS (SELECT user_id AS station, year, month, count(*) AS n FROM p
@@ -101,7 +101,7 @@ object Parity {
         |  CAST(coalesce(s.n, 0) AS BIGINT) AS starts,
         |  CAST(coalesce(e.n, 0) AS BIGINT) AS ends
         |FROM s FULL JOIN e USING (station, year, month)
-        |ORDER BY station, year, month""".stripMargin),
+        |ORDER BY station, year, month""".stripMargin,
       (s, dir) => {
         val base = periods(s, dir).select(
           col("user_id").as("station"), col("year"), col("month"), col("event_type"))
@@ -118,13 +118,13 @@ object Parity {
 
     // ── A6/A7 + F5: nested JSON aggregation (dock station_data) ──────
     Q("q05_station_profile", "A6 A7 F5 F13",
-      Some(s"""WITH p AS ($periodsSql),
+      s"""WITH p AS ($periodsSql),
         |m AS (SELECT user_id AS station, month, CAST(count(*) AS BIGINT) AS n
         |      FROM p GROUP BY 1, 2)
         |SELECT station,
         |  CAST(to_json(list({'month': month, 'n': n} ORDER BY month, n)) AS VARCHAR) AS station_data,
         |  CAST(sum(n) AS BIGINT) AS total
-        |FROM m GROUP BY station ORDER BY station""".stripMargin),
+        |FROM m GROUP BY station ORDER BY station""".stripMargin,
       (s, dir) => periods(s, dir)
         .groupBy(col("user_id").as("station"), col("month"))
         .agg(count(lit(1)).as("n"))
@@ -137,7 +137,7 @@ object Parity {
 
     // ── J2 + J3 (Merge): full-outer-join upsert rewrite ──────────────
     Q("q06_merge_upsert", "J2 J3 U2",
-      Some(s"""WITH p AS ($periodsSql),
+      s"""WITH p AS ($periodsSql),
         |e AS (SELECT year, month, hour, count(*) AS total_count FROM p
         |      WHERE value < 100 GROUP BY 1, 2, 3),
         |d AS (SELECT year, month, hour, count(*) AS total_count FROM p
@@ -145,7 +145,7 @@ object Parity {
         |SELECT year, month, hour,
         |  CAST(coalesce(e.total_count, 0) + coalesce(d.total_count, 0) AS BIGINT) AS total_count
         |FROM e FULL JOIN d USING (year, month, hour)
-        |ORDER BY year, month, hour""".stripMargin),
+        |ORDER BY year, month, hour""".stripMargin,
       (s, dir) => {
         val p = periods(s, dir)
         val existing = p.filter(col("value") < 100)
@@ -159,7 +159,7 @@ object Parity {
 
     // ── J7 (+J5 shape): manifest anti-join, non-equi left-anti ───────
     Q("q07_manifest_antijoin", "J5 J7 A8",
-      Some("""WITH cand AS (
+      """WITH cand AS (
         |  SELECT DISTINCT strftime(o_orderdate, '%Y') AS year,
         |    CAST(strftime(o_orderdate, '%m') AS INT) AS month FROM orders),
         |m AS (SELECT '1993' AS year, 12 AS month, true AS complete
@@ -167,7 +167,7 @@ object Parity {
         |SELECT year, month FROM cand c
         |WHERE NOT EXISTS (SELECT 1 FROM m
         |  WHERE m.year = c.year AND (m.complete OR c.month <= m.month))
-        |ORDER BY year, month""".stripMargin),
+        |ORDER BY year, month""".stripMargin,
       (s, dir) => {
         import s.implicits._
         val cand = t(s, dir, "orders").select(
@@ -181,14 +181,14 @@ object Parity {
 
     // ── J4 + F4: left join against persisted state with default ──────
     Q("q08_state_left_join", "J4 F4",
-      Some("""WITH d AS (
+      """WITH d AS (
         |  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
         |    CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
         |  FROM orders GROUP BY o_custkey)
         |SELECT d.o_custkey, d.n_orders, d.cents,
         |  coalesce(c.c_mktsegment, '{}') AS state
         |FROM d LEFT JOIN customer c ON d.o_custkey = c.c_custkey
-        |ORDER BY d.o_custkey""".stripMargin),
+        |ORDER BY d.o_custkey""".stripMargin,
       (s, dir) => {
         val d = t(s, dir, "orders").groupBy("o_custkey")
           .agg(count(lit(1)).as("n_orders"),
@@ -202,14 +202,14 @@ object Parity {
 
     // ── P5 + F3/F6: conditional lat/lon swap repair (bbox CASE) ──────
     Q("q09_swap_repair", "P5 F3 F6",
-      Some("""SELECT l_orderkey, l_linenumber,
+      """SELECT l_orderkey, l_linenumber,
         |  CASE WHEN l_discount BETWEEN 0.02 AND 0.05
         |        AND l_tax BETWEEN 0.02 AND 0.05
         |       THEN l_discount ELSE l_tax END AS lat,
         |  CASE WHEN l_discount BETWEEN 0.02 AND 0.05
         |        AND l_tax BETWEEN 0.02 AND 0.05
         |       THEN l_tax ELSE l_discount END AS lon
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
       (s, dir) => {
         val inBox = col("l_discount").between(0.02, 0.05) &&
           col("l_tax").between(0.02, 0.05)
@@ -222,11 +222,11 @@ object Parity {
 
     // ── P6 + F2: user-type normalization CASE ────────────────────────
     Q("q10_usertype_norm", "P6 F2 F3",
-      Some("""SELECT lower(CASE WHEN lower(upper(event_type)) = 'purchase' THEN 'Subscriber'
+      """SELECT lower(CASE WHEN lower(upper(event_type)) = 'purchase' THEN 'Subscriber'
         |             WHEN lower(upper(event_type)) = 'signup' THEN 'Customer'
         |             ELSE upper(event_type) END) AS user_type,
         |  CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
       (s, dir) => {
         val raw = upper(col("event_type"))
         t(s, dir, "events").select(
@@ -239,13 +239,13 @@ object Parity {
 
     // ── P10 + F7: data-quality row filter (blacklist, nulls, year) ───
     Q("q11_quality_filter", "P10 F7 F6",
-      Some("""SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS value_cents
         |FROM events
         |WHERE props IS NOT NULL AND value <> 0
         |  AND user_id NOT IN (1, 2, 3) AND event_type <> ''
         |  AND strftime(ts, '%Y') = '2024'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+        |GROUP BY event_type ORDER BY event_type""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .filter(col("props").isNotNull && col("value") =!= 0 &&
           !col("user_id").isin(1, 2, 3) && col("event_type") =!= "" &&
@@ -257,7 +257,7 @@ object Parity {
 
     // ── S7 + P4: multi-format timestamp parsing via coalesce chain ───
     Q("q12_multiformat_ts", "S7 P4 F1",
-      Some("""WITH raw AS (
+      """WITH raw AS (
         |  SELECT event_id,
         |    CASE WHEN event_id % 2 = 0 THEN strftime(ts, '%m/%d/%Y %H:%M:%S')
         |         ELSE strftime(ts, '%Y-%m-%d %H:%M:%S') END AS s
@@ -265,7 +265,7 @@ object Parity {
         |SELECT event_id,
         |  coalesce(try_strptime(s, '%m/%d/%Y %H:%M:%S'),
         |           try_strptime(s, '%Y-%m-%d %H:%M:%S')) AS parsed
-        |FROM raw ORDER BY event_id""".stripMargin),
+        |FROM raw ORDER BY event_id""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .select(col("event_id"),
           when(col("event_id") % 2 === 0,
@@ -279,10 +279,10 @@ object Parity {
 
     // ── F13: JSON field extraction + aggregation ─────────────────────
     Q("q13_json_extract", "F13 F5",
-      Some("""SELECT event_type,
+      """SELECT event_type,
         |  CAST(sum(json_extract_string(props, '$.k')::BIGINT) AS BIGINT) AS k_sum,
         |  CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .select(col("event_type"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
@@ -292,7 +292,7 @@ object Parity {
 
     // ── F10: haversine distance (geodesic approx for waypoints) ──────
     Q("q14_haversine", "F10",
-      Some("""WITH c AS (
+      """WITH c AS (
         |  SELECT l_orderkey, l_linenumber,
         |    40.0 + l_discount * 10 AS lat1, -74.0 + l_tax * 10 AS lon1,
         |    40.0 + (l_partkey % 1000) / 1000.0 AS lat2,
@@ -304,7 +304,7 @@ object Parity {
         |    + cos(lat1 * 0.017453292519943295) * cos(lat2 * 0.017453292519943295)
         |    * sin((lon2 - lon1) * 0.008726646259971648) * sin((lon2 - lon1) * 0.008726646259971648)
         |  )) * 10) AS BIGINT) AS km_x10
-        |FROM c ORDER BY l_orderkey, l_linenumber""".stripMargin),
+        |FROM c ORDER BY l_orderkey, l_linenumber""".stripMargin,
       (s, dir) => {
         val li = t(s, dir, "lineitem").select(
           col("l_orderkey"), col("l_linenumber"),
@@ -325,19 +325,19 @@ object Parity {
 
     // ── J8 + O3: existence probe with LIMIT 1 ────────────────────────
     Q("q15_exists_probe", "J8 O3",
-      Some("SELECT 1 AS one FROM events WHERE strftime(ts, '%Y') = '2024' LIMIT 1"),
+      "SELECT 1 AS one FROM events WHERE strftime(ts, '%Y') = '2024' LIMIT 1",
       (s, dir) => t(s, dir, "events")
         .filter(date_format(col("ts"), "yyyy") === "2024")
         .select(lit(1).as("one")).limit(1)),
 
     // ── U1/U2: union of aligned batches then aggregate ───────────────
     Q("q16_union_append", "U1 U2",
-      Some("""WITH u AS (
+      """WITH u AS (
         |  SELECT user_id, 'click' AS src FROM events WHERE event_type = 'click'
         |  UNION ALL
         |  SELECT user_id, 'view' AS src FROM events WHERE event_type = 'view')
         |SELECT user_id, CAST(count(*) AS BIGINT) AS n FROM u
-        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+        |GROUP BY user_id ORDER BY user_id""".stripMargin,
       (s, dir) => {
         val ev = t(s, dir, "events")
         val a = ev.filter(col("event_type") === "click")
@@ -350,9 +350,9 @@ object Parity {
 
     // ── A8: DISTINCT projection over derived periods ─────────────────
     Q("q17_distinct_periods", "A8 P7",
-      Some("""SELECT DISTINCT strftime(o_orderdate, '%Y') AS year,
+      """SELECT DISTINCT strftime(o_orderdate, '%Y') AS year,
         |  strftime(o_orderdate, '%b') AS month
-        |FROM orders ORDER BY year, month""".stripMargin),
+        |FROM orders ORDER BY year, month""".stripMargin,
       (s, dir) => t(s, dir, "orders")
         .select(date_format(col("o_orderdate"), "yyyy").as("year"),
           date_format(col("o_orderdate"), "MMM").as("month"))
@@ -360,10 +360,10 @@ object Parity {
 
     // ── A4/A5: deterministic representative pickers (min-based) ──────
     Q("q18_station_pickers", "A4 A5",
-      Some("""SELECT user_id AS station, min(event_type) AS repr_type,
+      """SELECT user_id AS station, min(event_type) AS repr_type,
         |  min(value) AS min_value, max(value) AS max_value,
         |  CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY user_id ORDER BY station""".stripMargin),
+        |FROM events GROUP BY user_id ORDER BY station""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .groupBy(col("user_id").as("station"))
         .agg(min(col("event_type")).as("repr_type"),
@@ -376,7 +376,7 @@ object Parity {
     // vs DuckDB's native ASOF JOIN. Sort-merge shape: one shuffle per
     // side on the key, no range cross-join.
     Q("q40_asof_join", "asof-join (beyond reference; time-series op)",
-      Some("""WITH clicks AS (
+      """WITH clicks AS (
         |  SELECT user_id, ts, max(value) AS click_value
         |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
         |purch AS (
@@ -388,7 +388,7 @@ object Parity {
         |  c.ts AS asof_click_ts
         |FROM purch p ASOF LEFT JOIN clicks c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin),
+        |ORDER BY p.event_id""".stripMargin,
       (s, dir) => {
         val ev = t(s, dir, "events")
         val clicks = ev.filter(col("event_type") === "click")
@@ -410,7 +410,7 @@ object Parity {
     // Tolerance nulls an out-of-range nearest match — equivalent to
     // restricting candidates, since the nearest is checked first.
     Q("q48_asof_forward", "asof-join forward+tolerance (beyond reference)",
-      Some("""WITH clicks AS (
+      """WITH clicks AS (
         |  SELECT user_id, ts, max(value) AS click_value
         |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts),
         |purch AS (
@@ -424,7 +424,7 @@ object Parity {
         |    THEN c.ts END AS next_click_ts
         |FROM purch p ASOF LEFT JOIN clicks c
         |  ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY p.event_id""".stripMargin),
+        |ORDER BY p.event_id""".stripMargin,
       (s, dir) => {
         val ev = t(s, dir, "events")
         val clicks = ev.filter(col("event_type") === "click")
@@ -447,7 +447,7 @@ object Parity {
     // opens a session). Covers lag + ROWS frames — analytic surface the
     // reference never needed but a complete engine must have.
     Q("q41_sessionize", "analytics:sessionize lag frames",
-      Some("""WITH o AS (
+      """WITH o AS (
         |  SELECT user_id, ts, event_id,
         |    CASE WHEN lag(ts) OVER w IS NULL
         |         OR ts - lag(ts) OVER w > INTERVAL 30 MINUTE
@@ -462,7 +462,7 @@ object Parity {
         |  min(ts) AS session_start, max(ts) AS session_end,
         |  CAST(count(*) AS BIGINT) AS n_events
         |FROM s GROUP BY user_id, sess
-        |ORDER BY user_id, session_id""".stripMargin),
+        |ORDER BY user_id, session_id""".stripMargin,
       (s, dir) => {
         val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         // gap at full microsecond precision — cast-to-long truncates to
@@ -484,14 +484,14 @@ object Parity {
 
     // ── running-frame aggregates + lag delta per user ────────────────
     Q("q42_running_totals", "analytics:frames lag running-sum",
-      Some("""SELECT event_id, user_id,
+      """SELECT event_id, user_id,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_cents,
         |  CAST(coalesce(CAST(round(value * 100) AS BIGINT) -
         |    lag(CAST(round(value * 100) AS BIGINT)) OVER (
         |      PARTITION BY user_id ORDER BY ts, event_id), 0) AS BIGINT) AS delta_cents
-        |FROM events ORDER BY event_id""".stripMargin),
+        |FROM events ORDER BY event_id""".stripMargin,
       (s, dir) => {
         val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         val cents = round(col("value") * 100).cast("long")
@@ -507,11 +507,11 @@ object Parity {
 
     // ── exact percentiles (interpolated), floor-scaled ───────────────
     Q("q43_percentiles", "analytics:percentiles",
-      Some("""SELECT event_type,
+      """SELECT event_type,
         |  CAST(floor(quantile_cont(value, 0.5) * 100) AS BIGINT) AS median_x100,
         |  CAST(floor(quantile_cont(value, 0.9) * 100) AS BIGINT) AS p90_x100,
         |  CAST(count(*) AS BIGINT) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .groupBy("event_type")
         .agg(
@@ -522,10 +522,10 @@ object Parity {
 
     // ── P1-P4: rename / null-pad / project / cast normalization ──────
     Q("q19_normalize", "P1 P2 P3 P4",
-      Some("""SELECT event_id, event_type AS user_type,
+      """SELECT event_id, event_type AS user_type,
         |  CAST(NULL AS VARCHAR) AS rideable_type,
         |  CAST(value AS DOUBLE) AS v, CAST(user_id AS VARCHAR) AS station_id
-        |FROM events ORDER BY event_id""".stripMargin),
+        |FROM events ORDER BY event_id""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .select(col("event_id"),
           col("event_type").as("user_type"),

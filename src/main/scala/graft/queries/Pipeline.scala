@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{Tables, TableStore}
+import graft.streaming.WaveHarness
 import graft.ops.{Bpe, Covariance, Dedup, Hashing, IncrementalDedup, IvfIndex, Multimodal, Packing, Pq, Retrieval, Sampling, Sharding, Similarity, Sketches, TextAnalysis}
 import Hashing.{h60Sql, h60bSql, h31Sql, shingles3Sql}
 
@@ -572,19 +573,19 @@ object Pipeline {
 
     // ── exact dedup: content-hash groupBy ────────────────────────────
     Q("q20_dedup_exact", "pipeline:dedup-exact",
-      Some("""SELECT md5(text) AS text_hash, CAST(count(*) AS BIGINT) AS n_copies,
+      """SELECT md5(text) AS text_hash, CAST(count(*) AS BIGINT) AS n_copies,
         |  min(doc_id) AS keep_id
-        |FROM documents GROUP BY 1 ORDER BY text_hash""".stripMargin),
+        |FROM documents GROUP BY 1 ORDER BY text_hash""".stripMargin,
       (s, dir) => Dedup.exactGroups(t(s, dir, "documents")).orderBy("text_hash")),
 
     Q("q21_dedup_keep_first", "pipeline:dedup-exact",
-      Some("""SELECT min(doc_id) AS doc_id FROM documents
-        |GROUP BY text ORDER BY doc_id""".stripMargin),
+      """SELECT min(doc_id) AS doc_id FROM documents
+        |GROUP BY text ORDER BY doc_id""".stripMargin,
       (s, dir) => Dedup.keepFirst(t(s, dir, "documents")).orderBy("doc_id")),
 
     // ── exact n-gram Jaccard via inverted shingle index ──────────────
     Q("q22_ngram_jaccard", "pipeline:dedup-jaccard",
-      Some(jaccardOracle),
+      jaccardOracle,
       (s, dir) => Dedup.ngramJaccardPairs(t(s, dir, "documents"), 0.8)
         .orderBy("doc_a", "doc_b")),
 
@@ -593,19 +594,19 @@ object Pipeline {
     // (miss probability ~2e-4 per pair) and verification makes
     // precision exact, so the results coincide.
     Q("q23_dedup_minhash_lsh", "pipeline:dedup-minhash-lsh",
-      Some(jaccardOracle),
+      jaccardOracle,
       (s, dir) => Dedup.minhashDupPairs(docsF(s, dir), 0.8)
         .orderBy("doc_a", "doc_b")),
 
     // ── SimHash near-dup (block-pigeonhole candidates) ───────────────
     Q("q24_dedup_simhash", "pipeline:dedup-simhash",
-      Some(simhashOracle),
+      simhashOracle,
       (s, dir) => Dedup.simhashDupPairs(docsF(s, dir), 3)
         .orderBy("doc_a", "doc_b")),
 
     // ── brute-force cosine top-k (exact ANN baseline) ────────────────
     Q("q25_similarity_topk", "pipeline:similarity-topk",
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
         |n AS (SELECT vec_id, v, label, ${normSql("v")} AS nrm FROM e),
         |q AS (SELECT vec_id AS query_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 20),
         |scored AS (
@@ -617,7 +618,7 @@ object Pipeline {
         |    ORDER BY sim_x1e6 DESC, vec_id) AS INT) AS rank
         |  FROM scored)
         |SELECT query_id, rank, vec_id, label, sim_x1e6 FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
       (s, dir) => Similarity.bruteForceTopK(t(s, dir, "embeddings"), 20, 5)
         .orderBy("query_id", "rank")),
 
@@ -629,7 +630,7 @@ object Pipeline {
     // family's corpus precondition under the hash (round 16): one
     // 1-row broadcast aggregate, no effect on the served plan.
     Q("q26_ann_lsh_topk", "pipeline:similarity-ann",
-      Some(annTopKOracle),
+      annTopKOracle,
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         Similarity.annTopK(e, 20, 5)
@@ -639,13 +640,13 @@ object Pipeline {
 
     // ── embedding cosine near-dup pairs ──────────────────────────────
     Q("q27_embedding_neardup", "pipeline:dedup-embedding",
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, ${normSql("v")} AS nrm FROM e)
         |SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |  CAST(floor(${dotSql("a.v", "b.v")} / (a.nrm * b.nrm) * 1000000) AS BIGINT) AS sim_x1e6
         |FROM n a JOIN n b ON a.vec_id < b.vec_id
         |WHERE ${dotSql("a.v", "b.v")} / (a.nrm * b.nrm) >= 0.4
-        |ORDER BY vec_a, vec_b""".stripMargin),
+        |ORDER BY vec_a, vec_b""".stripMargin,
       (s, dir) => Similarity.nearDupPairs(t(s, dir, "embeddings"), 0.4)
         .orderBy("vec_a", "vec_b")),
 
@@ -655,7 +656,7 @@ object Pipeline {
     // as literals). Since round 15 q26 itself is row-gated too; this
     // aggregate keeps the vs-exact recall claim under the hash.
     Q("q45_ann_recall", "pipeline:similarity-ann-recall",
-      Some(annRecallOracle),
+      annRecallOracle,
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val exact = Similarity.bruteForceTopK(e, 20, 5)
@@ -672,31 +673,31 @@ object Pipeline {
 
     // ── language ID (marker-word heuristic) ──────────────────────────
     Q("q28_text_langid", "pipeline:text-langid",
-      Some(langIdOracle),
+      langIdOracle,
       (s, dir) => TextAnalysis.langId(t(s, dir, "documents")).orderBy("doc_id")),
 
     // ── quality scoring ──────────────────────────────────────────────
     Q("q29_text_quality", "pipeline:text-quality",
-      Some(qualityOracle),
+      qualityOracle,
       (s, dir) => TextAnalysis.quality(t(s, dir, "documents")).orderBy("doc_id")),
 
     // ── token counting (whitespace + BPE-ish regex) ──────────────────
     Q("q30_token_count", "pipeline:text-tokens",
-      Some("""SELECT doc_id,
+      """SELECT doc_id,
         |  CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS ws_tokens,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_ish_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin),
+        |FROM documents ORDER BY doc_id""".stripMargin,
       (s, dir) => TextAnalysis.tokenCounts(t(s, dir, "documents")).orderBy("doc_id")),
 
     // ── document fingerprinting (min-shingle-hash + content md5) ─────
     Q("q31_doc_fingerprint", "pipeline:text-fingerprint",
-      Some(s"""WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id, unnest(${shingles3Sql("text")}) AS s FROM documents),
         |fp AS (SELECT doc_id, min(${h60Sql("s")}) AS shingle_fp FROM sh GROUP BY doc_id)
         |SELECT d.doc_id, md5(d.text) AS content_fp,
         |  coalesce(fp.shingle_fp, ${h60Sql("d.text")}) AS shingle_fp
         |FROM documents d LEFT JOIN fp ON fp.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin),
+        |ORDER BY d.doc_id""".stripMargin,
       (s, dir) => TextAnalysis.fingerprints(docsF(s, dir)).orderBy("doc_id")),
 
     // ── near-dup clustering: connected components over dup pairs ─────
@@ -704,7 +705,7 @@ object Pipeline {
     // exact-Jaccard pair set (clusters are small at this sf; the Spark
     // side scales via per-iteration joins).
     Q("q35_dedup_clusters", "pipeline:dedup-clusters",
-      Some(s"""WITH RECURSIVE sh AS (
+      s"""WITH RECURSIVE sh AS (
         |  SELECT doc_id, unnest(${shingles3Sql("text")}) AS s FROM documents),
         |cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         |p0 AS (
@@ -725,7 +726,7 @@ object Pipeline {
         |  CAST(least(d.doc_id, coalesce(min(r.m), d.doc_id)) AS BIGINT) AS cluster_root,
         |  (d.doc_id = least(d.doc_id, coalesce(min(r.m), d.doc_id))) AS keep
         |FROM documents d LEFT JOIN reach r ON r.n = d.doc_id
-        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin),
+        |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
       (s, dir) => Dedup.dupClusters(docsF(s, dir), 0.8)
         .orderBy("doc_id")),
 
@@ -733,7 +734,7 @@ object Pipeline {
     // cosine >= 0.4 pair graph — "keep one vector per duplicate
     // cluster", same operator family as q35 but on the embedding side.
     Q("q46_embedding_clusters", "pipeline:dedup-embedding-clusters",
-      Some(s"""WITH RECURSIVE e AS (
+      s"""WITH RECURSIVE e AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
         |n AS (SELECT vec_id, v, ${normSql("v")} AS nrm FROM e),
         |pairs AS (
@@ -750,7 +751,7 @@ object Pipeline {
         |  CAST(least(d.vec_id, coalesce(min(r.y), d.vec_id)) AS BIGINT) AS cluster_root,
         |  (d.vec_id = least(d.vec_id, coalesce(min(r.y), d.vec_id))) AS keep
         |FROM embeddings d LEFT JOIN reach r ON r.x = d.vec_id
-        |GROUP BY d.vec_id ORDER BY d.vec_id""".stripMargin),
+        |GROUP BY d.vec_id ORDER BY d.vec_id""".stripMargin,
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         Dedup.componentLabels(
@@ -765,7 +766,7 @@ object Pipeline {
     // the inverted-index pairing cost at corpus scale (shingles with
     // df > 20 are boilerplate and leave the universe before pairing).
     Q("q47_jaccard_df_capped", "pipeline:dedup-jaccard-capped",
-      Some(s"""WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id, unnest(${shingles3Sql("text")}) AS s FROM documents),
         |kept AS (
         |  SELECT doc_id, s FROM sh
@@ -781,7 +782,7 @@ object Pipeline {
         |  CAST(floor(CAST(common AS DOUBLE) / (x.n + y.n - common) * 1000) AS BIGINT) AS jacc_x1000
         |FROM pairs JOIN cnt x ON x.doc_id = doc_a JOIN cnt y ON y.doc_id = doc_b
         |WHERE CAST(common AS DOUBLE) / (x.n + y.n - common) >= 0.8
-        |ORDER BY doc_a, doc_b""".stripMargin),
+        |ORDER BY doc_a, doc_b""".stripMargin,
       (s, dir) => Dedup.ngramJaccardPairsCapped(docsF(s, dir), 0.8, 20L)
         .orderBy("doc_a", "doc_b")),
 
@@ -790,12 +791,12 @@ object Pipeline {
     // the per-language rate is the mixing weight of a training-data
     // pipeline.
     Q("q36_stratified_sample", "pipeline:sampling",
-      Some(s"""SELECT doc_id, lang,
+      s"""SELECT doc_id, lang,
         |  CAST(${h60Sql("doc_id")} % 100 AS BIGINT) AS bucket
         |FROM documents
         |WHERE ${h60Sql("doc_id")} % 100 <
         |  (CASE WHEN lang = 'en' THEN 10 ELSE 50 END)
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin,
       (s, dir) => t(s, dir, "documents")
         .withColumn("bucket", pmod(Hashing.h60(col("doc_id")), lit(100L)))
         .filter(col("bucket") < when(col("lang") === "en", 10).otherwise(50))
@@ -808,7 +809,7 @@ object Pipeline {
     // rows-only is gated piecewise by q82/q102 and spec-asserted in
     // QueriesSpec's recall floor).
     Q("q33_ann_ivf_topk", "pipeline:similarity-ann-ivf",
-      Some(ivfTopKOracle(nCells = 16, nProbe = 4, nQ = 20, k = 5)),
+      ivfTopKOracle(nCells = 16, nProbe = 4, nQ = 20, k = 5),
       (s, dir) => {
         val e = embF(s, dir)
         IvfIndex.annTopKWithCentroids(e, 20, 5,
@@ -837,10 +838,10 @@ object Pipeline {
     // (or demote the claim column to the spec-only assert), not a
     // correctness bug in the operator.
     Q("q34_approx_distinct", "pipeline:approx-distinct",
-      Some("""SELECT event_type,
+      """SELECT event_type,
         |  CAST(count(DISTINCT user_id) AS BIGINT) AS exact_users,
         |  TRUE AS approx_within_3rsd
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
       (s, dir) => t(s, dir, "events")
         .groupBy("event_type")
         .agg(
@@ -853,7 +854,7 @@ object Pipeline {
 
     // ── repetition quality signal (non-distinct shingle stats) ───────
     Q("q37_text_repetition", "pipeline:text-repetition",
-      Some(s"""WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w
         |  FROM documents),
         |sh AS (
@@ -864,16 +865,16 @@ object Pipeline {
         |SELECT doc_id, CAST(sum(f) AS BIGINT) AS n_shingles,
         |  CAST(max(f) AS BIGINT) AS max_freq,
         |  CAST(floor(CAST(max(f) AS DOUBLE) * 1000 / sum(f)) AS BIGINT) AS rep_ratio_x1000
-        |FROM freq GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+        |FROM freq GROUP BY doc_id ORDER BY doc_id""".stripMargin,
       (s, dir) => TextAnalysis.repetition(docsF(s, dir))
         .orderBy("doc_id")),
 
     // ── corpus mixing report (per-stratum stats) ─────────────────────
     Q("q38_corpus_stats", "pipeline:corpus-stats",
-      Some("""SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
+      """SELECT source, lang, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
         |  CAST(floor(CAST(sum(length(text)) AS DOUBLE) * 1000 / count(*)) AS BIGINT) AS mean_chars_x1000
-        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin),
+        |FROM documents GROUP BY source, lang ORDER BY source, lang""".stripMargin,
       (s, dir) => TextAnalysis.corpusStats(t(s, dir, "documents"))
         .orderBy("source", "lang")),
 
@@ -887,11 +888,11 @@ object Pipeline {
     // SEMANTICS (exact anti-join on text): the bloom path must be
     // invisible in the result — that is the correctness claim.
     Q("q44_dedup_incremental", "pipeline:dedup-incremental",
-      Some("""SELECT b.doc_id, b.lang FROM documents b
+      """SELECT b.doc_id, b.lang FROM documents b
         |WHERE b.doc_id % 3 <> 0
         |  AND NOT EXISTS (SELECT 1 FROM documents h
         |    WHERE h.doc_id % 3 = 0 AND h.text = b.text)
-        |ORDER BY b.doc_id""".stripMargin),
+        |ORDER BY b.doc_id""".stripMargin,
       (s, dir) => {
         val docs = t(s, dir, "documents")
         val history = docs.filter(col("doc_id") % 3 === 0)
@@ -902,12 +903,12 @@ object Pipeline {
 
     // ── multimodal: binary payload + mapPartitions batch decode ──────
     Q("q32_multimodal_meta", "pipeline:multimodal",
-      Some("""SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  sha256(text) AS sha256,
         |  CAST(octet_length(encode(text)) % 640 + 1 AS INT) AS width,
         |  CAST(octet_length(encode(text)) % 480 + 1 AS INT) AS height,
         |  CAST(octet_length(encode(text)) % 30 + 1 AS INT) AS n_frames
-        |FROM documents ORDER BY doc_id""".stripMargin),
+        |FROM documents ORDER BY doc_id""".stripMargin,
       (s, dir) => Multimodal.decodeMeta(s,
           Multimodal.withPayload(t(s, dir, "documents")))
         .toDF().orderBy("doc_id")),
@@ -916,7 +917,7 @@ object Pipeline {
     // a two-level prefix sum — the distributed replacement for the
     // single-task Window.orderBy global cumsum (see graft.ops.Packing).
     Q("q49_pack_chunks", "pipeline:pack-chunks",
-      Some("""WITH tok AS (
+      """WITH tok AS (
         |  SELECT doc_id,
         |    CAST(coalesce(len(regexp_split_to_array(trim(lower(text)), '\s+')), 0) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -932,7 +933,7 @@ object Pipeline {
         |     > floor(start_offset / 512.0)) AS spans_boundary,
         |  CAST(floor(greatest(start_offset + n_tokens - 1, start_offset) / 512.0)
         |     - floor(start_offset / 512.0) AS BIGINT) AS chunks_crossed
-        |FROM off ORDER BY doc_id""".stripMargin),
+        |FROM off ORDER BY doc_id""".stripMargin,
       (s, dir) => Packing.packChunks(t(s, dir, "documents"), 512L)
         .orderBy("doc_id")),
 
@@ -940,14 +941,14 @@ object Pipeline {
     // group in h60 pseudo-random order; WindowGroupLimit keeps it a
     // bounded heap per group, not a full sort.
     Q("q50_group_cap", "pipeline:group-cap",
-      Some(s"""WITH pred AS (
+      s"""WITH pred AS (
         |  SELECT doc_id, $predictedSql AS lang FROM documents),
         |r AS (
         |  SELECT doc_id, lang, row_number() OVER (
         |    PARTITION BY lang ORDER BY ${h60Sql("doc_id")}, doc_id) AS rn
         |  FROM pred)
         |SELECT doc_id, lang, CAST(rn AS BIGINT) AS rn
-        |FROM r WHERE rn <= 50 ORDER BY doc_id""".stripMargin),
+        |FROM r WHERE rn <= 50 ORDER BY doc_id""".stripMargin,
       (s, dir) => Sampling.groupCap(t(s, dir, "documents"), 50)
         .orderBy("doc_id")),
 
@@ -955,7 +956,7 @@ object Pipeline {
     // the rest of the corpus via the shingle-df inverted index — the
     // eval-leakage check every pretraining pipeline runs.
     Q("q51_contamination", "pipeline:contamination",
-      Some(s"""WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id, unnest(${shingles3Sql("text")}) AS s FROM documents),
         |stats AS (SELECT s, count(DISTINCT doc_id) AS n_docs FROM sh GROUP BY s),
         |bench AS (SELECT doc_id, s FROM sh WHERE doc_id % 10 = 7),
@@ -970,14 +971,14 @@ object Pipeline {
         |    greatest(coalesce(a.n_shingles, 0), 1)) AS BIGINT) AS contamination_x1000
         |FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
         |WHERE d.doc_id % 10 = 7
-        |ORDER BY d.doc_id""".stripMargin),
+        |ORDER BY d.doc_id""".stripMargin,
       (s, dir) => TextAnalysis.contamination(docsF(s, dir))
         .orderBy("doc_id")),
 
     // ── composite quality gates (Gopher-style rule filter): per-gate
     // booleans + keep, integer-exact thresholds, per-row (no shuffle).
     Q("q52_quality_gates", "pipeline:quality-gates",
-      Some(s"""WITH q AS ($qualityBodySql)
+      s"""WITH q AS ($qualityBodySql)
         |SELECT doc_id,
         |  (n_words < 20) AS too_short,
         |  (n_words > 1000) AS too_long,
@@ -987,14 +988,14 @@ object Pipeline {
         |  NOT ((n_words < 20) OR (n_words > 1000)
         |    OR (n_stopwords * 20 < n_words) OR (n_punct * 5 > n_words)
         |    OR (avg_word_len_x1000 < 3000 OR avg_word_len_x1000 > 15000)) AS keep
-        |FROM q ORDER BY doc_id""".stripMargin),
+        |FROM q ORDER BY doc_id""".stripMargin,
       (s, dir) => TextAnalysis.qualityGates(t(s, dir, "documents"))
         .orderBy("doc_id")),
 
     // ── multimodal frame sampling: every 3rd frame, max 5 per doc,
     // over the decoded metadata (decode itself is the documented stub).
     Q("q53_frame_sample", "pipeline:multimodal-frames",
-      Some("""WITH meta AS (
+      """WITH meta AS (
         |  SELECT doc_id,
         |    CAST(octet_length(encode(text)) % 30 + 1 AS INT) AS n_frames
         |  FROM documents),
@@ -1004,7 +1005,7 @@ object Pipeline {
         |  FROM meta)
         |SELECT doc_id, n_frames,
         |  CAST(unnest(range(0, last_kept + 1, 3)) AS BIGINT) AS frame_idx
-        |FROM k ORDER BY doc_id, frame_idx""".stripMargin),
+        |FROM k ORDER BY doc_id, frame_idx""".stripMargin,
       (s, dir) => Multimodal.sampleFrames(
           Multimodal.decodeMeta(s,
             Multimodal.withPayload(t(s, dir, "documents"))).toDF(),
@@ -1014,7 +1015,7 @@ object Pipeline {
     // ── multimodal resize planning: aspect-preserving clamp to 256 on
     // the long side, integer math only (floor both engines).
     Q("q54_resize_plan", "pipeline:multimodal-resize",
-      Some("""WITH meta AS (
+      """WITH meta AS (
         |  SELECT doc_id,
         |    CAST(octet_length(encode(text)) % 640 + 1 AS INT) AS width,
         |    CAST(octet_length(encode(text)) % 480 + 1 AS INT) AS height
@@ -1027,7 +1028,7 @@ object Pipeline {
         |    THEN greatest(floor(height * 256.0 / greatest(width, height)), 1)
         |    ELSE height END AS INT) AS out_height,
         |  (greatest(width, height) > 256) AS resized
-        |FROM meta ORDER BY doc_id""".stripMargin),
+        |FROM meta ORDER BY doc_id""".stripMargin,
       (s, dir) => Multimodal.resizeMeta(
           Multimodal.decodeMeta(s,
             Multimodal.withPayload(t(s, dir, "documents"))).toDF(),
@@ -1038,7 +1039,7 @@ object Pipeline {
     // sentences per doc, keep first occurrences in original order,
     // reassemble — compared byte-for-byte against the oracle.
     Q("q55_intradoc_dedup", "pipeline:dedup-intradoc",
-      Some("""WITH parts AS (
+      """WITH parts AS (
         |  SELECT doc_id, string_split(text, '. ') AS p FROM documents),
         |e AS (
         |  SELECT doc_id,
@@ -1054,7 +1055,7 @@ object Pipeline {
         |  CAST(sum(CASE WHEN occ = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unique,
         |  coalesce(string_agg(CASE WHEN occ = 1 THEN sent END, '. '
         |    ORDER BY pos), '') AS dedup_text
-        |FROM occ GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+        |FROM occ GROUP BY doc_id ORDER BY doc_id""".stripMargin,
       (s, dir) => TextAnalysis.intraDocDedup(t(s, dir, "documents"))
         .orderBy("doc_id")),
 
@@ -1062,7 +1063,7 @@ object Pipeline {
     // embeddings — the 4x-smaller-payload storage path, oracle-exact
     // because quantization is floor-based round-half-up on both engines.
     Q("q56_quantized_topk", "pipeline:similarity-quantized",
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
+      s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
         |sc AS (SELECT vec_id, v, label,
         |  list_max(list_transform(v, x -> abs(x))) AS s FROM e),
         |dq AS (SELECT vec_id, label,
@@ -1081,7 +1082,7 @@ object Pipeline {
         |    ORDER BY sim_x1e6 DESC, vec_id) AS INT) AS rank
         |  FROM scored)
         |SELECT query_id, rank, vec_id, label, sim_x1e6 FROM r
-        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+        |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
       (s, dir) => Similarity.bruteForceTopK(
           Similarity.dequantizeInt8(
             Similarity.quantizeInt8(t(s, dir, "embeddings"))), 20, 5)
@@ -1096,12 +1097,12 @@ object Pipeline {
     // The bucketing is transparent to results, so the oracle is plain
     // SQL over the unbucketed table.
     Q("q57_bucketed_join", "pipeline:bucketed-warehouse",
-      Some("""WITH tok AS (SELECT doc_id,
+      """WITH tok AS (SELECT doc_id,
         |  CAST(len(regexp_split_to_array(trim(lower(text)), '\s+')) AS BIGINT) AS ws_tokens
         |  FROM documents)
         |SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS n_chars, tok.ws_tokens
         |FROM documents d JOIN tok ON tok.doc_id = d.doc_id
-        |ORDER BY d.doc_id""".stripMargin),
+        |ORDER BY d.doc_id""".stripMargin,
       (s, dir) => {
         val docs = t(s, dir, "documents")
         // per-sf warehouse under the build dir (testdata is read-only);
@@ -1126,7 +1127,7 @@ object Pipeline {
     // exactly. Since round 15 q33 itself is row-gated too (data-
     // derived quantizer); this keeps the vs-exact recall claim.
     Q("q58_ivf_recall", "pipeline:similarity-ann-ivf-recall",
-      Some(ivfRecallOracle),
+      ivfRecallOracle,
       (s, dir) => {
         val e = embF(s, dir)
         val exact = Similarity.bruteForceTopK(e, 20, 5)
@@ -1148,7 +1149,7 @@ object Pipeline {
     // window occurs in >= 2 distinct docs. Localizes shared
     // boilerplate that doc-level MinHash/Jaccard can only flag.
     Q("q59_repeated_spans", "pipeline:repeated-spans",
-      Some(s"""WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w
         |  FROM documents),
         |wins AS (
@@ -1169,7 +1170,7 @@ object Pipeline {
         |  CAST(count(*) AS BIGINT) AS n_windows,
         |  CAST(max(n_docs) AS BIGINT) AS max_df
         |FROM isl GROUP BY doc_id, grp
-        |ORDER BY doc_id, span_start""".stripMargin),
+        |ORDER BY doc_id, span_start""".stripMargin,
       (s, dir) => TextAnalysis.repeatedSpans(docsF(s, dir), 5, 2)
         .orderBy("doc_id", "span_start")),
 
@@ -1177,7 +1178,7 @@ object Pipeline {
     // filter reformulated over doc frequencies with integer/floor-only
     // arithmetic (ln() is not cross-engine-portable).
     Q("q60_vocab_quality", "pipeline:vocab-quality",
-      Some("""WITH tok AS (
+      """WITH tok AS (
         |  SELECT doc_id,
         |    unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS t
         |  FROM documents),
@@ -1187,7 +1188,7 @@ object Pipeline {
         |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
         |  CAST(floor(sum(least(df, 100)) * 1000.0 / (count(*) * 100)) AS BIGINT)
         |    AS common_score_x1000
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
       (s, dir) => TextAnalysis.vocabQuality(t(s, dir, "documents"), 100)
         .orderBy("doc_id")),
 
@@ -1199,7 +1200,7 @@ object Pipeline {
     // universal-hash minima, band assembly, bucket sizing, the cap,
     // candidate expansion, and exact-Jaccard verification.
     Q("q61_minhash_lsh_capped", "pipeline:dedup-minhash-capped",
-      Some(cappedLshOracle(maxBucket = 16)),
+      cappedLshOracle(maxBucket = 16),
       (s, dir) => Dedup.minhashDupPairsCapped(docsF(s, dir), 0.8, 16)
         .orderBy("doc_a", "doc_b")),
 
@@ -1208,7 +1209,7 @@ object Pipeline {
     // the RefinedWeb-style exact sub-document layer (q55 is the
     // intra-doc twin).
     Q("q62_corpus_sentence_dedup", "pipeline:dedup-sentence-global",
-      Some(sentenceDedupOracle),
+      sentenceDedupOracle,
       (s, dir) => TextAnalysis.corpusSentenceDedup(t(s, dir, "documents"))
         .orderBy("doc_id")),
 
@@ -1216,7 +1217,7 @@ object Pipeline {
     // patterns shared verbatim with the oracle (TextAnalysis.EmailRe
     // etc.), per-row map work, zero shuffles.
     Q("q63_pii_scrub", "pipeline:pii-scrub",
-      Some(piiOracle),
+      piiOracle,
       (s, dir) => TextAnalysis.piiScrub(docsF(s, dir))
         .orderBy("doc_id")),
 
@@ -1225,7 +1226,7 @@ object Pipeline {
     // span's first corpus occurrence is excised; one copy of every
     // duplicated passage survives.
     Q("q64_span_removal", "pipeline:span-removal",
-      Some(s"""WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS w
         |  FROM documents),
         |toks AS (
@@ -1265,7 +1266,7 @@ object Pipeline {
         |  CAST(tot.n_tokens - coalesce(ka.n_kept, 0) AS BIGINT) AS n_removed,
         |  coalesce(ka.clean_text, '') AS clean_text
         |FROM tot LEFT JOIN ka ON ka.doc_id = tot.doc_id
-        |ORDER BY tot.doc_id""".stripMargin),
+        |ORDER BY tot.doc_id""".stripMargin,
       (s, dir) => TextAnalysis.repeatedSpanRemoval(docsF(s, dir), 5, 2)
         .orderBy("doc_id")),
 
@@ -1280,7 +1281,7 @@ object Pipeline {
     // agreed only because no qualifying pair on the shipped testdata
     // happened to be band-missed (a per-dataset pin, now gone).
     Q("q65_dedup_materialize", "pipeline:dedup-materialize",
-      Some(lshMaterializeOracle(None)),
+      lshMaterializeOracle(None),
       (s, dir) => {
         val docs = docsF(s, dir)
         val cl = Dedup.dupClusters(docs, 0.8)
@@ -1303,7 +1304,7 @@ object Pipeline {
     // → banding → cap → verify → connected components in SQL: exact
     // equality on ANY dataset, no LSH-recall pin (contrast q65).
     Q("q67_dedup_materialize_capped", "pipeline:dedup-materialize-capped",
-      Some(lshMaterializeOracle(Some(16))),
+      lshMaterializeOracle(Some(16)),
       (s, dir) => {
         val docs = docsF(s, dir)
         val cl = Dedup.dupClusters(docs, 0.8, bucketCap = Some(16))
@@ -1344,8 +1345,8 @@ object Pipeline {
     // values assembled bit-wise, distinct candidates, sequential-fold
     // rerank — so equality is exact on any dataset, no recall pin.
     Q("q69_lsh_neardup_pairs", "pipeline:dedup-embedding-lsh",
-      Some(lshPairsOracle(0.7, bitsPerBand = 16, planted = Some(50),
-        nPlanes = 128)),
+      lshPairsOracle(0.7, bitsPerBand = 16, planted = Some(50),
+        nPlanes = 128),
       (s, dir) => Similarity.nearDupPairsLsh(
           Similarity.plantNearDups(t(s, dir, "embeddings"), 50), 0.7,
           nPlanes = 128, bitsPerBand = 16)
@@ -1360,7 +1361,7 @@ object Pipeline {
     // (Multimodal.phashDupPairs) gets its own oracle-checked pair
     // rows in q72 via alignment-preserving planted payload edits.
     Q("q68_multimodal_phash", "pipeline:multimodal-phash",
-      Some(phashOracle),
+      phashOracle,
       (s, dir) => Multimodal.blockHash(
           Multimodal.withPayload(docsF(s, dir)))
         .orderBy("doc_id")),
@@ -1369,7 +1370,7 @@ object Pipeline {
     // produces the stop-shingle lists q47's df-capped Jaccard consumes;
     // df agg with map-side combine, distributed TakeOrdered top-k.
     Q("q71_top_shingles", "pipeline:boilerplate-mining",
-      Some(s"""WITH sh AS (
+      s"""WITH sh AS (
         |  SELECT doc_id, unnest(${shingles3Sql("text")}) AS s FROM documents),
         |d AS (SELECT s AS shingle, CAST(count(*) AS BIGINT) AS df
         |      FROM sh GROUP BY s),
@@ -1377,7 +1378,7 @@ object Pipeline {
         |        row_number() OVER (ORDER BY df DESC, shingle) AS rank
         |      FROM d)
         |SELECT shingle, df, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 100 ORDER BY rank""".stripMargin),
+        |FROM r WHERE rank <= 100 ORDER BY rank""".stripMargin,
       (s, dir) => TextAnalysis.topShingles(t(s, dir, "documents"), 100)
         .orderBy("rank")),
 
@@ -1388,7 +1389,7 @@ object Pipeline {
     // histogram rank math reproduces quantile_cont's type-7
     // interpolation exactly, which is what the oracle runs.
     Q("q70_length_gate", "pipeline:length-gate",
-      Some("""WITH tok AS (
+      """WITH tok AS (
         |  SELECT doc_id,
         |    CAST(coalesce(len(regexp_split_to_array(trim(lower(text)), '\s+')), 0) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -1398,14 +1399,14 @@ object Pipeline {
         |  (n_tokens >= lo AND n_tokens <= hi) AS keep,
         |  CAST(floor(lo * 100) AS BIGINT) AS lo_x100,
         |  CAST(floor(hi * 100) AS BIGINT) AS hi_x100
-        |FROM tok, b ORDER BY doc_id""".stripMargin),
+        |FROM tok, b ORDER BY doc_id""".stripMargin,
       (s, dir) => TextAnalysis.lengthGate(t(s, dir, "documents"))
         .orderBy("doc_id")),
 
     // ── deterministic train/val/test hash split: stable under re-runs
     // and corpus growth, engine-portable, zero shuffles (a projection).
     Q("q66_hash_split", "pipeline:hash-split",
-      Some(s"""WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id,
         |    ${h60Sql("'split:' || CAST(doc_id AS VARCHAR)")} % 1000 AS bucket
         |  FROM documents)
@@ -1413,7 +1414,7 @@ object Pipeline {
         |  CASE WHEN bucket < 980 THEN 'train'
         |       WHEN bucket < 990 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin),
+        |FROM b ORDER BY doc_id""".stripMargin,
       (s, dir) => Sampling.hashSplit(t(s, dir, "documents"), 980, 10)
         .orderBy("doc_id")),
 
@@ -1428,7 +1429,7 @@ object Pipeline {
     // the pigeonhole kernel emits real pairs the oracle replays by
     // brute force (lossless for hamming <= 3, the q24 argument).
     Q("q72_phash_dup_pairs", "pipeline:multimodal-phash-pairs",
-      Some(phashPairsOracle),
+      phashPairsOracle,
       (s, dir) => {
         val docs = t(s, dir, "documents").select("doc_id", "text")
         // clone-id offset = max(doc_id)+1, derived — disjoint at any
@@ -1457,7 +1458,7 @@ object Pipeline {
     // hash-check regime. Every stage is deterministic, so the oracle
     // replays all five in sequence: exact on any dataset, no pins.
     Q("q73_curation_pipeline", "pipeline:curation-e2e",
-      Some(curationOracle),
+      curationOracle,
       (s, dir) => {
         val docs = docsF(s, dir).select("doc_id", "text")
         val gated = docs.filter(TextAnalysis.qualityKeep(col("text")))
@@ -1493,7 +1494,7 @@ object Pipeline {
     // sizing law and the exact kernel (q27) needs Θ(n²d). The
     // MODERATE-threshold regime was measured and declined: at 0.45 on
     // this ~uniform corpus, any config that actually prunes loses
-    // recall (ProbeIvfScale: 97% recall needed nProbe=8 at 14 s where
+    // recall (PLANS.md round 9: 97% recall needed nProbe=8 at 14 s where
     // exact runs 3 s at 20k vectors) — cluster pruning at moderate
     // sim pays only on corpora with real cluster structure, and the
     // operator's scaladoc prices that openly. The quantizer is the
@@ -1508,8 +1509,8 @@ object Pipeline {
     // tie-break = Spark's array_sort struct order, co-residence join,
     // fold rerank — exact on any dataset.
     Q("q74_ivf_neardup_pairs", "pipeline:dedup-embedding-ivf",
-      Some(ivfPairsOracle(0.7, nProbe = 2, cellSize = 64,
-        planted = Some(50))),
+      ivfPairsOracle(0.7, nProbe = 2, cellSize = 64,
+        planted = Some(50)),
       (s, dir) => {
         val planted = Similarity.plantNearDups(t(s, dir, "embeddings"), 50)
         // the dispatcher resolves to the literal-kernel path at any
@@ -1532,7 +1533,7 @@ object Pipeline {
     // broadcast thresholds onto the stream — the corpus is never
     // shuffled.
     Q("q75_temperature_mix", "pipeline:temperature-mix",
-      Some(s"""WITH c AS (
+      s"""WITH c AS (
         |  SELECT lang, CAST(count(*) AS DOUBLE) AS n
         |  FROM documents GROUP BY lang),
         |r AS (
@@ -1543,7 +1544,7 @@ object Pipeline {
         |FROM documents d JOIN r USING (lang)
         |WHERE ${h60Sql("'mix:' || CAST(doc_id AS VARCHAR)")} % 1000000
         |  < r.rate_ppm
-        |ORDER BY doc_id""".stripMargin),
+        |ORDER BY doc_id""".stripMargin,
       (s, dir) => Sampling.temperatureMix(t(s, dir, "documents"))
         .orderBy("doc_id")),
 
@@ -1559,7 +1560,7 @@ object Pipeline {
     // plane literals are constants of the law, emitted by the shared
     // Scala function that the Spark path itself calls.
     Q("q76_lsh_auto_pairs", "pipeline:dedup-embedding-lsh-auto",
-      Some(lshAutoPairsOracle(0.7, planted = Some(50))),
+      lshAutoPairsOracle(0.7, planted = Some(50)),
       (s, dir) => Similarity.nearDupPairsLshAuto(
           Similarity.plantNearDups(t(s, dir, "embeddings"), 50), 0.7)
         .orderBy("vec_a", "vec_b")),
@@ -1580,7 +1581,7 @@ object Pipeline {
     // second join-back shuffle. Every stage deterministic; the oracle
     // replays all seven in sequence — exact on any dataset, no pins.
     Q("q77_pretraining_pipeline", "pipeline:pretraining-e2e",
-      Some(pretrainOracle),
+      pretrainOracle,
       (s, dir) => {
         val docs = docsF(s, dir).select("doc_id", "text", "lang")
         val gated = docs.filter(TextAnalysis.qualityKeep(col("text")))
@@ -1629,8 +1630,8 @@ object Pipeline {
     // QueriesSpec asserts the executed plan contains the
     // BroadcastNestedLoopJoin chunk join.
     Q("q78_ivf_join_pairs", "pipeline:dedup-embedding-ivf-join",
-      Some(ivfPairsOracle(0.7, nProbe = 2, cellSize = 64,
-        planted = Some(50))),
+      ivfPairsOracle(0.7, nProbe = 2, cellSize = 64,
+        planted = Some(50)),
       (s, dir) => {
         val planted = Similarity.plantNearDups(t(s, dir, "embeddings"), 50)
         val (cents, k) = IvfIndex.sampleQuantizerDf(planted, 64)
@@ -1655,8 +1656,8 @@ object Pipeline {
     // (IvfIncrementalSpec) — the correctness claim that makes the
     // pruning safe.
     Q("q79_ivf_incremental_pairs", "pipeline:dedup-embedding-ivf-incr",
-      Some(ivfIncrementalOracle(0.7, nProbe = 2, cellSize = 64,
-        planted = Some(50))),
+      ivfIncrementalOracle(0.7, nProbe = 2, cellSize = 64,
+        planted = Some(50)),
       (s, dir) => {
         val planted = Similarity.plantNearDups(t(s, dir, "embeddings"), 50)
         val hist = planted.filter(col("vec_id") % 3 =!= 2)
@@ -1688,8 +1689,8 @@ object Pipeline {
     // q79. IvfIncrementalSpec additionally asserts the FILES: every
     // pre-absorb parquet survives the append verbatim.
     Q("q80_ivf_absorb_pairs", "pipeline:dedup-embedding-ivf-absorb",
-      Some(ivfIncrementalOracle(0.7, nProbe = 2, cellSize = 64,
-        planted = Some(50), histPred = "vec_id % 3 = 0")),
+      ivfIncrementalOracle(0.7, nProbe = 2, cellSize = 64,
+        planted = Some(50), histPred = "vec_id % 3 = 0"),
       (s, dir) => {
         val planted = Similarity.plantNearDups(t(s, dir, "embeddings"), 50)
         val h0 = planted.filter(col("vec_id") % 3 === 0)
@@ -1719,9 +1720,9 @@ object Pipeline {
     // pinned config anywhere: grow the corpus and both sides rederive
     // the same quantizer.
     Q("q81_ivf_auto_pairs", "pipeline:dedup-embedding-ivf-auto",
-      Some(ivfPairsOracleWithCell(0.7, nProbe = 2,
+      ivfPairsOracleWithCell(0.7, nProbe = 2,
         "greatest(1, floor(sqrt(count(*)) / 2 + 0.5))",
-        planted = Some(50))),
+        planted = Some(50)),
       (s, dir) => IvfIndex.nearDupPairsClustered(
           Similarity.plantNearDups(t(s, dir, "embeddings"), 50), 0.7,
           nProbe = 2)
@@ -1742,7 +1743,7 @@ object Pipeline {
     // re-sums the same quantized longs; no pinned config. DuckDB's
     // sum(BIGINT) widens to HUGEINT — cast back.
     Q("q82_ivf_lloyd_stats", "pipeline:ivf-lloyd-refine",
-      Some(lloydStatsOracle(cellSize = 64, scaleBits = 20)),
+      lloydStatsOracle(cellSize = 64, scaleBits = 20),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val (cents, k) = IvfIndex.sampleQuantizerDf(e, 64)
@@ -1761,7 +1762,7 @@ object Pipeline {
     // integer stats repeat exactly) is the training entry point and
     // is spec-pinned; a static CTE chain needs a static depth.
     Q("q102_lloyd_train", "pipeline:ivf-lloyd-train",
-      Some(lloydTrainOracle(cellSize = 64, scaleBits = 20, iters = 3)),
+      lloydTrainOracle(cellSize = 64, scaleBits = 20, iters = 3),
       (s, dir) => IvfIndex.lloydTrainStats(t(s, dir, "embeddings"),
         targetCellSize = 64, iters = 3, chunkSize = 16)),
 
@@ -1775,7 +1776,7 @@ object Pipeline {
     // the same md5-derived hash, and the (h, chunk_id) in-shard
     // order.
     Q("q83_epoch_shards", "pipeline:epoch-shuffle",
-      Some(epochShardsOracle(contextLen = 512, nShards = 8, epoch = 1)),
+      epochShardsOracle(contextLen = 512, nShards = 8, epoch = 1),
       (s, dir) => Sharding.epochShards(
           Packing.packChunks(t(s, dir, "documents"), 512L)
             .select("chunk_id").distinct(),
@@ -1793,7 +1794,7 @@ object Pipeline {
     // the tie-broken rank), q86 the recall of the 64x-compressed scan
     // against the exact squared-L2 top-k — the honesty row.
     Q("q84_pq_codes", "pipeline:pq-encode",
-      Some(pqCodesOracle(PqDefault)),
+      pqCodesOracle(PqDefault),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val cb = Pq.sampleCodebooks(e, PqDefault)
@@ -1801,12 +1802,12 @@ object Pipeline {
       }),
 
     Q("q85_pq_adc_topk", "pipeline:pq-adc-ann",
-      Some(pqAdcTopKOracle(PqDefault, nQ = 20, k = 5)),
+      pqAdcTopKOracle(PqDefault, nQ = 20, k = 5),
       (s, dir) => Pq.adcTopK(t(s, dir, "embeddings"), PqDefault,
         nQueries = 20, k = 5)),
 
     Q("q86_pq_adc_recall", "pipeline:pq-adc-recall",
-      Some(pqAdcRecallOracle(PqDefault, nQ = 20, k = 5)),
+      pqAdcRecallOracle(PqDefault, nQ = 20, k = 5),
       (s, dir) => Pq.adcRecall(t(s, dir, "embeddings"), PqDefault,
         nQueries = 20, k = 5)),
 
@@ -1820,12 +1821,12 @@ object Pipeline {
     // at sf0.1 while the R=50 rerank (a 2.5% scan) triples it to
     // 60/100 — q88 prices exactly that trade.
     Q("q87_pq_rerank_topk", "pipeline:pq-rerank-ann",
-      Some(pqRerankTopKOracle(PqDefault, nQ = 20, k = 5, shortlist = 50)),
+      pqRerankTopKOracle(PqDefault, nQ = 20, k = 5, shortlist = 50),
       (s, dir) => Pq.adcRerankTopK(t(s, dir, "embeddings"), PqDefault,
         nQueries = 20, k = 5, shortlist = 50)),
 
     Q("q88_pq_rerank_recall", "pipeline:pq-rerank-recall",
-      Some(pqRerankRecallOracle(PqDefault, nQ = 20, k = 5, shortlist = 50)),
+      pqRerankRecallOracle(PqDefault, nQ = 20, k = 5, shortlist = 50),
       (s, dir) => Pq.adcRerankRecall(t(s, dir, "embeddings"), PqDefault,
         nQueries = 20, k = 5, shortlist = 50)),
 
@@ -1841,14 +1842,14 @@ object Pipeline {
     // q90 folds BOTH loss sources — cell probing and code fidelity —
     // into one hash-checked recall.
     Q("q89_ivfpq_topk", "pipeline:ivfpq-ann",
-      Some(ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
-        nQ = 20, k = 5, shortlist = 50)),
+      ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
+        nQ = 20, k = 5, shortlist = 50),
       (s, dir) => Pq.ivfPqTopK(t(s, dir, "embeddings"), PqDefault,
         cellSize = 64, nProbe = 4, nQueries = 20, k = 5, shortlist = 50)),
 
     Q("q90_ivfpq_recall", "pipeline:ivfpq-recall",
-      Some(ivfPqRecallOracle(PqDefault, cellSize = 64, nProbe = 4,
-        nQ = 20, k = 5, shortlist = 50)),
+      ivfPqRecallOracle(PqDefault, cellSize = 64, nProbe = 4,
+        nQ = 20, k = 5, shortlist = 50),
       (s, dir) => Pq.ivfPqRecall(t(s, dir, "embeddings"), PqDefault,
         cellSize = 64, nProbe = 4, nQueries = 20, k = 5, shortlist = 50)),
 
@@ -1861,8 +1862,8 @@ object Pipeline {
     // own count, so the sizing law itself is hash-checked. q89/q90
     // keep the pinned c=64 as stable regression rows.
     Q("q101_ivfpq_auto_recall", "pipeline:ivfpq-auto-recall",
-      Some(ivfPqRecallAutoOracle(PqDefault, nProbe = 4, nQ = 20, k = 5,
-        shortlist = 50)),
+      ivfPqRecallAutoOracle(PqDefault, nProbe = 4, nQ = 20, k = 5,
+        shortlist = 50),
       (s, dir) => Pq.ivfPqRecallAuto(t(s, dir, "embeddings"), PqDefault,
         nProbe = 4, nQueries = 20, k = 5, shortlist = 50)),
 
@@ -1874,7 +1875,7 @@ object Pipeline {
     // broadcasts; the corpus-side shingle stream joins it map-side —
     // the one exchange is the per-doc count agg on narrow rows.
     Q("q91_reference_overlap", "pipeline:reference-quality",
-      Some(referenceOverlapOracle(refSource = "src0", minDf = 2)),
+      referenceOverlapOracle(refSource = "src0", minDf = 2),
       (s, dir) => TextAnalysis.referenceOverlapScore(
         docsF(s, dir), refSource = "src0", minDf = 2)
         .orderBy("doc_id")),
@@ -1887,7 +1888,7 @@ object Pipeline {
     // at d=64, corpus size nowhere. The eigensolver stage stays a
     // driver-side constant-size artifact (CovarianceSpec pins it).
     Q("q98_gram_matrix", "pipeline:embedding-gram",
-      Some(gramMatrixOracle(scaleBits = 20)),
+      gramMatrixOracle(scaleBits = 20),
       (s, dir) => Covariance.gramFixedPoint(t(s, dir, "embeddings"),
         dim = 64, scaleBits = 20)),
 
@@ -1905,7 +1906,7 @@ object Pipeline {
     // CovarianceSpec on the anisotropic corpus, where rotation has
     // variance to balance (the driver's embeddings are uniform).
     Q("q99_pq_rotated_recall", "pipeline:pq-opq-recall",
-      Some(pqRotRecallOracle(PqDefault, nQ = 20, k = 5)),
+      pqRotRecallOracle(PqDefault, nQ = 20, k = 5),
       (s, dir) => {
         val sp = s
         import sp.implicits._
@@ -1924,7 +1925,7 @@ object Pipeline {
     // at any corpus size — the complement of q49's boundary-crossing
     // concat-and-chunk.
     Q("q97_sliding_chunks", "pipeline:rag-chunking",
-      Some(slidingChunksOracle(width = 32, stride = 16)),
+      slidingChunksOracle(width = 32, stride = 16),
       (s, dir) => Packing.slidingWindows(docsF(s, dir), width = 32,
         stride = 16).orderBy("doc_id", "chunk_idx")),
 
@@ -1936,7 +1937,7 @@ object Pipeline {
     // never hash-match), distances the sequential-fold
     // ⟨v,v⟩−2⟨v,c⟩+⟨c,c⟩ form, rank tie-broken on (d, vec_id).
     Q("q96_semdedup_keep", "pipeline:dedup-embedding-semdedup",
-      Some(semDedupKeepOracle(minSim = 0.4, scaleBits = 20)),
+      semDedupKeepOracle(minSim = 0.4, scaleBits = 20),
       (s, dir) => Similarity.semDedupKeep(t(s, dir, "embeddings"), 0.4)
         .orderBy("vec_id")),
 
@@ -1947,8 +1948,8 @@ object Pipeline {
     // a join), so the whole scored-then-thinned pipe adds nothing to
     // q91's plan but a pushed filter.
     Q("q95_reference_sample", "pipeline:reference-sample",
-      Some(referenceSampleOracle(refSource = "src0", minDf = 2,
-        headPpm = 1000000L, middlePpm = 500000L, tailPpm = 100000L)),
+      referenceSampleOracle(refSource = "src0", minDf = 2,
+        headPpm = 1000000L, middlePpm = 500000L, tailPpm = 100000L),
       (s, dir) => Sampling.bucketSample(
           TextAnalysis.referenceOverlapScore(docsF(s, dir), "src0", 2),
           "bucket", Map("head" -> 1000000L, "middle" -> 500000L,
@@ -1964,8 +1965,8 @@ object Pipeline {
     // placement assignment at query time. Same oracle SQL as q89,
     // because the index IS q89's intermediate, materialized.
     Q("q94_ivfpq_indexed", "pipeline:ivfpq-indexed",
-      Some(ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
-        nQ = 20, k = 5, shortlist = 50)),
+      ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
+        nQ = 20, k = 5, shortlist = 50),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
@@ -1982,7 +1983,7 @@ object Pipeline {
     // row per step, which is the merge list a real trainer keeps
     // anyway. The oracle unrolls the same six steps as CTE stages.
     Q("q92_bpe_merges", "pipeline:bpe-train",
-      Some(bpeMergesOracle(steps = 6)),
+      bpeMergesOracle(steps = 6),
       (s, dir) => Bpe.trainMerges(docsF(s, dir), steps = 6)
         .orderBy("step")),
 
@@ -1994,7 +1995,7 @@ object Pipeline {
     // corpus word stream). Two exchanges at any corpus size: the
     // vocab groupBy and the per-doc sum.
     Q("q93_bpe_subwords", "pipeline:bpe-tokenize",
-      Some(bpeSubwordsOracle(steps = 6)),
+      bpeSubwordsOracle(steps = 6),
       (s, dir) => {
         val d = docsF(s, dir)
         val merges = Bpe.trainMerges(d, steps = 6)
@@ -2016,7 +2017,7 @@ object Pipeline {
     // coupled at the call site — a future default change cannot
     // silently desynchronize them until the hash gate trips.
     Q("q100_bpe_batched", "pipeline:bpe-train-batched",
-      Some(bpeBatchedOracle(steps = 8, batch = 3, pool = 24)),
+      bpeBatchedOracle(steps = 8, batch = 3, pool = 24),
       (s, dir) => Bpe.trainMergesBatched(docsF(s, dir), steps = 8,
         batch = 3, candPool = 24).orderBy("step")),
 
@@ -2039,7 +2040,7 @@ object Pipeline {
     // Byte-identical REPLAY idempotence (the failure-recovery leg the
     // oracle can't see) stays spec'd in StreamingDedupSpec.
     Q("q103_streaming_dedup_drain", "pipeline:streaming-dedup-drain",
-      Some(streamingDrainOracle),
+      streamingDrainOracle,
       (s, dir) => {
         val root = new java.io.File(
           s"target/graft-wh/${new java.io.File(dir).getName}/q103")
@@ -2065,7 +2066,8 @@ object Pipeline {
         // Per-batch exchanges sized to the drain's bounded key space
         // (as the sessionize harnesses), restored after.
         (0 until 3).foreach { b =>
-          writeWave(aug.filter(col("doc_id") % 3 === b), src, b)
+          WaveHarness.writeWave(aug.filter(col("doc_id") % 3 === b),
+            src, b)
         }
         val prevSp = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", "4")
@@ -2094,8 +2096,8 @@ object Pipeline {
     // here; the recall LIFT on anisotropic data lives in
     // CovarianceSpec, where the fixture corpus itself is served.
     Q("q104_ivfpq_rotated_serve", "pipeline:ivfpq-opq-serve",
-      Some(ivfPqRotRecallOracle(PqDefault, nProbe = 4, nQ = 20, k = 5,
-        shortlist = 50)),
+      ivfPqRotRecallOracle(PqDefault, nProbe = 4, nQ = 20, k = 5,
+        shortlist = 50),
       (s, dir) => {
         val sp = s
         import sp.implicits._
@@ -2126,7 +2128,7 @@ object Pipeline {
     // sink is the same idempotent dynamic-overwrite-by-batch_id
     // contract as q103's.
     Q("q105_streaming_sessionize_drain", "pipeline:streaming-sessionize",
-      Some(streamingSessionizeOracle),
+      streamingSessionizeOracle,
       (s, dir) => sessionizeDrain(s, dir, "q105", timeout = false)),
 
     // ── the streaming index-ingest lifecycle under the hash gate,
@@ -2144,8 +2146,8 @@ object Pipeline {
     // result, which is precisely the grown-index ≡ from-scratch
     // equality StreamingVectorIngestSpec asserts, now driver-checked.
     Q("q106_streaming_index_grow", "pipeline:streaming-ivfpq-ingest",
-      Some(ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
-        nQ = 20, k = 5, shortlist = 50)),
+      ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
+        nQ = 20, k = 5, shortlist = 50),
       (s, dir) => {
         val root = new java.io.File(
           s"target/graft-wh/${new java.io.File(dir).getName}/q106")
@@ -2164,7 +2166,8 @@ object Pipeline {
             col("id").as("pq_code")),
           wh, "q106_pqidx", nBuckets = 8, bucketCols = Seq("cell"))
         Seq(0, 1).foreach { wave =>
-          writeWave(vecs.filter(col("vec_id") % 2 === wave), src, wave)
+          WaveHarness.writeWave(vecs.filter(col("vec_id") % 2 === wave),
+            src, wave)
         }
         val prevSp = s.conf.get("spark.sql.shuffle.partitions")
         s.conf.set("spark.sql.shuffle.partitions", "4")
@@ -2192,7 +2195,7 @@ object Pipeline {
     // q02 heatmap law only if update-mode re-emission and the keyed
     // replace both work across checkpointed runs.
     Q("q107_streaming_heatmap_upsert", "pipeline:streaming-upsert",
-      Some(streamingHeatmapOracle),
+      streamingHeatmapOracle,
       (s, dir) => {
         val root = new java.io.File(
           s"target/graft-wh/${new java.io.File(dir).getName}/q107")
@@ -2210,7 +2213,7 @@ object Pipeline {
         s.conf.set("spark.sql.shuffle.partitions", "4")
         try {
           Seq(0, 1).foreach { wave =>
-            writeWave(ev.filter(col("event_id") % 2 === wave)
+            WaveHarness.writeWave(ev.filter(col("event_id") % 2 === wave)
               .drop("event_id"), src, wave)
           }
           val stream = s.readStream
@@ -2236,7 +2239,7 @@ object Pipeline {
     // history table instead of raw strings; the shared oracle is
     // exactly the collision-freedom claim, hash-checked per run.
     Q("q108_streaming_sentence_dedup", "pipeline:streaming-sentence-dedup",
-      Some(sentenceDedupOracle),
+      sentenceDedupOracle,
       (s, dir) => {
         val root = new java.io.File(
           s"target/graft-wh/${new java.io.File(dir).getName}/q108")
@@ -2252,7 +2255,7 @@ object Pipeline {
         try {
           Seq(col("doc_id") <= mid, col("doc_id") > mid).zipWithIndex
             .foreach { case (wave, w) =>
-              writeWave(docs.filter(wave), src, w)
+              WaveHarness.writeWave(docs.filter(wave), src, w)
             }
           graft.streaming.StreamingSentenceDedup.run(
             graft.streaming.StreamingSentenceDedup.docStream(
@@ -2281,7 +2284,7 @@ object Pipeline {
     // land in one batch) — the coincidence claim itself is what the
     // hash gate checks.
     Q("q109_streaming_sessionize_timeout", "pipeline:streaming-timeout",
-      Some(streamingSessionizeOracle),
+      streamingSessionizeOracle,
       (s, dir) => sessionizeDrain(s, dir, "q109", timeout = true)),
 
     // ── BM25 lexical retrieval ([[graft.ops.Retrieval]]): targeted
@@ -2291,7 +2294,7 @@ object Pipeline {
     // replays the ranking bit-for-bit; the only corpus-sized
     // exchange carries pre-filtered query-term hits.
     Q("q110_bm25_topk", "pipeline:retrieval-bm25",
-      Some(bm25Oracle(Bm25Terms, k = 25)),
+      bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => Retrieval.bm25TopK(docsF(s, dir), Bm25Terms, k = 25)
         .orderBy("rank")),
 
@@ -2302,7 +2305,7 @@ object Pipeline {
     // n = 2; vocabulary-sized aggregates, broadcast join-backs,
     // TakeOrdered top-k.
     Q("q111_collocation_lift", "pipeline:text-collocations",
-      Some(collocationOracle(minCount = 3, k = 50)),
+      collocationOracle(minCount = 3, k = 50),
       (s, dir) => TextAnalysis.collocations(docsF(s, dir), minCount = 3,
         k = 50).orderBy("rank")),
 
@@ -2314,7 +2317,7 @@ object Pipeline {
     // hash-checked boolean column); the oracle rebuilds the whole
     // salted-h60 grid bit-for-bit.
     Q("q112_cms_estimates", "pipeline:sketch-cms",
-      Some(cmsOracle(CmsProbes, depth = 4, width = 16)),
+      cmsOracle(CmsProbes, depth = 4, width = 16),
       (s, dir) => Sketches.cmsEstimates(docsF(s, dir), CmsProbes,
         depth = 4, width = 16).orderBy("token")),
 
@@ -2332,7 +2335,7 @@ object Pipeline {
     // itself is exercised and hash-checked: 31 candidates -> 30
     // confirmed at sf0.001/0.01/0.1.
     Q("q134_heavy_hitters", "pipeline:sketch-heavy-hitters",
-      Some(heavyHittersOracle(minCount = 500, depth = 4, width = 8)),
+      heavyHittersOracle(minCount = 500, depth = 4, width = 8),
       (s, dir) => Sketches.heavyHitters(docsF(s, dir), minCount = 500,
         depth = 4, width = 8).orderBy("token")),
 
@@ -2344,7 +2347,7 @@ object Pipeline {
     // capped cluster chain feeds q131's integer tf·idf keyed by root;
     // the oracle chains the SAME capped CTEs into the SAME rational.
     Q("q136_cluster_keywords", "pipeline:retrieval-cluster-labels",
-      Some(clusterKeywordsOracle(m = 3)),
+      clusterKeywordsOracle(m = 3),
       (s, dir) => {
         val docs = docsF(s, dir)
         Retrieval.clusterKeywords(docs,
@@ -2365,8 +2368,8 @@ object Pipeline {
     // never answers. vec_id % 7 = 3 deletes ~14%, enough to move
     // several top-5 lists vs q89.
     Q("q135_index_delete", "pipeline:ivfpq-delete",
-      Some(ivfPqDeleteOracle(PqDefault, cellSize = 64, nProbe = 4,
-        nQ = 20, k = 5, shortlist = 50, deletePred = "vec_id % 7 = 3")),
+      ivfPqDeleteOracle(PqDefault, cellSize = 64, nProbe = 4,
+        nQ = 20, k = 5, shortlist = 50, deletePred = "vec_id % 7 = 3"),
       (s, dir) => {
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
         val e = t(s, dir, "embeddings")
@@ -2410,10 +2413,10 @@ object Pipeline {
     // one gated result; the oracle replays the dispatch arithmetic,
     // so an engine disagreement on the branch itself hash-fails.
     Q("q137_filtered_ann", "pipeline:similarity-filtered-ann",
-      Some(filteredAnnOracle(Seq(
+      filteredAnnOracle(Seq(
         ("broad", (z: String) => s"$z.label % 2 = 0"),
         ("rare", (z: String) => s"$z.vec_id % 50 = 7")),
-        nQ = 20, k = 5, cellSize = 64, nProbe = 4, thrPermille = 50)),
+        nQ = 20, k = 5, cellSize = 64, nProbe = 4, thrPermille = 50),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val broad = IvfIndex.filteredTopK(e,
@@ -2437,8 +2440,8 @@ object Pipeline {
     // filtered serving is a hash-checked number, not a hope. Both
     // forcings are the dispatch law's own ends (1000‰ / 0‰).
     Q("q144_filtered_ann_recall", "pipeline:similarity-filtered-recall",
-      Some(filteredAnnRecallOracle((z: String) => s"$z.label % 2 = 0",
-        nQ = 20, k = 5, cellSize = 64, nProbe = 4)),
+      filteredAnnRecallOracle((z: String) => s"$z.label % 2 = 0",
+        nQ = 20, k = 5, cellSize = 64, nProbe = 4),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val pred = pmod(col("label"), lit(2)) === 0
@@ -2465,8 +2468,8 @@ object Pipeline {
     // oracle chains the shared bm25Ctes fragment with the q25 float
     // conventions and the same 10^6 div (60 + rank) arithmetic.
     Q("q138_hybrid_rrf", "pipeline:retrieval-hybrid",
-      Some(hybridOracle(Bm25Terms, qid = 7L, nLex = 20, nVec = 20,
-        k = 10, rrfK = 60)),
+      hybridOracle(Bm25Terms, qid = 7L, nLex = 20, nVec = 20,
+        k = 10, rrfK = 60),
       (s, dir) => Retrieval.hybridTopK(docsF(s, dir),
         t(s, dir, "embeddings"), Bm25Terms, queryVecId = 7L,
         nLex = 20, nVec = 20, k = 10).orderBy("rank")),
@@ -2477,8 +2480,8 @@ object Pipeline {
     // standard convention), pure composition under a composite
     // passage id decomposed back by exact integer arithmetic.
     Q("q146_passage_retrieval", "pipeline:retrieval-passages",
-      Some(passageTopKOracle(Bm25Terms, width = 32, stride = 16,
-        k = 20, idSpan = 1000000L)),
+      passageTopKOracle(Bm25Terms, width = 32, stride = 16,
+        k = 20, idSpan = 1000000L),
       (s, dir) => Retrieval.passageTopK(docsF(s, dir), Bm25Terms,
         width = 32, stride = 16, k = 20).orderBy("rank")),
 
@@ -2490,10 +2493,9 @@ object Pipeline {
     // mix → pack tail over the survivors. Ten chained stages, one
     // pin-free oracle; the full design narrative, the waypoint
     // pin-vs-cache lesson, and the pinned-output rationale live on the
-    // [[Capstone]] object (shared with ProbeCapstone so the ladder can
-    // never drift from the gated composition).
+    // [[Capstone]] object.
     Q("q147_curation_capstone", "pipeline:curation-capstone-v2",
-      Some(capstoneOracle),
+      capstoneOracle,
       (s, dir) => Capstone.run(
         docsF(s, dir).select("doc_id", "text", "lang", "source"),
         t(s, dir, "embeddings"))),
@@ -2508,7 +2510,7 @@ object Pipeline {
     // Candidate false positives (band collisions between unrelated
     // docs) die at the distance filter on both engines.
     Q("q139_edit_verified_pairs", "pipeline:dedup-edit-distance",
-      Some(editVerifiedOracle(maxBucket = 16, maxDist = 64)),
+      editVerifiedOracle(maxBucket = 16, maxDist = 64),
       (s, dir) => {
         val d = docsF(s, dir)
         Dedup.editVerifiedPairs(d,
@@ -2526,7 +2528,7 @@ object Pipeline {
     // per-(class, token) bits, unseen-token defaults, argmin with
     // the class-name tie-break — all under the hash.
     Q("q140_nb_classifier", "pipeline:text-nb-classifier",
-      Some(nbClassifierOracle(mod = 10, rem = 7)),
+      nbClassifierOracle(mod = 10, rem = 7),
       (s, dir) => TextAnalysis.nbLangClassifier(docsF(s, dir))
         .orderBy("doc_id")),
 
@@ -2539,8 +2541,8 @@ object Pipeline {
     // B = 256 at the sf vocabularies forces real bucket collisions
     // through the hash gate.
     Q("q141_ce_select", "pipeline:sample-ce-select",
-      Some(ceSelectOracle(targetSrc = "src0", buckets = 256,
-        thetaX1000 = 0L)),
+      ceSelectOracle(targetSrc = "src0", buckets = 256,
+        thetaX1000 = 0L),
       (s, dir) => TextAnalysis.crossEntropySelect(docsF(s, dir),
           col("source") === "src0", buckets = 256, thetaX1000 = 0L)
         .orderBy("doc_id")),
@@ -2556,7 +2558,7 @@ object Pipeline {
     // rebuilds all 60 sums, the signatures, the pigeonhole set, and
     // the integer-exact cosine.
     Q("q142_hashed_text_neardup", "pipeline:dedup-hashed-vectors",
-      Some(hashedNearDupOracle(maxHamming = 3, minSimX1e6 = 800000L)),
+      hashedNearDupOracle(maxHamming = 3, minSimX1e6 = 800000L),
       (s, dir) => Dedup.textNearDupPairsHashed(docsF(s, dir),
           maxHamming = 3, minSimX1e6 = 800000L)
         .orderBy("doc_a", "doc_b")),
@@ -2579,7 +2581,7 @@ object Pipeline {
     // matching a batch-2 click has view_ts + W ≥ ct ≥ mid > that
     // watermark (the scaladoc's parity argument, specialized).
     Q("q143_streaming_interval_join", "pipeline:streaming-join",
-      Some(streamingJoinOracle(windowMin = 30)),
+      streamingJoinOracle(windowMin = 30),
       (s, dir) => {
         val root = new java.io.File(
           s"target/graft-wh/${new java.io.File(dir).getName}/q143")
@@ -2596,10 +2598,12 @@ object Pipeline {
         val clicks = ev.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"),
             col("user_id").as("c_user"), col("ts").as("click_ts"))
-        writeWave(views, s"$root/views", 0)
-        writeWave(clicks.filter(unix_micros(col("click_ts")) < midUs),
+        WaveHarness.writeWave(views, s"$root/views", 0)
+        WaveHarness.writeWave(
+          clicks.filter(unix_micros(col("click_ts")) < midUs),
           s"$root/clicks", 0)
-        writeWave(clicks.filter(unix_micros(col("click_ts")) >= midUs),
+        WaveHarness.writeWave(
+          clicks.filter(unix_micros(col("click_ts")) >= midUs),
           s"$root/clicks", 1)
         val vStream = s.readStream
           .schema("view_id bigint, v_user bigint, view_ts timestamp")
@@ -2630,7 +2634,7 @@ object Pipeline {
     // end so append mode emits them; the sentinel sessions themselves
     // end AFTER the final watermark and are never emitted).
     Q("q145_session_window_native", "pipeline:streaming-session-native",
-      Some(streamingSessionizeOracle),
+      streamingSessionizeOracle,
       (s, dir) => sessionWindowDrain(s, dir, "q145")),
 
     // ── the sessionization SERVING DEFAULT: density-dispatched
@@ -2648,7 +2652,7 @@ object Pipeline {
     // the row-equality of both branches is spec-pinned
     // (SessionDispatchSpec).
     Q("q148_sessionize_dispatched", "pipeline:streaming-session-dispatch",
-      Some(streamingSessionizeOracle),
+      streamingSessionizeOracle,
       (s, dir) => {
         val ev = t(s, dir, "events")
           .select(col("user_id").cast("long").as("user_id"), col("ts"))
@@ -2666,7 +2670,7 @@ object Pipeline {
     // not new machinery: any pair source (q23 LSH, q61 capped, q74
     // IVF) drops in unchanged.
     Q("q113_source_leakage", "pipeline:dedup-source-matrix",
-      Some(sourceLeakageOracle),
+      sourceLeakageOracle,
       (s, dir) => {
         val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
         val pairs = Dedup.ngramJaccardPairs(t(s, dir, "documents"), 0.8)
@@ -2696,7 +2700,7 @@ object Pipeline {
     // buckets (arithmetic, not sampled — deterministic at any
     // parallelism); the oracle ranks with a plain window.
     Q("q114_length_batching", "pipeline:packing-length-batches",
-      Some(lengthBatchingOracle(batchSize = 32)),
+      lengthBatchingOracle(batchSize = 32),
       (s, dir) => Packing.lengthBatchStats(docsF(s, dir), batchSize = 32,
         lenBucket = 16L).orderBy("strategy", "batch_id")),
 
@@ -2707,7 +2711,7 @@ object Pipeline {
     // guaranteed. Vocabulary broadcast, one corpus-stream join, one
     // (doc_id) aggregation — the q91 exchange shape.
     Q("q115_unigram_surprisal", "pipeline:text-lm-surprisal",
-      Some(unigramSurprisalOracle),
+      unigramSurprisalOracle,
       (s, dir) => TextAnalysis.unigramSurprisal(docsF(s, dir))
         .orderBy("doc_id")),
 
@@ -2720,7 +2724,7 @@ object Pipeline {
     // as q20; the ASCII character class means the same thing under
     // Java regex and RE2, so the key replays verbatim.
     Q("q116_normalized_dedup", "pipeline:dedup-normalized",
-      Some(normalizedDedupOracle),
+      normalizedDedupOracle,
       (s, dir) => Dedup.normalizedGroups(t(s, dir, "documents"))
         // canon_hash is nullable (the deliberate null-text group);
         // Spark sorts NULLS FIRST ascending, DuckDB NULLS LAST — pin
@@ -2737,7 +2741,7 @@ object Pipeline {
     // thresholds — and the oracle's quantile_cont must agree with the
     // histogram walk per group.
     Q("q117_perlang_surprisal_gate", "pipeline:text-lm-perlang-gate",
-      Some(perLangGateOracle),
+      perLangGateOracle,
       (s, dir) => TextAnalysis.perLangSurprisalGate(docsF(s, dir))
         .orderBy("doc_id")),
 
@@ -2749,7 +2753,7 @@ object Pipeline {
     // diagnostic. All broadcast probes; the per-doc agg is the one
     // corpus-sized exchange.
     Q("q118_stupid_backoff", "pipeline:text-lm-backoff",
-      Some(stupidBackoffOracle),
+      stupidBackoffOracle,
       (s, dir) => TextAnalysis.stupidBackoff(docsF(s, dir))
         .orderBy("doc_id")),
 
@@ -2761,7 +2765,7 @@ object Pipeline {
     // ([[MixtureTargets]]); acceptance is the family's salted-hash
     // predicate. One corpus-sized exchange (per-source token agg).
     Q("q119_mixture_budget", "pipeline:sampling-mixture-budget",
-      Some(mixtureBudgetOracle),
+      mixtureBudgetOracle,
       (s, dir) => Sampling.mixtureBudget(t(s, dir, "documents"),
         MixtureTargets).orderBy("doc_id")),
 
@@ -2775,7 +2779,7 @@ object Pipeline {
     // phrases ("fast" inside "fast merge" — dictionary-suffix links)
     // and self-adjacent runs. Pure projection — zero shuffles.
     Q("q120_blocklist_filter", "pipeline:text-blocklist",
-      Some(blocklistOracle),
+      blocklistOracle,
       (s, dir) => TextAnalysis.blocklistFilter(docsF(s, dir),
         BlocklistPhrases).orderBy("doc_id")),
 
@@ -2791,7 +2795,7 @@ object Pipeline {
     // before "value" (suffix shadowed only where nested). Pure
     // projection — zero shuffles.
     Q("q121_blocklist_scrub", "pipeline:text-blocklist",
-      Some(blocklistScrubOracle),
+      blocklistScrubOracle,
       (s, dir) => TextAnalysis.blocklistScrub(docsF(s, dir),
         ScrubPhrases).orderBy("doc_id")),
 
@@ -2803,7 +2807,7 @@ object Pipeline {
     // scoring tail. Same oracle SQL as q110, because the index IS
     // q110's tf intermediate (plus the 1-row stats), materialized.
     Q("q122_bm25_indexed", "pipeline:retrieval-bm25-indexed",
-      Some(bm25Oracle(Bm25Terms, k = 25)),
+      bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => {
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
         val pt = Retrieval.buildPostingsIndex(docsF(s, dir), wh,
@@ -2823,7 +2827,7 @@ object Pipeline {
     // index must equal q110's scan over the FULL corpus — same oracle,
     // unchanged.
     Q("q124_postings_absorb", "pipeline:retrieval-bm25-absorb",
-      Some(bm25Oracle(Bm25Terms, k = 25)),
+      bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => {
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
         val d = docsF(s, dir)
@@ -2847,7 +2851,7 @@ object Pipeline {
     // build → absorb → absorb → compact → serve ≡ the full-corpus
     // scan.
     Q("q128_postings_compact", "pipeline:retrieval-bm25-compact",
-      Some(bm25Oracle(Bm25Terms, k = 25)),
+      bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => {
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
         val d = docsF(s, dir)
@@ -2877,7 +2881,7 @@ object Pipeline {
     // graph is pair-set-sized; every sweep is one edge-sized join +
     // agg — the corpus-sized work is the banded pair derivation.
     Q("q123_neardup_pagerank", "pipeline:dedup-pagerank",
-      Some(pageRankOracle(iters = 3, maxBucket = 16)),
+      pageRankOracle(iters = 3, maxBucket = 16),
       (s, dir) => Dedup.neardupPageRank(
         Dedup.minhashDupPairsCapped(t(s, dir, "documents"), 0.8, 16)
           .select(col("doc_a"), col("doc_b")), iters = 3)
@@ -2893,7 +2897,7 @@ object Pipeline {
     // is monotone, so the max/flag/count replay exactly on the
     // floor-scaled integers.
     Q("q125_embedding_contamination", "pipeline:similarity-decontam",
-      Some(embeddingContaminationOracle(tauX1e6 = 900000L)),
+      embeddingContaminationOracle(tauX1e6 = 900000L),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         Similarity.embeddingContamination(
@@ -2911,7 +2915,7 @@ object Pipeline {
     // engine-portable; priorities are all-int64 (⌊w·2³⁰/(h30+1)⌋).
     // One projection pass + TakeOrdered(k+1) — zero shuffles.
     Q("q126_priority_sample", "pipeline:sampling-priority",
-      Some(prioritySampleOracle(k = 25)),
+      prioritySampleOracle(k = 25),
       (s, dir) => Sampling.prioritySample(docsF(s, dir), k = 25)
         .orderBy("rank")),
 
@@ -2923,7 +2927,7 @@ object Pipeline {
     // clustered docs move. Composition: clusters from the q35
     // machinery, the split a pure projection on top.
     Q("q127_leakage_safe_split", "pipeline:sampling-safe-split",
-      Some(leakageSafeSplitOracle),
+      leakageSafeSplitOracle,
       (s, dir) => Sampling.leakageSafeSplit(
         Dedup.dupClusters(docsF(s, dir), 0.8), 980, 10)
         .orderBy("doc_id")),
@@ -2938,7 +2942,7 @@ object Pipeline {
     // the q111-style lockstep-unnest token stream self-joined on
     // ord+1 adjacency.
     Q("q130_phrase_search", "pipeline:retrieval-phrase",
-      Some(phraseSearchOracle(PhraseTerms)),
+      phraseSearchOracle(PhraseTerms),
       (s, dir) => {
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
         val pt = Retrieval.buildPositionalIndex(docsF(s, dir), wh,
@@ -2953,7 +2957,7 @@ object Pipeline {
     // query fan-out (shared terms must not double-count docs); each
     // per-query ranking ≡ the single-serve path (spec-pinned).
     Q("q132_bm25_batch", "pipeline:retrieval-bm25-batch",
-      Some(bm25BatchOracle(BatchQueries, k = 10)),
+      bm25BatchOracle(BatchQueries, k = 10),
       (s, dir) => {
         val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
         val pt = Retrieval.buildPostingsIndex(docsF(s, dir), wh,
@@ -2971,7 +2975,7 @@ object Pipeline {
     // (doc, token) exchange, vocabulary-sized df broadcast back,
     // WindowGroupLimit for the per-doc top-m.
     Q("q131_tfidf_keywords", "pipeline:retrieval-tfidf",
-      Some(tfidfKeywordsOracle(m = 3)),
+      tfidfKeywordsOracle(m = 3),
       (s, dir) => Retrieval.tfidfKeywords(docsF(s, dir), m = 3)
         .orderBy("doc_id", "rank")),
 
@@ -2987,7 +2991,7 @@ object Pipeline {
     // replays. All-integer scores ((1000·common) div n) and the
     // cross-multiplied keep predicate ride the hash.
     Q("q133_containment_pairs", "pipeline:dedup-containment",
-      Some(containmentOracle(minCx1000 = 800, maxDf = 64)),
+      containmentOracle(minCx1000 = 800, maxDf = 64),
       (s, dir) => {
         val base = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val w = graft.ops.Hashing.tokens(col("text"))
@@ -3010,7 +3014,7 @@ object Pipeline {
     // adds zero exchanges over q126; the oracle chains q121's
     // replace CTEs into q126's integer priority arithmetic.
     Q("q129_scrub_then_sample", "pipeline:text-blocklist-sampling",
-      Some(scrubThenSampleOracle(k = 25)),
+      scrubThenSampleOracle(k = 25),
       (s, dir) => Sampling.prioritySample(
         TextAnalysis.blocklistScrub(docsF(s, dir), ScrubPhrases)
           .select(col("doc_id"), col("scrubbed").as("text")),
@@ -3394,9 +3398,7 @@ object Pipeline {
     * so the prefix shadows the longer phrase entirely; "hash value"
     * precedes "value" so standalone "value" still matches but the
     * nested one is gone; "table table" self-runs greedily. */
-  // private[graft]: the scale probes (graft.tools) ladder the scrub
-  // composition with the registry's own fixture, not a drifting copy
-  private[graft] lazy val ScrubPhrases: Seq[String] = Seq(
+  private lazy val ScrubPhrases: Seq[String] = Seq(
     "fast", "fast merge", "hash value", "value",
     "table table", "spark window")
 
@@ -3991,15 +3993,6 @@ object Pipeline {
       |FROM s GROUP BY user_id, sess
       |ORDER BY user_id, start_micros""".stripMargin
 
-  // The arrival harness (mtime-pinned wave writer + the session wave
-  // law) lives in [[graft.streaming.WaveHarness]], SHARED with
-  // ProbeStreamScale so the ladder can never measure a transcription
-  // that drifted from what the gate runs.
-  private def writeWave(df: DataFrame, srcDir: String, wave: Int): Unit =
-    graft.streaming.WaveHarness.writeWave(df, srcDir, wave)
-  private def writeSessionWaves(events: DataFrame, src: String): Unit =
-    graft.streaming.WaveHarness.writeSessionWaves(events, src)
-
   /** The (user_id, ts_micros, event_id) events projection every
     * sessionization drain starts from. */
   private def sessionEvents(s: SparkSession, dir: String): DataFrame =
@@ -4009,8 +4002,8 @@ object Pipeline {
         col("event_id").cast("long").as("event_id"))
 
   /** The NATIVE session_window drain harness (q145, and q148's
-    * below-budget branch): [[writeSessionWaves]]' files drained
-    * through [[graft.streaming.StreamingBuilders.sessionWindowAgg]]
+    * below-budget branch): [[WaveHarness.writeSessionWaves]]' files
+    * drained through [[graft.streaming.StreamingBuilders.sessionWindowAgg]]
     * in append mode (the timestamp column rebuilt from ts_micros by
     * exact integer arithmetic; event_id is carried by the shared
     * wave files and unused here). Output shape and ordering match
@@ -4025,7 +4018,7 @@ object Pipeline {
     s.conf.set("spark.sql.shuffle.partitions", "4")
     val out =
       try {
-        writeSessionWaves(sessionEvents(s, dir), s"$root/src")
+        WaveHarness.writeSessionWaves(sessionEvents(s, dir), s"$root/src")
         val stream = s.readStream
           .schema("user_id bigint, ts_micros bigint, event_id bigint")
           .option("maxFilesPerTrigger", 1).parquet(s"$root/src")
@@ -4041,10 +4034,10 @@ object Pipeline {
       .orderBy("user_id", "start_micros")
   }
 
-  /** The q105/q109 drain lifecycle: [[writeSessionWaves]]' three
-    * mtime-ordered files sliced into three micro-batches of ONE
-    * AvailableNow drain (maxFilesPerTrigger=1 — [[writeWave]]) so
-    * cross-batch state is genuinely exercised — a session spanning
+  /** The q105/q109 drain lifecycle: [[WaveHarness.writeSessionWaves]]'
+    * three mtime-ordered files sliced into three micro-batches of ONE
+    * AvailableNow drain (maxFilesPerTrigger=1 — [[WaveHarness.writeWave]])
+    * so cross-batch state is genuinely exercised — a session spanning
     * the wave boundary is emitted once, by the batch whose event
     * closed it. The sentinel closes every real session and itself
     * stays open in the state store, never emitted. The sink is
@@ -4069,7 +4062,7 @@ object Pipeline {
     val prevSp = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "4")
     try {
-      writeSessionWaves(sessionEvents(s, dir), src)
+      WaveHarness.writeSessionWaves(sessionEvents(s, dir), src)
       // one drain, one batch per mtime-ordered wave file
       graft.streaming.StatefulSessionize.run(
         s, src, gapMinutes = 30, wh, table, ckpt, timeout,

@@ -6,11 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * @param name   stable key, used by the driver's Verify/Bench harness
   * @param ops    SURVEY.md §2 operator ids (or pipeline-op family) covered
-  * @param oracle equivalent DuckDB SQL over the same tables; None for
-  *               non-SQL-expressible ops (driver falls back to a
-  *               rows-only check)
+  * @param oracle equivalent DuckDB SQL over the same tables; every
+  *               query has one, and the checker diffs its rows
+  *               against the query's
   */
-final case class Q(name: String, ops: String, oracle: Option[String],
+final case class Q(name: String, ops: String, oracle: String,
                    fn: (SparkSession, String) => DataFrame)
 
 object Registry {
@@ -20,5 +20,5 @@ object Registry {
     all.map(q => q.name -> q.fn).toMap
 
   lazy val oracleSql: Map[String, String] =
-    all.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    all.map(q => q.name -> q.oracle).toMap
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * 44–63 s at 10M events of mostly-singleton sessions (9.5M
   * sessions), 3.1× the kernel's 14.2 s on the same waves, superlinear
   * in session count and insensitive to state partitions
-  * (ProbeStreamScale, PLANS "Streaming ladder"). The kernel keeps one
+  * (PLANS.md round 16 streaming ladder). The kernel keeps one
   * OPEN session per user and sorts only each user's batch slice. So:
   * native below the crossover (it is the engine's own operator — the
   * house preference when it expresses the semantics), the kernel

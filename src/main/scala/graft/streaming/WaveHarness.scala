@@ -3,13 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The streaming-gate ARRIVAL harness, in exactly one place — shared
+/** The streaming-gate ARRIVAL harness, in exactly one place — used
   * by the gated drain queries (q103/q105–q109/q143/q145/q148 via
-  * graft.queries.Pipeline) and the scale ladders (ProbeStreamScale),
-  * so a probe can never measure a transcription that drifted from
-  * what the gate runs (the Capstone shared-builder discipline; the
-  * round-16 self-review found the wave law transcribed in four
-  * places). */
+  * graft.queries.Pipeline); the round-16 self-review found the wave
+  * law transcribed in four places. */
 object WaveHarness {
 
   /** Write one arrival wave as ONE parquet file with a PINNED,
