@@ -21,8 +21,8 @@ import org.apache.spark.sql.SparkSession
   * clearCache + unpersist + System.gc() release was not enough: the
   * remaining accumulators are JVM-global (old-gen heap growth and GC
   * time, metaspace/codegen classes, block-manager disk dirs), which no
-  * catalog-level release touches. So the default mode now runs EVERY
-  * query in its own SparkSession — stop the context, rebuild, warm up,
+  * catalog-level release touches. So the bench runs EVERY query in
+  * its own SparkSession — stop the context, rebuild, warm up,
   * measure — making each full-run measurement a fresh-session
   * measurement by construction, i.e. identical methodology to an
   * isolated `SPARK_GRAFT_BENCH_ONLY=<name>` invocation (which creates a
@@ -42,16 +42,13 @@ import org.apache.spark.sql.SparkSession
   * one outlier run settled by two agreeing runs — tellable apart from
   * the JSON alone.
   *
-  * == Diagnosis modes ==
+  * == Diagnosis mode ==
   *
-  * SPARK_GRAFT_BENCH_SHARED=1 restores the legacy single-session run
-  * (with the catalog-level release between queries) so the inflation
-  * remains reproducible; SPARK_GRAFT_BENCH_DIAG=1 prints per-query
-  * JVM/storage counters (GC time delta, metaspace, loaded classes,
-  * storage memory, block-manager disk bytes) to stderr in either mode.
-  * The round-7 diagnosis run with both flags named the accumulators:
-  * monotonically growing GC time per query and metaspace/class count
-  * (numbers in PLANS.md round-7 section).
+  * SPARK_GRAFT_BENCH_DIAG=1 prints per-query JVM/storage counters (GC
+  * time delta, metaspace, loaded classes, storage memory,
+  * block-manager disk bytes) to stderr. The round-7 diagnosis run named
+  * the accumulators: monotonically growing GC time per query and
+  * metaspace/class count (numbers in PLANS.md round-7 section).
   */
 object Bench {
   private val sfDir =
@@ -146,15 +143,6 @@ object Bench {
       f"[diag] $tag: gc+=${gcMillis - gc0}%dms heap=$heap%.0fMB " +
         f"meta=$meta%.0fMB classes=$classes%d storageMem=$storage%.0fMB " +
         f"localDirs=${sparkLocalBytes / 1e6}%.0fMB")
-  }
-
-  // ---- legacy shared-session release (kept for the diagnosis mode) ----
-
-  private def releaseStorage(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
   }
 
   final case class Probe(t1: Double, t2: Double,
@@ -256,10 +244,11 @@ object Bench {
     * window also carries trailing noise — an sbt `[success]` trailer
     * was observed at ~75 bytes — so a line near 1900 can be
     * FRONT-truncated inside the window and re-create round 7's
-    * `parsed: null`. 1850 budgets the observed trailer twice over
-    * while keeping 1-decimal per-query precision at today's 72-query
-    * registry (dec1 = 1841 bytes measured; dec2 = 1913 degrades).
-    * BenchLineSpec asserts against this same constant. */
+    * `parsed: null`. 1850 budgets the observed trailer twice over. It
+    * was sized on the 72-query registry, where every query still fit
+    * at 1-decimal precision (dec1 = 1841 bytes measured; dec2 = 1913
+    * degrades); today's 147-query registry relies on the truncation
+    * ladder below. BenchLineSpec asserts against this same constant. */
   val LineBudget = 1850
 
   /** Last-resort per-query cap: the final ladder level keeps only the
@@ -439,7 +428,6 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val shared = sys.env.get("SPARK_GRAFT_BENCH_SHARED").contains("1")
     val outFile = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     // SPARK_GRAFT_BENCH_ONLY (comma list of name substrings) narrows the
     // run for local iteration on a single query's plan.
@@ -448,11 +436,10 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.contains)))
 
-    // ---- epoch bracket (full default-mode sweeps only: a BENCH_ONLY
-    // iteration or the legacy shared mode is not a sweep the history
-    // merge will read). Pre-sweep calibration runs FIRST so the
+    // ---- epoch bracket (full sweeps only: a BENCH_ONLY iteration is
+    // not a sweep the history merge will read). Pre-sweep calibration runs FIRST so the
     // factor reflects the same window the sweep starts in.
-    val doCalib = !shared && only.isEmpty &&
+    val doCalib = only.isEmpty &&
       !sys.env.get("SPARK_GRAFT_BENCH_CALIB").contains("0")
     val calibPre = if (doCalib) calibrate() else None
     var calibPost: Option[Double] = None
@@ -488,64 +475,43 @@ object Bench {
     }
 
     var done = List.empty[(String, Probe)]
-    if (shared) {
-      // legacy mode: one session for the whole pass, catalog-level
-      // release between queries — reproduces the r4-r6 inflation for
-      // diagnosis
+    // fresh session per query == isolated-run methodology
+    val history = loadHistory()
+    if (history.nonEmpty)
+      System.err.println(s"[bench] history loaded: ${history.size} queries")
+    names.foreach { n =>
+      System.err.println(s"[bench] $n ...")
       val spark = newSession()
-      names.take(1).foreach(n => runOne(spark, n)) // global warm-up
-      names.foreach { n =>
-        releaseStorage(spark)
-        val gc0 = gcMillis
-        System.err.println(s"[bench] $n ...")
-        val t1 = runOne(spark, n)
-        val t2 = runOne(spark, n)
-        diagLine(spark, n, gc0)
-        val p = Probe(t1, t2, None)
-        System.err.println(f"[bench] $n: ${p.best}%.2f s")
-        done = done :+ (n -> p)
-        writeOut(done)
-      }
+      val gc0 = gcMillis
+      val (t1, t2) = measure(spark, n)
+      diagLine(spark, n, gc0)
       spark.stop()
-    } else {
-      // default: fresh session per query == isolated-run methodology
-      val history = loadHistory()
-      if (history.nonEmpty)
-        System.err.println(s"[bench] history loaded: ${history.size} queries")
-      names.foreach { n =>
-        System.err.println(s"[bench] $n ...")
-        val spark = newSession()
-        val gc0 = gcMillis
-        val (t1, t2) = measure(spark, n)
-        diagLine(spark, n, gc0)
-        spark.stop()
-        val h = history.get(n)
-        // reprobe in another fresh session when (a) the two runs
-        // disagree >1.5x — one-off noise suspected — or (b) BOTH runs
-        // exceed 2x this query's recorded history: sustained
-        // contention agreement alone cannot reject (the BENCH_r08
-        // q64/q65 failure). The later session gives a contention
-        // window time to clear; if the reprobe still lands high, the
-        // number is real-or-flagged (Probe.suspect survives).
-        val ok = Seq(t1, t2).filter(_ >= 0)
-        val disagree = ok.size == 2 && ok.max > ok.min * 1.5
-        val overHistory = ok.nonEmpty &&
-          h.exists(hv => hv > 0 && ok.min > 2 * hv)
-        val reprobe = if (disagree || overHistory) {
-          val s2 = newSession()
-          val r = { runOne(s2, n); runOne(s2, n) }
-          s2.stop()
-          Some(r)
-        } else None
-        val p = Probe(t1, t2, reprobe, h)
-        System.err.println(
-          f"[bench] $n: ${p.best}%.2f s (stable=${p.stable} " +
-            f"suspect=${p.suspect})")
-        // flush partial results after every query: if the harness kills
-        // this process on a timeout, the file still names the culprit
-        done = done :+ (n -> p)
-        writeOut(done)
-      }
+      val h = history.get(n)
+      // reprobe in another fresh session when (a) the two runs
+      // disagree >1.5x — one-off noise suspected — or (b) BOTH runs
+      // exceed 2x this query's recorded history: sustained
+      // contention agreement alone cannot reject (the BENCH_r08
+      // q64/q65 failure). The later session gives a contention
+      // window time to clear; if the reprobe still lands high, the
+      // number is real-or-flagged (Probe.suspect survives).
+      val ok = Seq(t1, t2).filter(_ >= 0)
+      val disagree = ok.size == 2 && ok.max > ok.min * 1.5
+      val overHistory = ok.nonEmpty &&
+        h.exists(hv => hv > 0 && ok.min > 2 * hv)
+      val reprobe = if (disagree || overHistory) {
+        val s2 = newSession()
+        val r = { runOne(s2, n); runOne(s2, n) }
+        s2.stop()
+        Some(r)
+      } else None
+      val p = Probe(t1, t2, reprobe, h)
+      System.err.println(
+        f"[bench] $n: ${p.best}%.2f s (stable=${p.stable} " +
+          f"suspect=${p.suspect})")
+      // flush partial results after every query: if the harness kills
+      // this process on a timeout, the file still names the culprit
+      done = done :+ (n -> p)
+      writeOut(done)
     }
     // post-sweep calibration closes the epoch bracket (min of the
     // pair feeds the factor: either side may catch a quiet window)

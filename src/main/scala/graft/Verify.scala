@@ -29,8 +29,9 @@ object Verify {
       // accumulate block-store entries across the run. Checkpointed
       // pins (componentLabels' returned labels, lloydTrainStats'
       // stats frames) are RDD-level persists that clearCache cannot
-      // see — drop them at the RDD ledger, as Bench.releaseStorage
-      // does, or they accumulate across 100+ queries instead
+      // see — drop them at the RDD ledger, or they accumulate across
+      // 100+ queries instead (Bench needs neither: it runs each query
+      // in a fresh session)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

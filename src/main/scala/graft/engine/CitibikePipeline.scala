@@ -1,7 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Observation, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import graft.engine.builders._
 
@@ -10,11 +9,12 @@ import graft.engine.builders._
   * archive, and upsert the five derived tables in the warehouse.
   *
   * Per archive, `zip -> csv -> Normalize -> Quality` streams once into
-  * the ImportedTrips fact table. The four trip tables are then derived
-  * from the (year, month) partitions that write produced, read back
-  * from the table (the reference's updates read the staging
-  * `ImportedTable`, `db_importing.py:93-96`): each builder's scan reads
-  * only its own columns of those periods, and nothing is cached.
+  * the staged ImportedTrips partitions. The four trip tables are then
+  * derived from exactly those staged partitions (the reference's
+  * updates read the staging `ImportedTable`, `db_importing.py:93-96`):
+  * each builder's scan reads only its own columns, and nothing is
+  * cached. All six table writes of an archive are published in one
+  * [[TableStore]] commit.
   */
 object CitibikePipeline {
 
@@ -40,111 +40,59 @@ object CitibikePipeline {
   /** Process every new archive in `inputDir` into `warehouse`. Returns
     * the number of archives loaded.
     *
-    * Failure model: per-archive processing is not transactional across
-    * the five derived tables — a crash mid-archive can leave some
-    * tables merged and the manifest unwritten, and the additive upserts
-    * would re-add on rerun (the fact table is safe: dynamic partition
-    * overwrite). The reference has the same exposure (sequential SQL
-    * statements on one DuckDB file). The cluster-grade fix is a
-    * transactional table format; with plain parquet, recovery is
-    * re-deriving the five tables from ImportedTrips. */
+    * Failure model: each archive's six table writes (its ImportedTrips
+    * partitions, the four trip tables and the manifest) are one
+    * [[TableStore]] commit. A crash before the commit point leaves all
+    * six tables as they were before the archive. A crash after it can
+    * leave some of them replaced and others not until the next `run`,
+    * which first finishes any commit it finds, so it then equals a run
+    * that never crashed. (The reference updates its tables with one SQL
+    * statement after another on a single DuckDB file.) */
   def run(spark: SparkSession, inputDir: String, warehouse: String,
           provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes,
           distributedIngest: Boolean = true): Int = {
+    TableStore.finishCommits(spark, warehouse)
     val archives = Ingest.listArchives(inputDir,
       spark.sparkContext.hadoopConfiguration)
-    var manifest = TableStore.readOrEmpty(spark, warehouse, "StatusDataTable",
+    val manifest = TableStore.readOrEmpty(spark, warehouse, "StatusDataTable",
       StatusData.schema)
     // Manifest is tiny — one decision per archive on the driver (J7/J8).
     val newOnes = archives.filterNot(a =>
       StatusData.alreadyLoaded(manifest, a.year.toInt, a.month.map(_.toInt)))
-
     newOnes.foreach { a =>
-      val raw = if (distributedIngest) Ingest.readArchiveDistributed(spark, a)
-                else Ingest.readArchive(spark, a)
-      val imported = Quality.importTrips(raw, a.year)
-      // the periods this archive writes, observed on the fact write
-      // itself (no extra pass); exact even for rows outside the
-      // archive's nominal month
-      val written = Observation()
-      // the canonical fact table, partitioned for per-period pruning
-      // (replaces the reference's (year, month) ART index, S12)
-      TableStore.overwritePartitions(
-        imported.observe(written, collect_set(struct(col("year"), col("month"))).as("periods")),
-        warehouse, "ImportedTrips", partitionBy = Seq("year", "month"))
-      deriveTables(spark, warehouse, written.get("periods").asInstanceOf[Seq[Row]],
-        imported.schema, provider)
-      TableStore.write(
-        StatusData.markLoaded(manifest, a.year.toInt, a.month.map(_.toInt)),
-        warehouse, "StatusDataTable")
-      // re-read: the old lineage points at the replaced files
-      manifest = TableStore.read(spark, warehouse, "StatusDataTable")
+      stage(spark, a, warehouse, provider, distributedIngest)
+      TableStore.finishCommits(spark, warehouse)
     }
     newOnes.size
   }
 
-  private val monthNames = Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun",
-    "Jul", "Aug", "Sep", "Oct", "Nov", "Dec")
-
-  /** Recovery from a mid-archive crash (the failure model above): the
-    * derived tables are reset and every loaded (year, month) partition
-    * of the ImportedTrips fact table — itself crash-safe via dynamic
-    * partition overwrite — is REPLAYED through the derive step `run`
-    * uses, one period at a time, in chronological order. Replay (not a
-    * one-shot rebuild) because DockTable's year totals are
-    * path-dependent by reference semantics (`update_dockmap.py:224-236`
-    * replaces a colliding year's totals with the latest delta's); a
-    * from-scratch aggregate would "fix" numbers a clean incremental run
-    * reports differently. The manifest is rebuilt in the reference's
-    * row shape (last loaded month per year).
-    *
-    * Exact for monthly archive flows (the reference's normal
-    * operation). A YEARLY archive originally merged all 12 months as
-    * one delta; replay is per-month, so for such years the DockTable
-    * year totals reflect the last month rather than the whole year,
-    * and completeness cannot be reconstructed — recovered years are
-    * marked incomplete. */
-  def recover(spark: SparkSession, warehouse: String,
-              provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes): Unit = {
-    require(TableStore.exists(spark, warehouse, "ImportedTrips"),
-      "cannot recover: no ImportedTrips fact table in this warehouse")
-    val fact = TableStore.read(spark, warehouse, "ImportedTrips")
-    Seq("LineGraphTable" -> lineGraphSchema, "HeatMapTable" -> heatMapSchema,
-      "TripTable" -> tripTableSchema, "DockTable" -> dockTableSchema).foreach {
-      case (name, schema) => TableStore.write(TableStore.empty(spark, schema), warehouse, name)
-    }
-    // the period list is tiny (one row per loaded month) — driver loop
-    val periods = fact.select(col("year"), col("month")).distinct().collect()
-      .sortBy(p => (p.getString(0).toInt, monthNames.indexOf(p.getString(1))))
-    periods.foreach(p => deriveTables(spark, warehouse, Seq(p), fact.schema, provider))
-    // one row per year: its last loaded month, never complete
-    val manifest = periods.groupBy(_.getString(0)).toSeq.map { case (y, ps) =>
-      Row(y.toInt, ps.map(p => monthNames.indexOf(p.getString(1)) + 1).max, false)
-    }
-    TableStore.write(spark.createDataFrame(
-      java.util.Arrays.asList(manifest: _*), StatusData.schema), warehouse, "StatusDataTable")
-  }
-
-  /** Merge the rows of the given ImportedTrips partitions into the four
-    * trip tables. The delta is read as one input partition, one task
-    * per archive as in ingest: Spark's default split of a year's 12
-    * monthly files runs several partial-aggregate tasks at once, each
-    * holding its own aggregation memory. */
-  private def deriveTables(spark: SparkSession, wh: String, periods: Seq[Row],
-                           factSchema: StructType,
-                           provider: Waypoints.RouteProvider): Unit = {
-    val delta = TableStore.readPartitions(spark, wh, "ImportedTrips", periods, factSchema)
-      .coalesce(1)
-    def existing(name: String, schema: StructType) =
-      TableStore.readOrEmpty(spark, wh, name, schema)
-    TableStore.write(LineGraph.merge(existing("LineGraphTable", lineGraphSchema),
-      LineGraph.build(delta)), wh, "LineGraphTable")
-    TableStore.write(HeatMap.merge(existing("HeatMapTable", heatMapSchema),
-      HeatMap.build(delta)), wh, "HeatMapTable")
-    TableStore.write(TripsMap.merge(existing("TripTable", tripTableSchema),
-      TripsMap.build(delta, provider)), wh, "TripTable")
-    TableStore.write(DockMap.toStorage(DockMap.merge(
-      DockMap.fromStorage(existing("DockTable", dockTableSchema)), DockMap.build(delta))),
-      wh, "DockTable")
+  /** Stage the archive's six table writes and write their commit
+    * marker: everything up to and including the commit point. The
+    * trip tables merge a delta read from the staged partitions as one
+    * input partition, one task per archive as in ingest: Spark's
+    * default split of a year's 12 monthly files runs several
+    * partial-aggregate tasks at once, each holding its own aggregation
+    * memory. */
+  private[engine] def stage(spark: SparkSession, a: Ingest.Archive, wh: String,
+                            provider: Waypoints.RouteProvider,
+                            distributedIngest: Boolean): Unit = {
+    val raw = if (distributedIngest) Ingest.readArchiveDistributed(spark, a)
+              else Ingest.readArchive(spark, a)
+    val imported = Quality.importTrips(raw, a.year)
+    // the canonical fact table, partitioned for per-period pruning
+    // (replaces the reference's (year, month) ART index, S12)
+    val fact = TableStore.stage(imported, wh, "ImportedTrips", Seq("year", "month"))
+    val delta = TableStore.readStaged(spark, wh, fact.name, imported.schema).coalesce(1)
+    def merged(name: String, schema: StructType)(merge: DataFrame => DataFrame) =
+      TableStore.stage(merge(TableStore.readOrEmpty(spark, wh, name, schema)), wh, name, Nil)
+    val tables = Seq(
+      merged("LineGraphTable", lineGraphSchema)(LineGraph.merge(_, LineGraph.build(delta))),
+      merged("HeatMapTable", heatMapSchema)(HeatMap.merge(_, HeatMap.build(delta))),
+      merged("TripTable", tripTableSchema)(TripsMap.merge(_, TripsMap.build(delta, provider))),
+      merged("DockTable", dockTableSchema)(t => DockMap.toStorage(
+        DockMap.merge(DockMap.fromStorage(t), DockMap.build(delta)))),
+      merged("StatusDataTable", StatusData.schema)(
+        StatusData.markLoaded(_, a.year.toInt, a.month.map(_.toInt))))
+    TableStore.writeMarker(spark, wh, fact +: tables)
   }
 }

@@ -1,17 +1,40 @@
 package graft.engine
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
-/** Parquet-backed warehouse tables with write-temp-then-swap updates.
+/** Parquet-backed warehouse tables, replaced on disk through staged
+  * commits ([[overwritePartitions]] writes in place instead, and
+  * [[writeBucketed]] swaps its one table without a marker).
   *
   * The reference mutates one DuckDB file in place; over immutable
-  * Parquet every merge rewrites the table, so writes go to a temp dir
-  * and swap in atomically-per-rename (SURVEY §3.3). Readers of the old
-  * snapshot in the same job must materialize before the swap — the
-  * pipeline merges then writes, so the read plan is consumed first.
+  * Parquet every merge rewrites the table (SURVEY §3.3). A commit
+  * replaces one or more tables of a warehouse together:
+  *  1. stage: each table is written to `.tmp_<name>`. Nothing a reader
+  *     sees changes, and the write materializes its plan (which may
+  *     read the table it replaces) before anything moves;
+  *  2. commit point: a marker `.commit_<first table>` naming the staged
+  *     tables is written atomically (temp file, then rename);
+  *  3. apply: each table swaps in (`<name>` -> `.bak_<name>`,
+  *     `.tmp_<name>` -> `<name>`, drop the backup); a partitioned table
+  *     swaps each staged partition directory the same way. Then the
+  *     marker is deleted.
+  *
+  * A crash before the commit point leaves every table as it was; the
+  * next stage overwrites the leftovers. A crash after it leaves the
+  * marker: until [[finishCommits]] runs, a reader can see some of the
+  * commit's tables replaced and others not. Every apply step checks
+  * what already happened, so [[finishCommits]] completes the commit
+  * however far the crash got. A `<name>` missing beside its
+  * `.bak_<name>` outside such a roll-forward is an interrupted swap
+  * with no marker to finish it: a new write throws instead of
+  * replacing the only copy. Directory rename is atomic on local
+  * FS/HDFS; on object stores a transactional table format
+  * (Delta/Iceberg) would replace this class wholesale. One committer
+  * per table at a time.
   */
 object TableStore {
 
@@ -33,15 +56,11 @@ object TableStore {
     spark.read.parquet(tablePath(warehouse, name))
   }
 
-  /** Dynamic-partition overwrite into a partitioned table — the
-    * canonical-trips fact table grows per archive; partitioning by
-    * (year, month) gives partition pruning on every per-period query.
-    * Dynamic overwrite replaces exactly the partitions `df` has rows
-    * for and leaves every other one in place, so re-loading an archive
-    * after a crash replaces its rows instead of double-appending. The
-    * partition set comes from the rows, not the archive's name: an
-    * archive holding rows of another month replaces that month's
-    * partition too. The mode is a write option, so the caller's
+  /** Dynamic-partition overwrite into a partitioned table, in place
+    * rather than through a commit. Dynamic overwrite replaces exactly
+    * the partitions `df` has rows for and leaves every other one in
+    * place, so re-loading after a crash replaces rows instead of
+    * double-appending. The mode is a write option, so the caller's
     * session keeps its own `partitionOverwriteMode`. */
   def overwritePartitions(df: DataFrame, warehouse: String, name: String,
                           partitionBy: Seq[String]): Unit =
@@ -49,17 +68,127 @@ object TableStore {
       .option("partitionOverwriteMode", "dynamic")
       .parquet(tablePath(warehouse, name))
 
-  /** The rows of the given partitions of a partitioned table. Each
-    * partition is a row of partition-column values (field names are
-    * column names); partition pruning skips every other directory. No
-    * partitions: an empty frame with `schema`, without touching the
-    * table (which may not exist). */
-  def readPartitions(spark: SparkSession, warehouse: String, name: String,
-                     partitions: Seq[Row], schema: StructType): DataFrame =
-    if (partitions.isEmpty) empty(spark, schema)
-    else read(spark, warehouse, name).where(partitions.map { p =>
-      p.schema.fieldNames.map(c => col(c) === p.getAs[Any](c)).reduce(_ && _)
-    }.reduce(_ || _))
+  /** A staged table write awaiting its commit. With `partitionBy`, the
+    * commit replaces only the partitions staged (the dynamic-overwrite
+    * semantics of [[overwritePartitions]]: the partition set comes from
+    * the rows, so rows of another period replace that period too);
+    * without, it replaces the whole table. */
+  final case class Staged(name: String, partitionBy: Seq[String])
+
+  private def fileSystem(spark: SparkSession, warehouse: String): FileSystem =
+    new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** (`.tmp_<name>`, `.bak_<name>`, `<name>`), fully qualified: the
+    * DataSource path option and the Hadoop renames must resolve a
+    * relative warehouse the same way. */
+  private def paths(fs: FileSystem, warehouse: String, name: String): (Path, Path, Path) = {
+    def q(n: String) = fs.makeQualified(new Path(tablePath(warehouse, n)))
+    (q(s".tmp_$name"), q(s".bak_$name"), q(name))
+  }
+
+  /** Clear `.tmp_<name>` and hand its path to `writeTo`. Throws,
+    * before writing anything, when `<name>` is missing and
+    * `.bak_<name>` holds its last copy. */
+  private def stageWith(spark: SparkSession, warehouse: String, name: String)(
+      writeTo: String => Unit): Unit = {
+    val fs = fileSystem(spark, warehouse)
+    val (tmp, bak, dst) = paths(fs, warehouse, name)
+    if (fs.exists(bak) && !fs.exists(dst))
+      throw new IOException(s"$dst is missing and $bak holds its last copy " +
+        s"(an interrupted swap): move $bak back to $dst before writing $name")
+    fs.delete(tmp, true)
+    writeTo(tmp.toString)
+  }
+
+  /** Write `df` to `.tmp_<name>` for a later commit. */
+  def stage(df: DataFrame, warehouse: String, name: String,
+            partitionBy: Seq[String]): Staged = {
+    stageWith(df.sparkSession, warehouse, name)(
+      df.write.partitionBy(partitionBy: _*).mode("overwrite").parquet)
+    Staged(name, partitionBy)
+  }
+
+  /** The rows staged for `name`, exactly what its commit publishes,
+    * read with `schema`: a partitioned write of no rows stages no file,
+    * and then the frame is empty. */
+  def readStaged(spark: SparkSession, warehouse: String, name: String,
+                 schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(tablePath(warehouse, s".tmp_$name"))
+
+  /** The commit point: atomically write the marker naming `tables`,
+    * all staged. Nothing is applied; [[finishCommits]] does that. A
+    * marker left by an earlier commit of the same first table is
+    * superseded: staging this one already replaced its staged dirs. */
+  def writeMarker(spark: SparkSession, warehouse: String, tables: Seq[Staged]): Path = {
+    val fs = fileSystem(spark, warehouse)
+    val marker = fs.makeQualified(new Path(warehouse, s".commit_${tables.head.name}"))
+    val pending = new Path(marker.getParent, s".pending_${tables.head.name}")
+    val out = fs.create(pending, true)
+    try out.write(tables.map(t => (t.name +: t.partitionBy).mkString(" "))
+      .mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    fs.delete(marker, false)
+    if (!fs.rename(pending, marker))
+      throw new IOException(s"could not write the commit marker $marker")
+    marker
+  }
+
+  /** Finish every commit whose marker is in `warehouse` (the
+    * roll-forward after a crash). */
+  def finishCommits(spark: SparkSession, warehouse: String): Unit = {
+    val fs = fileSystem(spark, warehouse)
+    Option(fs.globStatus(new Path(warehouse, ".commit_*"))).toSeq.flatten
+      .foreach(m => apply(fs, warehouse, m.getPath))
+  }
+
+  private def commit(spark: SparkSession, warehouse: String, tables: Seq[Staged]): Unit =
+    apply(fileSystem(spark, warehouse), warehouse, writeMarker(spark, warehouse, tables))
+
+  /** Apply a marker's tables, then delete it. Safe to repeat. */
+  private def apply(fs: FileSystem, warehouse: String, marker: Path): Unit = {
+    val in = fs.open(marker)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+    lines.map(_.split(' ')).foreach { l =>
+      val (tmp, bak, dst) = paths(fs, warehouse, l.head)
+      val partitionBy = l.tail.toSeq
+      if (partitionBy.isEmpty) swap(fs, tmp, dst, bak)
+      else if (fs.exists(tmp)) {
+        // each staged partition directory, relative to the table root
+        val glob = partitionBy.map(c => s"$c=*").mkString("/")
+        fs.globStatus(new Path(tmp, glob)).foreach { p =>
+          val rel = Iterator.iterate(p.getPath)(_.getParent).take(partitionBy.size)
+            .map(_.getName).toSeq.reverse.mkString("/")
+          swap(fs, p.getPath, new Path(dst, rel), new Path(bak, rel))
+        }
+        fs.delete(bak, true)
+        fs.delete(tmp, true)
+      }
+    }
+    fs.delete(marker, false)
+  }
+
+  /** Replace `dst` by `tmp`: `dst` -> `bak`, `tmp` -> `dst`, drop
+    * `bak`, each step checked, with restore on failure. A missing
+    * `tmp` means the move already happened, so repeating the swap
+    * after a crash at any step finishes it; `bak` is deleted only
+    * while `dst` exists. A rename onto an existing directory would
+    * nest instead of replace, hence the move aside first. */
+  private def swap(fs: FileSystem, tmp: Path, dst: Path, bak: Path): Unit = {
+    if (fs.exists(tmp)) {
+      if (fs.exists(dst)) {
+        fs.delete(bak, true) // an earlier, finished swap's backup
+        fs.mkdirs(bak.getParent)
+        if (!fs.rename(dst, bak))
+          throw new IOException(s"could not move $dst aside to $bak")
+      } else fs.mkdirs(dst.getParent)
+      if (!fs.rename(tmp, dst)) {
+        if (fs.exists(bak) && !fs.exists(dst)) fs.rename(bak, dst) // restore
+        throw new IOException(s"could not swap $tmp into $dst")
+      }
+    }
+    if (fs.exists(dst)) fs.delete(bak, true)
+  }
 
   def readOrEmpty(spark: SparkSession, warehouse: String, name: String,
                   schema: StructType): DataFrame =
@@ -165,7 +294,8 @@ object TableStore {
     * final location.
     *
     * Crash contract: DATA is never lost (the swap is the same
-    * checked-rename sequence as [[write]]), but the catalog entry is
+    * checked-rename sequence a commit applies, without a marker), but
+    * the catalog entry is
     * deliberately absent from the drop until the final CREATE — a crash
     * in that window leaves a table that fails loudly on read until the
     * write is re-run. Dropping BEFORE the swap is what buys that: were
@@ -205,32 +335,20 @@ object TableStore {
     val spark = df.sparkSession
     val name = bucketedName(spark, warehouse, table)
     val staging = s"${name}_staging"
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // fully qualify: the DataSource path option and the Hadoop renames
-    // must resolve a relative warehouse the same way
-    val tmp = fs.makeQualified(new Path(s"$warehouse/.tmp_$table"))
-    val bak = fs.makeQualified(new Path(s"$warehouse/.bak_$table"))
-    val dst = fs.makeQualified(new Path(tablePath(warehouse, table)))
-    spark.sql(s"DROP TABLE IF EXISTS `$staging`")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val w = df.write.mode("overwrite").option("path", tmp.toString)
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
-      .format("parquet").saveAsTable(staging)
+    stageWith(spark, warehouse, table) { tmp =>
+      spark.sql(s"DROP TABLE IF EXISTS `$staging`")
+      val w = df.write.mode("overwrite").option("path", tmp)
+        .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+      (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w)
+        .format("parquet").saveAsTable(staging)
+    }
     // drop the live entry BEFORE touching directories (see crash
     // contract above): no window ever has a catalog spec over files it
     // doesn't describe
     spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    val hadOld = fs.exists(dst)
-    if (hadOld && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"could not move $dst aside to $bak")
-    if (!fs.rename(tmp, dst)) {
-      if (hadOld) fs.rename(bak, dst) // restore
-      throw new java.io.IOException(s"could not swap $tmp into $dst")
-    }
-    if (hadOld) fs.delete(bak, true)
+    val fs = fileSystem(spark, warehouse)
+    val (tmp, bak, dst) = paths(fs, warehouse, table)
+    swap(fs, tmp, dst, bak)
     val quoted = (cs: Seq[String]) => cs.map(c => s"`$c`").mkString(", ")
     val sortedBy =
       if (sortCols.nonEmpty) s"SORTED BY (${quoted(sortCols)}) " else ""
@@ -241,36 +359,9 @@ object TableStore {
     name
   }
 
-  /** Overwrite `name` with `df` via temp-dir write + backup-rename swap.
-    * The temp write materializes the plan (which may read the table
-    * being replaced) before anything is touched; the swap then is
-    * old->bak, tmp->dst, drop bak — each step checked, with restore on
-    * failure, so the table is never left missing. Directory rename is
-    * atomic on local FS/HDFS; on object stores a transactional table
-    * format (Delta/Iceberg) would replace this class wholesale. A crash
-    * exactly between old->bak and tmp->dst leaves a recoverable
-    * `.bak_<name>` rather than silent data loss. */
-  def write(df: DataFrame, warehouse: String, name: String,
-            partitionBy: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$warehouse/.tmp_$name")
-    val bak = new Path(s"$warehouse/.bak_$name")
-    val dst = new Path(tablePath(warehouse, name))
-    val writer = if (partitionBy.nonEmpty)
-      df.write.partitionBy(partitionBy: _*) else df.write
-    writer.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(bak)) fs.delete(bak, true)
-    val hadOld = fs.exists(dst)
-    if (hadOld && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"could not move $dst aside to $bak")
-    if (!fs.rename(tmp, dst)) {
-      if (hadOld) fs.rename(bak, dst) // restore
-      throw new java.io.IOException(s"could not swap $tmp into $dst")
-    }
-    if (hadOld) fs.delete(bak, true)
-  }
+  /** Overwrite `name` with `df`: stage it, then commit it alone. */
+  def write(df: DataFrame, warehouse: String, name: String): Unit =
+    commit(df.sparkSession, warehouse, Seq(stage(df, warehouse, name, Nil)))
 
   /** JSONL delivery sink — the format training and annotation
     * pipelines actually ingest. Rows serialize to one JSON object per
@@ -278,8 +369,8 @@ object TableStore {
     * [[graft.ops.Sharding.epochShards]]), the table writes partitioned
     * as `shard=<k>/` with rows ordered WITHIN each shard file by
     * `orderBy` — the trainer-facing contract that a (shard, position)
-    * read order is reproducible. Atomic via the same temp-and-swap as
-    * [[write]]: readers never observe a half-written delivery. Uses
+    * read order is reproducible. A one-table commit like [[write]]:
+    * readers never observe a half-written delivery. Uses
     * `toJSON` (one pass, no driver collect); at 100 TB the write is
     * embarrassingly parallel and each shard's local sort is bounded by
     * its own rows. */
@@ -287,40 +378,29 @@ object TableStore {
                  shardBy: Option[String] = None,
                  orderBy: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
-    val fs = new Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$warehouse/.tmp_$name")
-    val bak = new Path(s"$warehouse/.bak_$name")
-    val dst = new Path(tablePath(warehouse, name))
-    shardBy match {
-      case Some(s) =>
-        val sorted =
-          if (orderBy.nonEmpty)
-            df.repartition(org.apache.spark.sql.functions.col(s))
-              .sortWithinPartitions(s, orderBy: _*)
-          else df.repartition(org.apache.spark.sql.functions.col(s))
-        // toJSON would inline the shard column into every line; keep it
-        // as the partition dir only
-        val jsonCol = org.apache.spark.sql.functions.to_json(
-          org.apache.spark.sql.functions.struct(
-            sorted.columns.filter(_ != s)
-              .map(org.apache.spark.sql.functions.col).toSeq: _*))
-        sorted.select(org.apache.spark.sql.functions.col(s),
-            jsonCol.as("value"))
-          .write.partitionBy(s).mode("overwrite").text(tmp.toString)
-      case None =>
-        val sorted = if (orderBy.nonEmpty)
-          df.sortWithinPartitions(orderBy.head, orderBy.tail: _*) else df
-        sorted.toJSON.write.mode("overwrite").text(tmp.toString)
+    stageWith(spark, warehouse, name) { tmp =>
+      shardBy match {
+        case Some(s) =>
+          val sorted =
+            if (orderBy.nonEmpty)
+              df.repartition(org.apache.spark.sql.functions.col(s))
+                .sortWithinPartitions(s, orderBy: _*)
+            else df.repartition(org.apache.spark.sql.functions.col(s))
+          // toJSON would inline the shard column into every line; keep it
+          // as the partition dir only
+          val jsonCol = org.apache.spark.sql.functions.to_json(
+            org.apache.spark.sql.functions.struct(
+              sorted.columns.filter(_ != s)
+                .map(org.apache.spark.sql.functions.col).toSeq: _*))
+          sorted.select(org.apache.spark.sql.functions.col(s),
+              jsonCol.as("value"))
+            .write.partitionBy(s).mode("overwrite").text(tmp)
+        case None =>
+          val sorted = if (orderBy.nonEmpty)
+            df.sortWithinPartitions(orderBy.head, orderBy.tail: _*) else df
+          sorted.toJSON.write.mode("overwrite").text(tmp)
+      }
     }
-    if (fs.exists(bak)) fs.delete(bak, true)
-    val hadOld = fs.exists(dst)
-    if (hadOld && !fs.rename(dst, bak))
-      throw new java.io.IOException(s"could not move $dst aside to $bak")
-    if (!fs.rename(tmp, dst)) {
-      if (hadOld) fs.rename(bak, dst)
-      throw new java.io.IOException(s"could not swap $tmp into $dst")
-    }
-    if (hadOld) fs.delete(bak, true)
+    commit(spark, warehouse, Seq(Staged(name, Nil)))
   }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * LAST line — round 7's bench went `parsed: null` when the probes
   * object rode on the compact line past that window, and the observed
   * capture also carries trailing noise (an sbt `[success]` trailer,
-  * ~75 bytes), so the line budget is [[Bench.LineBudget]] (1800), not
+  * ~75 bytes), so the line budget is [[Bench.LineBudget]] (1850), not
   * 2000. These tests pin the output contract against registry growth,
   * without a Spark session (pure string math). */
 class BenchLineSpec extends AnyFunSuite {

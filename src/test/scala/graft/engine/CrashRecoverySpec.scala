@@ -1,19 +1,22 @@
 package graft.engine
 
-import java.io.{ByteArrayOutputStream, FileOutputStream}
+import java.io.{ByteArrayOutputStream, File, FileOutputStream, IOException}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** The documented failure model of the five-table upsert
-  * (CitibikePipeline scaladoc): a crash mid-archive leaves SOME derived
-  * tables merged and the manifest unwritten. This spec produces exactly
-  * that state — the route provider blows up inside the TripsMap update,
-  * after LineGraph and HeatMap already merged the new month — and
-  * proves `recover` restores every table to what a clean end-to-end run
-  * produces, after which incremental processing resumes (run() == 0).
+/** The per-archive commit of the six Citibike tables (CitibikePipeline
+  * and TableStore scaladoc), on both sides of the commit point: a crash
+  * while the February archive stages leaves every table as it was
+  * before February, and a crash after the marker is written is finished
+  * by the next plain `run`. Either way the warehouse then equals a
+  * clean end-to-end run, with no manual recovery call. Outside a
+  * commit, a swap interrupted with no marker makes the next write
+  * throw rather than delete the table's only copy.
   */
 class CrashRecoverySpec extends SparkSpec {
   import spark.implicits._
@@ -44,64 +47,125 @@ class CrashRecoverySpec extends SparkSpec {
   private object BoomRoutes extends Waypoints.RouteProvider {
     def route(fromLon: Double, fromLat: Double,
               toLon: Double, toLat: Double): Waypoints.Shape =
-      throw new RuntimeException("simulated crash between table writes")
+      throw new RuntimeException("simulated crash while staging TripTable")
   }
+
+  private val tables = Seq("ImportedTrips", "LineGraphTable", "HeatMapTable",
+    "TripTable", "DockTable", "StatusDataTable")
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.orderBy(df.columns.sorted.map(col).toIndexedSeq: _*)
       .collect().map(_.toString).toSeq
 
+  private def snapshot(wh: String): Seq[Seq[String]] =
+    tables.map(t => sortedRows(TableStore.read(spark, wh, t)))
+
   private def assertWarehousesEqual(a: String, b: String): Unit =
-    Seq("ImportedTrips", "LineGraphTable", "HeatMapTable", "TripTable",
-      "DockTable", "StatusDataTable").foreach { t =>
+    tables.foreach { t =>
       val (da, db) = (TableStore.read(spark, a, t), TableStore.read(spark, b, t))
       assert(da.schema.toString === db.schema.toString, s"$t schema")
       assert(sortedRows(da) === sortedRows(db), s"$t contents")
     }
 
-  test("crash between table writes: recover() re-derives from ImportedTrips") {
+  /** Staged dirs, backups and commit markers left in the warehouse. */
+  private def leftovers(wh: String): Seq[String] =
+    new File(wh).list().toSeq.filter(n =>
+      Seq(".tmp_", ".bak_", ".commit_", ".pending_").exists(n.startsWith))
+
+  private def archive(dir: String, name: String, csvBytes: Array[Byte]): String = {
+    val out = new FileOutputStream(s"$dir/$name.zip")
+    try out.write(zipBytes(s"$name.csv" -> csvBytes)) finally out.close()
+    dir
+  }
+
+  test("crash before the commit point: every table is as before the archive, a rerun is clean") {
     val in = tmpDir("crash-in")
     val wh = tmpDir("crash-wh")
     val whClean = tmpDir("crash-wh-clean")
-    new FileOutputStream(s"$in/202101-citibike-tripdata.zip")
-      .write(zipBytes("202101-citibike-tripdata.csv" -> janCsv))
-
+    archive(in, "202101-citibike-tripdata", janCsv)
     assert(CitibikePipeline.run(spark, in, wh) == 1)
+    val beforeFeb = snapshot(wh)
 
-    // second month arrives; the run dies INSIDE the TripsMap update —
-    // LineGraph and HeatMap have already merged February, TripTable/
-    // DockTable have not, the manifest still says January
-    new FileOutputStream(s"$in/202102-citibike-tripdata.zip")
-      .write(zipBytes("202102-citibike-tripdata.csv" -> febCsv))
+    // second month arrives; the run dies while staging TripTable, after
+    // the ImportedTrips partitions, LineGraph and HeatMap are staged
+    archive(in, "202102-citibike-tripdata", febCsv)
     intercept[Exception] {
       CitibikePipeline.run(spark, in, wh, provider = BoomRoutes)
     }
+    assert(new File(s"$wh/.tmp_LineGraphTable").exists)
+    assert(!leftovers(wh).exists(_.startsWith(".commit_")))
+    assert(snapshot(wh) === beforeFeb)
 
-    // the torn state is real: LineGraph already counts February...
-    assert(TableStore.read(spark, wh, "LineGraphTable").count() == 2)
-    // ...but the manifest does not, so a naive re-run would double-add
-    val status = TableStore.read(spark, wh, "StatusDataTable").collect()
-    assert(status.length == 1 && status(0).getAs[Int]("month") == 1)
-
-    CitibikePipeline.recover(spark, wh)
-
-    // recovered warehouse == a clean never-crashed run over both months
+    // the rerun loads February only; the result equals a clean
+    // never-crashed run over both months
+    assert(CitibikePipeline.run(spark, in, wh) == 1)
     assert(CitibikePipeline.run(spark, in, whClean) == 2)
     assertWarehousesEqual(wh, whClean)
-
-    // the crashed (partially-merged) archive must NOT double-add: the
-    // rebuilt manifest records Feb as loaded
-    val m = TableStore.read(spark, wh, "StatusDataTable")
-    assert(builders.StatusData.alreadyLoaded(m, 2021, Some(2)))
+    assert(leftovers(wh).isEmpty)
 
     // behavioral parity from here on: a re-run does exactly what it
     // does on the never-crashed warehouse. (The reference's manifest
     // keeps only the LAST month per year — `new_file_check.py:29-43`
     // exact-month match — so BOTH warehouses reprocess January; the
-    // recovery claim is parity, not absence of that quirk.)
+    // claim is parity, not absence of that quirk.)
     val (rw, rc) = (CitibikePipeline.run(spark, in, wh),
       CitibikePipeline.run(spark, in, whClean))
     assert(rw === rc)
     assertWarehousesEqual(wh, whClean)
+  }
+
+  test("crash after the commit point: the next run finishes the commit and loads nothing new") {
+    // one directory per archive, so a run sees only the archive it loads
+    val inJan = archive(tmpDir("commit-in-jan"), "202101-citibike-tripdata", janCsv)
+    val inFeb = archive(tmpDir("commit-in-feb"), "202102-citibike-tripdata", febCsv)
+    val wh = tmpDir("commit-wh")
+    val whClean = tmpDir("commit-wh-clean")
+    assert(CitibikePipeline.run(spark, inJan, wh) == 1)
+    val beforeFeb = snapshot(wh)
+
+    // February is staged and its marker written: the commit point
+    val feb = Ingest.listArchives(inFeb, spark.sparkContext.hadoopConfiguration)
+    CitibikePipeline.stage(spark, feb.head, wh, Waypoints.StraightLineRoutes,
+      distributedIngest = true)
+    assert(new File(s"$wh/.commit_ImportedTrips").exists)
+    assert(snapshot(wh) === beforeFeb)
+
+    // then the crash, part way through applying it: the fact partition
+    // and LineGraph are swapped in, HeatMap is moved aside, TripTable is
+    // swapped but its backup not yet dropped, the rest untouched
+    def mv(from: String, to: String): Unit = {
+      new File(s"$wh/$to").getParentFile.mkdirs()
+      Files.move(Paths.get(s"$wh/$from"), Paths.get(s"$wh/$to"))
+    }
+    mv(".tmp_ImportedTrips/year=2021/month=Feb", "ImportedTrips/year=2021/month=Feb")
+    mv("LineGraphTable", ".bak_LineGraphTable")
+    mv(".tmp_LineGraphTable", "LineGraphTable")
+    org.apache.commons.io.FileUtils.deleteDirectory(new File(s"$wh/.bak_LineGraphTable"))
+    mv("HeatMapTable", ".bak_HeatMapTable")
+    mv("TripTable", ".bak_TripTable")
+    mv(".tmp_TripTable", "TripTable")
+    // a reader in between sees the half-applied commit
+    assert(TableStore.read(spark, wh, "LineGraphTable").count() == 2)
+    assert(!TableStore.exists(spark, wh, "HeatMapTable"))
+
+    assert(CitibikePipeline.run(spark, inFeb, wh) == 0)
+    assert(CitibikePipeline.run(spark, inJan, whClean) == 1)
+    assert(CitibikePipeline.run(spark, inFeb, whClean) == 1)
+    assertWarehousesEqual(wh, whClean)
+    assert(leftovers(wh).isEmpty)
+  }
+
+  test("a table missing beside its .bak_ copy: the next write throws and keeps the backup") {
+    val wh = tmpDir("orphan-bak")
+    TableStore.write(Seq(1, 2, 3).toDF("x"), wh, "T")
+    // a swap interrupted between moving T aside and moving its new
+    // version in, with no commit marker to finish it
+    Files.move(Paths.get(s"$wh/T"), Paths.get(s"$wh/.bak_T"))
+    val e = intercept[IOException] {
+      TableStore.write(TableStore.readOrEmpty(spark, wh, "T", new StructType().add("x", "int")), wh, "T")
+    }
+    assert(e.getMessage.contains(".bak_T"))
+    assert(!TableStore.exists(spark, wh, "T"))
+    assert(TableStore.read(spark, wh, ".bak_T").as[Int].collect().sorted.toSeq == Seq(1, 2, 3))
   }
 }
