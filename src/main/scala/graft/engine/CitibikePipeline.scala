@@ -49,8 +49,7 @@ object CitibikePipeline {
     * that never crashed. (The reference updates its tables with one SQL
     * statement after another on a single DuckDB file.) */
   def run(spark: SparkSession, inputDir: String, warehouse: String,
-          provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes,
-          distributedIngest: Boolean = true): Int = {
+          provider: Waypoints.RouteProvider = Waypoints.StraightLineRoutes): Int = {
     TableStore.finishCommits(spark, warehouse)
     val archives = Ingest.listArchives(inputDir,
       spark.sparkContext.hadoopConfiguration)
@@ -60,7 +59,7 @@ object CitibikePipeline {
     val newOnes = archives.filterNot(a =>
       StatusData.alreadyLoaded(manifest, a.year.toInt, a.month.map(_.toInt)))
     newOnes.foreach { a =>
-      stage(spark, a, warehouse, provider, distributedIngest)
+      stage(spark, a, warehouse, provider)
       TableStore.finishCommits(spark, warehouse)
     }
     newOnes.size
@@ -74,11 +73,8 @@ object CitibikePipeline {
     * partial-aggregate tasks at once, each holding its own aggregation
     * memory. */
   private[engine] def stage(spark: SparkSession, a: Ingest.Archive, wh: String,
-                            provider: Waypoints.RouteProvider,
-                            distributedIngest: Boolean): Unit = {
-    val raw = if (distributedIngest) Ingest.readArchiveDistributed(spark, a)
-              else Ingest.readArchive(spark, a)
-    val imported = Quality.importTrips(raw, a.year)
+                            provider: Waypoints.RouteProvider): Unit = {
+    val imported = Quality.importTrips(Ingest.readArchiveDistributed(spark, a), a.year)
     // the canonical fact table, partitioned for per-period pruning
     // (replaces the reference's (year, month) ART index, S12)
     val fact = TableStore.stage(imported, wh, "ImportedTrips", Seq("year", "month"))

@@ -1,7 +1,6 @@
 package graft.engine
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.nio.charset.StandardCharsets
 import java.util.zip.ZipInputStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -13,11 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `parse_file_date` twice — the second definition, returning
   * (None, None) on miss, wins and is the one modeled here).
   *
-  * Scale note: member extraction happens wherever the bytes are —
-  * at test scale a local ZipInputStream; at 100 TB you pre-extract to
-  * object storage (or read via `binaryFile` + flatMap) so each CSV
-  * becomes its own split. Normalization (P1-P4) is per-member because
-  * header generations differ across a decade of files.
+  * One ingest path: [[readArchiveDistributed]] reads each archive in a
+  * single executor task that extracts the members, parses each with
+  * its own header ([[parseMember]]: header generations differ across a
+  * decade of files) and fails if the archive holds no CSV member.
   */
 object Ingest {
 
@@ -90,10 +88,11 @@ object Ingest {
     bos.toByteArray
   }
 
-  /** Shared per-member CSV parse (univocity — the parser Spark's own
+  /** P1-P3 per member: CSV parse (univocity — the parser Spark's own
     * CSV source uses, so quoted commas and embedded newlines are
-    * handled): header normalized via the synonym map, records surfaced
-    * as canonical-order string arrays (null for absent columns).
+    * handled), header normalized via the synonym map
+    * ([[Normalize.cleanColumnName]]), records surfaced as
+    * canonical-order string rows (null for absent columns).
     * Whitespace is preserved and quoted-empty fields stay "" (matching
     * the reference's Arrow reader: no trimming, empties as written). */
   private[engine] def parseMember(bytes: Array[Byte]): Iterator[org.apache.spark.sql.Row] = {
@@ -129,83 +128,30 @@ object Ingest {
       org.apache.spark.sql.types.StructField(n,
         org.apache.spark.sql.types.StringType)))
 
-  /** S7 + U1: parse every CSV member of an archive and union the
-    * normalized batches (`zip_processing.py:10-17` + `clean_up.py`).
-    * Driver-side form — mirrors the reference's in-memory Arrow path;
-    * fine for monthly archives, see [[readArchiveDistributed]] for the
-    * executor-side form. Both paths share [[parseMember]], so their
-    * CSV semantics are identical by construction. */
-  def readArchive(spark: SparkSession, archive: Archive): DataFrame = {
-    val local = asLocalFile(archive.path).getOrElse(
-      throw new IllegalArgumentException(
-        s"driver-side readArchive needs a local path, got ${archive.path}; " +
-          "use readArchiveDistributed for remote schemes"))
-    val zipBytes = java.nio.file.Files.readAllBytes(local.toPath)
-    val members = extractCsvMembers(zipBytes)
-    require(members.nonEmpty, s"no CSV members in ${archive.path}")
-    val rows = members.iterator.flatMap { case (_, bytes) => parseMember(bytes) }
-    Normalize.castCanonical(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq), canonicalStringSchema))
-  }
-
-  /** Executor-side ingest: the archive bytes never touch the driver.
-    * `binaryFiles` ships each ZIP to a task; members are extracted and
-    * CSV-parsed there via [[parseMember]], and the typed cast chain runs
-    * as ordinary expressions.
+  /** S7 + U1: the one path from an archive to normalized trip rows
+    * (`zip_processing.py:10-84` + `clean_up.py:44-74`), run on the
+    * executors so the archive bytes never touch the driver.
+    * `binaryFiles` ships the ZIP to one task; there its members are
+    * extracted ([[extractCsvMembers]]) and CSV-parsed with headers
+    * renamed ([[parseMember]]), and [[Normalize.castCanonical]] types
+    * the columns as ordinary expressions.
+    *
+    * An archive with no CSV member, nested zips included, fails that
+    * task with "no CSV members in <path>" instead of loading zero rows.
+    * The read is lazy, so the failure surfaces at the first action on
+    * the result; in [[CitibikePipeline]] that is the staged fact write,
+    * before the commit point.
     *
     * Scale notes: parallelism is one task per archive — the right unit
     * when loading years of monthly files at once; at true 100 TB scale
-    * CSVs would be pre-extracted so each member splits further.
-    *
-    * Fails fast on archives with no CSV members (cheap driver-side
-    * central-directory check for local paths) rather than silently
-    * loading zero rows and marking the period complete. */
+    * CSVs would be pre-extracted so each member splits further. */
   def readArchiveDistributed(spark: SparkSession, archive: Archive): DataFrame = {
-    asLocalFile(archive.path).filter(_.isFile).foreach { f =>
-      // local path: cheap metadata check, no decompression
-      require(hasCsvMembers(f), s"no CSV members in ${archive.path}")
-    }
     val rows = spark.sparkContext.binaryFiles(archive.path)
-      .flatMap { case (_, pds) =>
-        extractCsvMembers(pds.toArray()).iterator
-          .flatMap { case (_, bytes) => parseMember(bytes) }
+      .flatMap { case (path, pds) =>
+        val members = extractCsvMembers(pds.toArray())
+        require(members.nonEmpty, s"no CSV members in $path")
+        members.iterator.flatMap { case (_, bytes) => parseMember(bytes) }
       }
     Normalize.castCanonical(spark.createDataFrame(rows, canonicalStringSchema))
-  }
-
-  /** A bare path or `file:` URI as a [[java.io.File]]; None for remote
-    * schemes (s3a://, hdfs://, ...). */
-  private def asLocalFile(path: String): Option[java.io.File] = {
-    val uri = try new java.net.URI(path) catch {
-      case _: java.net.URISyntaxException => return Some(new java.io.File(path))
-    }
-    uri.getScheme match {
-      case null => Some(new java.io.File(path))
-      case "file" => Some(new java.io.File(uri.getPath))
-      case _ => None
-    }
-  }
-
-  /** Central-directory scan: does the zip contain any non-junk .csv
-    * member, or a nested .zip that could? */
-  private def hasCsvMembers(f: java.io.File): Boolean = {
-    val zf = try new java.util.zip.ZipFile(f) catch {
-      case e: java.io.IOException =>
-        throw new IllegalArgumentException(s"unreadable archive: $f", e)
-    }
-    try {
-      val es = zf.entries()
-      var found = false
-      while (!found && es.hasMoreElements) {
-        val e = es.nextElement()
-        val name = e.getName
-        val base = name.substring(name.lastIndexOf('/') + 1)
-        val junk = name.startsWith("__MACOSX/") || base.startsWith("._") ||
-          e.isDirectory
-        found = !junk && (name.toLowerCase.endsWith(".csv") ||
-          name.toLowerCase.endsWith(".zip"))
-      }
-      found
-    } finally zf.close()
   }
 }

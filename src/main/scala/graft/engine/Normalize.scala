@@ -4,16 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** P1-P4 + S7: normalize a raw Citibike CSV batch (any historical header
-  * generation) to the canonical 12-column schema.
+/** P1-P4 + S7: normalize a raw Citibike CSV member (any historical
+  * header generation) to the canonical 12-column schema.
   *
   * Reference behavior (`clean_up.py:44-74`): rename headers
   * (whitespace -> underscore, lowercase, synonym map), null-pad missing
   * canonical columns, project, cast. Timestamps parse via a
-  * multi-format chain (`clean_up.py:47-52`).
-  *
-  * All column work is metadata-only or codegen'd expressions; nothing
-  * here shuffles.
+  * multi-format chain (`clean_up.py:47-52`). Renaming, null-padding and
+  * projection happen per member in [[Ingest.parseMember]]; the cast
+  * runs here, as codegen'd expressions that do not shuffle.
   */
 object Normalize {
 
@@ -34,20 +33,9 @@ object Normalize {
     case other => c.cast(other)
   }
 
-  /** Full normalization: rename -> null-pad -> project -> cast. */
-  def apply(raw: DataFrame): DataFrame = {
-    val renamed = raw.toDF(raw.columns.map(cleanColumnName).toIndexedSeq: _*)
-    val present = renamed.columns.toSet
-    val projected = TripSchema.canonical.fields.map { f =>
-      if (present.contains(f.name)) castTo(col(f.name), f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }
-    renamed.select(projected.toIndexedSeq: _*)
-  }
-
-  /** Cast-only step for inputs whose columns are already renamed and
-    * null-padded to the canonical names (the distributed ingest path
-    * renames headers executor-side). */
+  /** P4: type the canonical string columns that [[Ingest.parseMember]]
+    * produced (renamed, null-padded and in canonical order): timestamps
+    * through the format chain, the rest by plain cast. */
   def castCanonical(raw: DataFrame): DataFrame =
     raw.select(TripSchema.canonical.fields.map(f =>
       castTo(col(f.name), f.dataType).as(f.name)).toIndexedSeq: _*)

@@ -28,8 +28,6 @@ object TripSchema {
     StructField("user_type", StringType),
     StructField("rideable_type", StringType)))
 
-  val colsToKeep: Seq[String] = canonical.fieldNames.toSeq
-
   /** Header synonym map (`clean_up.py:6-18`). Deliberately preserves the
     * reference quirk: modern-format `start_lng -> start_station_latitude`
     * and `start_lat -> start_station_longitude` arrive swapped and are

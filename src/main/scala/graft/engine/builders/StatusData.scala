@@ -1,6 +1,6 @@
 package graft.engine.builders
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,9 +18,6 @@ object StatusData {
     StructField("year", IntegerType),
     StructField("month", IntegerType),
     StructField("complete", BooleanType)))
-
-  def empty(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Record one loaded archive; replaces the year's row. */
   def markLoaded(existing: DataFrame, year: Int, month: Option[Int]): DataFrame = {

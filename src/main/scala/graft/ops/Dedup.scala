@@ -611,10 +611,8 @@ object Dedup {
     var prevSum = rootSum(labels)
     var converged = false
     var i = 0
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     try {
       while (!converged && i < maxIters) {
-        val t0 = System.nanoTime()
         val messages = edges.join(labels) // narrow: both sides on `part`
           .map { case (_, (dst, root)) => (dst, root) }
         // cogroup, NOT union+reduceByKey: a union with the unpartitioned
@@ -633,8 +631,6 @@ object Dedup {
         converged = curSum == prevSum
         prevSum = curSum
         i += 1
-        if (debug) System.err.println(
-          f"[cc] round $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       }
     } finally edges.unpersist(blocking = false)
     require(converged,

@@ -133,7 +133,7 @@ class BuildersSpec extends SparkSpec {
   }
 
   test("StatusData: one row per year, replace semantics, alreadyLoaded") {
-    val m0 = StatusData.empty(spark)
+    val m0 = TableStore.empty(spark, StatusData.schema)
     val m1 = StatusData.markLoaded(m0, 2021, Some(1))
     assert(StatusData.alreadyLoaded(m1, 2021, Some(1)))
     assert(!StatusData.alreadyLoaded(m1, 2021, Some(2)))

@@ -125,8 +125,7 @@ class CrashRecoverySpec extends SparkSpec {
 
     // February is staged and its marker written: the commit point
     val feb = Ingest.listArchives(inFeb, spark.sparkContext.hadoopConfiguration)
-    CitibikePipeline.stage(spark, feb.head, wh, Waypoints.StraightLineRoutes,
-      distributedIngest = true)
+    CitibikePipeline.stage(spark, feb.head, wh, Waypoints.StraightLineRoutes)
     assert(new File(s"$wh/.commit_ImportedTrips").exists)
     assert(snapshot(wh) === beforeFeb)
 

@@ -36,8 +36,8 @@ class PipelineSpec extends SparkSpec {
   val febCsv: Array[Byte] = modernCsv(
     "R4,classic_bike,2021-02-01 08:30:00,2021-02-01 08:40:00,A,1,B,2,40.7,-73.95,40.8,-73.96,casual")
 
-  test("driver-side and distributed ingest produce identical normalized rows") {
-    val in = tmpDir("ingest-eq")
+  test("readArchiveDistributed: nested zip, junk, quoted commas and a legacy header give the expected rows") {
+    val in = tmpDir("ingest-rows")
     // nested zip + junk + a legacy-header member with quoted commas
     val legacyHdr = "tripduration,starttime,stoptime,start station id,start station name,start station latitude,start station longitude,end station id,end station name,end station latitude,end station longitude,bikeid,usertype,birth year,gender"
     val legacyCsv = (legacyHdr + "\n" +
@@ -50,21 +50,66 @@ class PipelineSpec extends SparkSpec {
       "202101-modern.csv" -> janCsv)
     new FileOutputStream(s"$in/2014-citibike-tripdata.zip").write(zip)
     val a = Ingest.listArchives(in).head
-    val driver = Ingest.readArchive(spark, a)
-    val dist = Ingest.readArchiveDistributed(spark, a)
-    assert(driver.schema == dist.schema)
-    val key = driver.columns.map(col)
-    assert(driver.orderBy(key.toIndexedSeq: _*).collect().toSeq ==
-      dist.orderBy(key.toIndexedSeq: _*).collect().toSeq)
+    val df = Ingest.readArchiveDistributed(spark, a)
+    assert(df.schema == TripSchema.canonical)
+    // canonical column order; the modern header's lat/lng land swapped
+    // (TripSchema.renameMap), legacy rows have no rideable_type
+    val got = df.select(df.columns.map(c => col(c).cast("string")).toIndexedSeq: _*)
+      .collect().map(_.toSeq.map(v => if (v == null) null else v.toString)).toSeq
+      .sortBy(r => r.head)
+    assert(got == Seq(
+      Seq("2014-10-01 00:00:01", "2014-10-01 00:10:01", "Alpha, St", "101", "Beta Av", "102",
+        "-73.95", "40.7", "40.8", "-73.96", "Subscriber", null),
+      Seq("2014-10-02 09:30:00", "2014-10-02 09:35:00", "Beta Av", "102", "Alpha, St", "101",
+        "-73.96", "40.8", "40.7", "-73.95", "Customer", null),
+      Seq("2021-01-05 08:00:00", "2021-01-05 08:10:00", "A", "1", "B", "2",
+        "40.7", "-73.95", "40.8", "-73.96", "member", "classic_bike"),
+      Seq("2021-01-05 09:00:00", "2021-01-05 09:10:00", "A", "1", "B", "2",
+        "40.7", "-73.95", "40.8", "-73.96", "member", "classic_bike"),
+      Seq("2021-01-06 10:00:00", "2021-01-06 10:20:00", "B", "2", "A", "1",
+        "40.8", "-73.96", "40.7", "-73.95", "casual", "electric_bike")))
   }
+
+  /** Every message along `e`'s cause chain. */
+  private def causeChain(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.toString).toSeq
 
   test("archives without CSV members fail fast instead of loading zero rows") {
     val in = tmpDir("empty-arch")
+    val wh = tmpDir("empty-arch-wh")
     new FileOutputStream(s"$in/202101-citibike-tripdata.zip")
       .write(zipBytes("readme.txt" -> s("nothing here")))
-    val a = Ingest.listArchives(in).head
-    intercept[IllegalArgumentException](Ingest.readArchiveDistributed(spark, a))
-    intercept[IllegalArgumentException](Ingest.readArchive(spark, a))
+    // the read is lazy: the failure surfaces in the run's fact write
+    val e = intercept[Exception](CitibikePipeline.run(spark, in, wh))
+    assert(causeChain(e).exists(_.contains("no CSV members")), causeChain(e))
+    assert(!TableStore.exists(spark, wh, "StatusDataTable"))
+  }
+
+  test("an archive whose only member is a nested zip without CSV fails and marks nothing loaded") {
+    val in = tmpDir("nested-empty-in")
+    val wh = tmpDir("nested-empty-wh")
+    new FileOutputStream(s"$in/202101-citibike-tripdata.zip")
+      .write(zipBytes("202101-citibike-tripdata.csv" -> janCsv))
+    assert(CitibikePipeline.run(spark, in, wh) == 1)
+    val tables = "ImportedTrips" +: tripTables :+ "StatusDataTable"
+    val before = tables.map(t => rows(wh, t))
+
+    val feb = s"$in/202102-citibike-tripdata.zip"
+    new FileOutputStream(feb).write(zipBytes(
+      "__MACOSX/._202102.zip" -> s("junk"),
+      "202102.zip" -> zipBytes("readme.txt" -> s("nothing here"))))
+    val e = intercept[Exception](CitibikePipeline.run(spark, in, wh))
+    assert(causeChain(e).exists(_.contains("no CSV members")), causeChain(e))
+    assert(tables.map(t => rows(wh, t)) == before)
+    assert(!builders.StatusData.alreadyLoaded(
+      TableStore.read(spark, wh, "StatusDataTable"), 2021, Some(2)))
+
+    // so a corrected file under the same name still loads
+    new FileOutputStream(feb).write(zipBytes("202102.zip" ->
+      zipBytes("202102-citibike-tripdata.csv" -> febCsv)))
+    assert(CitibikePipeline.run(spark, in, wh) == 1)
+    assert(TableStore.read(spark, wh, "HeatMapTable").agg(sum("total_count"))
+      .as[Long].head() == 4)
   }
 
   test("pipeline: load, idempotent re-run, incremental month, junk entries") {
@@ -201,5 +246,21 @@ class PipelineSpec extends SparkSpec {
     // the fact write replaced January's partition with the stray trip
     // (the documented overwritePartitions behaviour)
     assert(TableStore.read(spark, wh, "ImportedTrips").count() == 2)
+  }
+
+  test("ImportedTrips fact table: partition pruning on (year, month)") {
+    val wh = tmpDir("prune-wh")
+    val trips = Seq(
+      ("2021", "Jan", "A"), ("2021", "Feb", "B"), ("2022", "Jan", "C"))
+      .toDF("year", "month", "start_station_name")
+    TableStore.overwritePartitions(trips, wh, "ImportedTrips", Seq("year", "month"))
+    val q = TableStore.read(spark, wh, "ImportedTrips")
+      .filter($"year" === "2021" && $"month" === "Jan")
+    val plan = q.queryExecution.executedPlan.toString()
+    assert(plan.contains("PartitionFilters"), plan.take(500))
+    // only the matching partition's row comes back, schema kept strings
+    val rows = q.collect()
+    assert(rows.length == 1 && rows(0).getAs[String]("start_station_name") == "A")
+    assert(q.schema("year").dataType.typeName == "string")
   }
 }
