@@ -56,6 +56,9 @@ import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
   * shuffled by a gate. */
 object Capstone {
 
+  /** Stage 4's decontamination cosine threshold, τ = 0.9 in millionths. */
+  private val DecontamTauX1e6: Long = 900000L
+
   /** Stages 1–3; returns the CACHED clean frame
     * (doc_id, scrubbed text, lang, source) — caller unpersists. */
   def cleanDocs(docs: DataFrame): DataFrame =
@@ -83,12 +86,11 @@ object Capstone {
     * the cell path, a caller at low τ gets the exact kernel instead
     * of silent recall loss, and `graft.decontam.exact` /
     * `graft.decontam.nProbe` are live remediation levers. */
-  def decontam(clean: DataFrame, emb: DataFrame,
-               tauX1e6: Long = 900000L): DataFrame = {
+  def decontam(clean: DataFrame, emb: DataFrame): DataFrame = {
     val contam = Similarity.contaminationKeep(
       emb.join(clean.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi").filter(col("vec_id") % 10 =!= 3),
-      emb.filter(col("vec_id") % 10 === 3), tauX1e6)
+      emb.filter(col("vec_id") % 10 === 3), DecontamTauX1e6)
     Checkpoints.pin(clean.filter(col("doc_id") % 10 =!= 3)
       .join(contam.select(col("vec_id").as("doc_id"),
         col("keep").as("dc_keep")), Seq("doc_id"), "left")

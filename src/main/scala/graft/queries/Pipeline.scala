@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.engine.{Tables, TableStore}
-import graft.streaming.WaveHarness
+import graft.streaming.{StatefulSessionize, StreamingBuilders, StreamingDedup, StreamingJoin, StreamingSentenceDedup, StreamingVectorIngest, WaveHarness}
 import graft.ops.{Bpe, Covariance, Dedup, Hashing, IncrementalDedup, IvfIndex, Multimodal, Packing, Pq, Retrieval, Sampling, Sharding, Similarity, Sketches, TextAnalysis}
 import Hashing.{h60Sql, h60bSql, h31Sql, shingles3Sql}
 
@@ -37,6 +38,20 @@ object Pipeline {
     Tables.floored(s, dir, "documents", "doc_id")
   private def embF(s: SparkSession, dir: String): DataFrame =
     Tables.floored(s, dir, "embeddings", "vec_id")
+
+  /** The per-sf scratch warehouse under the build dir (testdata is
+    * read-only): `target/graft-wh/<sf dir name>`. */
+  private def scratchWh(dir: String): String =
+    s"target/graft-wh/${new java.io.File(dir).getName}"
+
+  /** A streaming harness's own root, `scratchWh(dir)/<tag>`, wiped
+    * first: reruns must be deterministic, so source, checkpoint and
+    * sink start empty (the bench reprobes queries). */
+  private def freshRoot(dir: String, tag: String): String = {
+    val root = s"${scratchWh(dir)}/$tag"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    root
+  }
 
   /** The ANN top-k family's all-nonzero-norms corpus precondition as
     * a 1-row GATED frame (round 16): crossJoin(broadcast(...)) onto
@@ -1107,7 +1122,7 @@ object Pipeline {
         val docs = t(s, dir, "documents")
         // per-sf warehouse under the build dir (testdata is read-only);
         // deterministic location, overwritten in place on every run
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val docsT = TableStore.writeBucketed(docs.select("doc_id", "text"),
           wh, "q57_docs", 8, Seq("doc_id"), Seq("doc_id"))
         val tokT = TableStore.writeBucketed(
@@ -1663,7 +1678,7 @@ object Pipeline {
         val hist = planted.filter(col("vec_id") % 3 =!= 2)
         val delta = planted.filter(col("vec_id") % 3 === 2)
         val (cents, k) = IvfIndex.sampleQuantizerDf(hist, 64)
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         // default chunkSize (one chunk at bench k): q78 already pins
         // the multi-chunk merge under the hash gate; fragmenting BOTH
         // of this query's assignments 4-ways only multiplied merge
@@ -1697,7 +1712,7 @@ object Pipeline {
         val b1 = planted.filter(col("vec_id") % 3 === 1)
         val b2 = planted.filter(col("vec_id") % 3 === 2)
         val (cents, k) = IvfIndex.sampleQuantizerDf(h0, 64)
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val idx = IvfIndex.buildCellIndex(h0, cents, wh, "q80_cells", 8,
           nProbe = 2, kEstimate = Some(k))
         IvfIndex.absorbIntoCellIndex(idx, b1, cents, nProbe = 2,
@@ -1969,7 +1984,7 @@ object Pipeline {
         nQ = 20, k = 5, shortlist = 50),
       (s, dir) => {
         val e = t(s, dir, "embeddings")
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val idx = Pq.buildIvfPqIndex(e, PqDefault, cellSize = 64,
           wh, "q94_pqcells", nBuckets = 8)
         Pq.ivfPqTopKFromIndex(s.table(idx), e, PqDefault, cellSize = 64,
@@ -2033,22 +2048,17 @@ object Pipeline {
     // batch-2 source loses to its own batch-0 clone), and family
     // +3000000 (≡ 0 mod 3) lands in the SAME batch, exercising
     // within-batch keep-first. Three waves are written and drained
-    // sequentially — three separate streaming queries against one
-    // checkpoint — so wave ↔ batch_id is pinned. The oracle replays
-    // the survivor law the drain implements: per text, argmin
+    // as three micro-batches of ONE drain ([[WaveHarness]]), so wave
+    // ↔ batch_id is pinned. The oracle replays the survivor law the
+    // drain implements: per text, argmin
     // (batch_id, doc_id); null texts equal nothing and all pass.
     // Byte-identical REPLAY idempotence (the failure-recovery leg the
     // oracle can't see) stays spec'd in StreamingDedupSpec.
     Q("q103_streaming_dedup_drain", "pipeline:streaming-dedup-drain",
       streamingDrainOracle,
       (s, dir) => {
-        val root = new java.io.File(
-          s"target/graft-wh/${new java.io.File(dir).getName}/q103")
-        // reruns must be deterministic: wipe source, checkpoint and
-        // sink before draining (the bench reprobes queries)
-        org.apache.commons.io.FileUtils.deleteQuietly(root)
+        val root = freshRoot(dir, "q103")
         val src = s"$root/src"
-        val ckpt = s"$root/ckpt"
         val wh = s"$root/wh"
         // the planted corpus in ONE scan: offset 0 always, +1e6 where
         // doc_id % 10 = 0, +3e6 where doc_id % 10 = 5; uncached, so
@@ -2060,23 +2070,16 @@ object Pipeline {
             (col("off") === 1000000L && col("doc_id") % 10 === 0) ||
             (col("off") === 3000000L && col("doc_id") % 10 === 5))
           .select((col("doc_id") + col("off")).as("doc_id"), col("text"))
-        // three mtime-ordered wave files, ONE drain sliced into three
-        // batches (maxFilesPerTrigger=1) — same cross-batch history
-        // semantics, one streaming-query startup instead of three.
-        // Per-batch exchanges sized to the drain's bounded key space
-        // (as the sessionize harnesses), restored after.
+        // three mtime-ordered wave files, one drain, three batches
         (0 until 3).foreach { b =>
           WaveHarness.writeWave(aug.filter(col("doc_id") % 3 === b),
             src, b)
         }
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try graft.streaming.StreamingDedup.run(
-          graft.streaming.StreamingDedup.docStream(s, src, aug.schema,
-            maxFilesPerTrigger = Some(1)),
-          wh, "q103_history", ckpt)
-        finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-        graft.engine.TableStore.read(s, wh, "q103_history")
+        WaveHarness.drain(s, WaveHarness.waveStream(s, src, aug.schema)
+          .writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
+            StreamingDedup.processBatch(b, id, wh, "q103_history")
+          }, s"$root/ckpt")
+        TableStore.read(s, wh, "q103_history")
           .select(col("doc_id").cast("long").as("doc_id"),
             col("batch_id").cast("long").as("batch_id"))
           .orderBy("doc_id")
@@ -2114,9 +2117,9 @@ object Pipeline {
     // STATE operator (gap sessionization, the one shape windowed aggs
     // can't express) and hands the drained table to the oracle. The
     // events table arrives as two strict chronological time-range
-    // waves — each drained to completion before the next is written,
-    // so cross-batch state is genuinely exercised: a session spanning
-    // two waves is emitted once, by the wave whose event closed it.
+    // waves, each its own micro-batch of one drain, so cross-batch
+    // state is genuinely exercised: a session spanning two waves is
+    // emitted once, by the wave whose event closed it.
     // Open sessions at end-of-stream are flushed by a per-user
     // sentinel event one day beyond the last — the sentinel closes
     // the real session and ITSELF stays open in the state store
@@ -2149,11 +2152,8 @@ object Pipeline {
       ivfPqTopKOracle(PqDefault, cellSize = 64, nProbe = 4,
         nQ = 20, k = 5, shortlist = 50),
       (s, dir) => {
-        val root = new java.io.File(
-          s"target/graft-wh/${new java.io.File(dir).getName}/q106")
-        org.apache.commons.io.FileUtils.deleteQuietly(root)
+        val root = freshRoot(dir, "q106")
         val src = s"$root/src"
-        val ckpt = s"$root/ckpt"
         val wh = s"$root/wh"
         val e = t(s, dir, "embeddings")
         val vecs = e.select(col("vec_id"), col("embedding"))
@@ -2169,15 +2169,12 @@ object Pipeline {
           WaveHarness.writeWave(vecs.filter(col("vec_id") % 2 === wave),
             src, wave)
         }
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try graft.streaming.StreamingVectorIngest.run(
-          graft.streaming.StreamingVectorIngest.vecStream(
-            s, src, vecs.schema, maxFilesPerTrigger = Some(1)),
-          wh, "q106_stage", ckpt, cents, kCells, cb, PqDefault)
-        finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-        graft.streaming.StreamingVectorIngest.compact(
-          s, wh, "q106_stage", idx)
+        WaveHarness.drain(s, WaveHarness.waveStream(s, src, vecs.schema)
+          .writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
+            StreamingVectorIngest.processBatch(b, id, wh, "q106_stage",
+              cents, kCells, cb, PqDefault)
+          }, s"$root/ckpt")
+        StreamingVectorIngest.compact(s, wh, "q106_stage", idx)
         Pq.ivfPqServe(s.table(idx), e, cents, kCells, cb, PqDefault,
             nProbe = 4, nQueries = 20, k = 5, shortlist = 50)
           .orderBy("query_id", "rank")
@@ -2190,40 +2187,29 @@ object Pipeline {
     // — the parity layer's incremental builder (S10's streaming twin).
     // The event stream arrives in two waves that OVERLAP on every
     // (year, month, hour) key (an event_id % 2 split), so the second
-    // drain re-emits grown totals from streaming state and the sink
-    // must REPLACE, not append — the drained table equals the batch
-    // q02 heatmap law only if update-mode re-emission and the keyed
-    // replace both work across checkpointed runs.
+    // micro-batch re-emits grown totals from streaming state and the
+    // sink must REPLACE, not append — the drained table equals the
+    // batch q02 heatmap law only if update-mode re-emission and the
+    // keyed replace both work across checkpointed batches.
     Q("q107_streaming_heatmap_upsert", "pipeline:streaming-upsert",
       streamingHeatmapOracle,
       (s, dir) => {
-        val root = new java.io.File(
-          s"target/graft-wh/${new java.io.File(dir).getName}/q107")
-        org.apache.commons.io.FileUtils.deleteQuietly(root)
+        val root = freshRoot(dir, "q107")
         val src = s"$root/src"
-        val ckpt = s"$root/ckpt"
         val wh = s"$root/wh"
         val ev = t(s, dir, "events").select(
           col("event_id"), col("ts").as("start_time"),
           date_format(col("ts"), "yyyy").as("year"),
           date_format(col("ts"), "MMM").as("month"))
-        // size the agg's state stores to the bounded key space
-        // (year x month x hour), as in q105; restored after
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          Seq(0, 1).foreach { wave =>
-            WaveHarness.writeWave(ev.filter(col("event_id") % 2 === wave)
-              .drop("event_id"), src, wave)
-          }
-          val stream = s.readStream
-            .schema("start_time timestamp, year string, month string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-          graft.streaming.StreamingBuilders.runIncrementalUpsert(
-            s, graft.streaming.StreamingBuilders.heatMapStream(stream),
-            wh, "q107_heatmap", Seq("year", "month", "hour"), ckpt)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+        Seq(0, 1).foreach { wave =>
+          WaveHarness.writeWave(ev.filter(col("event_id") % 2 === wave)
+            .drop("event_id"), src, wave)
+        }
+        val stream = WaveHarness.waveStream(s, src, StructType.fromDDL(
+          "start_time timestamp, year string, month string"))
+        StreamingBuilders.runIncrementalUpsert(s,
+          StreamingBuilders.heatMapStream(stream), wh, "q107_heatmap",
+          Seq("year", "month", "hour"), s"$root/ckpt")
         TableStore.read(s, wh, "q107_heatmap")
           .select(col("year"), col("month"), col("hour").cast("int").as("hour"),
             col("total_count").cast("long").as("total_count"))
@@ -2241,29 +2227,21 @@ object Pipeline {
     Q("q108_streaming_sentence_dedup", "pipeline:streaming-sentence-dedup",
       sentenceDedupOracle,
       (s, dir) => {
-        val root = new java.io.File(
-          s"target/graft-wh/${new java.io.File(dir).getName}/q108")
-        org.apache.commons.io.FileUtils.deleteQuietly(root)
+        val root = freshRoot(dir, "q108")
         val src = s"$root/src"
-        val ckpt = s"$root/ckpt"
         val wh = s"$root/wh"
         val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         val row = docs.agg(min("doc_id"), max("doc_id")).head()
         val mid = (row.getLong(0) + row.getLong(1)) / 2
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          Seq(col("doc_id") <= mid, col("doc_id") > mid).zipWithIndex
-            .foreach { case (wave, w) =>
-              WaveHarness.writeWave(docs.filter(wave), src, w)
-            }
-          graft.streaming.StreamingSentenceDedup.run(
-            graft.streaming.StreamingSentenceDedup.docStream(
-              s, src, docs.schema, maxFilesPerTrigger = Some(1)),
-            wh, ckpt)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-        TableStore.read(s, wh,
-            graft.streaming.StreamingSentenceDedup.DocsTable)
+        Seq(col("doc_id") <= mid, col("doc_id") > mid).zipWithIndex
+          .foreach { case (wave, w) =>
+            WaveHarness.writeWave(docs.filter(wave), src, w)
+          }
+        WaveHarness.drain(s, WaveHarness.waveStream(s, src, docs.schema)
+          .writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
+            StreamingSentenceDedup.processBatch(b, id, wh)
+          }, s"$root/ckpt")
+        TableStore.read(s, wh, StreamingSentenceDedup.DocsTable)
           .select(col("doc_id").cast("long").as("doc_id"),
             col("n_sentences").cast("long").as("n_sentences"),
             col("n_kept").cast("long").as("n_kept"), col("dedup_text"))
@@ -2371,7 +2349,7 @@ object Pipeline {
       ivfPqDeleteOracle(PqDefault, cellSize = 64, nProbe = 4,
         nQ = 20, k = 5, shortlist = 50, deletePred = "vec_id % 7 = 3"),
       (s, dir) => {
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val e = t(s, dir, "embeddings")
         Pq.buildIvfPqIndex(e, PqDefault, cellSize = 64, wh,
           "q135_pqidx", nBuckets = 8)
@@ -2570,22 +2548,21 @@ object Pipeline {
     // window, watermarks bounding both state stores; the oracle IS
     // the batch interval join. Wave design: ALL views arrive in
     // batch 1 together with the first-half clicks; second-half
-    // clicks arrive in batch 2 (maxFilesPerTrigger=1 slices each
-    // source oldest-first). Batch-1 matches exercise the within-batch
-    // path; batch-2 matches (78 of 175 at sf0.1 — measured nonzero
-    // at every sf) must join VIEW STATE retained across the
-    // checkpointed batch boundary, so cross-batch join state is
-    // genuinely under the hash. No retained view can be evicted
-    // before its batch-2 click: after batch 1 the global watermark is
-    // min(view side ≈ maxTs, click side = mid) − delay, and a view
-    // matching a batch-2 click has view_ts + W ≥ ct ≥ mid > that
-    // watermark (the scaladoc's parity argument, specialized).
+    // clicks arrive in batch 2 ([[WaveHarness.waveStream]] reads each
+    // source one file per batch, oldest first). Batch-1 matches
+    // exercise the within-batch path; batch-2 matches (78 of 175 at
+    // sf0.1 — measured nonzero at every sf) must join VIEW STATE
+    // retained across the checkpointed batch boundary, so
+    // cross-batch join state is genuinely under the hash. No retained
+    // view can be evicted before its batch-2 click: after batch 1 the
+    // global watermark is min(view side ≈ maxTs, click side = mid)
+    // − delay, and a view matching a batch-2 click has view_ts + W ≥
+    // ct ≥ mid > that watermark (the scaladoc's parity argument,
+    // specialized).
     Q("q143_streaming_interval_join", "pipeline:streaming-join",
       streamingJoinOracle(windowMin = 30),
       (s, dir) => {
-        val root = new java.io.File(
-          s"target/graft-wh/${new java.io.File(dir).getName}/q143")
-        org.apache.commons.io.FileUtils.deleteQuietly(root)
+        val root = freshRoot(dir, "q143")
         val ev = t(s, dir, "events")
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"))
@@ -2605,23 +2582,17 @@ object Pipeline {
         WaveHarness.writeWave(
           clicks.filter(unix_micros(col("click_ts")) >= midUs),
           s"$root/clicks", 1)
-        val vStream = s.readStream
-          .schema("view_id bigint, v_user bigint, view_ts timestamp")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/views")
-        val cStream = s.readStream
-          .schema("click_id bigint, c_user bigint, click_ts timestamp")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/clicks")
-        // join-state stores sized to the bounded per-drain key space
-        // (the q105/q107 convention); restored after
-        val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        val out =
-          try graft.streaming.StreamingJoin.drainToParquet(s,
-            graft.streaming.StreamingJoin.attributionJoin(
-              vStream, cStream, windowMinutes = 30, delayMinutes = 30),
-            s"$root/out", s"$root/ckpt")
-          finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-        out.orderBy("view_id", "click_id")
+        val joined = StreamingJoin.attributionJoin(
+          WaveHarness.waveStream(s, s"$root/views", StructType.fromDDL(
+            "view_id bigint, v_user bigint, view_ts timestamp")),
+          WaveHarness.waveStream(s, s"$root/clicks", StructType.fromDDL(
+            "click_id bigint, c_user bigint, click_ts timestamp")),
+          windowMinutes = 30, delayMinutes = 30)
+        // the parquet file sink: its transaction log makes a rerun
+        // against the same checkpoint idempotent
+        WaveHarness.drain(s, joined.writeStream.format("parquet")
+          .option("path", s"$root/out").outputMode("append"), s"$root/ckpt")
+        s.read.parquet(s"$root/out").orderBy("view_id", "click_id")
       }),
 
     // ── NATIVE session windows
@@ -2809,7 +2780,7 @@ object Pipeline {
     Q("q122_bm25_indexed", "pipeline:retrieval-bm25-indexed",
       bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => {
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val pt = Retrieval.buildPostingsIndex(docsF(s, dir), wh,
           "q122_postings", nBuckets = 8)
         val stats = s.read.parquet(
@@ -2829,7 +2800,7 @@ object Pipeline {
     Q("q124_postings_absorb", "pipeline:retrieval-bm25-absorb",
       bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => {
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val d = docsF(s, dir)
         val pt = Retrieval.buildPostingsIndex(
           d.filter(col("doc_id") % 10 =!= 7), wh, "q124_postings",
@@ -2853,7 +2824,7 @@ object Pipeline {
     Q("q128_postings_compact", "pipeline:retrieval-bm25-compact",
       bm25Oracle(Bm25Terms, k = 25),
       (s, dir) => {
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val d = docsF(s, dir)
         val pt = Retrieval.buildPostingsIndex(
           d.filter(col("doc_id") % 10 < 8), wh, "q128_postings",
@@ -2944,7 +2915,7 @@ object Pipeline {
     Q("q130_phrase_search", "pipeline:retrieval-phrase",
       phraseSearchOracle(PhraseTerms),
       (s, dir) => {
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val pt = Retrieval.buildPositionalIndex(docsF(s, dir), wh,
           "q130_positions", nBuckets = 8)
         Retrieval.phraseCountFromIndex(s.table(pt), PhraseTerms)
@@ -2959,7 +2930,7 @@ object Pipeline {
     Q("q132_bm25_batch", "pipeline:retrieval-bm25-batch",
       bm25BatchOracle(BatchQueries, k = 10),
       (s, dir) => {
-        val wh = s"target/graft-wh/${new java.io.File(dir).getName}"
+        val wh = scratchWh(dir)
         val pt = Retrieval.buildPostingsIndex(docsF(s, dir), wh,
           "q132_postings", nBuckets = 8)
         val stats = s.read.parquet(graft.engine.TableStore
@@ -4011,63 +3982,50 @@ object Pipeline {
     * unchanged. */
   private def sessionWindowDrain(s: SparkSession, dir: String,
                                  qTag: String): DataFrame = {
-    val root = new java.io.File(
-      s"target/graft-wh/${new java.io.File(dir).getName}/$qTag")
-    org.apache.commons.io.FileUtils.deleteQuietly(root)
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val out =
-      try {
-        WaveHarness.writeSessionWaves(sessionEvents(s, dir), s"$root/src")
-        val stream = s.readStream
-          .schema("user_id bigint, ts_micros bigint, event_id bigint")
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/src")
-          .select(col("user_id"),
-            timestamp_micros(col("ts_micros")).as("ts"))
-        graft.streaming.StreamingJoin.drainToParquet(s,
-          graft.streaming.StreamingBuilders.sessionWindowAgg(
-            stream, gapMinutes = 30, delayMinutes = 30),
-          s"$root/out", s"$root/ckpt")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
-    out.select(col("user_id"), col("start_micros"),
-        col("end_micros"), col("n_events"))
+    val root = freshRoot(dir, qTag)
+    WaveHarness.writeSessionWaves(sessionEvents(s, dir), s"$root/src")
+    val stream = WaveHarness.waveStream(s, s"$root/src", StructType.fromDDL(
+        "user_id bigint, ts_micros bigint, event_id bigint"))
+      .select(col("user_id"), timestamp_micros(col("ts_micros")).as("ts"))
+    WaveHarness.drain(s, StreamingBuilders.sessionWindowAgg(
+        stream, gapMinutes = 30, delayMinutes = 30)
+      .writeStream.format("parquet").option("path", s"$root/out")
+      .outputMode("append"), s"$root/ckpt")
+    s.read.parquet(s"$root/out")
+      .select(col("user_id"), col("start_micros"), col("end_micros"),
+        col("n_events"))
       .orderBy("user_id", "start_micros")
   }
 
   /** The q105/q109 drain lifecycle: [[WaveHarness.writeSessionWaves]]'
-    * three mtime-ordered files sliced into three micro-batches of ONE
-    * AvailableNow drain (maxFilesPerTrigger=1 — [[WaveHarness.writeWave]])
-    * so cross-batch state is genuinely exercised — a session spanning
+    * three mtime-ordered files drained as three micro-batches of ONE
+    * [[WaveHarness.drain]] through the custom-state sessionizer
+    * ([[StatefulSessionize.sessionsWithTimeout]] when `timeout`, else
+    * the next-event-only [[StatefulSessionize.sessions]]), so
+    * cross-batch state is genuinely exercised — a session spanning
     * the wave boundary is emitted once, by the batch whose event
     * closed it. The sentinel closes every real session and itself
     * stays open in the state store, never emitted. The sink is
-    * q103's idempotent dynamic-overwrite-by-batch_id contract.
-    * State-store partitions are sized to the bounded per-drain work
-    * (pinned from spark.sql.shuffle.partitions at checkpoint
-    * creation; a cluster deployment sizes them to user cardinality
-    * at provisioning) and the conf is restored after. The 4-wave
-    * full-table parity stays spec'd at sf0.1 in
-    * StreamingParitySpec. */
+    * q103's idempotent batch_id contract
+    * ([[StatefulSessionize.processBatch]]). The 4-wave full-table
+    * parity stays spec'd at sf0.1 in StreamingParitySpec. */
   private def sessionizeDrain(s: SparkSession, dir: String, qTag: String,
                               timeout: Boolean): DataFrame = {
-    val root = new java.io.File(
-      s"target/graft-wh/${new java.io.File(dir).getName}/$qTag")
-    // reruns must be deterministic: wipe source, checkpoint and
-    // sink before draining (the bench reprobes queries)
-    org.apache.commons.io.FileUtils.deleteQuietly(root)
+    import StatefulSessionize.{Ev, Session}
+    val root = freshRoot(dir, qTag)
     val src = s"$root/src"
-    val ckpt = s"$root/ckpt"
     val wh = s"$root/wh"
     val table = s"${qTag}_sessions"
-    val prevSp = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      WaveHarness.writeSessionWaves(sessionEvents(s, dir), src)
-      // one drain, one batch per mtime-ordered wave file
-      graft.streaming.StatefulSessionize.run(
-        s, src, gapMinutes = 30, wh, table, ckpt, timeout,
-        maxFilesPerTrigger = Some(1))
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
+    WaveHarness.writeSessionWaves(sessionEvents(s, dir), src)
+    val ev = Encoders.product[Ev]
+    val in = WaveHarness.waveStream(s, src, ev.schema).as[Ev](ev)
+    val sessions =
+      if (timeout) StatefulSessionize.sessionsWithTimeout(in, gapMinutes = 30)
+      else StatefulSessionize.sessions(in, gapMinutes = 30)
+    WaveHarness.drain(s, sessions.writeStream.outputMode("append")
+      .foreachBatch { (b: Dataset[Session], id: Long) =>
+        StatefulSessionize.processBatch(b, id, wh, table)
+      }, s"$root/ckpt")
     TableStore.read(s, wh, table)
       .select(col("user_id").cast("long").as("user_id"),
         col("start_micros").cast("long").as("start_micros"),

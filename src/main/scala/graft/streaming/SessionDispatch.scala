@@ -55,19 +55,18 @@ import org.apache.spark.sql.functions._
   * preference before the state-store merge-sort's superlinear regime
   * begins, which is the structural boundary the budget guards (not
   * an exact penalty line). Override per session with
-  * `graft.session.nativeMaxSessions`; the sample modulus with
-  * `graft.session.probeSampleMod` (default 16). Both branches are
-  * spec-pinned row-equal (SessionDispatchSpec) — a wrong estimate
-  * costs wall clock, never rows. */
+  * `graft.session.nativeMaxSessions`; the sample modulus is
+  * [[ProbeSampleMod]]. Both branches are spec-pinned row-equal
+  * (SessionDispatchSpec) — a wrong estimate costs wall clock, never
+  * rows. */
 object SessionDispatch {
 
   def maxNativeSessions(df: DataFrame): Long =
     df.sparkSession.conf.getOption("graft.session.nativeMaxSessions")
       .map(_.toLong).getOrElse(500L * 1000L)
 
-  def probeSampleMod(df: DataFrame): Long =
-    df.sparkSession.conf.getOption("graft.session.probeSampleMod")
-      .map(_.toLong).getOrElse(16L)
+  /** The probe's user-sample modulus: 1 user in 16. */
+  val ProbeSampleMod: Long = 16L
 
   /** Estimated total session count over `events` (user_id, ts) at the
     * given gap, from the 1-in-`sampleMod` user slice. Exact when
@@ -92,6 +91,6 @@ object SessionDispatch {
   /** The dispatch decision: native `session_window` iff the estimated
     * session count fits the native state budget. */
   def chooseNative(events: DataFrame, gapMinutes: Int): Boolean =
-    estimatedSessions(events, gapMinutes, probeSampleMod(events)) <=
+    estimatedSessions(events, gapMinutes, ProbeSampleMod) <=
       maxNativeSessions(events)
 }

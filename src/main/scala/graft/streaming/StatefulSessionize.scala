@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Custom streaming state via flatMapGroupsWithState: gap-based
   * sessionization that survives across micro-batches.
@@ -13,6 +13,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `KeyValueGroupedDataset.flatMapGroupsWithState` surface — custom
   * state logic the built-in windowed aggregations can't express
   * (session end depends on the next event, not a fixed window).
+  *
+  * Drained through [[WaveHarness.drain]] with `foreachBatch` calling
+  * [[processBatch]], OPEN sessions survive across drains in the
+  * checkpointed state store, so draining per arrival wave exercises
+  * genuine cross-batch state: a session spanning two waves is emitted
+  * once, by the batch whose event closed it.
   */
 object StatefulSessionize {
 
@@ -64,7 +70,18 @@ object StatefulSessionize {
     *
     * `lateness` is the watermark delay: events later than it may be
     * assigned to a new session where [[sessions]] would have merged
-    * them (the standard watermark trade). */
+    * them (the standard watermark trade).
+    *
+    * Under chronological arrival and zero lateness this and
+    * [[sessions]] produce IDENTICAL session sets: a timeout fires for
+    * session end `e` only once the watermark passes `e + gap`, and
+    * with time-range waves the watermark after a wave is that wave's
+    * max timestamp, so any later event for the same user sits beyond
+    * the gap anyway — the timeout only ever closes sessions the next
+    * event (or sentinel) would have closed identically. (Spark invokes
+    * the function with data, not hasTimedOut, when a key has both in
+    * one batch, so a within-gap continuation always wins over a
+    * pending timeout.) */
   def sessionsWithTimeout(events: Dataset[Ev], gapMinutes: Int,
                           lateness: String = "0 seconds"): Dataset[Session] = {
     val gapMicros = gapMinutes * 60L * 1000000L
@@ -103,68 +120,22 @@ object StatefulSessionize {
       }
   }
 
-  /** One micro-batch of CLOSED sessions → dynamic-overwrite into its
-    * own `batch_id` partition — the same idempotent exactly-once
-    * contract as [[StreamingDedup.processBatch]]: a replayed batch
-    * (failure between sink write and checkpoint commit) recomputes the
-    * same deterministic session set and overwrites its own partition,
-    * so duplicates cannot accumulate. */
+  /** One micro-batch of CLOSED sessions into the idempotent `batch_id`
+    * sink ([[WaveHarness.writeBatch]]): a replayed batch (failure
+    * between sink write and checkpoint commit) recomputes the same
+    * deterministic session set and overwrites its own partition, so
+    * duplicates cannot accumulate. */
   def processBatch(batch: Dataset[Session], batchId: Long,
                    warehouse: String, table: String): Unit = {
-    import org.apache.spark.sql.functions.lit
     // the foreachBatch frame is a VIEW: each action re-runs the whole
     // micro-batch plan, so persist across the emptiness probe and the
     // write (the standard multiple-action foreachBatch contract)
     batch.persist()
     // empty batches write nothing (a parquet dir with zero row groups
     // is unreadable, and there is nothing to make idempotent)
-    try if (!batch.isEmpty) {
-      graft.engine.TableStore.overwritePartitions(
-        batch.toDF().withColumn("batch_id", lit(batchId)),
-        warehouse, table, Seq("batch_id"))
-    } finally batch.unpersist(blocking = false)
-  }
-
-  /** Drain every file currently under `srcDir` (Trigger.AvailableNow)
-    * through the stateful sessionizer, appending CLOSED sessions to
-    * `warehouse/table` partitioned by micro-batch id. OPEN sessions
-    * survive across calls in the checkpointed state store, so calling
-    * this per arrival wave exercises genuine cross-batch state: a
-    * session spanning two waves is emitted once, by the batch whose
-    * event closed it. Safe to call repeatedly; a call with no new
-    * files is a no-op.
-    *
-    * With `timeout = true` the drain runs [[sessionsWithTimeout]]
-    * (EventTimeTimeout + watermark liveness) instead of the
-    * next-event-only closer. Under chronological arrival and zero
-    * lateness the two produce IDENTICAL session sets: a timeout fires
-    * for session end `e` only once the watermark passes `e + gap`,
-    * and with time-range waves the watermark after a wave is that
-    * wave's max timestamp, so any later event for the same user sits
-    * beyond the gap anyway — the timeout only ever closes sessions
-    * the next event (or sentinel) would have closed identically.
-    * (Spark invokes the function with data, not hasTimedOut, when a
-    * key has both in one batch, so a within-gap continuation always
-    * wins over a pending timeout.) */
-  def run(spark: SparkSession, srcDir: String, gapMinutes: Int,
-          warehouse: String, table: String, checkpoint: String,
-          timeout: Boolean = false,
-          maxFilesPerTrigger: Option[Int] = None): Unit = {
-    implicit val ee = Encoders.product[Ev]
-    val rdr = spark.readStream.schema(ee.schema)
-    maxFilesPerTrigger.foreach(n => rdr.option("maxFilesPerTrigger", n))
-    val in = rdr.parquet(srcDir).as[Ev]
-    val sessionized =
-      if (timeout) sessionsWithTimeout(in, gapMinutes, "0 seconds")
-      else sessions(in, gapMinutes)
-    val q = sessionized
-      .writeStream.outputMode("append")
-      .foreachBatch { (b: Dataset[Session], id: Long) =>
-        processBatch(b, id, warehouse, table)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    try if (!batch.isEmpty)
+      WaveHarness.writeBatch(batch.toDF(), batchId, warehouse, table)
+    finally batch.unpersist(blocking = false)
   }
 
   /** Streaming form. Emits CLOSED sessions (append mode); the open

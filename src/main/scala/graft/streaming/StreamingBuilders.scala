@@ -1,9 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 import graft.engine.TripSchema
 
 /** Structured Streaming forms of the derived tables (SURVEY §2.9).
@@ -89,22 +87,18 @@ object StreamingBuilders {
     * the warehouse table via foreachBatch. Update-mode aggregation
     * re-emits the new TOTAL for every touched key (streaming state holds
     * the running aggregate), so the sink merge is a keyed REPLACE of the
-    * persisted table — checkpoint + replace makes re-runs idempotent. */
+    * persisted table — checkpoint + replace makes re-runs idempotent.
+    * Drains through [[WaveHarness.drain]]. */
   def runIncrementalUpsert(spark: SparkSession, agg: DataFrame,
                            warehouse: String, table: String,
                            keys: Seq[String], checkpoint: String): Unit = {
     import graft.engine.{Merge, TableStore}
     val payload = agg.schema.fieldNames.filterNot(keys.contains).toSeq
-    val q = agg.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+    WaveHarness.drain(spark, agg.writeStream.outputMode("update")
+      .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val existing = TableStore.readOrEmpty(spark, warehouse, table, batch.schema)
         val merged = Merge.upsertReplace(existing, batch, keys, payload)
         TableStore.write(merged, warehouse, table)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, checkpoint)
   }
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StructType}
 import graft.engine.TableStore
 import graft.ops.IncrementalDedup
 
@@ -22,12 +20,10 @@ import graft.ops.IncrementalDedup
   * rows ([[IncrementalDedup.newDocsExact]] — no false negatives, no
   * false drops).
   *
-  * Exactly-once without transactions: survivors write with DYNAMIC
-  * partition overwrite into `batch_id=<id>`. A replayed micro-batch
-  * (failure between sink write and checkpoint commit) recomputes the
-  * same deterministic survivor set and overwrites its own partition —
-  * duplicates cannot accumulate. This is the standard idempotent-sink
-  * contract foreachBatch asks for.
+  * Exactly-once without transactions: survivors go to the idempotent
+  * `batch_id` sink ([[WaveHarness.writeBatch]]), so a replayed
+  * micro-batch overwrites its own partition. A stream drains through
+  * [[WaveHarness.drain]] with `foreachBatch` calling [[processBatch]].
   *
   * At 100 TB the per-batch history scan for the Bloom build is the one
   * non-incremental step; a production deployment persists the filter
@@ -51,23 +47,10 @@ object StreamingDedup {
     * file metadata). */
   val BloomMinHistoryBytes: Long = 64L * 1024 * 1024
 
-  /** Streaming source over document parquet files appearing under
-    * `dir`. `maxFilesPerTrigger` slices an AvailableNow drain into
-    * one micro-batch per that many files (oldest mtime first) — the
-    * one-drain-many-batches shape the gate harnesses use so a
-    * multi-wave lifecycle pays ONE streaming-query startup instead of
-    * one per wave. */
-  def docStream(spark: SparkSession, dir: String, schema: StructType,
-                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(dir)
-  }
-
-  /** History schema = doc schema + the batch_id partition column. */
-  private def historySchema(doc: StructType): StructType =
-    StructType(doc.fields :+
-      org.apache.spark.sql.types.StructField("batch_id", LongType))
+  /** Bloom prefilter sizing for the history probe past
+    * [[BloomMinHistoryBytes]]. */
+  private val BloomExpectedItems: Long = 1000000L
+  private val BloomFpp: Double = 0.03
 
   /** One micro-batch: dedup within the batch and against history, then
     * dynamic-overwrite the survivors into this batch's partition.
@@ -76,17 +59,10 @@ object StreamingDedup {
     * byte-identical, because that is exactly what a post-failure
     * foreachBatch replay does. */
   def processBatch(batch: Dataset[Row], batchId: Long, warehouse: String,
-                   table: String, expectedItems: Long = 1000000L,
-                   fpp: Double = 0.03): Unit = {
+                   table: String): Unit = {
     val spark = batch.sparkSession
-    // partition-column inference is disabled in TableStore, so a
-    // read-back batch_id is STRING — cast before comparing instead of
-    // relying on implicit string-vs-bigint coercion
-    val history = TableStore
-      .readOrEmpty(spark, warehouse, table, historySchema(batch.schema))
-      .filter(col("batch_id").isNull ||
-        col("batch_id").cast("long") =!= batchId)
-      .drop("batch_id")
+    val history = WaveHarness.otherBatches(spark, warehouse, table,
+      batch.schema, batchId)
     // within-batch keep-first (min doc_id per text); null-text rows
     // group with nobody and all pass through
     val nonNull = batch.filter(col("text").isNotNull)
@@ -111,35 +87,14 @@ object StreamingDedup {
     val fresh = (if (histBytes < BloomMinHistoryBytes)
         IncrementalDedup.newDocsExactDirect(history, candidates)
       else IncrementalDedup
-        .newDocsExact(history, candidates, expectedItems, fpp))
+        .newDocsExact(history, candidates, BloomExpectedItems, BloomFpp))
       .transform(graft.engine.Checkpoints.pin)
     // empty batches write nothing: a parquet dir with zero row
     // groups is unreadable, and there is nothing to make idempotent
-    if (!fresh.isEmpty) {
-      TableStore.overwritePartitions(
-        fresh.withColumn("batch_id", lit(batchId)),
-        warehouse, table, Seq("batch_id"))
-    }
+    if (!fresh.isEmpty) WaveHarness.writeBatch(fresh, batchId, warehouse, table)
     // the pin is batch-internal: release it or a long-running session
     // accrues a block-store entry per micro-batch (Dataset.unpersist
     // would be a silent no-op on a pinned frame — Checkpoints.release)
     graft.engine.Checkpoints.release(fresh)
-  }
-
-  /** Drain everything currently in the source (Trigger.AvailableNow),
-    * appending deduped survivors to `warehouse/table` partitioned by
-    * micro-batch id. Safe to call repeatedly; a call with no new files
-    * is a no-op. */
-  def run(stream: DataFrame, warehouse: String, table: String,
-          checkpoint: String, expectedItems: Long = 1000000L,
-          fpp: Double = 0.03): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, warehouse, table, expectedItems, fpp)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

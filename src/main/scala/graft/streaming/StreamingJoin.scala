@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream event-time INTERVAL JOIN — the one Structured
   * Streaming join class the rest of the streaming family
@@ -54,23 +53,5 @@ object StreamingJoin {
         col("v_user").as("user_id"),
         (unix_micros(col("click_ts")) - unix_micros(col("view_ts")))
           .as("gap_us"))
-  }
-
-  /** One AvailableNow drain of a streaming frame into a parquet
-    * append sink; returns the sink read back. The file sink's
-    * transaction log makes re-runs against the same checkpoint
-    * idempotent (the q103 sink contract, provided by the sink here
-    * instead of foreachBatch). */
-  def drainToParquet(spark: SparkSession, streamed: DataFrame,
-                     outDir: String, ckpt: String): DataFrame = {
-    val q = streamed.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
-import graft.engine.TableStore
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.ops.Hashing
 
 /** Streaming form of the corpus-global sentence dedup
@@ -39,41 +38,24 @@ import graft.ops.Hashing
   * filter build wants.
   *
   * Exactly-once without transactions, as [[StreamingDedup]]: both
-  * sinks (scrubbed docs, sentence hashes) write with dynamic partition
-  * overwrite into `batch_id=<id>`; a replayed micro-batch recomputes
-  * the same deterministic result and overwrites its own partitions.
+  * sinks (scrubbed docs, sentence hashes) are idempotent `batch_id`
+  * sinks ([[WaveHarness.writeBatch]]); a replayed micro-batch
+  * recomputes the same deterministic result and overwrites its own
+  * partitions. A stream drains through [[WaveHarness.drain]] with
+  * `foreachBatch` calling [[processBatch]].
   */
 object StreamingSentenceDedup {
 
   val DocsTable = "SentDedupDocs"
   val SeenTable = "SentDedupSeen"
 
-  /** Streaming source; `maxFilesPerTrigger` slices an AvailableNow
-    * drain into one batch per that many files (oldest first) — see
-    * [[StreamingDedup.docStream]]. */
-  def docStream(spark: SparkSession, dir: String, schema: StructType,
-                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(dir)
-  }
-
-  private val seenSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("h", LongType),
-    org.apache.spark.sql.types.StructField("batch_id", LongType)))
+  private val hashSchema = StructType(Seq(StructField("h", LongType)))
 
   /** One micro-batch. Public for direct replay-idempotency testing. */
   def processBatch(batch: Dataset[Row], batchId: Long,
                    warehouse: String): Unit = {
-    val spark = batch.sparkSession
-    // partition-column type inference is disabled in TableStore, so a
-    // read-back batch_id arrives as STRING — cast before comparing
-    // (and re-cast h to the declared long) rather than relying on
-    // implicit string-vs-bigint coercion
-    val seen = TableStore
-      .readOrEmpty(spark, warehouse, SeenTable, seenSchema)
-      .filter(col("batch_id").isNull ||
-        col("batch_id").cast("long") =!= batchId)
+    val seen = WaveHarness.otherBatches(batch.sparkSession, warehouse,
+        SeenTable, hashSchema, batchId)
       .select(col("h").cast("long").as("h"))
     val sent = batch
       .select(col("doc_id"), posexplode(split(col("text"), "\\. ", -1)))
@@ -111,34 +93,15 @@ object StreamingSentenceDedup {
       .transform(graft.engine.Checkpoints.pin)
     val freshHashes = keptFlags.filter(col("keep"))
       .select(col("h")).distinct()
-    if (!outDocs.isEmpty) {
-      TableStore.overwritePartitions(
-        outDocs.withColumn("batch_id", lit(batchId)),
-        warehouse, DocsTable, Seq("batch_id"))
-    }
-    if (!freshHashes.isEmpty) {
-      TableStore.overwritePartitions(
-        freshHashes.withColumn("batch_id", lit(batchId)),
-        warehouse, SeenTable, Seq("batch_id"))
-    }
+    if (!outDocs.isEmpty)
+      WaveHarness.writeBatch(outDocs, batchId, warehouse, DocsTable)
+    if (!freshHashes.isEmpty)
+      WaveHarness.writeBatch(freshHashes, batchId, warehouse, SeenTable)
     // the pins are batch-internal: release them or a long-running
     // session accrues block-store entries per micro-batch (the same
     // lifecycle discipline as minhashDupPairs's internal caches;
     // Dataset.unpersist is a silent no-op on pinned frames)
     graft.engine.Checkpoints.release(outDocs)
     graft.engine.Checkpoints.release(keptFlags)
-  }
-
-  /** Drain everything currently in the source (Trigger.AvailableNow).
-    * Safe to call repeatedly; no new files is a no-op. */
-  def run(stream: DataFrame, warehouse: String, checkpoint: String): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, warehouse)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 }

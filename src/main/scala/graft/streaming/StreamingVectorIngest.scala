@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.engine.TableStore
 import graft.ops.{IvfIndex, Pq}
@@ -19,9 +18,8 @@ import graft.ops.{IvfIndex, Pq}
   * Why stage-then-compact instead of appending straight to the
   * bucketed index: the streaming sink must be idempotent under
   * foreachBatch replay, and a bucketed `insertInto` append is not —
-  * a replayed batch would double its rows. The staging table is
-  * partitioned by batch_id and written with DYNAMIC partition
-  * overwrite ([[StreamingDedup]]'s exactly-once contract): a replay
+  * a replayed batch would double its rows. The staging table is the
+  * idempotent `batch_id` sink ([[WaveHarness.writeBatch]]): a replay
   * recomputes the same deterministic (cell, vec_id, pq_code) rows and
   * overwrites its own partition, so duplicates cannot accumulate.
   * Compaction (an explicit, batch-boundary operation — run it when
@@ -35,20 +33,10 @@ import graft.ops.{IvfIndex, Pq}
   * kernel + |batch| encode FLOPs — corpus size never appears; query
   * cost over staging+index is identical to the compacted index (both
   * are (cell, vec_id, pq_code) rows), staging just lacks bucket
-  * co-location until compacted.
+  * co-location until compacted. A stream drains through
+  * [[WaveHarness.drain]] with `foreachBatch` calling [[processBatch]].
   */
 object StreamingVectorIngest {
-
-  /** Streaming source over embedding parquet files under `dir`.
-    * `maxFilesPerTrigger` slices an AvailableNow drain into one batch
-    * per that many files (oldest first) — see
-    * [[StreamingDedup.docStream]]. */
-  def vecStream(spark: SparkSession, dir: String, schema: StructType,
-                maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
-    r.parquet(dir)
-  }
 
   private val stagingSchema: StructType = StructType(Seq(
     StructField("cell", LongType), StructField("vec_id", LongType),
@@ -64,29 +52,11 @@ object StreamingVectorIngest {
     if (!batch.isEmpty) {
       // one-pass place+encode: the code rides the assignment's own
       // exchange as a keepCol — no batch-sized encode⋈assignment join
-      val rows = Pq.placeAndEncode(batch, cents, kCells, cb, cfg)
-        .select(col("cell"), col("vec_id"), col("pq_code"))
-        .withColumn("batch_id", lit(batchId))
-      TableStore.overwritePartitions(rows, warehouse, stagingTable,
-        Seq("batch_id"))
+      WaveHarness.writeBatch(
+        Pq.placeAndEncode(batch, cents, kCells, cb, cfg)
+          .select(col("cell"), col("vec_id"), col("pq_code")),
+        batchId, warehouse, stagingTable)
     }
-  }
-
-  /** Drain everything currently in the source (Trigger.AvailableNow)
-    * into the staging table. Safe to call repeatedly; no new files is
-    * a no-op. */
-  def run(stream: DataFrame, warehouse: String, stagingTable: String,
-          checkpoint: String, cents: DataFrame, kCells: Long,
-          cb: Array[Array[Array[Double]]], cfg: Pq.PqConfig): Unit = {
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, warehouse, stagingTable,
-          cents, kCells, cb, cfg)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
   }
 
   /** All staged rows, in the serving-index column order. */

@@ -14,47 +14,32 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  /** What one build-twice sweep over the registry saw of each query:
+    * whether the first build's executed plan holds a cartesian product
+    * or a nested-loop join (read before its collect), how many rows that
+    * collect returned, and whether a second build returned the same
+    * rows. The three sweep tests below assert on these records, so the
+    * registry is built twice in all, not once per test. */
+  private case class Swept(name: String, cartesian: Boolean, bnlj: Boolean,
+      rows: Int, same: Boolean)
+
+  private lazy val sweep: Seq[Swept] = Registry.all.map { q =>
+    val first = q.fn(spark, sf)
+    val plan = first.queryExecution.executedPlan.toString
+    val a = first.collect().map(_.toString).toSeq
+    val b = q.fn(spark, sf).collect().map(_.toString).toSeq
+    Swept(q.name, plan.contains("CartesianProduct"),
+      plan.contains("BroadcastNestedLoopJoin"), a.size, a == b)
+  }
+
   test("every registered query returns a non-empty deterministic result") {
-    Registry.all.foreach { q =>
-      val df = q.fn(spark, sf)
-      val n = df.count()
-      assert(n > 0, s"${q.name} returned no rows")
-    }
+    sweep.foreach(s => assert(s.rows > 0, s"${s.name} returned no rows"))
   }
 
   test("every query is run-to-run deterministic (incl. rows-only ones)") {
     // the driver hash-compares results; any nondeterminism (unordered
     // output, unstable ties, random seeds) fails there — catch it here
-    Registry.all.foreach { q =>
-      val a = q.fn(spark, sf).collect().map(_.toString).toSeq
-      val b = q.fn(spark, sf).collect().map(_.toString).toSeq
-      assert(a == b, s"${q.name} differs across runs")
-    }
-  }
-
-  test("q103 leaves the CacheManager empty: the planted corpus is " +
-    "scanned per wave, never cached") {
-    spark.catalog.clearCache()
-    SparkEntry.queries("q103_streaming_dedup_drain")(spark, sf).collect()
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "q103 left a cached plan behind")
-  }
-
-  test("queries and oracleSql keys line up") {
-    val qk = SparkEntry.queries.keySet
-    assert(SparkEntry.oracleSql.keySet.subsetOf(qk))
-    // round 15: zero rows-only queries — q26/q33 (the last two) got
-    // real oracles (annTopKOracle / ivfTopKOracle); every registered
-    // query is under the full rows+schema+hash gate
-    val rowsOnly = qk -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly.isEmpty, s"unexpected rows-only: $rowsOnly")
-    // every Registry entry is registered exactly once under its own name
-    assert(qk.size == Registry.all.size,
-      "duplicate query names collapse entries in the driver-facing map")
-    // pinned count: catches an accidentally dropped/unregistered query,
-    // which the relative check above cannot (both sides shrink together)
-    assert(qk.size == 147, s"registry size changed: ${qk.size} — " +
-      "update this pin if a query was deliberately added/removed")
+    sweep.foreach(s => assert(s.same, s"${s.name} differs across runs"))
   }
 
   test("no registered query plans a cartesian product; nested-loop " +
@@ -156,14 +141,36 @@ class QueriesSpec extends SparkSpec {
       // bounded build sides by design (the capstone's gates add no
       // corpus-sized nested-loop anywhere)
       "q147_curation_capstone")
-    Registry.all.foreach { q =>
-      val plan = q.fn(spark, sf).queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct"),
-        s"${q.name} plans a cartesian product")
-      if (!bnljAllowed(q.name))
-        assert(!plan.contains("BroadcastNestedLoopJoin"),
-          s"${q.name} plans an unexpected nested-loop join")
+    sweep.foreach { s =>
+      assert(!s.cartesian, s"${s.name} plans a cartesian product")
+      if (!bnljAllowed(s.name))
+        assert(!s.bnlj, s"${s.name} plans an unexpected nested-loop join")
     }
+  }
+
+  test("q103 leaves the CacheManager empty: the planted corpus is " +
+    "scanned per wave, never cached") {
+    spark.catalog.clearCache()
+    SparkEntry.queries("q103_streaming_dedup_drain")(spark, sf).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "q103 left a cached plan behind")
+  }
+
+  test("queries and oracleSql keys line up") {
+    val qk = SparkEntry.queries.keySet
+    assert(SparkEntry.oracleSql.keySet.subsetOf(qk))
+    // round 15: zero rows-only queries — q26/q33 (the last two) got
+    // real oracles (annTopKOracle / ivfTopKOracle); every registered
+    // query is under the full rows+schema+hash gate
+    val rowsOnly = qk -- SparkEntry.oracleSql.keySet
+    assert(rowsOnly.isEmpty, s"unexpected rows-only: $rowsOnly")
+    // every Registry entry is registered exactly once under its own name
+    assert(qk.size == Registry.all.size,
+      "duplicate query names collapse entries in the driver-facing map")
+    // pinned count: catches an accidentally dropped/unregistered query,
+    // which the relative check above cannot (both sides shrink together)
+    assert(qk.size == 147, s"registry size changed: ${qk.size} — " +
+      "update this pin if a query was deliberately added/removed")
   }
 
   test("q91 never shuffles the corpus for a join: the vocabulary joins " +

@@ -43,17 +43,17 @@ class SessionDispatchSpec extends SparkSpec {
     // sample is empty. sf0.001 currently has one user_id%16==0 user;
     // a testdata regen without one would silently turn the "forced
     // kernel" run below into native-vs-native. Assert the estimate
-    // under the gated probe conf is positive, so that regression
+    // at the shipped sample modulus is positive, so that regression
     // fails HERE with a name instead of hollowing out the parity.
     val ev = graft.engine.Tables(spark, sf, "events")
       .select(org.apache.spark.sql.functions.col("user_id")
         .cast("long").as("user_id"),
         org.apache.spark.sql.functions.col("ts"))
     assert(SessionDispatch.estimatedSessions(ev, 30,
-      SessionDispatch.probeSampleMod(ev)) > 0L,
+      SessionDispatch.ProbeSampleMod) > 0L,
       "probe sample is empty on this fixture — nativeMaxSessions=0 " +
         "cannot force the kernel branch (regen testdata with a " +
-        "user_id % 16 == 0 user, or lower graft.session.probeSampleMod)")
+        "user_id % 16 == 0 user, or lower SessionDispatch.ProbeSampleMod)")
     val prev = spark.conf.getOption("graft.session.nativeMaxSessions")
     try {
       spark.conf.set("graft.session.nativeMaxSessions", Long.MaxValue.toString)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.engine.TableStore
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** Streaming incremental dedup: within-batch keep-first, cross-batch
@@ -13,14 +14,19 @@ class StreamingDedupSpec extends SparkSpec {
   private def docs(rows: (Long, Option[String])*) =
     rows.toSeq.toDF("doc_id", "text")
 
+  /** One drain of the wave files under `src` into `wh`'s History. */
+  private def drainHistory(src: String, wh: String, ckpt: String): Unit =
+    WaveHarness.drain(spark, WaveHarness.waveStream(spark, src, docs().schema)
+      .writeStream.foreachBatch { (b: Dataset[Row], id: Long) =>
+        StreamingDedup.processBatch(b, id, wh, "History")
+      }, ckpt)
+
   test("drains dedup within batch, across batches, admit nulls, idle no-op") {
     val src = tmpDir("sdedup-src")
     val ckpt = tmpDir("sdedup-ckpt")
     val wh = tmpDir("sdedup-wh")
-    val schema = docs().schema
 
-    def drain(): Unit = StreamingDedup.run(
-      StreamingDedup.docStream(spark, src, schema), wh, "History", ckpt)
+    def drain(): Unit = drainHistory(src, wh, ckpt)
     def history: Set[Long] = TableStore.read(spark, wh, "History")
       .select("doc_id").as[Long].collect().toSet
 
@@ -74,12 +80,10 @@ class StreamingDedupSpec extends SparkSpec {
     val src = tmpDir("sdedup2-src")
     val ckpt = tmpDir("sdedup2-ckpt")
     val wh = tmpDir("sdedup2-wh")
-    val schema = docs().schema
 
     docs((1L, Some("xx")), (2L, Some("yy"))).repartition(1)
       .write.mode("append").parquet(src)
-    StreamingDedup.run(
-      StreamingDedup.docStream(spark, src, schema), wh, "History", ckpt)
+    drainHistory(src, wh, ckpt)
 
     // survivors carry their micro-batch id; a replayed batch would
     // dynamic-overwrite exactly this partition with identical content

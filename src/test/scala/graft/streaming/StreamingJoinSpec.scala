@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** [[StreamingJoin.attributionJoin]] — hand-built waves with a match
   * in every interesting class: same-batch, CROSS-BATCH (the click
@@ -10,15 +9,7 @@ import org.apache.spark.sql.functions._
   * view state survives the checkpointed boundary), window-edge
   * exclusions, and wrong-user exclusion. */
 class StreamingJoinSpec extends SparkSpec {
-
-  private def writeWave(df: DataFrame, dir: String, wave: Int): Unit = {
-    val d = new java.io.File(dir)
-    val before = Option(d.listFiles())
-      .map(_.map(_.getName).toSet).getOrElse(Set.empty[String])
-    df.coalesce(1).write.mode("append").parquet(dir)
-    d.listFiles().filter(f => !before(f.getName))
-      .foreach(_.setLastModified(1000000000000L + wave * 60000L))
-  }
+  import WaveHarness.writeWave
 
   test("drained two-batch join equals the expected pair set: " +
     "same-batch and cross-batch matches present, out-of-window and " +
@@ -42,16 +33,15 @@ class StreamingJoinSpec extends SparkSpec {
         (504L, 9L, ts(6)))
       .toDF("click_id", "c_user", "click_ts"), s"$root/clicks", 1)
 
-    val vs = spark.readStream
-      .schema("view_id bigint, v_user bigint, view_ts timestamp")
-      .option("maxFilesPerTrigger", 1).parquet(s"$root/views")
-    val cs = spark.readStream
-      .schema("click_id bigint, c_user bigint, click_ts timestamp")
-      .option("maxFilesPerTrigger", 1).parquet(s"$root/clicks")
-    val got = StreamingJoin.drainToParquet(spark,
-        StreamingJoin.attributionJoin(vs, cs, windowMinutes = 30,
-          delayMinutes = 30),
-        s"$root/out", s"$root/ckpt")
+    val vs = WaveHarness.waveStream(spark, s"$root/views", StructType
+      .fromDDL("view_id bigint, v_user bigint, view_ts timestamp"))
+    val cs = WaveHarness.waveStream(spark, s"$root/clicks", StructType
+      .fromDDL("click_id bigint, c_user bigint, click_ts timestamp"))
+    WaveHarness.drain(spark, StreamingJoin.attributionJoin(vs, cs,
+        windowMinutes = 30, delayMinutes = 30)
+      .writeStream.format("parquet").option("path", s"$root/out")
+      .outputMode("append"), s"$root/ckpt")
+    val got = spark.read.parquet(s"$root/out")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
     assert(got === Set(

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.engine.TableStore
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Row}
 
 /** Streaming sentence-level dedup: within-batch first occurrence,
   * cross-batch suppression via the warehouse hash table, replay
@@ -24,10 +24,11 @@ class StreamingSentenceDedupSpec extends SparkSpec {
     val src = tmpDir("ssent-src")
     val ckpt = tmpDir("ssent-ckpt")
     val wh = tmpDir("ssent-wh")
-    val schema = docs().schema
-
-    def drain(): Unit = StreamingSentenceDedup.run(
-      StreamingSentenceDedup.docStream(spark, src, schema), wh, ckpt)
+    def drain(): Unit = WaveHarness.drain(spark,
+      WaveHarness.waveStream(spark, src, docs().schema).writeStream
+        .foreachBatch { (b: Dataset[Row], id: Long) =>
+          StreamingSentenceDedup.processBatch(b, id, wh)
+        }, ckpt)
 
     // wave 1: doc 2 repeats doc 1's "shared one" (later doc_id loses)
     docs((1L, "shared one. unique a"), (2L, "unique b. shared one"))

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.ops.{IvfIndex, Pq}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 
 /** Streaming IVF-PQ ingestion: staged batches are replay-idempotent,
@@ -41,14 +42,16 @@ class StreamingVectorIngestSpec extends SparkSpec {
     val cb = Pq.sampleCodebooks(dInit, cfg)
 
     // two delta waves drain through the stream into staging
+    def drain(): Unit = WaveHarness.drain(spark,
+      WaveHarness.waveStream(spark, src, dInit.schema).writeStream
+        .foreachBatch { (b: Dataset[Row], id: Long) =>
+          StreamingVectorIngest.processBatch(b, id, wh, "pqstage",
+            cents, kCells, cb, cfg)
+        }, ckpt)
     df(delta1).repartition(1).write.mode("append").parquet(src)
-    StreamingVectorIngest.run(
-      StreamingVectorIngest.vecStream(spark, src, dInit.schema),
-      wh, "pqstage", ckpt, cents, kCells, cb, cfg)
+    drain()
     df(delta2).repartition(1).write.mode("append").parquet(src)
-    StreamingVectorIngest.run(
-      StreamingVectorIngest.vecStream(spark, src, dInit.schema),
-      wh, "pqstage", ckpt, cents, kCells, cb, cfg)
+    drain()
     val stagedIds = StreamingVectorIngest.staged(spark, wh, "pqstage")
       .select("vec_id").as[Long].collect().toSet
     assert(stagedIds == (delta1 ++ delta2).map(_._1).toSet)
