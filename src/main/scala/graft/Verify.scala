@@ -23,23 +23,31 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
       .foreach { case (name, fn) =>
-      // isolate queries from each other's cached state, same as Bench:
-      // several operators cache internal frames (shingle indexes, LSH
-      // signatures) and never unpersist — without the clear, 55 queries
-      // accumulate block-store entries across the run. Checkpointed
-      // pins (componentLabels' returned labels, lloydTrainStats'
-      // stats frames) are RDD-level persists that clearCache cannot
-      // see — drop them at the RDD ledger, or they accumulate across
-      // 100+ queries instead (Bench needs neither: it runs each query
-      // in a fresh session)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // leak census: one line per query that left state behind (its
+      // returned result's cache counts). Each query's result stays
+      // cached and a few operators keep frames by design (the
+      // surprisal and backoff tables, VocabJoin.joinCached), so most
+      // lines are expected; the count is the baseline for a
+      // registry-level scope.
+      val cachedPlans = !spark.sharedState.cacheManager.isEmpty
+      val rdds = spark.sparkContext.getPersistentRDDs.size
+      if (cachedPlans || rdds > 0)
+        System.err.println(s"[verify] leak: $name left CacheManager " +
+          s"entries=$cachedPlans, persistent RDDs=$rdds")
+      // isolate queries from each other's cached state, same as Bench:
+      // without the clear, the 45 queries the census names at sf0.01
+      // would carry block-store entries through the rest of the run.
+      // Checkpointed pins are RDD-level persists that clearCache
+      // cannot see — drop them at the RDD ledger too (Bench needs
+      // neither: it runs each query in a fresh session)
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

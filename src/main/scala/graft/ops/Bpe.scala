@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.Checkpoints
 import Hashing.tokens
 
 /** Distributed BPE (byte-pair-encoding) merge training — the
@@ -128,24 +129,26 @@ object Bpe {
     * the scheduler round-trips ~batch-fold. This strict form is the
     * batch=1 special case, kept as the exact-Sennrich regression
     * anchor. */
-  def trainMerges(docs: DataFrame, steps: Int): DataFrame = {
+  def trainMerges(docs: DataFrame, steps: Int): DataFrame =
+      Checkpoints.scoped { scope =>
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val spark = docs.sparkSession
     import spark.implicits._
-    // localCheckpoint, not cache: an iterative trainer's per-round
-    // DataFrame otherwise NESTS the whole prior lineage — the logical
-    // plan (and AQE's per-job explain string) grows quadratically
-    // with rounds and OOMs the DRIVER long before data is a problem
-    // (measured: 24 strict rounds at sf0.1 blew an 8 GB heap in
-    // AdaptiveSparkPlanExec.onUpdatePlan). Eager local checkpoint
-    // materializes the round AND truncates the plan to a LogicalRDD;
-    // superseded checkpoints are freed by the ContextCleaner once
-    // unreferenced. (Local = executor-resident blocks: right for a
-    // driver-looped trainer; a multi-day 100 TB train would swap in
-    // reliable checkpointing to survive executor loss.)
+    // pin, not cache: an iterative trainer's per-round DataFrame
+    // otherwise NESTS the whole prior lineage — the logical plan (and
+    // AQE's per-job explain string) grows quadratically with rounds
+    // and OOMs the DRIVER long before data is a problem (measured: 24
+    // strict rounds at sf0.1 blew an 8 GB heap in
+    // AdaptiveSparkPlanExec.onUpdatePlan). The eager pin materializes
+    // the round AND truncates the plan to a LogicalRDD; each
+    // superseded round is released as soon as its successor is
+    // pinned, and the last one when the scope closes. Pins are
+    // executor-local blocks unless `graft.checkpoint.dir` is set,
+    // which makes them reliable checkpoints that survive executor
+    // loss (a multi-day 100 TB train).
     var vocab = wordVocab(docs)
       .select(spacedChars(col("w")).as("s"), col("cnt"))
-      .localCheckpoint(true)
+      .transform(scope.pin)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var step = 1
     var done = false
@@ -163,18 +166,16 @@ object Bpe {
         val next = vocab.select(
           graft.functions.TextFunctions.bpeMergeSpaced(
             col("s"), Seq(pair)).as("s"), col("cnt"))
-          .localCheckpoint(true)
-        // free the superseded round's blocks NOW (Dataset.unpersist
-        // is a no-op on checkpointed frames; waiting for the
-        // ContextCleaner strands one vocab copy per merge — at
-        // production step counts that is thousands of copies)
-        graft.engine.Checkpoints.release(vocab)
+          .transform(scope.pin)
+        // free the superseded round's blocks NOW: waiting for the
+        // scope strands one vocab copy per merge — at production step
+        // counts that is thousands of copies
+        scope.release(vocab)
         vocab = next
         step += 1
       }
     }
-    // the result is driver rows; the final vocab pin is loop-internal
-    graft.engine.Checkpoints.release(vocab)
+    // the result is driver rows; the final vocab pin is the scope's
     merges.toSeq.toDF("step", "pair", "total")
       .select(col("step").cast("int").as("step"), col("pair"),
         col("total").cast("long").as("total"))
@@ -271,19 +272,20 @@ object Bpe {
   }
 
   def trainMergesBatched(docs: DataFrame, steps: Int, batch: Int,
-                         candPool: Int = 0): DataFrame = {
+                         candPool: Int = 0): DataFrame =
+      Checkpoints.scoped { scope =>
     require(steps >= 1, s"steps must be >= 1, got $steps")
     require(batch >= 1, s"batch must be >= 1, got $batch")
     val pool = if (candPool > 0) candPool else 8 * batch
     require(pool >= batch, s"candPool $pool < batch $batch")
     val spark = docs.sparkSession
     import spark.implicits._
-    // localCheckpoint per round, not cache: see trainMerges — plan
-    // lineage must stay constant-size across rounds or the driver
-    // OOMs on plan strings at production round counts
+    // a pin per round, not cache: see trainMerges — plan lineage must
+    // stay constant-size across rounds or the driver OOMs on plan
+    // strings at production round counts
     var vocab = wordVocab(docs)
       .select(spacedChars(col("w")).as("s"), col("cnt"))
-      .localCheckpoint(true)
+      .transform(scope.pin)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String, Long)]
     val rounds = (steps + batch - 1) / batch
     var round = 1
@@ -305,15 +307,14 @@ object Bpe {
         val next = vocab.select(
           graft.functions.TextFunctions.bpeMergeSpaced(
             col("s"), kept.map(_._1).toSeq).as("s"), col("cnt"))
-          .localCheckpoint(true)
+          .transform(scope.pin)
         // see trainMerges: release the superseded round's vocab pin
         // eagerly, one stranded copy per round otherwise
-        graft.engine.Checkpoints.release(vocab)
+        scope.release(vocab)
         vocab = next
         round += 1
       }
     }
-    graft.engine.Checkpoints.release(vocab)
     out.toSeq.toDF("step", "round", "pair", "total")
       .select(col("step").cast("int").as("step"),
         col("round").cast("int").as("round"), col("pair"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Checkpoints
 import Hashing._
 
 /** Deduplication operators for large-scale text corpora.
@@ -113,11 +114,12 @@ object Dedup {
     * minJ = 0 is rejected: the prefix shrinks to nothing meaningful at
     * t = 0 (every pair of docs is a result — that query is a cross
     * join, not a similarity join). */
-  def ngramJaccardPairs(docs: DataFrame, minJ: Double): DataFrame = {
+  def ngramJaccardPairs(docs: DataFrame, minJ: Double): DataFrame =
+      Checkpoints.scoped { scope =>
     require(minJ > 0.0 && minJ <= 1.0, s"minJ must be in (0, 1], got $minJ")
     // the inverted index feeds df stats, the prefix ranking, and the
     // verification — cache it or tokenize/shingle runs four times
-    val sh = shingleIndex(docs).cache()
+    val sh = scope.cache(shingleIndex(docs))
     val dfs = sh.groupBy("s").agg(count(lit(1)).as("df"))
     // required-overlap a = ceil(t*n) with a 1e-9 guard: binary-double
     // error on t*n must never round a up (a smaller a only ENLARGES
@@ -139,10 +141,8 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val out = verifyPairsExact(sh, sizes, cand, minJ)
-      .transform(graft.engine.Checkpoints.materialize)
-    sh.unpersist(blocking = false)
-    out
+    verifyPairsExact(sh, sizes, cand, minJ)
+      .transform(Checkpoints.materialize)
   }
 
   /** Exact-Jaccard verification of candidate pairs against the
@@ -189,21 +189,21 @@ object Dedup {
     * construction (only shingles with df > maxDf), so the subtraction
     * is a broadcast anti-join. */
   def ngramJaccardPairsCapped(docs: DataFrame, minJ: Double,
-                              maxDf: Long): DataFrame = {
-    val sh = shingleIndex(docs).cache()
+                              maxDf: Long): DataFrame =
+      Checkpoints.scoped { scope =>
+    val sh = scope.cache(shingleIndex(docs))
     val stop = sh.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("s")
-    val kept = sh.join(broadcast(stop), Seq("s"), "left_anti").cache()
+    val kept = scope.cache(sh.join(broadcast(stop), Seq("s"), "left_anti"))
     val cnt = kept.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = kept.as("a").join(kept.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("common"))
-    // materialize the (tiny) surviving pair set through the caches,
-    // then release both: repeated library calls keep at most the small
-    // result block (cache+count — the Checkpoints.materialize
-    // contract: leak-free release with lineage intact)
-    val out = pairs
+    // materialize the (tiny) surviving pair set through the caches
+    // before the scope releases both: repeated library calls keep at
+    // most the small result block, lineage intact
+    pairs
       .join(cnt.as("x"), col("doc_a") === col("x.doc_id"))
       .join(cnt.as("y"), col("doc_b") === col("y.doc_id"))
       .select(col("doc_a"), col("doc_b"), col("common"),
@@ -213,11 +213,7 @@ object Dedup {
       .filter(col("jacc") >= minJ)
       .select(col("doc_a"), col("doc_b"), col("common"), col("n_a"), col("n_b"),
         floor(col("jacc") * 1000).cast("long").as("jacc_x1000"))
-      .cache()
-    out.count()
-    kept.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** Asymmetric shingle-CONTAINMENT pairs over the df-capped shingle
@@ -246,19 +242,20 @@ object Dedup {
     * with lineage intact. Output: (doc_a, doc_b, common, n_a, n_b,
     * cont_ab_x1000, cont_ba_x1000), doc_a < doc_b. */
   def containmentPairs(docs: DataFrame, minCx1000: Long,
-                       maxDf: Long = 64L): DataFrame = {
+                       maxDf: Long = 64L): DataFrame =
+      Checkpoints.scoped { scope =>
     require(minCx1000 > 0 && minCx1000 <= 1000,
       s"minCx1000 is a per-mille threshold in (0, 1000], got $minCx1000")
-    val sh = shingleIndex(docs).cache()
+    val sh = scope.cache(shingleIndex(docs))
     val stop = sh.groupBy("s").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("s")
-    val kept = sh.join(broadcast(stop), Seq("s"), "left_anti").cache()
+    val kept = scope.cache(sh.join(broadcast(stop), Seq("s"), "left_anti"))
     val cnt = kept.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val pairs = kept.as("a").join(kept.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("common"))
-    val out = pairs
+    pairs
       .join(cnt.as("x"), col("doc_a") === col("x.doc_id"))
       .join(cnt.as("y"), col("doc_b") === col("y.doc_id"))
       .filter(lit(1000L) * col("common") >=
@@ -269,11 +266,7 @@ object Dedup {
           .as("cont_ab_x1000"),
         Hashing.idiv(lit(1000L) * col("common"), col("y.n"))
           .as("cont_ba_x1000"))
-      .cache()
-    out.count()
-    kept.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** MinHash signatures: 16 universal hashes over shingle h31 values.
@@ -344,18 +337,19 @@ object Dedup {
   }
 
   private def minhashVerifiedPairs(docs: DataFrame, minJ: Double,
-                                   bucketCap: Option[Int]): DataFrame = {
+                                   bucketCap: Option[Int]): DataFrame =
+      Checkpoints.scoped { scope =>
     // minJ = 0 would mean "every band-colliding pair, even with zero
     // shingle overlap" — the streaming-intersection verify drops
     // zero-overlap pairs in its inner join, so that boundary is
     // excluded explicitly rather than silently returning fewer rows
     // than the old array_intersect formulation did
     require(minJ > 0.0 && minJ <= 1.0, s"minJ must be in (0, 1], got $minJ")
-    val sh = shingleIndex(docs).cache()
+    val sh = scope.cache(shingleIndex(docs))
     // signatures (one small row per doc) cached: the band stream scans
     // them twice and verification reads both endpoints' n from them
-    val sigs = minhashSignaturesFromIndex(sh).cache()
-    val (cand, capped) = bandCandidates(sigs, bucketCap)
+    val sigs = scope.cache(minhashSignaturesFromIndex(sh))
+    val cand = bandCandidates(scope, sigs, bucketCap)
     // exact verification WITHOUT materializing per-doc shingle arrays:
     // the earlier collect_list/array_intersect formulation rebuilt a
     // shingle array for every doc in the corpus and replicated both
@@ -368,21 +362,16 @@ object Dedup {
     // over pairs of |sh(doc_a)|, linear in the candidate set.
     //
     // Materialize the verified pair set (tiny next to the shingle
-    // index) through the caches, then release them so repeated library
-    // calls do not leak block-store entries (same discipline as
-    // nearDupPairsLsh / componentLabels).
-    val out = verifyPairsExact(sh, sigs.select("doc_id", "n"), cand, minJ)
-      .transform(graft.engine.Checkpoints.materialize)
-    capped.foreach(_.unpersist(blocking = false))
-    sigs.unpersist(blocking = false)
-    sh.unpersist(blocking = false)
-    out
+    // index) through the caches before the scope releases them, so
+    // repeated library calls do not leak block-store entries.
+    verifyPairsExact(sh, sigs.select("doc_id", "n"), cand, minJ)
+      .transform(Checkpoints.materialize)
   }
 
   /** Distinct band-collision pairs (doc_a, doc_b), doc_a < doc_b, over
     * `sigs`, buckets of more than `bucketCap` docs dropped first. Lazy;
-    * when capped, also returns the cached filtered band stream for the
-    * caller to unpersist after its action. The cap is an AGGREGATE +
+    * when capped, the filtered band stream is cached in the caller's
+    * scope, so the caller's action reads it. The cap is an AGGREGATE +
     * anti-join against the OVERSIZED buckets, not a count-over-window:
     * the cap exists precisely for corpora with mega-buckets, and a
     * window would put every row of such a bucket into ONE unsplittable
@@ -394,25 +383,23 @@ object Dedup {
     * not. The filtered band stream is cached because the candidate
     * self-join scans it twice (uncached, the cap pipeline ran once per
     * join branch: measured 10.5 s vs 3.7 s uncapped at the x10 corpus). */
-  private def bandCandidates(sigs: DataFrame, bucketCap: Option[Int])
-      : (DataFrame, Option[DataFrame]) = {
+  private def bandCandidates(scope: Checkpoints.Scope, sigs: DataFrame,
+                             bucketCap: Option[Int]): DataFrame = {
     val allBands = lshBands(sigs)
-    val capped = bucketCap.map { cap =>
+    val bands = bucketCap.fold(allBands) { cap =>
       val oversized = allBands.groupBy("band_idx", "band_val")
         .agg(count(lit(1)).as("bsz"))
         .filter(col("bsz") > cap)
         .select("band_idx", "band_val")
-      allBands.join(oversized, Seq("band_idx", "band_val"), "left_anti")
-        .cache()
+      scope.cache(
+        allBands.join(oversized, Seq("band_idx", "band_val"), "left_anti"))
     }
-    val bands = capped.getOrElse(allBands)
-    val cand = bands.as("a").join(bands.as("b"),
+    bands.as("a").join(bands.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-    (cand, capped)
   }
 
   /** Band-collision CANDIDATE pairs only — [[minhashDupPairsCapped]]
@@ -421,15 +408,13 @@ object Dedup {
     * model boundary) can consume the same bucket-capped MinHash
     * recall machinery. Same cap semantics and determinism as the
     * verified form; output (doc_a, doc_b), doc_a < doc_b, distinct. */
-  def minhashCandidatesCapped(docs: DataFrame, maxBucket: Int): DataFrame = {
+  def minhashCandidatesCapped(docs: DataFrame, maxBucket: Int): DataFrame =
+      Checkpoints.scoped { scope =>
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     // signatures cached: the band stream scans them twice
-    val sigs = minhashSignatures(docs).cache()
-    val (cand, capped) = bandCandidates(sigs, Some(maxBucket))
-    val out = cand.transform(graft.engine.Checkpoints.materialize)
-    capped.foreach(_.unpersist(blocking = false))
-    sigs.unpersist(blocking = false)
-    out
+    val sigs = scope.cache(minhashSignatures(docs))
+    bandCandidates(scope, sigs, Some(maxBucket))
+      .transform(Checkpoints.materialize)
   }
 
   /** EDIT-DISTANCE verification of near-dup candidates — the verifier
@@ -571,10 +556,10 @@ object Dedup {
     *         singletons root themselves; keep marks the cluster
     *         representative. */
   def componentLabels(nodes: DataFrame, pairs: DataFrame,
-                      maxIters: Int = 50): DataFrame = {
+                      maxIters: Int = 50): DataFrame =
+      Checkpoints.scoped { scope =>
     val session = nodes.sparkSession
     import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
 
     // materialize the pair pipeline as a DATAFRAME first: crossing the
     // .rdd boundary on the raw plan would execute the whole upstream
@@ -582,7 +567,7 @@ object Dedup {
     // path, outside whole-stage codegen — checkpointing keeps the
     // expensive part columnar/codegen'd and the RDD kernel only ever
     // reads the tiny materialized edge list
-    val pairRows = graft.engine.Checkpoints.pin(pairs
+    val pairRows = scope.pin(pairs
       .select(col("a").cast("long"), col("b").cast("long")))
     val eCount = pairRows.count() * 2
     // parallelism tracks the dup graph, not the corpus: one partition
@@ -590,60 +575,55 @@ object Dedup {
     // round instead of a corpus-sized grid of empty ones)
     val part = new HashPartitioner(
       math.max(1L, eCount / 2000000L).toInt)
-    val edges = pairRows.rdd
+    val edges = scope.persist(pairRows.rdd
       .flatMap { r =>
         val (a, b) = (r.getLong(0), r.getLong(1)); Iterator((a, b), (b, a))
       }
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .partitionBy(part))
     edges.count()
     // edges is materialized; the pinned edge list served its purpose
-    // (Dataset.unpersist would be a no-op on it — Checkpoints.release)
-    graft.engine.Checkpoints.release(pairRows)
+    scope.release(pairRows)
 
     // labels co-partitioned with edges: reduceByKey(part, ...) keeps the
     // partitioner, so every round's join below is narrow
-    var labels = edges.keys.map(k => (k, k))
-      .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels = scope.persist(edges.keys.map(k => (k, k))
+      .reduceByKey(part, (a, _) => a))
     def rootSum(rdd: org.apache.spark.rdd.RDD[(Long, Long)]): BigInt =
       rdd.aggregate(BigInt(0))((s, kv) => s + kv._2, _ + _)
     var prevSum = rootSum(labels)
     var converged = false
     var i = 0
-    try {
-      while (!converged && i < maxIters) {
-        val messages = edges.join(labels) // narrow: both sides on `part`
-          .map { case (_, (dst, root)) => (dst, root) }
-        // cogroup, NOT union+reduceByKey: a union with the unpartitioned
-        // messages RDD forgets the partitioner and reduceByKey would
-        // re-shuffle the labels side every round — cogroup keeps labels
-        // narrow on `part`, so only the messages actually move
-        val next = labels.cogroup(messages, part)
-          .mapValues { case (ls, ms) =>
-            val l = ls.head // labels is total on edge nodes
-            if (ms.isEmpty) l else math.min(l, ms.min)
-          }
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val curSum = rootSum(next) // also materializes next
-        labels.unpersist(blocking = false)
-        labels = next
-        converged = curSum == prevSum
-        prevSum = curSum
-        i += 1
-      }
-    } finally edges.unpersist(blocking = false)
+    while (!converged && i < maxIters) {
+      val messages = edges.join(labels) // narrow: both sides on `part`
+        .map { case (_, (dst, root)) => (dst, root) }
+      // cogroup, NOT union+reduceByKey: a union with the unpartitioned
+      // messages RDD forgets the partitioner and reduceByKey would
+      // re-shuffle the labels side every round — cogroup keeps labels
+      // narrow on `part`, so only the messages actually move
+      val next = scope.persist(labels.cogroup(messages, part)
+        .mapValues { case (ls, ms) =>
+          val l = ls.head // labels is total on edge nodes
+          if (ms.isEmpty) l else math.min(l, ms.min)
+        })
+      val curSum = rootSum(next) // also materializes next
+      scope.release(labels)
+      labels = next
+      converged = curSum == prevSum
+      prevSum = curSum
+      i += 1
+    }
+    scope.release(edges)
     require(converged,
       s"label propagation did not converge in $maxIters iterations " +
         "(a dup-cluster chain longer than maxIters?) — results would be wrong")
 
     import session.implicits._
-    // pin the converged labels into a checkpointed DataFrame and free
-    // the RDD blocks: RDD-level persists are invisible to
-    // spark.catalog.clearCache(), so leaving them behind accumulates
-    // block-store memory across repeated calls in a long session
-    val labeledAll = graft.engine.Checkpoints.pin(labels.toDF("id", "root"))
-    labels.unpersist(blocking = false)
+    // pin the converged labels into a checkpointed DataFrame (the
+    // result reads it) so the scope can free the RDD blocks: RDD-level
+    // persists are invisible to spark.catalog.clearCache(), so leaving
+    // them behind accumulates block-store memory across repeated calls
+    // in a long session
+    val labeledAll = Checkpoints.pin(labels.toDF("id", "root"))
     // the output universe is exactly `nodes`: edge endpoints outside
     // nodes participated in propagation (their labels kept the graph
     // connected) but emit no row — the docstring promises one row per
@@ -712,7 +692,8 @@ object Dedup {
     * plan stays small without it. Output: one row per node —
     * (doc_id, deg, pr1_x1M … prN_x1M). Invariant (spec'd): any
     * 2-regular component is an exact fixed point at 1,000,000. */
-  def neardupPageRank(pairs: DataFrame, iters: Int = 3): DataFrame = {
+  def neardupPageRank(pairs: DataFrame, iters: Int = 3): DataFrame =
+      Checkpoints.scoped { scope =>
     require(iters >= 1 && iters <= 20,
       s"iters=$iters out of range (past ~20 sweeps pin lineage first)")
     // The iterative-loop discipline (the BPE/Lloyd lesson, re-measured
@@ -725,28 +706,27 @@ object Dedup {
     // per sweep after the pin rewrite). Pins embedded in the returned
     // frame (deg + each r_k) are released by the caller via
     // Checkpoints.release(result) — the lloydTrainStats contract;
-    // build-internal pins (edges, outShare) are released here.
-    val edges = graft.engine.Checkpoints.pin(pairs
+    // build-internal pins (edges, outShare) are the scope's.
+    val edges = scope.pin(pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))
-    val deg = graft.engine.Checkpoints.pin(
+    val deg = Checkpoints.pin(
       edges.groupBy(col("u")).agg(count(lit(1)).as("deg")))
-    val outShare = graft.engine.Checkpoints.pin(
-      edges.join(deg, "u")) // (u, v, deg): contrib source
-    graft.engine.Checkpoints.release(edges)
+    // (u, v, deg): the contrib source
+    val outShare = scope.pin(edges.join(deg, "u"))
+    scope.release(edges)
     var r = deg.select(col("u").as("doc_id"), lit(1000000L).as("pr"))
     var out = deg.select(col("u").as("doc_id"), col("deg"))
     for (k <- 1 to iters) {
       val contrib = outShare
         .join(r.withColumnRenamed("doc_id", "u"), "u")
         .select(col("v"), idiv(col("pr"), col("deg")).as("c"))
-      r = graft.engine.Checkpoints.pin(contrib.groupBy(col("v"))
+      r = Checkpoints.pin(contrib.groupBy(col("v"))
         .agg((lit(150000L) +
           idiv(lit(17L) * sum(col("c")), lit(20L))).as("pr"))
         .select(col("v").as("doc_id"), col("pr")))
       out = out.join(r.withColumnRenamed("pr", s"pr${k}_x1M"), "doc_id")
     }
-    graft.engine.Checkpoints.release(outShare)
     out
   }
 
@@ -835,11 +815,12 @@ object Dedup {
     * accumulator. Output: (doc_a, doc_b, hamming, sim_x1e6) with
     * sim ≥ `minSimX1e6`. */
   def textNearDupPairsHashed(docs: DataFrame, maxHamming: Int,
-                             minSimX1e6: Long): DataFrame = {
+                             minSimX1e6: Long): DataFrame =
+      Checkpoints.scoped { scope =>
     require(minSimX1e6 >= -1000000L && minSimX1e6 <= 1000000L,
       s"minSimX1e6 is a scaled cosine in [-1e6, 1e6], got $minSimX1e6")
     val dot = graft.functions.VectorFunctions.dotProduct _
-    val bs = shingleBitSums(docs).cache()
+    val bs = scope.cache(shingleBitSums(docs))
     val cand = hammingBlockPairs(sigFromBitSums(bs), "simhash", maxHamming)
     val vecs = vectorsFromBitSums(bs)
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -847,14 +828,12 @@ object Dedup {
     val withA = vecs.join(broadcast(cand), col("doc_id") === col("doc_a"))
       .select(col("doc_a"), col("doc_b"), col("hamming"),
         col("v").as("va"), col("nrm").as("na"))
-    val out = vecs.join(broadcast(withA), col("doc_id") === col("doc_b"))
+    vecs.join(broadcast(withA), col("doc_id") === col("doc_b"))
       .select(col("doc_a"), col("doc_b"), col("hamming"),
         floor(dot(col("va"), col("v")) / (col("na") * col("nrm")) * 1e6)
           .cast("long").as("sim_x1e6"))
       .filter(col("sim_x1e6") >= minSimX1e6)
-      .transform(graft.engine.Checkpoints.materialize)
-    bs.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** SimHash near-dup pairs with hamming distance <= maxHamming (<= 3):
@@ -873,12 +852,13 @@ object Dedup {
     * distance 3 agrees on some block, so the block equi-join is
     * lossless while never forming the n² cross join. */
   private[graft] def hammingBlockPairs(sigs0: DataFrame, sigCol: String,
-                                       maxHamming: Int): DataFrame = {
+                                       maxHamming: Int): DataFrame =
+      Checkpoints.scoped { scope =>
     require(maxHamming <= 3, "block scheme is only lossless for hamming <= 3")
     // one long per doc; cached because the block self-join scans twice
     // (no ReusedExchange without it — the two sides' exchanges are not
     // deduplicated, so uncached the signature pipeline runs twice)
-    val sigs = sigs0.select(col("doc_id"), col(sigCol).as("sig")).cache()
+    val sigs = scope.cache(sigs0.select(col("doc_id"), col(sigCol).as("sig")))
     val blockMask = (1L << SimhashBlockBits) - 1
     val blocks = (0 until 4).map { k =>
       struct(lit(k).as("blk_idx"),
@@ -889,12 +869,10 @@ object Dedup {
         explode(array(blocks: _*)).as("b"))
       .select(col("doc_id"), col("sig"),
         col("b.blk_idx").as("blk_idx"), col("b.blk_val").as("blk_val"))
-    // materialize the (tiny) pair set through the cached signatures,
-    // then release the signature cache: repeated library calls keep at
-    // most the small result block (the minhash release discipline,
-    // via cache+count so lineage survives — see
-    // Checkpoints.materialize)
-    val out = exploded.as("a").join(exploded.as("b"),
+    // materialize the (tiny) pair set through the cached signatures
+    // before the scope releases them: repeated library calls keep at
+    // most the small result block, lineage intact
+    exploded.as("a").join(exploded.as("b"),
         col("a.blk_idx") === col("b.blk_idx") &&
           col("a.blk_val") === col("b.blk_val") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -902,9 +880,6 @@ object Dedup {
         expr("bit_count(a.sig ^ b.sig)").cast("int").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-      .cache()
-    out.count()
-    sigs.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 }

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Checkpoints
 import graft.functions.VectorFunctions.dotProduct
 
 /** IVF (inverted-file) approximate nearest neighbor: a coarse k-means
@@ -38,34 +39,35 @@ object IvfIndex {
   /** Train k centroids with `iters` Lloyd iterations. Returns
     * (cellId, centroid) pairs — k is small, so collecting centroids to
     * the driver between iterations is the intended pattern. */
-  def train(embeddings: DataFrame, k: Int, iters: Int, dim: Int = 64): Array[(Int, Seq[Double])] = {
+  def train(embeddings: DataFrame, k: Int, iters: Int,
+            dim: Int = 64): Array[(Int, Seq[Double])] =
+      Checkpoints.scoped { scope =>
     // cache for the duration of training: every Lloyd iteration (and the
     // init collect) re-reads this projection — without the cache that is
     // iters+1 full corpus scans
-    val e = embeddings.select(col("vec_id"), col("embedding").as("v")).cache()
-    try {
-      var centroids: Array[(Int, Seq[Double])] =
-        e.filter(col("vec_id") < k).orderBy("vec_id").collect()
-          .zipWithIndex.map { case (r, i) =>
-            (i, r.getSeq[Float](1).map(_.toDouble))
-          }
-      for (_ <- 0 until iters) {
-        val assigned = assign(e, centroids)
-        val sums = (0 until dim).map(i =>
-          sum(element_at(col("v"), i + 1).cast("double")).as(s"s_$i"))
-        val upd = assigned.groupBy("cell")
-          .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
-          .collect() // k rows — only centroids ever reach the driver
-          .map { r =>
-            val n = r.getAs[Long]("n").toDouble
-            (r.getAs[Int]("cell"), (0 until dim).map(i => r.getAs[Double](s"s_$i") / n))
-          }
-        // empty cells keep their previous centroid
-        val updMap = upd.toMap
-        centroids = centroids.map { case (cid, c) => (cid, updMap.getOrElse(cid, c)) }
-      }
-      centroids
-    } finally e.unpersist()
+    val e = scope.cache(
+      embeddings.select(col("vec_id"), col("embedding").as("v")))
+    var centroids: Array[(Int, Seq[Double])] =
+      e.filter(col("vec_id") < k).orderBy("vec_id").collect()
+        .zipWithIndex.map { case (r, i) =>
+          (i, r.getSeq[Float](1).map(_.toDouble))
+        }
+    for (_ <- 0 until iters) {
+      val assigned = assign(e, centroids)
+      val sums = (0 until dim).map(i =>
+        sum(element_at(col("v"), i + 1).cast("double")).as(s"s_$i"))
+      val upd = assigned.groupBy("cell")
+        .agg(sums.head, sums.tail :+ count(lit(1)).as("n"): _*)
+        .collect() // k rows — only centroids ever reach the driver
+        .map { r =>
+          val n = r.getAs[Long]("n").toDouble
+          (r.getAs[Int]("cell"), (0 until dim).map(i => r.getAs[Double](s"s_$i") / n))
+        }
+      // empty cells keep their previous centroid
+      val updMap = upd.toMap
+      centroids = centroids.map { case (cid, c) => (cid, updMap.getOrElse(cid, c)) }
+    }
+    centroids
   }
 
   /** Sample-based training — the production path. At corpus scale you
@@ -444,36 +446,35 @@ object IvfIndex {
   def refineCentroidsDf(embeddings: DataFrame, centroidsDf: DataFrame,
                         iters: Int, chunkSize: Int = 4096,
                         kEstimate: Option[Long] = None,
-                        scaleBits: Int = 20): DataFrame = {
+                        scaleBits: Int = 20): DataFrame =
+      Checkpoints.scoped { scope =>
     require(iters >= 0, "iters must be non-negative")
     val scale = (1L << scaleBits).toDouble
-    val base = nonZeroBase(embeddings).select("vec_id", "v").cache()
-    try {
-      // widen once: refined means are doubles, and coalesce(mean, old)
-      // needs both legs the same array element type
-      var cents = centroidsDf.select(col("cid"),
-        transform(col("v"), x => x.cast("double")).as("v"))
-      var prev: Option[DataFrame] = None
-      for (_ <- 0 until iters) {
-        val stats = lloydCellStatsBase(base, cents, chunkSize, kEstimate,
-          scaleBits)
-        // pin, not materialize: an iterative loop's per-round lineage
-        // otherwise nests (plan strings grow quadratically with
-        // rounds and OOM the driver in AQE's explainString — the BPE
-        // trainer hit exactly this); pin truncates to the block RDD
-        // and upgrades to a reliable checkpoint when
-        // graft.checkpoint.dir is set (the cluster story)
-        val next = graft.engine.Checkpoints.pin(
-          lloydUpdate(cents, stats, scale))
-        // the superseded pin is safe to free once `next` materialized
-        // (pin is eager); Dataset.unpersist would be a silent no-op
-        // here — see Checkpoints.release
-        prev.foreach(graft.engine.Checkpoints.release)
-        prev = Some(next)
-        cents = next
-      }
-      cents
-    } finally base.unpersist(blocking = false)
+    val base = scope.cache(nonZeroBase(embeddings).select("vec_id", "v"))
+    // widen once: refined means are doubles, and coalesce(mean, old)
+    // needs both legs the same array element type
+    var cents = centroidsDf.select(col("cid"),
+      transform(col("v"), x => x.cast("double")).as("v"))
+    var prev: Option[DataFrame] = None
+    for (_ <- 0 until iters) {
+      val stats = lloydCellStatsBase(base, cents, chunkSize, kEstimate,
+        scaleBits)
+      // pin, not materialize: an iterative loop's per-round lineage
+      // otherwise nests (plan strings grow quadratically with
+      // rounds and OOM the driver in AQE's explainString — the BPE
+      // trainer hit exactly this); pin truncates to the block RDD
+      // and upgrades to a reliable checkpoint when
+      // graft.checkpoint.dir is set (the cluster story)
+      val next = Checkpoints.pin(
+        lloydUpdate(cents, stats, scale))
+      // the superseded pin is safe to free once `next` materialized
+      // (pin is eager); Dataset.unpersist would be a silent no-op
+      // here — see Checkpoints.release
+      prev.foreach(Checkpoints.release)
+      prev = Some(next)
+      cents = next
+    }
+    cents
   }
 
   /** The Lloyd update step shared by [[refineCentroidsDf]] and
@@ -508,45 +509,42 @@ object IvfIndex {
     * corpus size nowhere past the assignment. */
   def lloydTrainStats(embeddings: DataFrame, targetCellSize: Int,
                       iters: Int, chunkSize: Int = 4096,
-                      scaleBits: Int = 20): DataFrame = {
+                      scaleBits: Int = 20): DataFrame =
+      Checkpoints.scoped { scope =>
     require(iters >= 1, "iters must be >= 1")
     require(targetCellSize >= 1, "targetCellSize must be positive")
     val scale = (1L << scaleBits).toDouble
-    val base = nonZeroBase(embeddings).select("vec_id", "v").cache()
-    try {
-      val n = base.count()
-      val k = math.max(1L, math.ceil(n.toDouble / targetCellSize).toLong)
-      var cents = base.orderBy("vec_id").limit(k.toInt)
-        .select(col("vec_id").cast("long").as("cid"),
-          transform(col("v"), x => x.cast("double")).as("v"))
-      var out: Option[DataFrame] = None
-      var prevCents: Option[DataFrame] = None
-      for (it <- 1 to iters) {
-        // stats are pinned too: the output union and the next
-        // iteration's update both read them, and pinning keeps every
-        // iteration's plan constant-size (see refineCentroidsDf).
-        // The stats pins are NOT released here — the returned frame
-        // reads them lazily; a caller retiring the result releases
-        // them all at once with Checkpoints.release(result). The
-        // superseded cents pins ARE loop-internal and freed as soon
-        // as their successor materializes.
-        val stats = graft.engine.Checkpoints.pin(
-          lloydCellStatsBase(base, cents, chunkSize, Some(k), scaleBits))
-        val tagged = stats.withColumn("iter", lit(it))
-        out = Some(out.map(_.unionByName(tagged)).getOrElse(tagged))
-        if (it < iters) {
-          val next = graft.engine.Checkpoints.pin(
-            lloydUpdate(cents, stats, scale))
-          prevCents.foreach(graft.engine.Checkpoints.release)
-          prevCents = Some(next)
-          cents = next
-        }
+    val base = scope.cache(nonZeroBase(embeddings).select("vec_id", "v"))
+    val n = base.count()
+    val k = math.max(1L, math.ceil(n.toDouble / targetCellSize).toLong)
+    var cents = base.orderBy("vec_id").limit(k.toInt)
+      .select(col("vec_id").cast("long").as("cid"),
+        transform(col("v"), x => x.cast("double")).as("v"))
+    var out: Option[DataFrame] = None
+    var prevCents: Option[DataFrame] = None
+    for (it <- 1 to iters) {
+      // stats are pinned too: the output union and the next
+      // iteration's update both read them, and pinning keeps every
+      // iteration's plan constant-size (see refineCentroidsDf).
+      // The stats pins are NOT released here — the returned frame
+      // reads them lazily; a caller retiring the result releases
+      // them all at once with Checkpoints.release(result). The
+      // cents pins ARE the scope's, each superseded one freed as
+      // soon as its successor materializes.
+      val stats = Checkpoints.pin(
+        lloydCellStatsBase(base, cents, chunkSize, Some(k), scaleBits))
+      val tagged = stats.withColumn("iter", lit(it))
+      out = Some(out.map(_.unionByName(tagged)).getOrElse(tagged))
+      if (it < iters) {
+        val next = scope.pin(lloydUpdate(cents, stats, scale))
+        prevCents.foreach(scope.release)
+        prevCents = Some(next)
+        cents = next
       }
-      prevCents.foreach(graft.engine.Checkpoints.release)
-      out.get.select(col("iter").cast("int").as("iter"), col("cell"),
-          col("pos"), col("n_members"), col("s_fp"))
-        .orderBy("iter", "cell", "pos")
-    } finally base.unpersist(blocking = false)
+    }
+    out.get.select(col("iter").cast("int").as("iter"), col("cell"),
+        col("pos"), col("n_members"), col("s_fp"))
+      .orderBy("iter", "cell", "pos")
   }
 
   /** [[refineCentroidsDf]] with a FIXED-POINT stop: iterate until the
@@ -563,54 +561,46 @@ object IvfIndex {
                                centroidsDf: DataFrame, maxIters: Int,
                                chunkSize: Int = 4096,
                                kEstimate: Option[Long] = None,
-                               scaleBits: Int = 20): (DataFrame, Int) = {
+                               scaleBits: Int = 20): (DataFrame, Int) =
+      Checkpoints.scoped { scope =>
     require(maxIters >= 1, "maxIters must be >= 1")
     val scale = (1L << scaleBits).toDouble
-    val base = nonZeroBase(embeddings).select("vec_id", "v").cache()
+    val base = scope.cache(nonZeroBase(embeddings).select("vec_id", "v"))
     // every pin this loop takes is released before return, on BOTH
-    // exits (converged and maxIters): the stats frames (prev and
-    // last), and each superseded cents pin once its successor
-    // materializes. Only the RETURNED cents keeps its pin — the
-    // caller owns it (IvfLloydSpec pins the ledger:
+    // exits (converged and maxIters): the stats frames are the
+    // scope's, and each superseded cents pin is released once its
+    // successor materializes. Only the RETURNED cents keeps its pin —
+    // the caller owns it (IvfLloydSpec pins the ledger:
     // getPersistentRDDs grows by at most that one entry).
     var prevStats: Option[DataFrame] = None
-    var lastStats: Option[DataFrame] = None
-    try {
-      var cents = centroidsDf.select(col("cid"),
-        transform(col("v"), x => x.cast("double")).as("v"))
-      var prevCents: Option[DataFrame] = None
-      var it = 0
-      var converged = false
-      while (it < maxIters && !converged) {
-        val stats = graft.engine.Checkpoints.pin(
-          lloydCellStatsBase(base, cents, chunkSize, kEstimate,
-            scaleBits))
-        lastStats = Some(stats)
-        converged = prevStats.exists { ps =>
-          // exact frame equality: same row count and no row of one
-          // absent from the other (rows are unique on (cell, pos))
-          ps.count() == stats.count() &&
-            ps.join(stats, Seq("cell", "pos", "n_members", "s_fp"),
-              "left_anti").isEmpty
-        }
-        it += 1
-        if (!converged) {
-          val next = graft.engine.Checkpoints.pin(
-            lloydUpdate(cents, stats, scale))
-          prevCents.foreach(graft.engine.Checkpoints.release)
-          prevCents = Some(next)
-          cents = next
-          prevStats.foreach(graft.engine.Checkpoints.release)
-          prevStats = Some(stats)
-          lastStats = None
-        }
+    var cents = centroidsDf.select(col("cid"),
+      transform(col("v"), x => x.cast("double")).as("v"))
+    var prevCents: Option[DataFrame] = None
+    var it = 0
+    var converged = false
+    while (it < maxIters && !converged) {
+      val stats = scope.pin(
+        lloydCellStatsBase(base, cents, chunkSize, kEstimate,
+          scaleBits))
+      converged = prevStats.exists { ps =>
+        // exact frame equality: same row count and no row of one
+        // absent from the other (rows are unique on (cell, pos))
+        ps.count() == stats.count() &&
+          ps.join(stats, Seq("cell", "pos", "n_members", "s_fp"),
+            "left_anti").isEmpty
       }
-      (cents, it)
-    } finally {
-      base.unpersist(blocking = false)
-      prevStats.foreach(graft.engine.Checkpoints.release)
-      lastStats.foreach(graft.engine.Checkpoints.release)
+      it += 1
+      if (!converged) {
+        val next = Checkpoints.pin(
+          lloydUpdate(cents, stats, scale))
+        prevCents.foreach(Checkpoints.release)
+        prevCents = Some(next)
+        cents = next
+        prevStats.foreach(scope.release)
+        prevStats = Some(stats)
+      }
     }
+    (cents, it)
   }
 
   /** [[nearDupPairs]] with the quantizer supplied as a DataFrame and
@@ -619,13 +609,12 @@ object IvfIndex {
   def nearDupPairsViaJoin(embeddings: DataFrame, minSim: Double,
                           centroidsDf: DataFrame, nProbe: Int = 2,
                           chunkSize: Int = 4096,
-                          kEstimate: Option[Long] = None): DataFrame = {
-    val base = nonZeroBase(embeddings).cache()
+                          kEstimate: Option[Long] = None): DataFrame =
+      Checkpoints.scoped { scope =>
+    val base = scope.cache(nonZeroBase(embeddings))
     val assigned = assignViaJoin(base.select("vec_id", "v"), centroidsDf,
       nProbe, chunkSize, kEstimate)
-    val out = pairsFromAssignments(base, assigned, minSim)
-    base.unpersist(blocking = false)
-    out
+    pairsFromAssignments(base, assigned, minSim)
   }
 
   /** The derived flat-IVF cell-size law — the [[graft.ops.Similarity]]
@@ -686,12 +675,13 @@ object IvfIndex {
 
   def nearDupPairs(embeddings: DataFrame, minSim: Double,
                    centroids: Array[(Int, Seq[Double])],
-                   nProbe: Int = 2): DataFrame = {
+                   nProbe: Int = 2): DataFrame =
+      Checkpoints.scoped { scope =>
     require(nProbe >= 1 && nProbe <= centroids.length,
       "nProbe must be in [1, nCells]")
     // one small cached row per vector — the assignment (both join
     // sides) and the rerank payload all re-derive from it
-    val base = nonZeroBase(embeddings).cache()
+    val base = scope.cache(nonZeroBase(embeddings))
     // fused assignment kernel: composing k per-centroid DotProducts +
     // an array_sort over k structs collapses codegen once k reaches
     // the sizes the sample quantizer produces (see NearestCellsExpr)
@@ -700,9 +690,7 @@ object IvfIndex {
         graft.functions.VectorFunctions.nearestCells(
           col("v"), centroids, nProbe)))
       .select(col("vec_id"), col("cell"))
-    val out = pairsFromAssignments(base, assigned, minSim)
-    base.unpersist(blocking = false)
-    out
+    pairsFromAssignments(base, assigned, minSim)
   }
 
   private def nonZeroBase(embeddings: DataFrame): DataFrame =
@@ -740,7 +728,7 @@ object IvfIndex {
       .filter(col("sim") >= minSim)
       .select(col("vec_a"), col("vec_b"),
         floor(col("sim") * 1e6).cast("long").as("sim_x1e6"))
-      .transform(graft.engine.Checkpoints.materialize)
+      .transform(Checkpoints.materialize)
 
   /** Build and PERSIST the cell index for a historical corpus — the
     * storage half of incremental re-dedup, making good on the promise
@@ -759,17 +747,16 @@ object IvfIndex {
   def buildCellIndex(embeddings: DataFrame, centroidsDf: DataFrame,
                      warehouse: String, table: String, nBuckets: Int,
                      nProbe: Int = 2, chunkSize: Int = 4096,
-                     kEstimate: Option[Long] = None): String = {
-    val base = nonZeroBase(embeddings).cache()
+                     kEstimate: Option[Long] = None): String =
+      Checkpoints.scoped { scope =>
+    val base = scope.cache(nonZeroBase(embeddings))
     val assigned = assignViaJoin(base.select("vec_id", "v"), centroidsDf,
       nProbe, chunkSize, kEstimate)
     val indexed = assigned
       .join(base.select("vec_id", "v", "nrm"), Seq("vec_id"))
       .select("cell", "vec_id", "v", "nrm")
-    val name = graft.engine.TableStore.writeBucketed(
+    graft.engine.TableStore.writeBucketed(
       indexed, warehouse, table, nBuckets, Seq("cell"))
-    base.unpersist(blocking = false)
-    name
   }
 
   /** Absorb a just-paired delta batch INTO the persisted cell index —
@@ -792,15 +779,15 @@ object IvfIndex {
   def absorbIntoCellIndex(indexName: String, delta: DataFrame,
                           centroidsDf: DataFrame, nProbe: Int = 2,
                           chunkSize: Int = 4096,
-                          kEstimate: Option[Long] = None): Unit = {
-    val dBase = nonZeroBase(delta).cache()
+                          kEstimate: Option[Long] = None): Unit =
+      Checkpoints.scoped { scope =>
+    val dBase = scope.cache(nonZeroBase(delta))
     val rows = assignViaJoin(dBase.select("vec_id", "v"), centroidsDf,
         nProbe, chunkSize, kEstimate)
       .join(dBase.select("vec_id", "v", "nrm"), Seq("vec_id"))
       .select("cell", "vec_id", "v", "nrm")
     graft.engine.TableStore.toBucketLayout(delta.sparkSession, indexName,
       rows).write.mode("append").insertInto(indexName)
-    dBase.unpersist(blocking = false)
   }
 
   /** Incremental re-dedup of a delta batch against a persisted cell
@@ -827,13 +814,14 @@ object IvfIndex {
   def incrementalNearDupPairs(index: DataFrame, delta: DataFrame,
                               minSim: Double, centroidsDf: DataFrame,
                               nProbe: Int = 2, chunkSize: Int = 4096,
-                              kEstimate: Option[Long] = None): DataFrame = {
-    val dBase = nonZeroBase(delta).cache()
+                              kEstimate: Option[Long] = None): DataFrame =
+      Checkpoints.scoped { scope =>
+    val dBase = scope.cache(nonZeroBase(delta))
     // read twice (touched cells + the candidate union) — materialized
     // so the chunk-kernel assignment runs once
     val dAssigned = assignViaJoin(dBase.select("vec_id", "v"), centroidsDf,
         nProbe, chunkSize, kEstimate)
-      .transform(graft.engine.Checkpoints.materialize)
+      .transform(scope.materialize)
     val touched = dAssigned.select("cell").distinct()
     val hot = index.join(broadcast(touched), Seq("cell"), "left_semi")
     val u = dAssigned
@@ -852,13 +840,9 @@ object IvfIndex {
     val payload = dBase.select(col("vec_id"), col("v"), col("nrm"))
       .unionByName(hot.select(col("vec_id"), col("v"), col("nrm"))
         .dropDuplicates("vec_id"))
-    val out = rerankPairs(payload, cand, minSim)
-    // out is materialized by rerankPairs, so the operator-internal
-    // caches can be released (the repo's release-after-materialize
-    // convention — PipelineOpsSpec polices it on the dedup family)
-    dAssigned.unpersist(blocking = false)
-    dBase.unpersist(blocking = false)
-    out
+    // materialized by rerankPairs, so the scope can release the
+    // operator-internal caches
+    rerankPairs(payload, cand, minSim)
   }
 
   /** Approximate top-k: probe the nProbe nearest cells per query, exact
@@ -954,7 +938,8 @@ object IvfIndex {
     * Output: (mode, query_id, rank, vec_id, label, sim_x1e6). */
   def filteredTopK(embeddings: DataFrame, pred: Column, nQueries: Int,
                    k: Int, cellSize: Int, nProbe: Int,
-                   preFilterMaxPermille: Int = 50): DataFrame = {
+                   preFilterMaxPermille: Int = 50): DataFrame =
+      Checkpoints.scoped { scope =>
     require(nQueries >= 1, "nQueries must be positive")
     require(k >= 1, "k must be positive")
     require(cellSize >= 1, "cellSize must be positive")
@@ -965,7 +950,7 @@ object IvfIndex {
       .select(col("vec_id"), col("embedding").as("v"), col("label"))
       .withColumn("nrm", sqrt(dotProduct(col("v"), col("v"))))
       .filter(col("nrm") > 0d)
-      .cache()
+      .transform(scope.cache)
     // ONE count job decides the branch; n feeds the quantizer cut on
     // the post-filter side so the corpus is never re-counted
     val st = base.agg(count(lit(1)).as("n"),
@@ -1007,12 +992,10 @@ object IvfIndex {
       }
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim_x1e6").desc, col("vec_id"))
-    val out = scored
+    scored
       .withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= k)
       .select("mode", "query_id", "rank", "vec_id", "label", "sim_x1e6")
-      .transform(graft.engine.Checkpoints.materialize)
-    base.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 }

@@ -443,17 +443,19 @@ object Retrieval {
   def absorbIntoPostingsIndex(postingsTable: String, warehouse: String,
                               table: String, delta: DataFrame): Unit = {
     val spark = delta.sparkSession
-    val base = delta.select(col("doc_id"), tokens(col("text")).as("w"))
-      .select(col("doc_id"), col("w"), size(col("w")).cast("long").as("dl"))
-      .cache()
-    graft.engine.TableStore.toBucketLayout(spark, postingsTable, base
-      .select(col("doc_id"), col("dl"), explode(col("w")).as("token"))
-      .groupBy(col("token"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .select(col("token"), col("doc_id"), col("dl"), col("tf")))
-      .write.mode("append").insertInto(postingsTable)
-    val d = base.agg(count(lit(1)), sum(col("dl"))).head()
-    base.unpersist(blocking = false)
+    val d = graft.engine.Checkpoints.scoped { scope =>
+      val base = delta.select(col("doc_id"), tokens(col("text")).as("w"))
+        .select(col("doc_id"), col("w"),
+          size(col("w")).cast("long").as("dl"))
+        .transform(scope.cache)
+      graft.engine.TableStore.toBucketLayout(spark, postingsTable, base
+        .select(col("doc_id"), col("dl"), explode(col("w")).as("token"))
+        .groupBy(col("token"), col("doc_id"), col("dl"))
+        .agg(count(lit(1)).as("tf"))
+        .select(col("token"), col("doc_id"), col("dl"), col("tf")))
+        .write.mode("append").insertInto(postingsTable)
+      base.agg(count(lit(1)), sum(col("dl"))).head()
+    }
     val old = spark.read.parquet(graft.engine.TableStore
         .tablePath(warehouse, s"${table}_stats"))
       .select(col("n_docs"), col("total_dl")).head()

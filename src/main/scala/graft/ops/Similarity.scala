@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.engine.Checkpoints
 import graft.functions.VectorFunctions.dotProduct
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -250,7 +251,8 @@ object Similarity {
     * candidate sims are computed). Zero-norm convention unchanged. */
   def embeddingContaminationCells(corpus: DataFrame, bench: DataFrame,
                                   tauX1e6: Long,
-                                  nProbe: Int = 4): DataFrame = {
+                                  nProbe: Int = 4): DataFrame =
+      Checkpoints.scoped { scope =>
     require(tauX1e6 > 0 && tauX1e6 <= 1000000L,
       s"tauX1e6=$tauX1e6 outside (0, 1e6]")
     require(nProbe >= 1, s"nProbe must be positive, got $nProbe")
@@ -261,7 +263,7 @@ object Similarity {
     // centroid collect): without it each eager probe rescans the
     // embeddings table bench derives from — the round-16 self-review
     // priced the uncached form at two full bench-side scans per call.
-    // The cache is released when the output PLAN is built, so the
+    // The scope releases the cache once the output PLAN is built, so the
     // bCell broadcast at execution time recomputes bench from source
     // (one more pruned scan) — the deliberate trade: keeping the
     // cache alive through a caller-deferred execution would leak
@@ -273,40 +275,37 @@ object Similarity {
         col("embedding").as("bv"))
       .withColumn("bn", l2norm(col("bv")))
       .filter(col("bn") > 0.0)
-      .cache()
+      .transform(scope.cache)
     val nB = b.count()
-    if (nB == 0L) {
-      // no bench -> nothing to contaminate against (the exact
-      // kernel's empty cross join reaches the same all-keep result)
-      b.unpersist(blocking = false)
-      return c.select(col("vec_id"), lit(true).as("keep"))
+    // no bench -> nothing to contaminate against (the exact kernel's
+    // empty cross join reaches the same all-keep result)
+    if (nB == 0L) c.select(col("vec_id"), lit(true).as("keep"))
+    else {
+      val k = math.max(1L,
+        math.round(math.sqrt(nProbe.toDouble * nB))).toInt
+      // the bounded deterministic sampleCentroidsK cut, read off the
+      // already-cached bench frame (k lowest-id nonzero vectors)
+      val cents = b.orderBy("bench_id").limit(k)
+        .select("bench_id", "bv").collect().zipWithIndex
+        .map { case (r, i) => (i, r.getSeq[Float](1).map(_.toDouble)) }
+      val nP = math.min(nProbe, cents.length)
+      val bCell = b.withColumn("cell", explode(
+        graft.functions.VectorFunctions.nearestCells(col("bv"), cents, 1)))
+      val cCell = c.withColumn("cell", explode(
+        graft.functions.VectorFunctions.nearestCells(col("v"), cents, nP)))
+      // left join: a corpus vector probing only bench-empty cells must
+      // still emit its keep row; a bench member sits in exactly one
+      // cell and probes are distinct, so no candidate pair duplicates
+      cCell.join(broadcast(bCell), Seq("cell"), "left")
+        .select(col("vec_id"),
+          floor(dot(col("bv"), col("v")) / (col("bn") * col("nrm")) * 1e6)
+            .cast("long").as("sim_x1e6"))
+        .groupBy(col("vec_id"))
+        .agg(coalesce(max(col("sim_x1e6")), lit(Long.MinValue))
+          .as("max_cand_sim_x1e6"))
+        .select(col("vec_id"),
+          (col("max_cand_sim_x1e6") < tauX1e6).as("keep"))
     }
-    val k = math.max(1L,
-      math.round(math.sqrt(nProbe.toDouble * nB))).toInt
-    // the bounded deterministic sampleCentroidsK cut, read off the
-    // already-cached bench frame (k lowest-id nonzero vectors)
-    val cents = b.orderBy("bench_id").limit(k)
-      .select("bench_id", "bv").collect().zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](1).map(_.toDouble)) }
-    val nP = math.min(nProbe, cents.length)
-    val bCell = b.withColumn("cell", explode(
-      graft.functions.VectorFunctions.nearestCells(col("bv"), cents, 1)))
-    val cCell = c.withColumn("cell", explode(
-      graft.functions.VectorFunctions.nearestCells(col("v"), cents, nP)))
-    // left join: a corpus vector probing only bench-empty cells must
-    // still emit its keep row; a bench member sits in exactly one
-    // cell and probes are distinct, so no candidate pair duplicates
-    val out = cCell.join(broadcast(bCell), Seq("cell"), "left")
-      .select(col("vec_id"),
-        floor(dot(col("bv"), col("v")) / (col("bn") * col("nrm")) * 1e6)
-          .cast("long").as("sim_x1e6"))
-      .groupBy(col("vec_id"))
-      .agg(coalesce(max(col("sim_x1e6")), lit(Long.MinValue))
-        .as("max_cand_sim_x1e6"))
-      .select(col("vec_id"),
-        (col("max_cand_sim_x1e6") < tauX1e6).as("keep"))
-    b.unpersist(blocking = false)
-    out
   }
 
   /** All pairs with cosine similarity >= minSim (near-dup detection).
@@ -668,15 +667,16 @@ object Similarity {
     * `>=` drops them, breaking the identical-pair-set contract. */
   def nearDupPairsLsh(embeddings: DataFrame, minSim: Double,
                       nPlanes: Int = 64, bitsPerBand: Int = 2,
-                      dim: Int = 64, seed: Long = 42L): DataFrame = {
+                      dim: Int = 64, seed: Long = 42L): DataFrame =
+      Checkpoints.scoped { scope =>
     // one small row per vector (id, sig words, norm — a few dozen B);
     // cached because bands + both payload sides re-derive from it
     val sigs = lshSignatureWords(embeddings, hyperplanes(nPlanes, dim, seed))
       .withColumn("nrm", l2norm(col("v")))
-      .filter(col("nrm") > 0d).cache()
+      .filter(col("nrm") > 0d).transform(scope.cache)
     val cand = bandCandidatesWords(sigs, nPlanes, bitsPerBand)
     val payload = sigs.select(col("vec_id"), col("v"), col("nrm"))
-    val out = cand
+    cand
       .join(payload.as("x"), col("vec_a") === col("x.vec_id"))
       .join(payload.as("y"), col("vec_b") === col("y.vec_id"))
       .select(col("vec_a"), col("vec_b"),
@@ -685,12 +685,9 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"),
         floor(col("sim") * 1e6).cast("long").as("sim_x1e6"))
       // materialize the surviving edge set (tiny next to the
-      // signature cache) through the caches, then release sigs:
-      // repeated library calls must not leak block-store entries
-      // (same discipline as componentLabels)
-      .transform(graft.engine.Checkpoints.materialize)
-    sigs.unpersist(blocking = false)
-    out
+      // signature cache) through the caches before the scope releases
+      // sigs: repeated library calls must not leak block-store entries
+      .transform(Checkpoints.materialize)
   }
 
   /** The sizing law on [[nearDupPairsLsh]] as code: derive
@@ -870,12 +867,13 @@ object Similarity {
     * (true near-dups at cos > 0.9 collide with p ~ 1). Output shape
     * matches [[bruteForceTopK]] so recall can be measured directly. */
   def annTopK(embeddings: DataFrame, nQueries: Int, k: Int,
-              seed: Long = 42L, dim: Int = 64): DataFrame = {
+              seed: Long = 42L, dim: Int = 64): DataFrame =
+      Checkpoints.scoped { scope =>
     val planes = hyperplanes(32, dim, seed)
     // norms computed once per vector here, carried through the bands;
     // cached because the query side below re-derives from the same plan
     val sigs = lshSignatures(embeddings, planes)
-      .withColumn("nrm", l2norm(col("v"))).cache()
+      .withColumn("nrm", l2norm(col("v"))).transform(scope.cache)
     def bands(df: DataFrame): DataFrame = {
       val bs = (0 until 8).map { j =>
         struct(lit(j).as("band_idx"),
@@ -906,15 +904,11 @@ object Similarity {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim_x1e6").desc, col("vec_id"))
     // materialize the (nQueries x k)-row result through the signature
-    // cache, then release it: repeated library calls keep at most the
-    // small result block (cache+count — Checkpoints.materialize's
-    // contract: leak-free release with lineage intact)
-    val out = scored.withColumn("rank", row_number().over(w).cast("int"))
+    // cache before the scope releases it: repeated library calls keep
+    // at most the small result block, lineage intact
+    scored.withColumn("rank", row_number().over(w).cast("int"))
       .filter(col("rank") <= k)
       .select("query_id", "rank", "vec_id", "label", "sim_x1e6")
-      .cache()
-    out.count()
-    sigs.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.Checkpoints
 import Hashing._
 
 /** Text-analysis operators for training-data pipelines: language ID,
@@ -264,13 +265,14 @@ object TextAnalysis {
     * then one join keyed on shingle and one doc-keyed re-aggregate. No
     * doc-pair term anywhere, so cost is linear in corpus shingles. */
   def contamination(docs: DataFrame, benchMod: Int = 10,
-                    benchRem: Int = 7): DataFrame = {
+                    benchRem: Int = 7): DataFrame =
+      Checkpoints.scoped { scope =>
     // cached: both the df-stats aggregate and the bench join re-derive
     // from the exploded index, and self-derived branches do not share
     // exchanges (same reason ngramJaccardPairs caches its index)
     val sh = docs.select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), explode(shinglesFromWords(col("w"))).as("s"))
-      .cache()
+      .transform(scope.cache)
     val dfStats = sh.groupBy("s")
       .agg(countDistinct(col("doc_id")).as("n_docs"))
     val bench = sh.filter(col("doc_id") % benchMod === benchRem)
@@ -278,7 +280,7 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),
         sum(when(col("n_docs") >= 2, 1L).otherwise(0L)).as("n_contaminated"))
-    val out = docs.filter(col("doc_id") % benchMod === benchRem)
+    docs.filter(col("doc_id") % benchMod === benchRem)
       .select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -287,13 +289,10 @@ object TextAnalysis {
       .withColumn("contamination_x1000",
         floor(col("n_contaminated") * lit(1000.0) /
           greatest(col("n_shingles"), lit(1L))).cast("long"))
-      // pin the (small, per-bench-doc) result and release the shingle
-      // index: a long-lived library session must not accrue a block-store
-      // entry per contamination() call (same discipline as
-      // componentLabels); reliable under graft.checkpoint.dir
-      .transform(graft.engine.Checkpoints.materialize)
-    sh.unpersist(blocking = false)
-    out
+      // materialize the (small, per-bench-doc) result before the scope
+      // releases the shingle index: a long-lived library session must
+      // not accrue a block-store entry per contamination() call
+      .transform(Checkpoints.materialize)
   }
 
   /** Cross-document repeated-span detection — the exact-substring layer
@@ -331,7 +330,8 @@ object TextAnalysis {
     * spurious report row, never text. The destructive twin
     * [[repeatedSpanRemoval]] widens to 120 bits. */
   def repeatedSpans(docs: DataFrame, spanTokens: Int = 5,
-                    minDf: Int = 2): DataFrame = {
+                    minDf: Int = 2): DataFrame =
+      Checkpoints.scoped { scope =>
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
     val L = spanTokens
@@ -347,13 +347,13 @@ object TextAnalysis {
       .toDF("doc_id", "pos", "s")
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         h60(col("s")).as("h"))
-      .cache()
+      .transform(scope.cache)
     val rep = wins.groupBy("h")
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= minDf)
     val wnd = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
-    val out = wins.join(rep, Seq("h"))
+    wins.join(rep, Seq("h"))
       .withColumn("grp", col("pos") - row_number().over(wnd))
       .groupBy(col("doc_id"), col("grp"))
       .agg(min(col("pos")).as("span_start"),
@@ -362,9 +362,7 @@ object TextAnalysis {
         max(col("n_docs")).cast("long").as("max_df"))
       .select(col("doc_id"), col("span_start"), col("span_len_tokens"),
         col("n_windows"), col("max_df"))
-      .transform(graft.engine.Checkpoints.materialize)
-    wins.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** Repeated-span REMOVAL — the editing counterpart of
@@ -427,7 +425,8 @@ object TextAnalysis {
   private[graft] def repeatedSpanRemovalKeyed(
       docs: DataFrame, spanTokens: Int, minDf: Int,
       key1: Column => Column, key2: Column => Column,
-      maxTokens: Option[Int] = None): DataFrame = {
+      maxTokens: Option[Int] = None): DataFrame =
+      Checkpoints.scoped { scope =>
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
     maxTokens.foreach(n =>
@@ -438,7 +437,7 @@ object TextAnalysis {
     val toks = docs.select(col("doc_id"), posexplode(tokens(col("text"))))
       .toDF("doc_id", "pos", "tok")
       .withColumn("pos", col("pos").cast("long"))
-      .cache()
+      .transform(scope.cache)
     val wins = docs.select(col("doc_id"), tokens(col("text")).as("w"))
       // L-gram windows via the codegen shingle kernel (the transform/
       // slice/concat_ws formulation was CodegenFallback on this
@@ -449,7 +448,7 @@ object TextAnalysis {
       .toDF("doc_id", "pos", "s")
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         key1(col("s")).as("h"), key2(col("s")).as("h2"))
-      .cache()
+      .transform(scope.cache)
     val stats = wins.groupBy("h", "h2").agg(
         countDistinct(col("doc_id")).as("n_docs"),
         min(struct(col("doc_id"), col("pos"))).as("f"))
@@ -484,13 +483,10 @@ object TextAnalysis {
         transform(col("ks"), k => k.getField("tok")), " "), lit(""))
         .as("clean_text")) ++
       maxTokens.map(_ => coalesce(col("trunc"), lit(false)).as("truncated"))
-    val out = total
+    total
       .join(keptAgg, Seq("doc_id"), "left")
       .select(outCols: _*)
-      .transform(graft.engine.Checkpoints.materialize)
-    wins.unpersist(blocking = false)
-    toks.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** Corpus-global sentence dedup — the sub-document twin of
@@ -818,14 +814,15 @@ object TextAnalysis {
     * Heaps' law, sublinear in corpus), one join back keyed on token
     * (the vocabulary side broadcasts at any realistic corpus size),
     * one doc-keyed re-aggregate. Linear, no pair term. */
-  def vocabQuality(docs: DataFrame, dfCap: Int = 100): DataFrame = {
+  def vocabQuality(docs: DataFrame, dfCap: Int = 100): DataFrame =
+      Checkpoints.scoped { scope =>
     require(dfCap >= 1, s"dfCap must be >= 1, got $dfCap")
     val tok = docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("t"))
-      .cache()
+      .transform(scope.cache)
     val dfStats = tok.groupBy("t")
       .agg(countDistinct(col("doc_id")).as("df"))
-    val out = tok.join(dfStats, Seq("t"))
+    tok.join(dfStats, Seq("t"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         sum(when(col("df") === 1L, 1L).otherwise(0L)).as("n_hapax"),
@@ -834,9 +831,7 @@ object TextAnalysis {
         floor(col("capped_df_sum") * lit(1000.0) /
           (col("n_tokens") * lit(dfCap.toLong)))
           .cast("long").as("common_score_x1000"))
-      .transform(graft.engine.Checkpoints.materialize)
-    tok.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** Unigram-LM surprisal scoring — the perplexity-style quality
@@ -925,7 +920,8 @@ object TextAnalysis {
     * anywhere —
     * candidate bigrams are only the ADJACENT pairs the corpus
     * actually contains. */
-  def collocations(docs: DataFrame, minCount: Int = 3, k: Int = 50): DataFrame = {
+  def collocations(docs: DataFrame, minCount: Int = 3, k: Int = 50): DataFrame =
+      Checkpoints.scoped { scope =>
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     require(k >= 1, s"k must be >= 1, got $k")
     val toks = docs.select(tokens(col("text")).as("w"))
@@ -944,10 +940,10 @@ object TextAnalysis {
       .select(substring_index(col("bg"), " ", 1).as("w1"),
         substring_index(col("bg"), " ", -1).as("w2"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .cache()
+      .transform(scope.cache)
     val uni = toks.select(explode(col("w")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .cache()
+      .transform(scope.cache)
     val totRow = c12.agg(sum(col("c12"))).head()
     val nBigrams = if (totRow.isNullAt(0)) 0L else totRow.getLong(0)
     // one counted dispatch for the unigram frame, reused by both joins
@@ -960,15 +956,12 @@ object TextAnalysis {
           col("c1") * col("c2")).as("lift_x1M"))
     val wnd = org.apache.spark.sql.expressions.Window
       .orderBy(col("lift_x1M").desc, col("w1"), col("w2"))
-    val out = scored.orderBy(col("lift_x1M").desc, col("w1"), col("w2"))
+    scored.orderBy(col("lift_x1M").desc, col("w1"), col("w2"))
       .limit(k)
       .withColumn("rank", row_number().over(wnd).cast("long"))
       .select(col("rank"), col("w1"), col("w2"), col("c12"),
         col("c1"), col("c2"), col("lift_x1M"))
-      .transform(graft.engine.Checkpoints.materialize)
-    c12.unpersist(blocking = false)
-    uni.unpersist(blocking = false)
-    out
+      .transform(Checkpoints.materialize)
   }
 
   /** CCNet's per-language LM-quality bucketing (Wenzek et al. 2020)
@@ -1352,10 +1345,11 @@ object TextAnalysis {
     * corpus-scaled term is the scoring pass. The mod-sliced entry
     * delegates here, so q140's three-sf oracle pins this kernel
     * verbatim. */
-  def nbScore(trainDocs: DataFrame, testDocs: DataFrame): DataFrame = {
+  def nbScore(trainDocs: DataFrame, testDocs: DataFrame): DataFrame =
+      Checkpoints.scoped { scope =>
     val spark = trainDocs.sparkSession
     val budget = nbPivotMaxClasses(spark)
-    val m = nbModel(trainDocs)
+    val m = nbModel(scope, trainDocs)
     // ONE bounded driver action: the per-class constants, capped at
     // budget+1 rows. Within budget these rows ARE the pivot branch's
     // literals (class name, unseen-token default, prior), and the
@@ -1364,77 +1358,74 @@ object TextAnalysis {
     // and one cheap (trusted-corpus-sized, cache-backed) action on
     // the fallback branch.
     val probe = m.cdef.limit(budget + 1).collect()
-    val out =
-      if (probe.isEmpty) {
-        // no non-NULL-lang train docs: the classic crossJoin with an
-        // empty cdef scored zero rows — reproduce that empty shape
-        testDocs
-          .select(col("doc_id"), col("lang"),
-            explode(tokens(col("text"))).as("t"))
-          .limit(0)
-          .select(col("doc_id"), col("lang"),
-            col("lang").as("pred_lang"), lit(0L).as("bits_total"),
-            (col("lang") === col("lang")).as("correct"))
-          .transform(graft.engine.Checkpoints.materialize)
-      } else if (probe.length > budget) {
-        // fallback past the pivot budget: the docs×classes kernel —
-        // argmin as an AGGREGATE (min over struct(bits_total, c_lang)
-        // is lexicographic = the (bits asc, class asc) tie-break); a
-        // partial+final SortAggregate pair, no added exchange.
-        classicScored(m, testDocs)
-          .groupBy(col("doc_id"), col("lang"))
-          .agg(min(struct(col("bits_total"), col("c_lang"))).as("m"))
-          .select(col("doc_id"), col("lang"),
-            col("m.c_lang").as("pred_lang"),
-            col("m.bits_total").as("bits_total"),
-            (col("lang") === col("m.c_lang")).as("correct"))
-          .transform(graft.engine.Checkpoints.materialize)
-      } else {
-        // the pivot kernel (see the class scaladoc): per-class bits
-        // as |classes| long columns of ONE vocab-sized frame. The
-        // classes sort only fixes column order; the argmin tie-break
-        // itself is array_min's struct comparison (Spark's own string
-        // ordering, the same comparator the classic min(struct) and
-        // the window sort used — no driver-side ordering enters the
-        // law). Pivot columns are renamed positionally (b_0..b_k) so
-        // class strings never need identifier escaping.
-        val classes = probe
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-          .sortBy(_._1).toSeq
-        val bitsPivot = m.bits.groupBy("t")
-          .pivot("c_lang", classes.map(_._1)).agg(first(col("b")))
-          .toDF("t" +: classes.indices.map(i => s"b_$i"): _*)
-        val sums = classes.zipWithIndex.map { case ((_, bdef, _), i) =>
-          // a left-join miss (token unseen in the whole train vocab)
-          // nulls every b_i; a token seen only in OTHER classes nulls
-          // this b_i — both coalesce to the class default, exactly
-          // the classic coalesce(b, bdef)
-          sum(coalesce(col(s"b_$i"), lit(bdef))).as(s"sb_$i") }
-        val testTok = testDocs.select(col("doc_id"), col("lang"),
+    if (probe.isEmpty) {
+      // no non-NULL-lang train docs: the classic crossJoin with an
+      // empty cdef scored zero rows — reproduce that empty shape
+      testDocs
+        .select(col("doc_id"), col("lang"),
           explode(tokens(col("text"))).as("t"))
-        val argmin = array_min(array(classes.zipWithIndex.map {
-          case ((c, _, bprior), i) =>
-            struct((lit(bprior) + col(s"sb_$i")).as("bits_total"),
-              lit(c).as("c_lang")) }: _*))
-        // joinCached (round 18, r17 ADVICE 3): plain join's dispatch
-        // count evaluated the vocab-sized pivot aggregate once for
-        // the count and AGAIN as the build side — cheap only because
-        // cnt is cached, but still one whole vocab-sized aggregation
-        // per execution; the cache serves both, and its one-shot
-        // release listener fires on the materialize action below
-        // (which contains both the pivot and the token stream)
-        VocabJoin.joinCached(testTok, bitsPivot, Seq("t"), "left")
-          .groupBy(col("doc_id"), col("lang"))
-          .agg(sums.head, sums.tail: _*)
-          .select(col("doc_id"), col("lang"), argmin.as("m"))
-          .select(col("doc_id"), col("lang"),
-            col("m.c_lang").as("pred_lang"),
-            col("m.bits_total").as("bits_total"),
-            (col("lang") === col("m.c_lang")).as("correct"))
-          .transform(graft.engine.Checkpoints.materialize)
-      }
-    m.cnt.unpersist(blocking = false)
-    out
+        .limit(0)
+        .select(col("doc_id"), col("lang"),
+          col("lang").as("pred_lang"), lit(0L).as("bits_total"),
+          (col("lang") === col("lang")).as("correct"))
+        .transform(Checkpoints.materialize)
+    } else if (probe.length > budget) {
+      // fallback past the pivot budget: the docs×classes kernel —
+      // argmin as an AGGREGATE (min over struct(bits_total, c_lang)
+      // is lexicographic = the (bits asc, class asc) tie-break); a
+      // partial+final SortAggregate pair, no added exchange.
+      classicScored(m, testDocs)
+        .groupBy(col("doc_id"), col("lang"))
+        .agg(min(struct(col("bits_total"), col("c_lang"))).as("m"))
+        .select(col("doc_id"), col("lang"),
+          col("m.c_lang").as("pred_lang"),
+          col("m.bits_total").as("bits_total"),
+          (col("lang") === col("m.c_lang")).as("correct"))
+        .transform(Checkpoints.materialize)
+    } else {
+      // the pivot kernel (see the class scaladoc): per-class bits
+      // as |classes| long columns of ONE vocab-sized frame. The
+      // classes sort only fixes column order; the argmin tie-break
+      // itself is array_min's struct comparison (Spark's own string
+      // ordering, the same comparator the classic min(struct) and
+      // the window sort used — no driver-side ordering enters the
+      // law). Pivot columns are renamed positionally (b_0..b_k) so
+      // class strings never need identifier escaping.
+      val classes = probe
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1).toSeq
+      val bitsPivot = m.bits.groupBy("t")
+        .pivot("c_lang", classes.map(_._1)).agg(first(col("b")))
+        .toDF("t" +: classes.indices.map(i => s"b_$i"): _*)
+      val sums = classes.zipWithIndex.map { case ((_, bdef, _), i) =>
+        // a left-join miss (token unseen in the whole train vocab)
+        // nulls every b_i; a token seen only in OTHER classes nulls
+        // this b_i — both coalesce to the class default, exactly
+        // the classic coalesce(b, bdef)
+        sum(coalesce(col(s"b_$i"), lit(bdef))).as(s"sb_$i") }
+      val testTok = testDocs.select(col("doc_id"), col("lang"),
+        explode(tokens(col("text"))).as("t"))
+      val argmin = array_min(array(classes.zipWithIndex.map {
+        case ((c, _, bprior), i) =>
+          struct((lit(bprior) + col(s"sb_$i")).as("bits_total"),
+            lit(c).as("c_lang")) }: _*))
+      // joinCached (round 18, r17 ADVICE 3): plain join's dispatch
+      // count evaluated the vocab-sized pivot aggregate once for
+      // the count and AGAIN as the build side — cheap only because
+      // cnt is cached, but still one whole vocab-sized aggregation
+      // per execution; the cache serves both, and its one-shot
+      // release listener fires on the materialize action below
+      // (which contains both the pivot and the token stream)
+      VocabJoin.joinCached(testTok, bitsPivot, Seq("t"), "left")
+        .groupBy(col("doc_id"), col("lang"))
+        .agg(sums.head, sums.tail: _*)
+        .select(col("doc_id"), col("lang"), argmin.as("m"))
+        .select(col("doc_id"), col("lang"),
+          col("m.c_lang").as("pred_lang"),
+          col("m.bits_total").as("bits_total"),
+          (col("lang") === col("m.c_lang")).as("correct"))
+        .transform(Checkpoints.materialize)
+    }
   }
 
   /** Session conf: class-count budget for [[nbScore]]'s pivoted
@@ -1450,17 +1441,16 @@ object TextAnalysis {
   def nbPivotMaxClasses(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.getOption(NbPivotMaxClassesKey).map(_.toInt).getOrElse(128)
 
-  /** The NB model frames: `cnt` is the CACHED per-(class, token)
-    * train stats the caller must unpersist after materializing what
-    * it derives; `cdef` the ≤|classes|-row per-class constants
-    * (unseen-token default + prior); `bits` the (class, token)
-    * smoothed surprisal table. */
-  private final case class NbModel(cnt: DataFrame,
-                                   cdef: DataFrame, bits: DataFrame)
+  /** The NB model frames: `cdef` the ≤|classes|-row per-class
+    * constants (unseen-token default + prior); `bits` the (class,
+    * token) smoothed surprisal table. Both read the per-(class, token)
+    * train stats, cached in the caller's scope. */
+  private final case class NbModel(cdef: DataFrame, bits: DataFrame)
 
   /** One train-slice pass builds the whole model (shared by the
     * pivot kernel and the fallback docs×classes kernel). */
-  private def nbModel(trainDocs: DataFrame): NbModel = {
+  private def nbModel(scope: Checkpoints.Scope,
+                      trainDocs: DataFrame): NbModel = {
     // NULL-lang train docs are dropped BEFORE the class set is built:
     // a NULL class would ride into the argmin tie-break, where Spark's
     // ascending sort puts NULLs first and DuckDB's ORDER BY puts them
@@ -1472,7 +1462,7 @@ object TextAnalysis {
     val cnt = train
       .select(col("lang").as("c_lang"), explode(tokens(col("text"))).as("t"))
       .groupBy("c_lang", "t").agg(count(lit(1)).as("c"))
-      .cache()
+      .transform(scope.cache)
     val tc = cnt.groupBy("c_lang").agg(sum(col("c")).as("t_c"))
     val v = cnt.select("t").distinct().agg(count(lit(1)).as("v"))
     val cls = train.groupBy(col("lang").as("c_lang"))
@@ -1490,7 +1480,7 @@ object TextAnalysis {
       .select(col("c_lang"), col("t"),
         (length(bin(idiv(col("t_c") + col("v"), col("c") + lit(1L)))) - 1)
           .cast("long").as("b"))
-    NbModel(cnt, cdef, bits)
+    NbModel(cdef, bits)
   }
 
   /** The docs×classes per-(doc, class) scoring over an [[NbModel]] —

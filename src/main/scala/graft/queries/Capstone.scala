@@ -45,9 +45,10 @@ import graft.ops.{Dedup, Packing, Sampling, Similarity, TextAnalysis}
   * several times and every reference duplicates the whole upstream
   * LOGICAL tree (union branches, the CE self-reference, dupClusters'
   * internal scans, the join-back); a cache-only variant of this query
-  * hung the ANALYZER at sf0.01 (plan trees, not data). The packed
-  * output is itself pinned — pin, not cache: [[run]] releases the
-  * upstream waypoint pins, and a cache-only output whose lineage
+  * hung the ANALYZER at sf0.01 (plan trees, not data). Each stage
+  * takes its caches and pins in [[run]]'s [[Checkpoints.Scope]]. The
+  * packed output is itself pinned — pin, not cache: [[run]] releases
+  * the upstream waypoint pins, and a cache-only output whose lineage
   * still referenced them could not recompute a lost block (truncated
   * lineage cannot recompute; the output pin's own few-hundred-row
   * blocks are the accepted cost). Stages 4–6 add ONE broadcast probe
@@ -59,16 +60,16 @@ object Capstone {
   /** Stage 4's decontamination cosine threshold, τ = 0.9 in millionths. */
   private val DecontamTauX1e6: Long = 900000L
 
-  /** Stages 1–3; returns the CACHED clean frame
-    * (doc_id, scrubbed text, lang, source) — caller unpersists. */
-  def cleanDocs(docs: DataFrame): DataFrame =
+  /** Stages 1–3; the CACHED clean frame
+    * (doc_id, scrubbed text, lang, source). */
+  def cleanDocs(scope: Checkpoints.Scope, docs: DataFrame): DataFrame =
     TextAnalysis.lengthGateRetained(
         docs.filter(TextAnalysis.qualityKeep(col("text"))))
       .filter(col("keep"))
       .select(col("doc_id"),
         TextAnalysis.scrubText(col("text")).as("text"),
         col("lang"), col("source"))
-      .cache()
+      .transform(scope.cache)
 
   /** Stage 4; the PINNED post-decontamination frame. Round 16: the
     * contamination check runs through the CELL-PRUNED candidate
@@ -86,12 +87,13 @@ object Capstone {
     * the cell path, a caller at low τ gets the exact kernel instead
     * of silent recall loss, and `graft.decontam.exact` /
     * `graft.decontam.nProbe` are live remediation levers. */
-  def decontam(clean: DataFrame, emb: DataFrame): DataFrame = {
+  def decontam(scope: Checkpoints.Scope, clean: DataFrame,
+               emb: DataFrame): DataFrame = {
     val contam = Similarity.contaminationKeep(
       emb.join(clean.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi").filter(col("vec_id") % 10 =!= 3),
       emb.filter(col("vec_id") % 10 === 3), DecontamTauX1e6)
-    Checkpoints.pin(clean.filter(col("doc_id") % 10 =!= 3)
+    scope.pin(clean.filter(col("doc_id") % 10 =!= 3)
       .join(contam.select(col("vec_id").as("doc_id"),
         col("keep").as("dc_keep")), Seq("doc_id"), "left")
       .filter(coalesce(col("dc_keep"), lit(true)))
@@ -117,10 +119,10 @@ object Capstone {
     * the measurement-bias postmortem (the first A/B read "2×
     * slower" because the classic variant's later reps were served
     * from the cache). */
-  def nbGate(dec: DataFrame): DataFrame = {
+  def nbGate(scope: Checkpoints.Scope, dec: DataFrame): DataFrame = {
     val nbKeep = TextAnalysis.nbLangClassifier(dec)
       .filter(col("correct")).select("doc_id")
-    Checkpoints.pin(dec.filter(pmod(col("doc_id"), lit(10L)) === 7)
+    scope.pin(dec.filter(pmod(col("doc_id"), lit(10L)) === 7)
       .unionByName(dec.join(nbKeep, Seq("doc_id"), "left_semi")))
   }
 
@@ -128,8 +130,8 @@ object Capstone {
     * pinned too (read twice: the mean aggregate and the keep filter —
     * un-pinned, each read re-runs the explode + 256-bucket LM chain)
     * and released before returning. */
-  def ceSelect(sel1: DataFrame): DataFrame = {
-    val ceScores = Checkpoints.pin(
+  def ceSelect(scope: Checkpoints.Scope, sel1: DataFrame): DataFrame = {
+    val ceScores = scope.pin(
       TextAnalysis.crossEntropySelect(sel1,
           col("source") === "src0", buckets = 256, thetaX1000 = 0L)
         .select(col("doc_id"), col("ce_diff_x1000")))
@@ -137,25 +139,26 @@ object Capstone {
       .agg(sum(col("ce_diff_x1000")), count(lit(1))).head()
     val thr = if (mRow.isNullAt(0) || mRow.getLong(1) == 0L) 0L
               else mRow.getLong(0) / mRow.getLong(1)
-    val out = Checkpoints.pin(sel1.join(
+    val out = scope.pin(sel1.join(
       ceScores.filter(col("ce_diff_x1000") <= thr).select("doc_id"),
       Seq("doc_id"), "left_semi"))
-    Checkpoints.release(ceScores)
+    scope.release(ceScores)
     out
   }
 
   /** Stage 7; the PINNED kept-root id frame (post capped dedup). */
-  def dedupKeep(sel2: DataFrame): DataFrame =
-    Checkpoints.pin(Dedup.dupClusters(sel2, 0.8, bucketCap = Some(16))
+  def dedupKeep(scope: Checkpoints.Scope, sel2: DataFrame): DataFrame =
+    scope.pin(Dedup.dupClusters(sel2, 0.8, bucketCap = Some(16))
       .filter(col("keep")).select("doc_id"))
 
   /** Stage 8; the CACHED train split (read four times downstream by
     * the mix and pack aggregates — the q77 discipline). */
-  def trainSplit(keepIds: DataFrame, sel2: DataFrame): DataFrame =
+  def trainSplit(scope: Checkpoints.Scope, keepIds: DataFrame,
+                 sel2: DataFrame): DataFrame =
     Sampling.withSplit(keepIds.join(sel2, Seq("doc_id")))
       .filter(col("split") === "train")
       .select("doc_id", "text", "lang")
-      .cache()
+      .transform(scope.cache)
 
   /** Stages 9–10; the PINNED packed output. */
   def pack(train: DataFrame): DataFrame =
@@ -166,17 +169,13 @@ object Capstone {
 
   /** The full gated composition (q147): all six builders chained,
     * caches and waypoint pins released once the output is pinned. */
-  def run(docs: DataFrame, emb: DataFrame): DataFrame = {
-    val clean = cleanDocs(docs)
-    val dec = decontam(clean, emb)
-    val sel1 = nbGate(dec)
-    val sel2 = ceSelect(sel1)
-    val keep = dedupKeep(sel2)
-    val train = trainSplit(keep, sel2)
-    val out = pack(train)
-    clean.unpersist(blocking = false)
-    train.unpersist(blocking = false)
-    Seq(dec, sel1, sel2, keep).foreach(Checkpoints.release)
-    out
-  }
+  def run(docs: DataFrame, emb: DataFrame): DataFrame =
+    Checkpoints.scoped { scope =>
+      val clean = cleanDocs(scope, docs)
+      val dec = decontam(scope, clean, emb)
+      val sel1 = nbGate(scope, dec)
+      val sel2 = ceSelect(scope, sel1)
+      val keep = dedupKeep(scope, sel2)
+      pack(trainSplit(scope, keep, sel2))
+    }
 }

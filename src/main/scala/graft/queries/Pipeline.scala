@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import graft.engine.{Tables, TableStore}
+import graft.engine.{Checkpoints, Tables, TableStore}
 import graft.streaming.{StatefulSessionize, StreamingBuilders, StreamingDedup, StreamingJoin, StreamingSentenceDedup, StreamingVectorIngest, WaveHarness}
 import graft.ops.{Bpe, Covariance, Dedup, Hashing, IncrementalDedup, IvfIndex, Multimodal, Packing, Pq, Retrieval, Sampling, Sharding, Similarity, Sketches, TextAnalysis}
 import Hashing.{h60Sql, h60bSql, h31Sql, shingles3Sql}
@@ -1474,7 +1474,7 @@ object Pipeline {
     // replays all five in sequence: exact on any dataset, no pins.
     Q("q73_curation_pipeline", "pipeline:curation-e2e",
       curationOracle,
-      (s, dir) => {
+      (s, dir) => Checkpoints.scoped { scope =>
         val docs = docsF(s, dir).select("doc_id", "text")
         val gated = docs.filter(TextAnalysis.qualityKeep(col("text")))
         val sized = TextAnalysis.lengthGateRetained(gated)
@@ -1485,20 +1485,18 @@ object Pipeline {
         // uncached, the whole gate+scrub chain would run three times.
         val clean = sized.select(col("doc_id"),
           TextAnalysis.scrubText(col("text")).as("text"), col("n_tokens"))
-          .cache()
+          .transform(scope.cache)
         val cl = Dedup.dupClusters(clean, 0.8, bucketCap = Some(16))
         val sizes = cl.groupBy("cluster_root")
           .agg(count(lit(1)).as("cluster_size"))
-        val out = cl.filter(col("keep"))
+        cl.filter(col("keep"))
           .join(sizes, Seq("cluster_root"))
           .join(clean.select("doc_id", "n_tokens"), Seq("doc_id"))
           .transform(d => Sampling.withSplit(d))
           .select(col("doc_id"), col("n_tokens"), col("cluster_root"),
             col("cluster_size"), col("bucket"), col("split"))
           .orderBy("doc_id")
-          .transform(graft.engine.Checkpoints.materialize)
-        clean.unpersist(blocking = false)
-        out
+          .transform(Checkpoints.materialize)
       }),
 
     // ── IVF-clustered near-dup pairs (SemDeDup-style): the THIRD
@@ -1597,7 +1595,7 @@ object Pipeline {
     // replays all seven in sequence — exact on any dataset, no pins.
     Q("q77_pretraining_pipeline", "pipeline:pretraining-e2e",
       pretrainOracle,
-      (s, dir) => {
+      (s, dir) => Checkpoints.scoped { scope =>
         val docs = docsF(s, dir).select("doc_id", "text", "lang")
         val gated = docs.filter(TextAnalysis.qualityKeep(col("text")))
         val sized = TextAnalysis.lengthGateRetained(gated)
@@ -1606,7 +1604,7 @@ object Pipeline {
         // the post-dedup join re-reads it (same discipline as q73)
         val clean = sized.select(col("doc_id"),
           TextAnalysis.scrubText(col("text")).as("text"), col("lang"))
-          .cache()
+          .transform(scope.cache)
         val cl = Dedup.dupClusters(clean, 0.8, bucketCap = Some(16))
         // the surviving train corpus is read FOUR times downstream
         // (the mix's count agg, its threshold-join probe side, the
@@ -1617,15 +1615,12 @@ object Pipeline {
             cl.filter(col("keep")).select("doc_id").join(clean, Seq("doc_id")))
           .filter(col("split") === "train")
           .select("doc_id", "text", "lang")
-          .cache()
-        val mixed = Sampling.withMix(train)
-        val out = Packing
-          .packChunks(mixed, 512L, keepCols = Seq("lang", "rate_ppm"))
+          .transform(scope.cache)
+        Packing
+          .packChunks(Sampling.withMix(train), 512L,
+            keepCols = Seq("lang", "rate_ppm"))
           .orderBy("doc_id")
-          .transform(graft.engine.Checkpoints.materialize)
-        clean.unpersist(blocking = false)
-        train.unpersist(blocking = false)
-        out
+          .transform(Checkpoints.materialize)
       }),
 
     // ── the broadcast-join IVF assignment UNDER the hash check: q74
@@ -2208,7 +2203,7 @@ object Pipeline {
         val stream = WaveHarness.waveStream(s, src, StructType.fromDDL(
           "start_time timestamp, year string, month string"))
         StreamingBuilders.runIncrementalUpsert(s,
-          StreamingBuilders.heatMapStream(stream), wh, "q107_heatmap",
+          graft.engine.builders.HeatMap.build(stream), wh, "q107_heatmap",
           Seq("year", "month", "hour"), s"$root/ckpt")
         TableStore.read(s, wh, "q107_heatmap")
           .select(col("year"), col("month"), col("hour").cast("int").as("hour"),
@@ -2366,7 +2361,7 @@ object Pipeline {
         // serve against post-purge state (observed: FILE_NOT_EXIST
         // on the cleared tombstone file). A pin is a LogicalRDD with
         // no catalog reference, so the drop cannot evict it.
-        val tombstoned = graft.engine.Checkpoints.pin(
+        val tombstoned = Checkpoints.pin(
           Pq.ivfPqServe(
             Pq.liveIndex(s, wh, "q135_pqidx"), e, cents, kCells, cb,
             PqDefault, nProbe = 4, nQueries = 20, k = 5, shortlist = 50)

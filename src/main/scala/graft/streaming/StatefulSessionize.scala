@@ -126,16 +126,15 @@ object StatefulSessionize {
     * deterministic session set and overwrites its own partition, so
     * duplicates cannot accumulate. */
   def processBatch(batch: Dataset[Session], batchId: Long,
-                   warehouse: String, table: String): Unit = {
+                   warehouse: String, table: String): Unit =
+      graft.engine.Checkpoints.scoped { scope =>
     // the foreachBatch frame is a VIEW: each action re-runs the whole
-    // micro-batch plan, so persist across the emptiness probe and the
+    // micro-batch plan, so cache across the emptiness probe and the
     // write (the standard multiple-action foreachBatch contract)
-    batch.persist()
+    val rows = scope.cache(batch.toDF())
     // empty batches write nothing (a parquet dir with zero row groups
     // is unreadable, and there is nothing to make idempotent)
-    try if (!batch.isEmpty)
-      WaveHarness.writeBatch(batch.toDF(), batchId, warehouse, table)
-    finally batch.unpersist(blocking = false)
+    if (!rows.isEmpty) WaveHarness.writeBatch(rows, batchId, warehouse, table)
   }
 
   /** Streaming form. Emits CLOSED sessions (append mode); the open

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.engine.TripSchema
 
 /** Structured Streaming forms of the derived tables (SURVEY §2.9).
   *
@@ -12,52 +11,23 @@ import graft.engine.TripSchema
   *   - the StatusDataTable manifest -> the file-source checkpoint
   *     (`Trigger.AvailableNow` processes exactly the new files per run),
   *   - the drop-late-rows policy (`db_importing.py:88`) -> enforced
-  *     upstream by Quality.importTrips (see builder notes on watermarks),
+  *     upstream by Quality.importTrips (see the watermark note below),
   *   - the UPDATE+INSERT upsert -> streaming state in update mode.
   *
   * These are additive capability (the batch pipeline remains the parity
   * surface); they demonstrate that every builder aggregation is
   * incremental-friendly: linegraph/heatmap are pure keyed counts, so
-  * they stream with no semantic change.
+  * the batch builders (`LineGraph.build`, `HeatMap.build`) run
+  * unchanged over a [[WaveHarness.waveStream]] and feed
+  * [[runIncrementalUpsert]]. They need no watermark: they group by
+  * period strings, not an event-time window, so a watermark would
+  * neither drop late rows nor evict state. State stays bounded by the
+  * key cardinality (years x months x hours), and the reference's
+  * late-data policy (drop rows outside the archive year,
+  * `db_importing.py:88`) is enforced upstream by Quality.importTrips
+  * before rows reach the stream.
   */
 object StreamingBuilders {
-
-  /** Streaming source over canonical imported-trips parquet files
-    * appearing under `dir` (schema = canonical + year/month). */
-  def tripStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(
-      TripSchema.canonical.fields ++ Seq(
-        org.apache.spark.sql.types.StructField("year",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("month",
-          org.apache.spark.sql.types.StringType)))
-    spark.readStream.schema(schema).parquet(dir)
-  }
-
-  /** Streaming linegraph: per (year, month) conditional counts.
-    * No watermark: these aggregations group by period strings, not an
-    * event-time window, so a watermark would neither drop late rows nor
-    * evict state (Spark only applies it to windowed/event-time keys).
-    * State stays bounded by the key cardinality (years x months), and
-    * the reference's late-data policy (drop rows outside the archive
-    * year, `db_importing.py:88`) is enforced upstream by
-    * Quality.importTrips before rows reach the stream. */
-  def lineGraphStream(trips: DataFrame): DataFrame =
-    trips
-      .groupBy(col("year"), col("month"))
-      .agg(
-        count(when(col("user_type") === "subscriber", 1)).cast("int")
-          .as("subscriber_count"),
-        count(when(col("user_type") === "customer", 1)).cast("int")
-          .as("customer_count"))
-
-  /** Streaming heatmap: per (year, month, hour) counts. Same
-    * no-watermark rationale as [[lineGraphStream]]. */
-  def heatMapStream(trips: DataFrame): DataFrame =
-    trips
-      .groupBy(col("year"), col("month"),
-        date_format(col("start_time"), "HH").cast("int").as("hour"))
-      .agg(count(lit(1)).cast("int").as("total_count"))
 
   /** NATIVE session windows — the Catalyst-built-in counterpart of
     * [[StatefulSessionize]]'s mapGroupsWithState kernel, gated under

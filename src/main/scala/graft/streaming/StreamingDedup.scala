@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.engine.TableStore
+import graft.engine.{Checkpoints, TableStore}
 import graft.ops.IncrementalDedup
 
 /** Streaming form of the incremental-dedup operator: micro-batches of
@@ -59,7 +59,7 @@ object StreamingDedup {
     * byte-identical, because that is exactly what a post-failure
     * foreachBatch replay does. */
   def processBatch(batch: Dataset[Row], batchId: Long, warehouse: String,
-                   table: String): Unit = {
+                   table: String): Unit = Checkpoints.scoped { scope =>
     val spark = batch.sparkSession
     val history = WaveHarness.otherBatches(spark, warehouse, table,
       batch.schema, batchId)
@@ -88,13 +88,11 @@ object StreamingDedup {
         IncrementalDedup.newDocsExactDirect(history, candidates)
       else IncrementalDedup
         .newDocsExact(history, candidates, BloomExpectedItems, BloomFpp))
-      .transform(graft.engine.Checkpoints.pin)
+      // batch-internal: the scope releases the pin, or a long-running
+      // session would accrue a block-store entry per micro-batch
+      .transform(scope.pin)
     // empty batches write nothing: a parquet dir with zero row
     // groups is unreadable, and there is nothing to make idempotent
     if (!fresh.isEmpty) WaveHarness.writeBatch(fresh, batchId, warehouse, table)
-    // the pin is batch-internal: release it or a long-running session
-    // accrues a block-store entry per micro-batch (Dataset.unpersist
-    // would be a silent no-op on a pinned frame — Checkpoints.release)
-    graft.engine.Checkpoints.release(fresh)
   }
 }

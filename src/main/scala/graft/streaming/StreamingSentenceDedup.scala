@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.engine.Checkpoints
 import graft.ops.Hashing
 
 /** Streaming form of the corpus-global sentence dedup
@@ -53,7 +54,10 @@ object StreamingSentenceDedup {
 
   /** One micro-batch. Public for direct replay-idempotency testing. */
   def processBatch(batch: Dataset[Row], batchId: Long,
-                   warehouse: String): Unit = {
+                   warehouse: String): Unit = Checkpoints.scoped { scope =>
+    // the pins are batch-internal: the scope releases them, or a
+    // long-running session would accrue block-store entries per
+    // micro-batch
     val seen = WaveHarness.otherBatches(batch.sparkSession, warehouse,
         SeenTable, hashSchema, batchId)
       .select(col("h").cast("long").as("h"))
@@ -79,7 +83,7 @@ object StreamingSentenceDedup {
     val keptFlags = firstInBatch
       .join(seen.withColumn("inHist", lit(true)), Seq("h"), "left")
       .withColumn("keep", col("firstHere") && col("inHist").isNull)
-      .transform(graft.engine.Checkpoints.pin)
+      .transform(scope.pin)
     val outDocs = keptFlags
       .groupBy("doc_id").agg(
         count(lit(1)).as("n_sentences"),
@@ -90,18 +94,12 @@ object StreamingSentenceDedup {
       .select(col("doc_id"), col("n_sentences"), col("n_kept"),
         array_join(transform(col("kept"), k => k.getField("sent")), ". ")
           .as("dedup_text"))
-      .transform(graft.engine.Checkpoints.pin)
+      .transform(scope.pin)
     val freshHashes = keptFlags.filter(col("keep"))
       .select(col("h")).distinct()
     if (!outDocs.isEmpty)
       WaveHarness.writeBatch(outDocs, batchId, warehouse, DocsTable)
     if (!freshHashes.isEmpty)
       WaveHarness.writeBatch(freshHashes, batchId, warehouse, SeenTable)
-    // the pins are batch-internal: release them or a long-running
-    // session accrues block-store entries per micro-batch (the same
-    // lifecycle discipline as minhashDupPairs's internal caches;
-    // Dataset.unpersist is a silent no-op on pinned frames)
-    graft.engine.Checkpoints.release(outDocs)
-    graft.engine.Checkpoints.release(keptFlags)
   }
 }

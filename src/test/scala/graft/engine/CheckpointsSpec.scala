@@ -1,7 +1,9 @@
 package graft.engine
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.NONE
 
 /** The pin contract: identical results either way; local blocks by
   * default, files under graft.checkpoint.dir when set (the cluster
@@ -18,6 +20,9 @@ class CheckpointsSpec extends SparkSpec {
     val local = Checkpoints.pin(df)
     assert(local.count() == 100)
     assert(local.queryExecution.optimizedPlan.toString.contains("LogicalRDD"))
+    val bpeDocs = Seq((1L, "low lower lowest"), (2L, "newer newest low"))
+      .toDF("doc_id", "text")
+    val bpeLocal = graft.ops.Bpe.trainMerges(bpeDocs, 4).collect().toSeq
 
     val dir = new java.io.File(tmpDir("reliable-ckpt")).getAbsolutePath
     spark.conf.set(Checkpoints.DirKey, dir)
@@ -39,6 +44,11 @@ class CheckpointsSpec extends SparkSpec {
       val roots = labels.collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(roots == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L))
+      // BPE training pins every round through the same switch
+      val filesBefore = filesUnder(new java.io.File(dir)).size
+      assert(graft.ops.Bpe.trainMerges(bpeDocs, 4).collect().toSeq == bpeLocal)
+      assert(filesUnder(new java.io.File(dir)).size > filesBefore,
+        s"Bpe.trainMerges wrote no checkpoint files under $dir")
     } finally spark.conf.unset(Checkpoints.DirKey)
   }
 
@@ -61,6 +71,46 @@ class CheckpointsSpec extends SparkSpec {
     Checkpoints.release(pinned)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       "release must drop the pinned RDD from the block-store ledger")
+  }
+
+  test("scoped releases every cache and pin its body took, also when " +
+    "the body throws, and keeps the materialized result it returns") {
+    val sc = spark.sparkContext
+    def frame(n: Long) =
+      (1L to n).toDF("id").withColumn("sq", col("id") * col("id"))
+
+    // a body that throws after taking a cache and a pin
+    val before = sc.getPersistentRDDs.keySet
+    var cached: DataFrame = null
+    intercept[IllegalStateException] {
+      Checkpoints.scoped { scope =>
+        cached = scope.cache(frame(30))
+        assert(cached.count() == 30)
+        scope.pin(frame(40))
+        assert((sc.getPersistentRDDs.keySet -- before).size == 2)
+        throw new IllegalStateException("operator failed")
+      }
+    }
+    assert(cached.storageLevel == NONE,
+      "the cache outlived the failed body")
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "the failed body left persistent RDDs behind")
+
+    // a body that returns a materialized result read from both
+    val before2 = sc.getPersistentRDDs.keySet
+    var inter: DataFrame = null
+    val out = Checkpoints.scoped { scope =>
+      inter = scope.cache(frame(50))
+      val pinned = scope.pin(frame(60).withColumnRenamed("sq", "sq2"))
+      inter.join(pinned, "id").transform(Checkpoints.materialize)
+    }
+    assert(inter.storageLevel == NONE,
+      "the intermediate cache outlived the body")
+    assert(out.storageLevel != NONE, "the result lost its cache")
+    assert((sc.getPersistentRDDs.keySet -- before2).size == 1,
+      "only the result block may survive the body")
+    assert(out.count() == 50)
+    out.unpersist(blocking = true)
   }
 
 }

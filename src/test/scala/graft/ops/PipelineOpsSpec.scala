@@ -52,10 +52,9 @@ class PipelineOpsSpec extends SparkSpec {
     val out = Dedup.minhashDupPairs(docs, 0.8)
     assert(out.count() > 0)
     val survivors = spark.sparkContext.getPersistentRDDs.keySet -- before
-    // Checkpoints.pin (localCheckpoint of the verified pairs) is the ONE
-    // storage entry allowed to outlive the call; the shingle-index and
-    // signature caches must be gone (pre-fix they leaked both, growing
-    // the block store on every library call)
+    // the materialized pair set is the ONE storage entry allowed to
+    // outlive the call; the shingle-index and signature caches must be
+    // gone (leaking them grows the block store on every library call)
     assert(survivors.size <= 1,
       s"operator-internal caches leaked: $survivors")
     out.unpersist(blocking = true)
@@ -71,6 +70,35 @@ class PipelineOpsSpec extends SparkSpec {
     assert(survivors.size <= 1,
       s"operator-internal caches leaked: $survivors")
     out.unpersist(blocking = true)
+  }
+
+  test("scoped operators release their operator-internal caches: only " +
+    "the materialized result block survives the call") {
+    val sf = "/root/testdata/sf0.001"
+    val docs = graft.engine.Tables(spark, sf, "documents")
+    val emb = graft.engine.Tables(spark, sf, "embeddings")
+    val cents = IvfIndex.sampleCentroidsK(emb, 8)
+    // minhashDupPairs and simhashDupPairs have their own tests above
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, 0.8)),
+      "containmentPairs" -> (() => Dedup.containmentPairs(docs, 800L)),
+      "IvfIndex.nearDupPairs" ->
+        (() => IvfIndex.nearDupPairs(emb, 0.9, cents)),
+      "TextAnalysis.collocations" -> (() => TextAnalysis.collocations(docs)))
+    for ((name, op) <- ops) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = op()
+      out.count()
+      val survivors = spark.sparkContext.getPersistentRDDs.keySet -- before
+      // the result, materialized through the cache by
+      // Checkpoints.materialize, is the ONE storage entry allowed to
+      // outlive the call; the shingle-index, signature and vocabulary
+      // caches must be gone (leaking them grows the block store on
+      // every library call)
+      assert(survivors.size <= 1,
+        s"$name leaked operator-internal caches: $survivors")
+      out.unpersist(blocking = true)
+    }
   }
 
   test("minhashDupPairsCapped: a boilerplate mega-cluster is pruned to " +

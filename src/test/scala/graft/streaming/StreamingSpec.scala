@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.engine.TableStore
+import graft.engine.builders.{HeatMap, LineGraph}
 import org.apache.spark.sql.functions._
 
 /** Streaming builders: incremental AvailableNow runs over arriving
@@ -20,6 +21,9 @@ class StreamingSpec extends SparkSpec {
       date_format($"st".cast("timestamp"), "yyyy").as("year"),
       date_format($"st".cast("timestamp"), "MMM").as("month"))
 
+  private def tripStream(src: String) =
+    WaveHarness.waveStream(spark, src, tripsDf().schema)
+
   test("streaming heatmap: incremental AvailableNow runs maintain the warehouse table") {
     val src = tmpDir("stream-src")
     val ckpt = tmpDir("stream-ckpt")
@@ -30,7 +34,7 @@ class StreamingSpec extends SparkSpec {
       .write.mode("append").parquet(src)
 
     def drain(): Unit = StreamingBuilders.runIncrementalUpsert(spark,
-      StreamingBuilders.heatMapStream(StreamingBuilders.tripStream(spark, src)),
+      HeatMap.build(tripStream(src)),
       wh, "HeatMapStream", Seq("year", "month", "hour"), ckpt)
 
     drain()
@@ -186,12 +190,12 @@ class StreamingSpec extends SparkSpec {
       ("2021-01-06 10:00:00", "customer"))
     data.write.mode("append").parquet(src)
     StreamingBuilders.runIncrementalUpsert(spark,
-      StreamingBuilders.lineGraphStream(StreamingBuilders.tripStream(spark, src)),
+      LineGraph.build(tripStream(src)),
       wh, "LineGraphStream", Seq("year", "month"), ckpt)
     val streamed = TableStore.read(spark, wh, "LineGraphStream")
       .select("year", "month", "subscriber_count", "customer_count")
       .as[(String, String, Int, Int)].collect().toSet
-    val batch = graft.engine.builders.LineGraph.build(data)
+    val batch = LineGraph.build(data)
       .as[(String, String, Int, Int)].collect().toSet
     assert(streamed == batch)
   }
