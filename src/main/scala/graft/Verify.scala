@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.engine.Checkpoints
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -28,23 +29,19 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // leak census: one line per query that left state behind (its
-      // returned result's cache counts). Each query's result stays
-      // cached and a few operators keep frames by design (the
-      // surprisal and backoff tables, VocabJoin.joinCached), so most
-      // lines are expected; the count is the baseline for a
-      // registry-level scope.
-      val cachedPlans = !spark.sharedState.cacheManager.isEmpty
-      val rdds = spark.sparkContext.getPersistentRDDs.size
-      if (cachedPlans || rdds > 0)
+      // hygiene gate: the query scope frees every cache and pin the
+      // query took once its write completes, so none should be left
+      // (expected leak count: 0). A leaking query's result is deleted,
+      // so scripts/check.py reports it missing.
+      if (!Checkpoints.awaitClean(spark)) {
         System.err.println(s"[verify] leak: $name left CacheManager " +
-          s"entries=$cachedPlans, persistent RDDs=$rdds")
-      // isolate queries from each other's cached state, same as Bench:
-      // without the clear, the 45 queries the census names at sf0.01
-      // would carry block-store entries through the rest of the run.
-      // Checkpointed pins are RDD-level persists that clearCache
-      // cannot see — drop them at the RDD ledger too (Bench needs
-      // neither: it runs each query in a fresh session)
+          s"entries=${!spark.sharedState.cacheManager.isEmpty}, " +
+          s"persistent RDDs=${spark.sparkContext.getPersistentRDDs.size}")
+        org.apache.commons.io.FileUtils.deleteDirectory(
+          new java.io.File(s"$outDir/$name"))
+      }
+      // a leak must not carry into the next query: clearCache misses
+      // checkpointed pins (RDD-level persists), so drop those too
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

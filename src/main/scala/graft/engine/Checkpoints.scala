@@ -1,10 +1,15 @@
 package graft.engine
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.storage.StorageLevel
 
-/** Eager result pinning with a cluster-safe escape hatch.
+/** Eager result pinning with a cluster-safe escape hatch, and the two
+  * owners that free what is pinned or cached: an operator's
+  * [[scoped]] block and a registered query's [[query]] scope.
   *
   * Several operators pin an intermediate result and truncate its
   * lineage (LSH dup edges, contamination reports, converged component
@@ -51,107 +56,92 @@ object Checkpoints {
   /** Materialize `df` eagerly into the block cache WITHOUT truncating
     * lineage: cache + count. The count executes through any
     * still-cached upstream frames (the plan cache), so an operator can
-    * materialize its small result and then release its internal caches
-    * at the cost of one cached-path execution — taken through a
-    * [[scoped]] block, they are released with the matching call, also
-    * when the operator throws. Prefer this over [[pin]] for
-    * "materialize before unpersist": cost-neutral at query time
-    * (honestly measured q23 2.2 -> 1.8 s, q22/q64 unchanged), and
-    * lineage SURVIVES, so an evicted or executor-lost block recomputes
-    * correctly where pin's truncated lineage fails the query. Reserve
-    * [[pin]] for where truncation is the point (the RDD boundary in
-    * componentLabels).
+    * materialize its small result and then let its [[scoped]] block
+    * release its internal caches at the cost of one cached-path
+    * execution. Prefer this over [[pin]] for "materialize before
+    * unpersist": cost-neutral at query time (measured q23 2.2 -> 1.8 s,
+    * q22/q64 unchanged), and lineage SURVIVES, so an evicted or
+    * executor-lost block recomputes where a pin's truncated lineage
+    * fails the query. Reserve [[pin]] for where truncation is the point.
     *
-    * Benchmark caveat (learned the hard way): the block cache dedupes
-    * by logical plan, so a SECOND run of the same query reads this
-    * call's blocks instead of recomputing — any harness timing
-    * steady-state plan cost must clearCache between runs
-    * (Bench.runOne does). */
-  def materialize(df: DataFrame): DataFrame = {
-    val out = df.cache()
-    out.count()
-    out
-  }
+    * Like [[cache]] and [[pin]], the frame belongs to the [[query]]
+    * scope being built, if any, which frees it after the serving
+    * action, so a second run recomputes instead of reading this call's
+    * blocks (the block cache dedupes by logical plan). */
+  def materialize(df: DataFrame): DataFrame = owner.materialize(df)
 
-  /** Release a frame returned by [[pin]] (or `localCheckpoint`).
+  /** `df.cache()`, owned like [[materialize]]. */
+  def cache(df: DataFrame): DataFrame = owner.cache(df)
+
+  /** Materialize `df` eagerly and truncate its lineage: local blocks
+    * by default, a reliable checkpoint when [[DirKey]] is set. Owned
+    * like [[materialize]]; `Dataset.unpersist` does NOT free it (see
+    * [[release]]). */
+  def pin(df: DataFrame): DataFrame = owner.pin(df)
+
+  /** Release a frame returned by [[pin]] (or `localCheckpoint`), as a
+    * [[Scope]] does for every pin it took. `Dataset.unpersist` silently
+    * does nothing here: it only evicts CacheManager entries, and a
+    * checkpointed frame's persistence lives on the RDD that
+    * `localCheckpoint` registered directly with the block manager.
     *
-    * `Dataset.unpersist` is the WRONG tool and silently does nothing
-    * here (verified empirically, round 13): it only evicts
-    * CacheManager entries for the dataset's plan, and a checkpointed
-    * frame's persistence lives on the underlying RDD — which
-    * `localCheckpoint` registered directly with the block manager,
-    * bypassing the CacheManager. Until this call existed, every
-    * "release" of a pinned frame in the codebase was a no-op and
-    * pinned blocks accumulated until the ContextCleaner happened to
-    * GC them — exactly the executor-resident leak the round-12
-    * verdict flagged on the Lloyd loops.
-    *
-    * Walks the analyzed plan for `LogicalRDD` leaves and unpersists
-    * each persisted RDD, so call it ONLY with the pinned frame itself
-    * (or a result whose every embedded pin is being retired — e.g.
-    * [[graft.ops.IvfIndex.lloydTrainStats]]'s output, which embeds
-    * one stats pin per iteration). Passing a plan that still shares
+    * Unpersists every persisted `LogicalRDD` leaf of the analyzed plan,
+    * so call it ONLY with the pinned frame itself: a plan that shares
     * an upstream pin with live consumers would release their blocks
-    * too: truncated lineage cannot recompute, and the next read
-    * fails. Reliable-checkpoint pins (DirKey set) keep their files —
-    * their RDDs are not block-manager-persisted, so this is a
-    * harmless no-op for them (file lifecycle stays with the
-    * ContextCleaner / external TTL, as documented above). */
+    * too, and truncated lineage cannot recompute them. Reliable
+    * checkpoints (DirKey set) keep their files: their RDDs are not
+    * block-manager-persisted (file lifecycle as documented above). */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
       case lr: org.apache.spark.sql.execution.LogicalRDD
-          if lr.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE =>
+          if lr.rdd.getStorageLevel != StorageLevel.NONE =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
 
-  /** Materialize `df` eagerly and truncate its lineage. Local blocks
-    * by default; a reliable checkpoint when [[DirKey]] is set.
-    * An operator-internal pin is taken with [[Scope.pin]] inside a
-    * [[scoped]] block, which releases it with [[release]] —
-    * `Dataset.unpersist` does NOT free pinned blocks (see release). */
-  def pin(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    spark.conf.getOption(DirKey) match {
-      case Some(dir) =>
-        val sc = spark.sparkContext
-        synchronized {
-          if (appliedDir.get(sc) != dir || sc.getCheckpointDir.isEmpty) {
-            sc.setCheckpointDir(dir)
-            appliedDir.put(sc, dir)
-          }
-        }
-        df.checkpoint(eager = true)
-      case None => df.localCheckpoint(eager = true)
-    }
-  }
-
-  /** The intermediates one operator takes. Each is recorded with the
-    * call that frees it — `unpersist` for a cache or an RDD persist,
-    * [[release]] for a pin — and [[scoped]] frees whatever is still
-    * recorded when its body returns or throws. */
+  /** The intermediates one operator or one query takes. Each is
+    * recorded with the call that frees it — `unpersist` for a cache or
+    * an RDD persist, [[release]] for a pin — and closing the scope
+    * frees whatever is still recorded, newest first. */
   final class Scope private[Checkpoints] {
     private val taken =
       scala.collection.mutable.ArrayBuffer.empty[(AnyRef, () => Unit)]
 
-    private def record[A <: AnyRef](a: A)(free: A => Unit): A = {
-      taken += (a -> (() => free(a)))
-      a
-    }
-
-    private def uncache(df: DataFrame): Unit = df.unpersist(blocking = false)
+    private[Checkpoints] def record[A <: AnyRef](a: A)(free: A => Unit): A =
+      synchronized {
+        taken += (a -> (() => free(a)))
+        a
+      }
 
     /** `df.cache()`, unpersisted when the scope closes. */
-    def cache(df: DataFrame): DataFrame = record(df.cache())(uncache)
+    def cache(df: DataFrame): DataFrame =
+      record(df.cache())(_.unpersist(blocking = false))
 
-    /** [[Checkpoints.materialize]] for an intermediate: cached and
+    /** [[Checkpoints.materialize]] into this scope only: cached and
       * counted now, unpersisted when the scope closes. */
-    def materialize(df: DataFrame): DataFrame =
-      record(Checkpoints.materialize(df))(uncache)
+    def materialize(df: DataFrame): DataFrame = {
+      val out = cache(df)
+      out.count()
+      out
+    }
 
-    /** [[Checkpoints.pin]], released when the scope closes. */
-    def pin(df: DataFrame): DataFrame =
-      record(Checkpoints.pin(df))(Checkpoints.release)
+    /** [[Checkpoints.pin]] into this scope only, released when the
+      * scope closes. */
+    def pin(df: DataFrame): DataFrame = record {
+      val spark = df.sparkSession
+      spark.conf.getOption(DirKey) match {
+        case Some(dir) =>
+          val sc = spark.sparkContext
+          appliedDir.synchronized {
+            if (appliedDir.get(sc) != dir || sc.getCheckpointDir.isEmpty) {
+              sc.setCheckpointDir(dir)
+              appliedDir.put(sc, dir)
+            }
+          }
+          df.checkpoint(eager = true)
+        case None => df.localCheckpoint(eager = true)
+      }
+    }(Checkpoints.release)
 
     /** `rdd.persist(MEMORY_AND_DISK)`, unpersisted when the scope
       * closes. */
@@ -162,12 +152,14 @@ object Checkpoints {
     /** Free one recorded intermediate now — a loop-internal one that a
       * newer one supersedes, so memory stays bounded by one iteration.
       * A frame the scope did not take is left alone. */
-    def release(a: AnyRef): Unit = taken.indexWhere(_._1 eq a) match {
-      case -1 => ()
-      case i => taken.remove(i)._2()
+    def release(a: AnyRef): Unit = synchronized {
+      taken.indexWhere(_._1 eq a) match {
+        case -1 => ()
+        case i => taken.remove(i)._2()
+      }
     }
 
-    private[Checkpoints] def close(): Unit = {
+    private[Checkpoints] def close(): Unit = synchronized {
       taken.reverseIterator.foreach(_._2())
       taken.clear()
     }
@@ -177,10 +169,72 @@ object Checkpoints {
     * intermediates: every cache and pin taken through the scope is
     * freed, newest first, when `body` returns or throws. The frame
     * `body` returns is not the scope's — a result that reads an
-    * intermediate must [[materialize]] (or pin outside the scope)
-    * before it returns, as the intermediate is gone after. */
+    * intermediate must [[materialize]] (or [[pin]]) before it
+    * returns, as the intermediate is gone after; the query scope owns
+    * that result. */
   def scoped[T](body: Scope => T): T = {
     val scope = new Scope
     try body(scope) finally scope.close()
+  }
+
+  // The query scope being built on this thread — a DynamicVariable is
+  // inherited, so a streaming drain's foreachBatch thread started by
+  // the build records into it too — and, per session, the last built
+  // query's scope, freed at the latest by the session's next build.
+  private val building = new scala.util.DynamicVariable[Scope](null)
+  private val unserved = new java.util.WeakHashMap[SparkSession, Scope]()
+  private val markers = new java.util.concurrent.atomic.AtomicLong()
+
+  /** The scope a top-level [[materialize]]/[[cache]]/[[pin]] records
+    * into: the query being built, else a throwaway one (no owner). */
+  private def owner: Scope = Option(building.value).getOrElse(new Scope)
+
+  /** Build one query in a query scope that owns every [[materialize]],
+    * [[cache]] and [[pin]] taken (not through a [[Scope]]'s own
+    * methods) while `build` runs. The scope is freed after the first
+    * completed action over the returned frame, which carries a unique
+    * `SubqueryAlias` marker: an action issued during the build cannot
+    * contain it, so neither it nor its late listener event releases
+    * early. A build that throws frees its scope at once; a frame that
+    * never runs has its scope freed by the session's next build. So a
+    * returned frame serves one action — build again for another (a
+    * pin's truncated lineage cannot be recomputed once freed). */
+  def query(spark: SparkSession)(build: => DataFrame): DataFrame = {
+    unserved.synchronized(Option(unserved.remove(spark))).foreach(_.close())
+    val scope = new Scope
+    val out =
+      try building.withValue(scope)(build)
+      catch { case e: Throwable => scope.close(); throw e }
+    val marker = s"graft_query_${markers.incrementAndGet()}"
+    val lm = spark.listenerManager
+    val served = new QueryExecutionListener {
+      private def fire(qe: QueryExecution): Unit =
+        if (qe.analyzed.exists {
+              case a: SubqueryAlias => a.alias == marker
+              case _ => false
+            }) scope.close()
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = fire(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = fire(qe)
+    }
+    lm.register(scope.record(served)(lm.unregister))
+    unserved.synchronized(unserved.put(spark, scope))
+    out.as(marker)
+  }
+
+  /** How long [[awaitClean]] waits for a query scope's release, which
+    * runs on the listener bus once the serving action's event lands. */
+  val ReleaseWaitMs = 5000L
+
+  /** Whether `spark` holds no cached plan and no persistent RDD,
+    * polling for up to [[ReleaseWaitMs]]; returns at once when the
+    * session is already clean. */
+  def awaitClean(spark: SparkSession): Boolean = {
+    def clean = spark.sharedState.cacheManager.isEmpty &&
+      spark.sparkContext.getPersistentRDDs.isEmpty
+    val deadline = System.nanoTime() + ReleaseWaitMs * 1000000L
+    while (!clean && System.nanoTime() < deadline) Thread.sleep(10)
+    clean
   }
 }

@@ -619,10 +619,8 @@ object Dedup {
 
     import session.implicits._
     // pin the converged labels into a checkpointed DataFrame (the
-    // result reads it) so the scope can free the RDD blocks: RDD-level
-    // persists are invisible to spark.catalog.clearCache(), so leaving
-    // them behind accumulates block-store memory across repeated calls
-    // in a long session
+    // result reads it, and the query scope frees it after the serving
+    // action) so the operator scope can free the RDD blocks
     val labeledAll = Checkpoints.pin(labels.toDF("id", "root"))
     // the output universe is exactly `nodes`: edge endpoints outside
     // nodes participated in propagation (their labels kept the graph
@@ -703,10 +701,9 @@ object Dedup {
     // truncate lineage instead: the pair derivation (the one
     // corpus-sized term) materializes exactly once, and every sweep
     // plans against constant-size LogicalRDD leaves (measured 0.2 s
-    // per sweep after the pin rewrite). Pins embedded in the returned
-    // frame (deg + each r_k) are released by the caller via
-    // Checkpoints.release(result) — the lloydTrainStats contract;
-    // build-internal pins (edges, outShare) are the scope's.
+    // per sweep after the pin rewrite). Pins the returned frame reads
+    // (deg + each r_k) are the query scope's; build-internal pins
+    // (edges, outShare) are the operator scope's.
     val edges = scope.pin(pairs
       .select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v"))))

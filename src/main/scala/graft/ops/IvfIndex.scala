@@ -465,11 +465,8 @@ object IvfIndex {
       // trainer hit exactly this); pin truncates to the block RDD
       // and upgrades to a reliable checkpoint when
       // graft.checkpoint.dir is set (the cluster story)
-      val next = Checkpoints.pin(
-        lloydUpdate(cents, stats, scale))
-      // the superseded pin is safe to free once `next` materialized
-      // (pin is eager); Dataset.unpersist would be a silent no-op
-      // here — see Checkpoints.release
+      val next = Checkpoints.pin(lloydUpdate(cents, stats, scale))
+      // free the superseded pin once `next` materialized (pin is eager)
       prev.foreach(Checkpoints.release)
       prev = Some(next)
       cents = next
@@ -526,11 +523,10 @@ object IvfIndex {
       // stats are pinned too: the output union and the next
       // iteration's update both read them, and pinning keeps every
       // iteration's plan constant-size (see refineCentroidsDf).
-      // The stats pins are NOT released here — the returned frame
-      // reads them lazily; a caller retiring the result releases
-      // them all at once with Checkpoints.release(result). The
-      // cents pins ARE the scope's, each superseded one freed as
-      // soon as its successor materializes.
+      // The stats pins are the query scope's — the returned frame
+      // reads them lazily. The cents pins are the operator scope's,
+      // each superseded one freed as soon as its successor
+      // materializes.
       val stats = Checkpoints.pin(
         lloydCellStatsBase(base, cents, chunkSize, Some(k), scaleBits))
       val tagged = stats.withColumn("iter", lit(it))
@@ -567,11 +563,10 @@ object IvfIndex {
     val scale = (1L << scaleBits).toDouble
     val base = scope.cache(nonZeroBase(embeddings).select("vec_id", "v"))
     // every pin this loop takes is released before return, on BOTH
-    // exits (converged and maxIters): the stats frames are the
-    // scope's, and each superseded cents pin is released once its
-    // successor materializes. Only the RETURNED cents keeps its pin —
-    // the caller owns it (IvfLloydSpec pins the ledger:
-    // getPersistentRDDs grows by at most that one entry).
+    // exits (converged and maxIters), except the RETURNED cents: the
+    // stats frames are the scope's, and each superseded cents pin is
+    // released once its successor materializes (IvfLloydSpec pins the
+    // ledger: getPersistentRDDs grows by at most one entry).
     var prevStats: Option[DataFrame] = None
     var cents = centroidsDf.select(col("cid"),
       transform(col("v"), x => x.cast("double")).as("v"))
@@ -591,8 +586,7 @@ object IvfIndex {
       }
       it += 1
       if (!converged) {
-        val next = Checkpoints.pin(
-          lloydUpdate(cents, stats, scale))
+        val next = Checkpoints.pin(lloydUpdate(cents, stats, scale))
         prevCents.foreach(Checkpoints.release)
         prevCents = Some(next)
         cents = next

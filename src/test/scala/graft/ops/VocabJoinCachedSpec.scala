@@ -1,13 +1,14 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.engine.Checkpoints
 
 /** The vocabulary-join forms the lexical kernels ship: q91's
   * reference overlap serves its vocabulary from
   * [[VocabJoin.joinCached]] (PLANS.md round 17: 1.22 → 0.85 s at
-  * sf0.1) and releases that cache after the serving action, while
-  * q131/q136 stay on [[VocabJoin.joinBounded]], whose only extra
-  * action is the HLL bound. Their rows are pinned by RetrievalSpec,
+  * sf0.1), a cache its query scope releases after the serving
+  * action, while q131/q136 stay on [[VocabJoin.joinBounded]], whose
+  * only extra action is the HLL bound. Their rows are pinned by RetrievalSpec,
   * PipelineOpsSpec and VocabJoinSpec. */
 class VocabJoinCachedSpec extends SparkSpec {
   import spark.implicits._
@@ -33,43 +34,39 @@ class VocabJoinCachedSpec extends SparkSpec {
 
   test("round 18 lifecycle: the q91 vocab cache is RELEASED after the " +
     "serving action completes in a held-open session") {
-    // r17 verdict item 7 / ADVICE 1: joinCached left one vocab-sized
-    // CacheManager entry per call for the session's lifetime; the
-    // one-shot QueryExecutionListener must unpersist it once the
-    // serving action (vocab AND stream subtrees present) completes.
+    // a held-open session must not keep one vocab-sized CacheManager
+    // entry per call: the query scope unpersists it once the serving
+    // action completes
     spark.sharedState.cacheManager.clearCache()
-    val out = TextAnalysis.referenceOverlapScore(corpus, "src0", 1)
+    val out = Checkpoints.query(spark)(
+      TextAnalysis.referenceOverlapScore(corpus, "src0", 1))
     assert(!spark.sharedState.cacheManager.isEmpty,
       "fixture: the dispatch count must have populated the cache")
     out.write.format("noop").mode("overwrite").save() // the serving action
-    // listener delivery is async — poll bounded
-    val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-    while (System.nanoTime() < deadline &&
-           !spark.sharedState.cacheManager.isEmpty) Thread.sleep(100)
-    assert(spark.sharedState.cacheManager.isEmpty,
+    assert(Checkpoints.awaitClean(spark),
       "the vocab cache must not linger after the serving action")
   }
 
   test("round 18 lifecycle: the over-budget joinCached branch never " +
     "parks the vocabulary in the block store") {
-    // ADVICE 2: the old form cached the frame BEFORE the size
-    // dispatch, materializing into executor memory exactly the
-    // vocabulary the shuffle_hash branch exists to keep out of it.
+    // caching the frame BEFORE the size dispatch materializes into
+    // executor memory exactly the vocabulary the shuffle_hash branch
+    // exists to keep out of it — so the build itself must drop it,
+    // before any serving action lets the query scope free anything
     spark.sharedState.cacheManager.clearCache()
     spark.conf.set("graft.vocab.broadcastMaxRows", "0")
     try {
-      val out = TextAnalysis.referenceOverlapScore(corpus, "src0", 1)
+      val out = Checkpoints.query(spark)(
+        TextAnalysis.referenceOverlapScore(corpus, "src0", 1))
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the dispatch-count cache must be dropped on the shuffled branch")
       val plan = out.queryExecution.executedPlan.toString
       assert(plan.contains("ShuffledHashJoin"),
         s"over-budget branch must shuffle-hash join:\n$plan")
       assert(!plan.contains("InMemoryTableScan"),
         s"over-budget branch must not serve from a cache:\n$plan")
       out.collect()
-      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
-      while (System.nanoTime() < deadline &&
-             !spark.sharedState.cacheManager.isEmpty) Thread.sleep(100)
-      assert(spark.sharedState.cacheManager.isEmpty,
-        "the dispatch-count cache must be dropped on the shuffled branch")
+      assert(Checkpoints.awaitClean(spark))
     } finally spark.conf.unset("graft.vocab.broadcastMaxRows")
   }
 

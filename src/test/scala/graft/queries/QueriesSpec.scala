@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{SparkEntry, SparkSpec}
 import graft.ops.Similarity
-import graft.engine.Tables
+import graft.engine.{Checkpoints, Tables}
 
 /** Smoke + semantics over the registered capability queries (sf0.001)
   * and ANN recall vs the exact baseline. */
@@ -17,19 +17,39 @@ class QueriesSpec extends SparkSpec {
   /** What one build-twice sweep over the registry saw of each query:
     * whether the first build's executed plan holds a cartesian product
     * or a nested-loop join (read before its collect), how many rows that
-    * collect returned, and whether a second build returned the same
-    * rows. The three sweep tests below assert on these records, so the
-    * registry is built twice in all, not once per test. */
+    * collect returned, whether the session was clean after it, and
+    * whether a second build returned the same rows. The sweep tests
+    * below assert on these records, so the registry is built twice in
+    * all, not once per test. The session starts clean, and the second
+    * build runs only after the first one's query scope freed its state,
+    * so it recomputes instead of reading the first build's blocks. */
   private case class Swept(name: String, cartesian: Boolean, bnlj: Boolean,
-      rows: Int, same: Boolean)
+      rows: Int, clean: Boolean, same: Boolean)
 
-  private lazy val sweep: Seq[Swept] = Registry.all.map { q =>
-    val first = q.fn(spark, sf)
-    val plan = first.queryExecution.executedPlan.toString
-    val a = first.collect().map(_.toString).toSeq
-    val b = q.fn(spark, sf).collect().map(_.toString).toSeq
-    Swept(q.name, plan.contains("CartesianProduct"),
-      plan.contains("BroadcastNestedLoopJoin"), a.size, a == b)
+  private lazy val sweep: Seq[Swept] = {
+    def clearSession(): Unit = {
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+    }
+    clearSession()
+    Registry.all.map { q =>
+      val first = q.fn(spark, sf)
+      val plan = first.queryExecution.executedPlan.toString
+      val a = first.collect().map(_.toString).toSeq
+      val clean = Checkpoints.awaitClean(spark)
+      if (!clean) clearSession() // one leak must not fail every query after it
+      val b = q.fn(spark, sf).collect().map(_.toString).toSeq
+      Swept(q.name, plan.contains("CartesianProduct"),
+        plan.contains("BroadcastNestedLoopJoin"), a.size, clean, a == b)
+    }
+  }
+
+  test("every registered query leaves the session clean after its " +
+    "serving action") {
+    // its query scope frees every cache and pin the build took
+    val leaks = sweep.filterNot(_.clean).map(_.name)
+    assert(leaks.isEmpty, s"left cached plans or persistent RDDs: $leaks")
   }
 
   test("every registered query returns a non-empty deterministic result") {
