@@ -135,42 +135,40 @@ object Dedup {
       .withColumn("rk", row_number().over(wr))
       .filter(col("rk") <=
         col("n") - ceil(col("n") * lit(minJ) - lit(1e-9)) + 1)
-      .select("doc_id", "s")
+      .select("doc_id", "s", "n")
+    // each endpoint's full size n rides on its prefix rows into the pair
     val cand = ranked.as("a").join(ranked.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n").as("n_a"), col("b.n").as("n_b"))
       .distinct()
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    verifyPairsExact(sh, sizes, cand, minJ)
+    verifyPairsExact(sh, cand, minJ)
       .transform(Checkpoints.materialize)
   }
 
   /** Exact-Jaccard verification of candidate pairs against the
     * inverted index via the streaming intersection (see the shape
-    * discussion at [[minhashDupPairs]]): replicate each pair by
+    * discussion at [[minhashVerifiedPairs]]): replicate each pair by
     * doc_a's shingles, equi-join (doc_b, shingle), count. The index
     * branches are re-projected with FRESH column names — `cand`
     * typically derives from `sh`, making this a triple self-join where
     * qualified refs can collapse into tautologies (see scaladoc in
-    * the MinHash path). The caller supplies `sizes` (doc_id, n), each
-    * doc's row count in `sh`. Returns the standard 6-column shape;
-    * callers own cache/pin lifecycle. */
-  private def verifyPairsExact(sh: DataFrame, sizes: DataFrame,
-                               cand: DataFrame, minJ: Double): DataFrame = {
+    * the MinHash path). `cand` is (doc_a, doc_b, n_a, n_b), each n the
+    * endpoint's full distinct-shingle count; `sh` must hold every
+    * shingle of every endpoint (other docs' rows are never read).
+    * Returns the standard 6-column shape; callers own cache/pin
+    * lifecycle. */
+  private def verifyPairsExact(sh: DataFrame, cand: DataFrame,
+                               minJ: Double): DataFrame = {
     val shA = sh.select(col("doc_id").as("va_doc"), col("s").as("va_s"))
     val shB = sh.select(col("doc_id").as("vb_doc"), col("s").as("vb_s"))
-    val common = cand
-      .join(shA, col("doc_a") === col("va_doc"))
-      .select(col("doc_a"), col("doc_b"), col("va_s"))
-      .join(shB, col("doc_b") === col("vb_doc") && col("va_s") === col("vb_s"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("common"))
     // pairs with an empty intersection drop out of the inner join —
     // correct for minJ > 0 (their Jaccard is 0 < minJ)
-    common
-      .join(sizes.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(sizes.as("y"), col("doc_b") === col("y.doc_id"))
-      .select(col("doc_a"), col("doc_b"), col("common"),
-        col("x.n").as("n_a"), col("y.n").as("n_b"))
+    cand
+      .join(shA, col("doc_a") === col("va_doc"))
+      .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"), col("va_s"))
+      .join(shB, col("doc_b") === col("vb_doc") && col("va_s") === col("vb_s"))
+      .groupBy("doc_a", "doc_b", "n_a", "n_b").agg(count(lit(1)).as("common"))
       .withColumn("jacc", col("common").cast("double") /
         (col("n_a") + col("n_b") - col("common")))
       .filter(col("jacc") >= minJ)
@@ -272,15 +270,8 @@ object Dedup {
   /** MinHash signatures: 16 universal hashes over shingle h31 values.
     * One row per doc with columns doc_id, n, mh_0..mh_15, where n is
     * the doc's distinct-shingle count; single shuffle. */
-  def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashSignaturesFromIndex(shingleIndex(docs))
-
-  /** [[minhashSignatures]] over an already-built (doc_id, s) shingle
-    * index — the shape [[minhashDupPairs]] needs so the signature and
-    * verification branches share ONE tokenization pass; n counts the
-    * doc's index rows (distinct shingles), the verification sizes. */
-  def minhashSignaturesFromIndex(index: DataFrame): DataFrame = {
-    val sh = index.withColumn("h", h31(col("s")))
+  def minhashSignatures(docs: DataFrame): DataFrame = {
+    val sh = shingleIndex(docs).withColumn("h", h31(col("s")))
     val aggs = minhashCoeffs.zipWithIndex.map { case ((a, b), i) =>
       min(universalHash(col("h"), a, b)).as(s"mh_$i")
     }
@@ -288,7 +279,8 @@ object Dedup {
   }
 
   /** LSH banding: b=8 bands of r=2 rows. Returns exploded
-    * (doc_id, band_idx, band_val); docs sharing any band are candidates.
+    * (doc_id, n, band_idx, band_val), n carried from `sigs`; docs
+    * sharing any band are candidates.
     * P(miss | J=0.8) = (1 - 0.8^2)^8 ~ 2e-4 per pair; candidates are
     * exactly verified afterwards so precision is 1.0. */
   def lshBands(sigs: DataFrame): DataFrame = {
@@ -296,20 +288,15 @@ object Dedup {
       struct(lit(j).as("band_idx"),
         (col(s"mh_${2 * j}") * lit(P31) + col(s"mh_${2 * j + 1}")).as("band_val"))
     }
-    sigs.select(col("doc_id"), explode(array(bands: _*)).as("b"))
-      .select(col("doc_id"), col("b.band_idx").as("band_idx"),
+    sigs.select(col("doc_id"), col("n"), explode(array(bands: _*)).as("b"))
+      .select(col("doc_id"), col("n"), col("b.band_idx").as("band_idx"),
         col("b.band_val").as("band_val"))
   }
 
   /** MinHash-LSH near-dup pairs, exactly verified: candidates from band
-    * buckets, then exact Jaccard on the candidates' shingle sets via
-    * array_intersect. Same output shape as [[ngramJaccardPairs]].
-    *
-    * The corpus is tokenized ONCE: the cached inverted shingle index
-    * feeds both the signature branch and the verification sets (which
-    * are themselves self-joined as x and y) — without the shared cache
-    * the tokenize/shingle pipeline ran up to three times per execution,
-    * three full corpus passes at scale. */
+    * buckets, then exact Jaccard on the candidates' shingle sets via a
+    * streaming intersection over the shingle index of the candidates'
+    * endpoints only. Same output shape as [[ngramJaccardPairs]]. */
   def minhashDupPairs(docs: DataFrame, minJ: Double): DataFrame =
     minhashVerifiedPairs(docs, minJ, bucketCap = None)
 
@@ -336,6 +323,12 @@ object Dedup {
     minhashVerifiedPairs(docs, minJ, bucketCap = Some(maxBucket))
   }
 
+  /** The sketch decides which exact data is read: the corpus is
+    * tokenized once for the signatures, and exact verification reads
+    * the shingle index of the candidate pairs' endpoints only — every
+    * endpoint's full shingle set, so the result is the one a
+    * whole-corpus index gives. Each endpoint's n rides on its band
+    * rows into the pair. */
   private def minhashVerifiedPairs(docs: DataFrame, minJ: Double,
                                    bucketCap: Option[Int]): DataFrame =
       Checkpoints.scoped { scope =>
@@ -345,11 +338,15 @@ object Dedup {
     // excluded explicitly rather than silently returning fewer rows
     // than the old array_intersect formulation did
     require(minJ > 0.0 && minJ <= 1.0, s"minJ must be in (0, 1], got $minJ")
-    val sh = scope.cache(shingleIndex(docs))
     // signatures (one small row per doc) cached: the band stream scans
-    // them twice and verification reads both endpoints' n from them
-    val sigs = scope.cache(minhashSignaturesFromIndex(sh))
-    val cand = bandCandidates(scope, sigs, bucketCap)
+    // them twice
+    val sigs = scope.cache(minhashSignatures(docs))
+    // candidates cached: they pick the endpoints and drive the verify
+    val cand = scope.cache(bandCandidates(scope, sigs, bucketCap))
+    // a semi-join needs no distinct endpoint set
+    val ends = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+    // the endpoints' index, cached: both sides of the intersection read it
+    val sh = scope.cache(shingleIndex(docs.join(ends, Seq("doc_id"), "left_semi")))
     // exact verification WITHOUT materializing per-doc shingle arrays:
     // the earlier collect_list/array_intersect formulation rebuilt a
     // shingle array for every doc in the corpus and replicated both
@@ -364,14 +361,14 @@ object Dedup {
     // Materialize the verified pair set (tiny next to the shingle
     // index) through the caches before the scope releases them, so
     // repeated library calls do not leak block-store entries.
-    verifyPairsExact(sh, sigs.select("doc_id", "n"), cand, minJ)
-      .transform(Checkpoints.materialize)
+    verifyPairsExact(sh, cand, minJ).transform(Checkpoints.materialize)
   }
 
-  /** Distinct band-collision pairs (doc_a, doc_b), doc_a < doc_b, over
-    * `sigs`, buckets of more than `bucketCap` docs dropped first. Lazy;
-    * when capped, the filtered band stream is cached in the caller's
-    * scope, so the caller's action reads it. The cap is an AGGREGATE +
+  /** Distinct band-collision pairs (doc_a, doc_b, n_a, n_b),
+    * doc_a < doc_b, over `sigs`, buckets of more than `bucketCap` docs
+    * dropped first, each n carried from `sigs`. Lazy; when capped, the
+    * filtered band stream is cached in the caller's scope, so the
+    * caller's action reads it. The cap is an AGGREGATE +
     * anti-join against the OVERSIZED buckets, not a count-over-window:
     * the cap exists precisely for corpora with mega-buckets, and a
     * window would put every row of such a bucket into ONE unsplittable
@@ -398,7 +395,8 @@ object Dedup {
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+        col("a.n").as("n_a"), col("b.n").as("n_b"))
       .distinct()
   }
 
@@ -413,7 +411,7 @@ object Dedup {
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
     // signatures cached: the band stream scans them twice
     val sigs = scope.cache(minhashSignatures(docs))
-    bandCandidates(scope, sigs, Some(maxBucket))
+    bandCandidates(scope, sigs, Some(maxBucket)).select("doc_a", "doc_b")
       .transform(Checkpoints.materialize)
   }
 

@@ -78,9 +78,13 @@ class PipelineOpsSpec extends SparkSpec {
     val docs = graft.engine.Tables(spark, sf, "documents")
     val emb = graft.engine.Tables(spark, sf, "embeddings")
     val cents = IvfIndex.sampleCentroidsK(emb, 8)
-    // minhashDupPairs and simhashDupPairs have their own tests above
+    // minhashDupPairs and simhashDupPairs have their own tests above;
+    // the capped MinHash path adds the capped band stream to the
+    // signature, candidate and endpoint-index caches
     val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
       "ngramJaccardPairs" -> (() => Dedup.ngramJaccardPairs(docs, 0.8)),
+      "minhashDupPairsCapped" ->
+        (() => Dedup.minhashDupPairsCapped(docs, 0.8, 16)),
       "containmentPairs" -> (() => Dedup.containmentPairs(docs, 800L)),
       "IvfIndex.nearDupPairs" ->
         (() => IvfIndex.nearDupPairs(emb, 0.9, cents)),

@@ -107,10 +107,21 @@ class TextOpsPropertySpec extends SparkSpec {
     }
   }
 
+  // beside the random corpora: one where no band collides, so the
+  // candidate set and the endpoints' index are empty, and one where
+  // document 0 is an endpoint of several pairs
+  private val noCollision = Seq((0L, "aa bb cc dd"), (1L, "ee ff gg hh"),
+    (2L, "ii jj kk ll mm"))
+  private val hubText = "aa bb cc dd ee ff gg hh ii jj"
+  private val hub = Seq((0L, hubText), (1L, hubText), (2L, hubText),
+    (3L, s"$hubText kk"), (4L, "ll mm nn oo pp"))
+
   test("MinHash pairs, capped and uncapped, carry brute-force (common, " +
     "n_a, n_b) and never miss a pair of identical shingle sets") {
+    assert(Dedup.minhashCandidatesCapped(noCollision.toDF("doc_id", "text"), 16)
+      .count() == 0L)
     for (t <- Seq(0.3, 0.8)) {
-      samples(dupCorpus, 8).foreach { docs =>
+      (samples(dupCorpus, 8) :+ noCollision :+ hub).foreach { docs =>
         val sets = docs.map { case (id, txt) => id -> shingles(txt) }.toMap
         val df = docs.toDF("doc_id", "text")
         Seq("uncapped" -> Dedup.minhashDupPairs(df, t),
@@ -118,6 +129,9 @@ class TextOpsPropertySpec extends SparkSpec {
           case (name, pairs) =>
             val got = pairs.select("doc_a", "doc_b", "common", "n_a", "n_b")
               .as[(Long, Long, Long, Long, Long)].collect()
+            if (docs eq noCollision) assert(got.isEmpty, s"$name t=$t")
+            if (docs eq hub)
+              assert(got.count(r => r._1 == 0L) >= 3, s"$name t=$t hub pairs")
             got.foreach { case (a, b, c, na, nb) =>
               val want = ((sets(a) & sets(b)).size.toLong,
                 sets(a).size.toLong, sets(b).size.toLong)
